@@ -2,28 +2,22 @@
 semantic (data_processing_pipeline.py:708-716 backward;
 stream_emulator.py:331-337 forward), generalized.
 
-Spark SQL <= 4.x has no ASOF JOIN, so the engine provides two
-implementations:
+Spark SQL <= 4.x has no ASOF JOIN, so ``asof_join`` is fully native:
+union the two sides with a side tag, sort by (key, ts, side-priority)
+inside one window, and carry the right side's payload as ONE struct with
+``last(..., ignorenulls=True)`` (backward) or ``first`` over the
+following frame (forward) — the struct keeps a matched right row's
+genuine NULL values (same semantics as pd.merge_asof). One shuffle on
+the key — identical to what a built-in sort-merge as-of would do; stays
+entirely in the JVM (whole-stage codegen, no Python).
 
-- ``asof_join`` (DEFAULT, fully native): union the two sides with a side
-  tag, sort by (key, ts, side-priority) inside one window, and carry the
-  right side's payload as ONE struct with ``last(..., ignorenulls=True)``
-  (backward) or ``first`` over the following frame (forward) — the struct
-  keeps a matched right row's genuine NULL values (same semantics as
-  pd.merge_asof). One shuffle on the key —
-  identical to what a built-in sort-merge as-of would do; stays entirely
-  in the JVM (whole-stage codegen, no Python).
-- ``asof_join_pandas`` (kernel variant): co-grouped applyInPandas running
-  ``pd.merge_asof`` per key group — supports ``tolerance``, and is the
-  shape you would use if per-group logic grew beyond what SQL expresses.
-
-Tie semantics (both): a right row with ts == left ts MATCHES for
+Tie semantics: a right row with ts == left ts MATCHES for
 direction='backward' (merge_asof default allow_exact_matches=True) and
 likewise for 'forward'.
 
-At scale: both shuffle once, partitioned by `by` key; if the left side is
-already bucketed/partitioned by the key the native variant's sort is the
-only extra work. Skewed keys go through AQE; keys are entity ids
+At scale: one shuffle, partitioned by `by` key; if the left side is
+already bucketed/partitioned by the key the sort is the only extra
+work. Skewed keys go through AQE; keys are entity ids
 (doc_id/user_id), the same partitioning the rest of the plan uses.
 """
 
@@ -31,7 +25,6 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -67,7 +60,7 @@ def asof_join(
     # The payload is carried as ONE struct per right row (null for left
     # rows), so last/first(ignorenulls) skips left rows but keeps a matched
     # right row whose value columns are genuinely NULL — the same right-
-    # side NULL semantics as pd.merge_asof (asof_join_pandas).
+    # side NULL semantics as pd.merge_asof.
     import pyspark.sql.types as T
 
     pay_type = T.StructType(
@@ -111,73 +104,3 @@ def asof_join(
         .filter(F.col("__side") == 1)
         .drop("__side")
     )
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    value_cols: Sequence[str] | None = None,
-    direction: str = "backward",
-    tolerance: float | None = None,
-    suffix: str = "_right",
-) -> DataFrame:
-    """Co-grouped merge_asof kernel (supports tolerance)."""
-    import pyspark.sql.types as T
-
-    value_cols = list(value_cols) if value_cols is not None else [
-        c for c in right.columns if c not in {by, on}
-    ]
-    out_names = {c: (c + suffix if c in left.columns else c) for c in value_cols}
-    out_fields = list(left.schema.fields) + [
-        T.StructField(out_names[c], right.schema[c].dataType, True) for c in value_cols
-    ]
-    out_schema = T.StructType(out_fields)
-    left_cols = list(left.columns)
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf):
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        lp = lpdf.sort_values(on, kind="mergesort")
-        rp = rpdf[[on] + value_cols].sort_values(on, kind="mergesort")
-        kw = {}
-        if tolerance is not None:
-            kw["tolerance"] = tolerance
-        merged = pd.merge_asof(lp, rp, on=on, direction=direction, suffixes=("", suffix), **kw)
-        merged.columns = left_cols + [out_names[c] for c in value_cols]
-        return merged
-
-    return left.groupBy(by).cogroup(right.groupBy(by)).applyInPandas(merge, schema=out_schema)
-
-
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    by: str,
-    left_ts: str,
-    right_ts: str,
-    lower_s: int,
-    upper_s: int,
-) -> DataFrame:
-    """E72: time-interval (range) join — every (l, r) pair sharing
-    ``by`` with r.ts in [l.ts + lower_s, l.ts + upper_s].  The
-    many-to-many companion to the as-of join above (as-of keeps ONE
-    match; this keeps the window of them — alarm-to-context lookups,
-    impression/conversion attribution).
-
-    Native equi-join on the key with the range as a join predicate —
-    one shuffle per side on ``by``, never a cartesian; Spark pushes the
-    range into the sort-merge join's condition.  The SAME expression
-    tree is a genuine STREAM-STREAM join under Structured Streaming:
-    with watermarks on both inputs the range predicate bounds each
-    side's buffered state exactly as the Structured Streaming join
-    paper prescribes (tests/test_streaming_interval_join.py pins
-    drained == batch and state cleanup across triggers)."""
-    lts, rts = F.col(f"l.{left_ts}"), F.col(f"r.{right_ts}")
-    cond = (
-        (F.col(f"l.{by}") == F.col(f"r.{by}"))
-        & (rts >= lts + F.expr(f"INTERVAL {lower_s} SECONDS"))
-        & (rts <= lts + F.expr(f"INTERVAL {upper_s} SECONDS"))
-    )
-    return left.alias("l").join(right.alias("r"), cond)

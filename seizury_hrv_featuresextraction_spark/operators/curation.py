@@ -1014,7 +1014,11 @@ def _bpe_encode_kernel(merges: "list[tuple[str, str, int]]", end_mark: str):
         for t in texts:
             segs: list[str] = []
             total = 0
-            for w in split_ws.split(("" if t is None else t).strip().lower()):
+            # no str.strip(): it also strips Unicode whitespace (\xa0,
+            # \u3000, \x1c-\x1f) that Catalyst's trim + Java-\s split keep
+            # attached to the edge tokens; the ASCII split plus the empty-
+            # token filter already drops ASCII whitespace at the edges.
+            for w in split_ws.split(("" if t is None else t).lower()):
                 if w:
                     s, n = enc_word(w)
                     segs.append(s)
@@ -1343,8 +1347,8 @@ def domain_link_graph(
     """E77b: the domain-level link graph — (src_domain, dst_domain,
     n_links, n_docs) aggregated from extracted anchors; self-loops
     (intra-domain navigation) dropped, the standard host-graph
-    convention. The graph feeds PageRank-style quality priors (E67
-    runs on exactly this edge shape) and spam-cluster detection.
+    convention. The graph feeds PageRank-style quality priors and
+    spam-cluster detection.
 
     Scale shape: extraction + domain parse are scan-stage; the ONLY
     exchange is the (src, dst) edge aggregation, whose cardinality is

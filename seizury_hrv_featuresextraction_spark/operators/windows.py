@@ -108,83 +108,6 @@ def backfill(
     return df.withColumn(out_col, filled)
 
 
-def resample_interpolate(
-    obs: DataFrame,
-    on: str,
-    by: str,
-    value_col: str,
-    step: float,
-) -> DataFrame:
-    """E81: resample an irregular per-key series onto a regular time
-    grid with linear interpolation (tail windows forward-filled) — the
-    standalone form of the uniform-resampling step the reference's
-    spectral path performs before Welch (hrv_features.py's interbeat
-    resample; north-star "resampled interbeat series").
-
-    Grid: t_k = ceil(min(on)/step)*step + k*step for k = 0..floor((max-
-    gs)/step) — entirely inside [min, max], so a PREVIOUS observation
-    always exists and only the exact-right-edge grid point can lack a
-    strictly-later NEXT one (it forward-fills; ``tail_fill`` marks it).
-    Interpolation is v_prev + (v_next - v_prev) * (t - e_prev) /
-    (e_next - e_prev): identical IEEE arithmetic from identical doubles
-    in any engine, so the output is value-twinnable without tolerance.
-
-    Scale shape (the union+window gap-fill device, NOT two as-of
-    joins): duplicate observation times are first collapsed (max value
-    per (key, t) — makes prev/next well-defined), per-key bounds come
-    from ONE tiny partial-agged groupBy, grid rows are amplified
-    map-locally from the bounds rows (sequence+explode), and prev/next
-    both come from two frames over ONE (key, t) sort — so the corpus is
-    exchanged once for the fill, there are ZERO joins, and the grid
-    exchange is the (bounded) grid itself. Two as-of joins would
-    exchange the corpus twice and sort four times.
-    """
-    o = (
-        obs.groupBy(F.col(by).alias("k"), F.col(on).alias("t"))
-        .agg(F.max(value_col).alias("v"))
-        .withColumn("is_obs", F.lit(1))
-    )
-    bounds = o.groupBy("k").agg(F.min("t").alias("mn"), F.max("t").alias("mx"))
-    gs = F.ceil(F.col("mn") / F.lit(step)) * F.lit(step)
-    n = F.floor((F.col("mx") - gs) / F.lit(step)).cast("long")
-    grid = (
-        bounds.select("k", gs.alias("gs"), n.alias("n"))
-        .filter(F.col("n") >= 0)
-        .select("k", "gs", F.explode(F.sequence(F.lit(0).cast("long"), F.col("n"))).alias("i"))
-        .select(
-            "k",
-            (F.col("gs") + F.col("i") * F.lit(step)).alias("t"),
-            F.lit(None).cast("double").alias("v"),
-            F.lit(0).alias("is_obs"),
-        )
-    )
-    u = o.select("k", "t", "v", "is_obs").unionByName(grid)
-    # obs sorts before the grid marker at an equal t, so the backward
-    # frame is inclusive (prev e <= t) and the forward frame strict
-    # (next e > t) — no self-match, no zero denominator.
-    order = [F.col("t").asc(), F.col("is_obs").desc()]
-    wb = Window.partitionBy("k").orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-    wf = Window.partitionBy("k").orderBy(*order).rowsBetween(0, Window.unboundedFollowing)
-    obs_t = F.when(F.col("is_obs") == 1, F.col("t"))
-    filled = (
-        u.withColumn("pv", F.last("v", ignorenulls=True).over(wb))
-        .withColumn("pt", F.last(obs_t, ignorenulls=True).over(wb))
-        .withColumn("nv", F.first("v", ignorenulls=True).over(wf))
-        .withColumn("nt", F.first(obs_t, ignorenulls=True).over(wf))
-        .filter(F.col("is_obs") == 0)
-    )
-    interp = F.when(F.col("nt").isNull(), F.col("pv")).otherwise(
-        F.col("pv")
-        + (F.col("nv") - F.col("pv")) * (F.col("t") - F.col("pt")) / (F.col("nt") - F.col("pt"))
-    )
-    return filled.select(
-        F.col("k").alias(by),
-        F.col("t").alias(on),
-        interp.alias(value_col),
-        F.col("nt").isNull().alias("tail_fill"),
-    )
-
-
 def trailing_frames(
     df: DataFrame,
     by: Sequence[str] | str,
@@ -243,48 +166,6 @@ def debounce(
     return out.drop("__pos", "__run", "__pos_rank", "__cand")
 
 
-def decay_features(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str],
-    value_col: str,
-    alpha: float = 0.5,
-    n_lags: int = 4,
-    out_col: str = "ewma",
-) -> DataFrame:
-    """E88: bounded-lag exponentially-weighted moving average per key —
-    the tsfresh/feature-store trend feature (recent observations weigh
-    more) in a form a distributed engine can twin exactly: the infinite
-    recursive EWMA is order-dependent and unbounded-history, so it is
-    truncated at n_lags,
-
-        ewma_t = (sum_{j=0..L} a^j * x_{t-j}) / (sum over AVAILABLE j of a^j)
-
-    with head rows (fewer than L predecessors) normalized by the
-    weights actually present — no warm-up bias, no NULL propagation.
-
-    Determinism devices: alpha defaults to 0.5 (an exact binary
-    fraction, so a^j is exact and the weighted terms are single
-    correctly-rounded IEEE multiplies) and both numerator and
-    denominator fold in ONE FIXED left-to-right order (j = 0..L), so
-    the result is bit-identical across engines/partitionings before
-    the round(·,6).
-
-    Scale shape: ONE window sort per key (the same exchange the O42
-    lag/diff family already pays — composes with it for free); the lag
-    chain is in-row expression work, zero joins, zero Python.
-    """
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    num = F.col(value_col).cast("double")
-    den = F.lit(1.0)
-    for j in range(1, n_lags + 1):
-        lj = F.lag(F.col(value_col).cast("double"), j).over(w)
-        wj = F.lit(float(alpha**j))
-        num = num + F.when(lj.isNotNull(), wj * lj).otherwise(F.lit(0.0))
-        den = den + F.when(lj.isNotNull(), wj).otherwise(F.lit(0.0))
-    return df.withColumn(out_col, F.round(num / den, 6))
-
-
 def time_weighted_avg(
     obs: DataFrame,
     on: str,
@@ -316,7 +197,7 @@ def time_weighted_avg(
     two exact int64s — bit-identical in any engine, twin-able without
     tolerance.
 
-    Scale shape (same family as E81's union+window device): duplicate
+    Scale shape (the union+window gap-fill device): duplicate
     timestamps are collapsed map-side (max per (key, t) — makes the
     hold interval well-defined), ONE window sort per key finds each
     observation's horizon, bucket apportionment is map-local

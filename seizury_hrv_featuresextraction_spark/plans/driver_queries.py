@@ -1010,79 +1010,6 @@ def mmr_rerank_topk(spark, sf_dir):
 
 
 @q(
-    "funnel_conversion_events",
-    """
-    WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_type AS t FROM events),
-    a AS (SELECT user_id, us, t,
-                 min(CASE WHEN t = 'view' THEN us END)
-                   OVER (PARTITION BY user_id) AS a0
-          FROM e),
-    b AS (SELECT *, min(CASE WHEN t = 'click' AND us > a0
-                              AND us <= a0 + 172800000000 THEN us END)
-                      OVER (PARTITION BY user_id) AS a1 FROM a),
-    c AS (SELECT *, min(CASE WHEN t = 'purchase' AND us > a1
-                              AND us <= a1 + 172800000000 THEN us END)
-                      OVER (PARTITION BY user_id) AS a2 FROM b),
-    u AS (SELECT user_id, max(a0) AS a0, max(a1) AS a1, max(a2) AS a2
-          FROM c GROUP BY user_id),
-    f AS (SELECT (a0 // 86400000000)::bigint AS cohort_day, a0, a1, a2
-          FROM u WHERE a0 IS NOT NULL),
-    d AS (SELECT cohort_day,
-                 sum((a0 IS NOT NULL)::int)::bigint AS n_step1,
-                 sum((a1 IS NOT NULL)::int)::bigint AS n_step2,
-                 sum((a2 IS NOT NULL)::int)::bigint AS n_step3
-          FROM f GROUP BY cohort_day)
-    SELECT cohort_day, n_step1, n_step2, n_step3,
-           CASE WHEN n_step1 > 0
-                THEN round(n_step2::double / n_step1::double, 6) END AS conv_1_2,
-           CASE WHEN n_step2 > 0
-                THEN round(n_step3::double / n_step2::double, 6) END AS conv_2_3
-    FROM d
-    """,
-)
-def funnel_conversion_events(spark, sf_dir):
-    """E95: first-touch view->click->purchase funnel by cohort day,
-    48 h per-hop horizon — stacked unordered user-keyed windows (one
-    corpus exchange), exact int64 micro anchoring. Twin replays the
-    chained-minima formulation in SQL windows."""
-    from ..operators.behavior import funnel_conversion
-
-    ev = load_table(spark, sf_dir, "events")
-    return funnel_conversion(
-        ev, steps=("view", "click", "purchase"), horizon_s=172_800
-    )
-
-
-@q(
-    "cohort_retention_events",
-    """
-    WITH e AS (SELECT user_id,
-                      (epoch_us(ts) // 604800000000)::bigint AS wk
-               FROM events),
-    a AS (SELECT user_id, wk, min(wk) OVER (PARTITION BY user_id) AS fw FROM e),
-    d AS (SELECT DISTINCT user_id, fw AS cohort_week, wk - fw AS age_week FROM a),
-    g AS (SELECT cohort_week, age_week, count(*)::bigint AS n_active
-          FROM d GROUP BY 1, 2)
-    SELECT cohort_week, age_week, n_active,
-           (max(CASE WHEN age_week = 0 THEN n_active END)
-              OVER (PARTITION BY cohort_week))::bigint AS cohort_size,
-           round(n_active::double
-                 / (max(CASE WHEN age_week = 0 THEN n_active END)
-                      OVER (PARTITION BY cohort_week))::double, 6) AS retention
-    FROM g
-    """,
-)
-def cohort_retention_events(spark, sf_dir):
-    """E96: weekly cohort retention triangle — cohort = epoch week of a
-    user's first event; one user-keyed window + bounded rollups, exact
-    int64 week arithmetic, single final rate division."""
-    from ..operators.behavior import cohort_retention
-
-    ev = load_table(spark, sf_dir, "events")
-    return cohort_retention(ev)
-
-
-@q(
     "negative_pairs_docs",
     """
     WITH ids AS (SELECT doc_id::bigint AS cid, source AS cg FROM documents),
@@ -1156,54 +1083,6 @@ def logodds_keyness_docs(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return logodds_keyness(
         docs, "text", "source", alpha0=100.0, min_count=5, k=10
-    )
-
-
-# E81: regular-grid resample + linear interpolation (union+window device;
-# the twin is the INDEPENDENT two-ASOF-join formulation, so grid
-# generation, prev/next selection and the interpolation arithmetic are
-# all cross-checked between two genuinely different plans).
-_RESAMPLE_STEP = 21600.0  # 6 h grid over the ~30-day event span
-
-
-@q(
-    "resample_interpolate_series",
-    f"""
-    WITH c AS (
-      SELECT user_id, {EPOCH_DD} AS e, max(value) AS v
-      FROM events WHERE event_type = 'click'
-      GROUP BY user_id, {EPOCH_DD}),
-    b AS (
-      SELECT user_id, ceil(min(e) / {_RESAMPLE_STEP}) * {_RESAMPLE_STEP} AS gs, max(e) AS mx
-      FROM c GROUP BY user_id),
-    g AS (
-      SELECT user_id,
-             gs + unnest(generate_series(0, cast(floor((mx - gs) / {_RESAMPLE_STEP}) as bigint))) * {_RESAMPLE_STEP} AS t
-      FROM b WHERE floor((mx - gs) / {_RESAMPLE_STEP}) >= 0),
-    prv AS (
-      SELECT g.user_id, g.t, c.e AS pe, c.v AS pv
-      FROM g ASOF LEFT JOIN c ON g.user_id = c.user_id AND g.t >= c.e),
-    nxt AS (
-      SELECT g.user_id, g.t, c.e AS ne, c.v AS nv
-      FROM g ASOF LEFT JOIN c ON g.user_id = c.user_id AND g.t < c.e)
-    SELECT p.user_id, round(p.t, 6) AS t,
-           round(CASE WHEN n.ne IS NULL THEN p.pv
-                      ELSE p.pv + (n.nv - p.pv) * (p.t - p.pe) / (n.ne - p.pe) END, 6) AS v,
-           (n.ne IS NULL) AS tail_fill
-    FROM prv p JOIN nxt n ON p.user_id = n.user_id AND p.t = n.t
-    """,
-)
-def resample_interpolate_series(spark, sf_dir):
-    from ..operators.windows import resample_interpolate
-
-    ev = _ev(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "e", "value")
-    r = resample_interpolate(clicks, on="e", by="user_id", value_col="value", step=_RESAMPLE_STEP)
-    return r.select(
-        "user_id",
-        F.round("e", 6).alias("t"),
-        F.round("value", 6).alias("v"),
-        "tail_fill",
     )
 
 
@@ -3460,32 +3339,6 @@ def hrv_features_streaming_op(spark, sf_dir):
 
 
 @q(
-    "binary_payload_stats",
-    """
-    SELECT 'm' || doc_id::varchar AS media_id,
-           octet_length(encode(text))::bigint AS n_bytes,
-           md5(text) AS payload_md5
-    FROM documents
-    """,
-)
-def binary_payload_stats(spark, sf_dir):
-    """E10 plumbing under a value-level oracle: documents' UTF-8 bytes
-    ride as an opaque binary payload column through the multimodal
-    mapInArrow path (same Arrow binary handling as the decode kernels);
-    byte length + md5 are reproduced by the SQL twin exactly.
-    (md5(varchar) in the oracle hashes the string's UTF-8 bytes — the
-    identical byte stream Spark's encode() produces.)"""
-    from ..operators.multimodal import payload_stats
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = docs.select(
-        F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
-    return payload_stats(media)
-
-
-@q(
     "numeric_profile",
     """
     SELECT event_type,
@@ -4149,43 +4002,6 @@ def curation_pipeline(spark, sf_dir):
 
 
 @q(
-    "pcm_decode_stats",
-    """
-    WITH p AS (SELECT doc_id, hex(encode(text)) AS h, octet_length(encode(text)) AS nb FROM documents),
-    s AS (SELECT doc_id, nb // 2 AS ns, unnest(generate_series(0, nb // 2 - 1)) AS i, h FROM p WHERE nb >= 2),
-    v AS (SELECT doc_id, ns,
-            ('0x' || substr(h, 4*i + 1, 2))::bigint + 256 * ('0x' || substr(h, 4*i + 3, 2))::bigint AS u
-          FROM s),
-    sv AS (SELECT doc_id, ns, CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS x FROM v),
-    agg AS (SELECT doc_id, ns, sum(x)::bigint AS sum_x, sum(x*x)::bigint AS sum_sq,
-                   max(abs(x))::bigint AS peak
-            FROM sv GROUP BY doc_id, ns)
-    SELECT 'm' || doc_id::varchar AS media_id, ns::bigint AS n_samples, sum_x, sum_sq, peak
-    FROM agg
-    """,
-)
-def pcm_decode_stats(spark, sf_dir):
-    """E10 upgraded (r4): a REAL media decode under the driver oracle.
-    Documents' UTF-8 bytes ride as an opaque binary payload and are
-    decoded as raw little-endian PCM16 inside mapInArrow
-    (operators/multimodal.py:pcm16_features — np.frombuffer, no codec
-    library needed); the twin re-decodes the SAME bytes in DuckDB via
-    hex-string arithmetic. All outputs are exact int64 accounting
-    (sample count / sum / sum-of-squares / peak |amplitude|) — zero
-    float comparisons, so any endianness, offset or truncation bug in
-    the decode is a hard value mismatch."""
-    from ..operators.dedup import spread
-    from ..operators.multimodal import pcm16_features
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    media = docs.select(
-        F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
-    return pcm16_features(media)
-
-
-@q(
     "bigram_lm_scores",
     f"""
     WITH w AS (SELECT doc_id, {WORDS_DD} AS ws FROM documents),
@@ -4613,95 +4429,6 @@ def fingerprint_overlap_against_corpus_docs(spark, sf_dir):
         docs.filter(F.col("doc_id") % 4 != 1), ref_fps,
         min_shared=2, ref_df_cap=10,
     )
-
-
-@q(
-    "wav_decode_stats",
-    """
-    WITH p AS (SELECT doc_id,
-                      8000 + (doc_id % 3) * 4000 AS sr,
-                      1 + doc_id % 2 AS ch,
-                      hex(encode(text)) AS hraw,
-                      octet_length(encode(text)) AS nb
-               FROM documents),
-    p2 AS (SELECT doc_id, sr, ch, nb - nb % 2 AS nb2, hraw FROM p),
-    s AS (SELECT doc_id, sr, ch, nb2 // 2 AS ns,
-                 unnest(generate_series(0, nb2 // 2 - 1)) AS i, hraw
-          FROM p2 WHERE nb2 >= 2),
-    v AS (SELECT doc_id, sr, ch, ns,
-                 ('0x' || substr(hraw, 4*i + 1, 2))::bigint
-                 + 256 * ('0x' || substr(hraw, 4*i + 3, 2))::bigint AS u
-          FROM s),
-    sv AS (SELECT doc_id, sr, ch, ns, CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS x FROM v),
-    agg AS (SELECT doc_id, sr, ch, ns, sum(x)::bigint AS sum_x, sum(x*x)::bigint AS sum_sq,
-                   max(abs(x))::bigint AS peak
-            FROM sv GROUP BY doc_id, sr, ch, ns)
-    SELECT 'm' || doc_id::varchar AS media_id, sr::bigint AS sample_rate, ch::bigint AS channels,
-           ns::bigint AS n_samples, (ns // ch)::bigint AS n_frames,
-           ((ns // ch) * 1000 // sr)::bigint AS duration_ms, sum_x, sum_sq, peak
-    FROM agg
-    """,
-)
-def wav_decode_stats(spark, sf_dir):
-    """E10 container upgrade (r5): REAL WAV decode under the driver
-    oracle. Each document's UTF-8 bytes are wrapped in a canonical
-    44-byte RIFF/WAVE header (sample rate 8/12/16 kHz and 1-2 channels
-    varied per doc — built with native hex/unhex little-endian
-    expressions, no UDF), then the ENGINE side parses the header back
-    from the bytes alone (operators/multimodal.py:wav_header — native
-    hex-substring arithmetic) and PCM16-decodes exactly the
-    header-declared data section in mapInArrow. The twin never builds or
-    parses a container: it derives every expected value (rate, channels,
-    frame count, exact-integer duration, sum/sumsq/peak) independently
-    from the construction parameters and the raw text bytes — any
-    header-layout, offset, endianness or data-slice bug on the engine
-    side is a hard value mismatch.
-
-    NB the combined construct+parse projection here exceeds the JVM's
-    64 KB codegen method limit and falls back to interpreted eval (a
-    logged warning, harmless, test-harness-only); the wav_header parse
-    alone whole-stage-codegens (verified: `*(1) Project` over a parquet
-    scan)."""
-    from ..operators.dedup import spread
-    from ..operators.multimodal import wav_features
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-
-    def le(col, nbytes):
-        h = F.lpad(F.hex(col), 2 * nbytes, "0")
-        return F.unhex(F.concat(*[F.substring(h, 2 * j - 1, 2) for j in range(nbytes, 0, -1)]))
-
-    d = (
-        docs.select(
-            "doc_id",
-            F.encode("text", "UTF-8").alias("raw"),
-            (F.lit(8000) + (F.col("doc_id") % 3) * 4000).cast("long").alias("sr"),
-            (F.lit(1) + F.col("doc_id") % 2).cast("long").alias("ch"),
-        )
-        .withColumn("nb2", (F.octet_length("raw") - F.octet_length("raw") % 2).cast("long"))
-        .withColumn("data", F.expr("substring(raw, 1, nb2)"))
-    )
-    wav = F.concat(
-        F.encode(F.lit("RIFF"), "UTF-8"),
-        le(F.lit(36) + F.col("nb2"), 4),
-        F.encode(F.lit("WAVE"), "UTF-8"),
-        F.encode(F.lit("fmt "), "UTF-8"),
-        le(F.lit(16), 4),
-        le(F.lit(1), 2),                      # PCM format tag
-        le(F.col("ch"), 2),
-        le(F.col("sr"), 4),
-        le(F.col("sr") * F.col("ch") * 2, 4),  # byte rate
-        le(F.col("ch") * 2, 2),                # block align
-        le(F.lit(16), 2),                      # bits per sample
-        F.encode(F.lit("data"), "UTF-8"),
-        le(F.col("nb2"), 4),
-        F.col("data"),
-    )
-    media = d.select(
-        F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("media_id"),
-        wav.alias("payload"),
-    )
-    return wav_features(media)
 
 
 @q(
@@ -6760,46 +6487,6 @@ def ks_drift_daily(spark, sf_dir):
 
 
 @q(
-    "decay_features_events",
-    """
-    WITH e AS (SELECT event_id, user_id, value,
-                      epoch_us(ts) AS us
-               FROM events),
-    l AS (SELECT event_id, user_id, value,
-                 lag(value, 1) OVER w AS l1,
-                 lag(value, 2) OVER w AS l2,
-                 lag(value, 3) OVER w AS l3,
-                 lag(value, 4) OVER w AS l4
-          FROM e
-          WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id))
-    SELECT event_id, user_id, value,
-           round((((((value + CASE WHEN l1 IS NOT NULL THEN 0.5 * l1 ELSE 0.0 END)
-                     + CASE WHEN l2 IS NOT NULL THEN 0.25 * l2 ELSE 0.0 END)
-                    + CASE WHEN l3 IS NOT NULL THEN 0.125 * l3 ELSE 0.0 END)
-                   + CASE WHEN l4 IS NOT NULL THEN 0.0625 * l4 ELSE 0.0 END))
-                 / (((((1.0 + CASE WHEN l1 IS NOT NULL THEN 0.5 ELSE 0.0 END)
-                       + CASE WHEN l2 IS NOT NULL THEN 0.25 ELSE 0.0 END)
-                      + CASE WHEN l3 IS NOT NULL THEN 0.125 ELSE 0.0 END)
-                     + CASE WHEN l4 IS NOT NULL THEN 0.0625 ELSE 0.0 END)), 6) AS ewma
-    FROM l
-    """,
-)
-def decay_features_events(spark, sf_dir):
-    """E88: bounded-lag EWMA trend feature per user over event values —
-    alpha 0.5 (exact binary fraction), 4 lags, head rows normalized by
-    available weights; one window sort per key, in-row lag chain, zero
-    joins. Twin replays the identical left-to-right fold."""
-    from ..operators.windows import decay_features
-
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    return decay_features(
-        ev, ["user_id"], ["us", "event_id"], "value", alpha=0.5, n_lags=4
-    ).select("event_id", "user_id", "value", "ewma")
-
-
-@q(
     "cms_heavy_ngrams",
     f"""
     WITH w AS (SELECT {WORDS_DD} AS ws FROM documents),
@@ -7117,114 +6804,6 @@ def weighted_sample_docs_q(spark, sf_dir):
 
 
 @q(
-    "png_header_stats",
-    """
-    WITH p AS (SELECT doc_id,
-                      16 + doc_id % 2048 AS w,
-                      16 + (doc_id * 7) % 2048 AS ht,
-                      hex(encode(coalesce(text, ''))) AS body
-               FROM documents),
-    ph AS (SELECT doc_id,
-                  '89504E470D0A1A0A' || '0000000D' || '49484452'
-                  || printf('%08X', w) || printf('%08X', ht)
-                  || '0802000000' || 'DEADBEEF' || body AS hx
-           FROM p),
-    parsed AS (SELECT doc_id,
-                      ('0x' || substr(hx, 33, 8))::bigint AS width,
-                      ('0x' || substr(hx, 41, 8))::bigint AS height,
-                      ('0x' || substr(hx, 49, 2))::bigint AS bit_depth,
-                      ('0x' || substr(hx, 51, 2))::bigint AS color_type,
-                      ('0x' || substr(hx, 57, 2))::bigint AS interlace,
-                      substr(hx, 1, 16) = '89504E470D0A1A0A'
-                      AND substr(hx, 17, 8) = '0000000D'
-                      AND substr(hx, 25, 8) = '49484452' AS magic_ok,
-                      ((length(hx) - 66) // 2)::bigint AS body_bytes
-               FROM ph)
-    SELECT 'm' || doc_id::varchar AS media_id, width, height, bit_depth,
-           color_type, interlace,
-           (magic_ok AND bit_depth IN (1, 2, 4, 8, 16)
-            AND width > 0 AND height > 0) AS png_valid,
-           (width * height)::bigint AS n_pixels, body_bytes
-    FROM parsed
-    """,
-)
-def png_header_stats_q(spark, sf_dir):
-    """E10c: native PNG signature/IHDR parse — the image counterpart
-    of the WAV container parse (big-endian hex arithmetic instead of
-    little-endian).  Each document's bytes are wrapped in a canonical
-    PNG header (deterministic width/height from doc_id) in BOTH
-    engines; the operator then parses REAL binary: dimensions, depth,
-    color type, interlace, validity — the dimension/color census a
-    100 TB image corpus needs at header-read cost, with pixel decode
-    staying the declared stub boundary."""
-    from ..operators.multimodal import png_header
-
-    docs = load_table(spark, sf_dir, "documents")
-    w = (16 + F.col("doc_id") % 2048).cast("long")
-    ht = (16 + (F.col("doc_id") * 7) % 2048).cast("long")
-    hdr_hex = F.concat(
-        F.lit("89504E470D0A1A0A" + "0000000D" + "49484452"),
-        F.lpad(F.hex(w), 8, "0"),
-        F.lpad(F.hex(ht), 8, "0"),
-        F.lit("0802000000" + "DEADBEEF"),
-    )
-    media = docs.select(
-        F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("media_id"),
-        F.concat(
-            F.unhex(hdr_hex),
-            F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"),
-        ).alias("payload"),
-    )
-    out = png_header(media, "payload")
-    return out.select(
-        "media_id",
-        "width",
-        "height",
-        "bit_depth",
-        "color_type",
-        "interlace",
-        "png_valid",
-        (F.col("width") * F.col("height")).alias("n_pixels"),
-        (F.octet_length("payload") - F.lit(33)).cast("long").alias("body_bytes"),
-    )
-
-
-@q(
-    "interval_join_events",
-    """
-    SELECT p.event_id AS purchase_id, c.event_id AS click_id,
-           p.user_id AS user_id,
-           (floor(epoch(c.ts)) - floor(epoch(p.ts)))::bigint AS lag_s
-    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-    JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON c.user_id = p.user_id
-     AND c.ts >= p.ts + INTERVAL 0 SECOND
-     AND c.ts <= p.ts + INTERVAL 600 SECOND
-    """,
-)
-def interval_join_events_q(spark, sf_dir):
-    """E72: time-interval (range) join — every click within 10 minutes
-    AFTER a purchase by the same user (attribution-window semantics;
-    the many-to-many companion to the as-of join, which keeps only one
-    match).  Native equi-join on user_id with the range predicate
-    folded into the sort-merge condition — one shuffle per side, never
-    a cartesian.  The SAME expression tree runs as a genuine
-    watermarked STREAM-STREAM join (pytest pins drained == batch)."""
-    from ..operators.asof import interval_join
-
-    ev = load_table(spark, sf_dir, "events")
-    p = ev.where(F.col("event_type") == "purchase")
-    c = ev.where(F.col("event_type") == "click")
-    out = interval_join(p, c, "user_id", "ts", "ts", 0, 600)
-    return out.select(
-        F.col("l.event_id").alias("purchase_id"),
-        F.col("r.event_id").alias("click_id"),
-        F.col("l.user_id").alias("user_id"),
-        (F.unix_timestamp("r.ts") - F.unix_timestamp("l.ts")).alias("lag_s"),
-    )
-
-
-@q(
     "snapshot_diff_crawls",
     """
     WITH v1 AS (SELECT doc_id, md5(coalesce(text, '')) AS fp FROM documents),
@@ -7322,69 +6901,6 @@ def length_quantile_sketch_q(spark, sf_dir):
     return hdr_quantile_sketch(docs, "n_chars", "source")
 
 
-def _pagerank_iter_sql(t: int) -> str:
-    """One unrolled fixed-point PageRank round (the Lloyd-unroll twin
-    family): contribution sum then damped integer update."""
-    return f"""
-    s{t} AS (SELECT e.v AS u, sum(r.rank // r.deg)::bigint AS c
-             FROM e JOIN r{t - 1} r ON e.u = r.u GROUP BY 1),
-    r{t} AS (SELECT d.u, d.deg,
-                    ((15 * (1000000000000 // (SELECT c FROM nn))) // 100
-                     + (85 * coalesce(s.c, 0)) // 100)::bigint AS rank
-             FROM deg d LEFT JOIN s{t} s ON s.u = d.u)"""
-
-
-@q(
-    "pagerank_dup_graph",
-    f"""
-    WITH w AS (SELECT doc_id, {WORDS_DD} AS ws FROM documents),
-         sh AS (SELECT doc_id,
-                       list_distinct(list_transform(generate_series(1, greatest(0, len(ws) - 2)),
-                                     i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sg
-                FROM w WHERE len(ws) >= 3),
-         sig AS (SELECT doc_id,
-                        list_min(list_transform(sg, s -> md5('0:' || s))) AS mh0,
-                        list_min(list_transform(sg, s -> md5('1:' || s))) AS mh1,
-                        list_min(list_transform(sg, s -> md5('2:' || s))) AS mh2,
-                        list_min(list_transform(sg, s -> md5('3:' || s))) AS mh3
-                 FROM sh),
-         bands AS (
-           SELECT doc_id, 0 AS band_idx, mh0 || '|' || mh1 AS band_val FROM sig
-           UNION ALL
-           SELECT doc_id, 1 AS band_idx, mh2 || '|' || mh3 AS band_val FROM sig),
-         p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bands a JOIN bands b
-                 ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-                AND a.doc_id < b.doc_id),
-         e AS (SELECT id_a AS u, id_b AS v FROM p
-               UNION
-               SELECT id_b AS u, id_a AS v FROM p),
-         deg AS (SELECT u, count(*)::bigint AS deg FROM e GROUP BY 1),
-         nn AS (SELECT count(*)::bigint AS c FROM deg),
-         r0 AS (SELECT u, deg, (1000000000000 // (SELECT c FROM nn))::bigint AS rank
-                FROM deg),
-    {",".join(_pagerank_iter_sql(t) for t in (1, 2, 3))}
-    SELECT u AS doc_id, deg, rank AS rank_fp FROM r3
-    """,
-)
-def pagerank_dup_graph_q(spark, sf_dir):
-    """E67: fixed-point PageRank over the LSH duplicate-pair graph —
-    boilerplate-hub centrality (a template page collides with MANY
-    otherwise-unrelated pages; centrality beats raw degree when dup
-    cliques chain).  Ranks are int64 fixed-point and every step is
-    integer arithmetic (rank div deg contributions, damped update
-    (85*sum) div 100), so iteration is bit-exact in any engine and the
-    twin unrolls the 3 rounds as CTE blocks.  Per round the shuffles
-    carry only the SPARSE edge table — the corpus never re-enters the
-    loop."""
-    from ..operators.graph import pagerank_fixed_point
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "text", "doc_id", n_hashes=4, band_size=2, shingle_words=3)
-    r = pagerank_fixed_point(pairs, iters=3)
-    return r.select(F.col("u").alias("doc_id"), "deg", "rank_fp")
-
-
 @q(
     "fuzzy_dup_pairs",
     f"""
@@ -7402,10 +6918,9 @@ def pagerank_dup_graph_q(spark, sf_dir):
     """,
 )
 def fuzzy_dup_pairs_docs(spark, sf_dir):
-    """E76: blocked edit-distance near-dup pairs — the record-linkage
-    family (typo/OCR variants that set-similarity misses: one edit
-    kills every crossing k-gram). Blocking on (first word, prefix-
-    length band) bounds candidates; verification is NATIVE levenshtein
+    """E76: blocked edit-distance near-dup pairs (typo/OCR variants
+    that set-similarity misses: one edit kills every crossing k-gram).
+    Blocking on (first word, prefix-length band) bounds candidates; verification is NATIVE levenshtein
     (identical DP distance in both engines). One block-key exchange;
     the verify touches candidate pairs only."""
     from ..operators.dedup import fuzzy_dup_pairs
@@ -7441,10 +6956,10 @@ def domain_link_graph_docs(spark, sf_dir):
     """E77: hyperlink extraction + domain link graph — each doc is
     wrapped in a deterministic HTML shell (two parseable anchors
     derived from doc_id, incl. a ported https host, plus an ftp decoy
-    the scheme filter must drop — the png_header_stats construct-
-    then-parse device); the operator extracts hrefs with scan-stage
-    regexp and aggregates the (src, dst) edge table, whose cardinality
-    is the DOMAIN graph, not the corpus. Feeds E67 PageRank."""
+    the scheme filter must drop — a construct-then-parse device); the
+    operator extracts hrefs with scan-stage regexp and aggregates the
+    (src, dst) edge table, whose cardinality is the DOMAIN graph, not
+    the corpus."""
     from ..operators.curation import domain_link_graph
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7464,267 +6979,6 @@ def domain_link_graph_docs(spark, sf_dir):
         ).alias("html"),
     )
     return domain_link_graph(shell, "html", "doc_id", "src_domain")
-
-
-_CUSTOMER_M_PROBS = {"g_name": (19, 20), "g_near": (99, 100), "g_seg": (9, 10), "g_bal": (23, 25)}
-
-
-def _customer_linkage_frames(cust):
-    """Shared E115/E116 construction: the clean side, the
-    deterministically dirtied clone, and the nation-blocked agreement
-    pairs.  Kept in one place so the linkage query and the
-    golden-record closure can never drift apart."""
-    a = cust.select(
-        F.col("c_custkey").alias("id_a"),
-        F.col("c_name").alias("name_a"),
-        F.col("c_nationkey").alias("nk"),
-        F.col("c_acctbal").alias("bal_a"),
-        F.col("c_mktsegment").alias("seg_a"),
-    )
-    b = cust.select(
-        F.col("c_custkey").alias("id_b"),
-        F.when(
-            F.col("c_custkey") % 3 == 0,
-            F.regexp_replace("c_name", "Customer", "Cust0mer"),
-        )
-        .when(
-            F.col("c_custkey") % 5 == 0,
-            F.expr("substr(c_name, 1, length(c_name) - 2)"),
-        )
-        .otherwise(F.col("c_name"))
-        .alias("name_b"),
-        F.col("c_nationkey").alias("nk"),
-        F.when(F.col("c_custkey") % 7 == 0, F.col("c_acctbal") + 1.5)
-        .otherwise(F.col("c_acctbal"))
-        .alias("bal_b"),
-        F.when(F.col("c_custkey") % 11 == 0, F.lit("UNKNOWN"))
-        .otherwise(F.col("c_mktsegment"))
-        .alias("seg_b"),
-    )
-    # blocking join shape (r9): spread the stream side and BROADCAST the
-    # dirtied clone — a plain join on the 25-value nation key caps
-    # parallelism at 25 tasks (and the single-split scan made it ONE),
-    # while the clone comfortably fits a broadcast at any SF the blocked
-    # design admits. g_near uses the banded threshold levenshtein
-    # (lev(a,b,2) >= 0 <=> lev(a,b) <= 2, NULL-identical) — O(len*k)
-    # per pair instead of O(len^2). Measured 63.3 -> 3.0 s at sf0.1
-    # with an order-insensitive xxhash64 checksum equal over all
-    # 9 017 184 pair rows.
-    from ..operators.dedup import spread
-
-    pairs = spread(a).join(F.broadcast(b), "nk").select(
-        "id_a",
-        "id_b",
-        F.coalesce(F.col("name_a") == F.col("name_b"), F.lit(False)).alias("g_name"),
-        F.coalesce(F.levenshtein("name_a", "name_b", 2) >= 0, F.lit(False)).alias("g_near"),
-        F.coalesce(F.col("seg_a") == F.col("seg_b"), F.lit(False)).alias("g_seg"),
-        F.coalesce(F.abs(F.col("bal_a") - F.col("bal_b")) <= 1.5, F.lit(False)).alias("g_bal"),
-    )
-    return a, b, pairs
-
-
-@q(
-    "record_linkage_customers",
-    """
-    WITH a AS (SELECT c_custkey AS id_a, c_name AS name_a,
-                      c_nationkey AS nk, c_acctbal AS bal_a,
-                      c_mktsegment AS seg_a
-               FROM customer),
-         b AS (SELECT c_custkey AS id_b,
-                      CASE WHEN c_custkey % 3 = 0
-                           THEN replace(c_name, 'Customer', 'Cust0mer')
-                           WHEN c_custkey % 5 = 0
-                           THEN substr(c_name, 1, length(c_name) - 2)
-                           ELSE c_name END AS name_b,
-                      c_nationkey AS nk,
-                      CASE WHEN c_custkey % 7 = 0 THEN c_acctbal + 1.5
-                           ELSE c_acctbal END AS bal_b,
-                      CASE WHEN c_custkey % 11 = 0 THEN 'UNKNOWN'
-                           ELSE c_mktsegment END AS seg_b
-               FROM customer),
-         p AS (SELECT id_a, id_b,
-                      coalesce(name_a = name_b, FALSE) AS g_name,
-                      coalesce(levenshtein(name_a, name_b) <= 2, FALSE) AS g_near,
-                      coalesce(seg_a = seg_b, FALSE) AS g_seg,
-                      coalesce(abs(bal_a - bal_b) <= 1.5, FALSE) AS g_bal
-               FROM a JOIN b ON a.nk = b.nk),
-         st AS (SELECT count(*)::bigint AS n,
-                       sum(g_name::int)::bigint AS c1,
-                       sum(g_near::int)::bigint AS c2,
-                       sum(g_seg::int)::bigint AS c3,
-                       sum(g_bal::int)::bigint AS c4
-                FROM p),
-         cc AS (SELECT n,
-                       greatest(1, least(c1, n - 1)) AS c1,
-                       greatest(1, least(c2, n - 1)) AS c2,
-                       greatest(1, least(c3, n - 1)) AS c3,
-                       greatest(1, least(c4, n - 1)) AS c4
-                FROM st),
-         f AS (SELECT p.*,
-                      CASE WHEN g_name THEN (19 * n)::double / (20 * c1)::double
-                           ELSE (1 * n)::double / (20 * greatest(1, n - c1))::double END AS f1,
-                      CASE WHEN g_near THEN (99 * n)::double / (100 * c2)::double
-                           ELSE (1 * n)::double / (100 * greatest(1, n - c2))::double END AS f2,
-                      CASE WHEN g_seg THEN (9 * n)::double / (10 * c3)::double
-                           ELSE (1 * n)::double / (10 * greatest(1, n - c3))::double END AS f3,
-                      CASE WHEN g_bal THEN (23 * n)::double / (25 * c4)::double
-                           ELSE (2 * n)::double / (25 * greatest(1, n - c4))::double END AS f4
-               FROM p, cc)
-    SELECT id_a, id_b, g_name, g_near, g_seg, g_bal,
-           round(((((1.0 * f1) * f2) * f3) * f4), 4) AS lr,
-           round(((((1.0 * f1) * f2) * f3) * f4), 4) >= 1.0 AS is_match
-    FROM f
-    """,
-)
-def record_linkage_customers_q(spark, sf_dir):
-    """E115: Fellegi-Sunter probabilistic record linkage — customer vs
-    a deterministically dirtied clone (typo'd name for custkey%3,
-    truncated for %5, segment wiped for %11, balance shifted for %7 —
-    the construct-then-rediscover device of E77/E10c), blocked on
-    nation (which every perturbation preserves, so true pairs are
-    always candidates) — the name comparators, not the block, do the
-    separating, and same-nation neighbours supply realistic
-    near-agreement noise.  u-probabilities are estimated
-    from the blocked pairs themselves; the likelihood ratio is a
-    fixed-order product of exact-integer divisions (no ln weights), so
-    the twin is hash-exact; is_match decides at the natural lr >= 1
-    point (contaminated-u compression makes absolute magnitudes
-    SF-dependent, the RANKING is what separates — the pytest pins
-    perfect true/false separation at sf0.001).  The blocking join is the only pair-scale
-    shuffle; scoring is in-row against a broadcast 1-row stats frame.
-    Blocking policy is the caller's scale lever: a fixed 25-value key
-    is demo-sized — at production scale use narrower (or multi-pass)
-    blocks so per-block occupancy, and with it the pair count, stays
-    sub-quadratic."""
-    from ..operators.linkage import fellegi_sunter_scores
-
-    cust = load_table(spark, sf_dir, "customer")
-    _, _, pairs = _customer_linkage_frames(cust)
-    return fellegi_sunter_scores(pairs, _CUSTOMER_M_PROBS, threshold=1.0)
-
-
-@q(
-    "golden_record_customers",
-    """
-    WITH RECURSIVE
-         a AS (SELECT c_custkey AS id_a, c_name AS name_a,
-                      c_nationkey AS nk, c_acctbal AS bal_a,
-                      c_mktsegment AS seg_a
-               FROM customer),
-         b AS (SELECT c_custkey AS id_b,
-                      CASE WHEN c_custkey % 3 = 0
-                           THEN replace(c_name, 'Customer', 'Cust0mer')
-                           WHEN c_custkey % 5 = 0
-                           THEN substr(c_name, 1, length(c_name) - 2)
-                           ELSE c_name END AS name_b,
-                      c_nationkey AS nk,
-                      CASE WHEN c_custkey % 7 = 0 THEN c_acctbal + 1.5
-                           ELSE c_acctbal END AS bal_b,
-                      CASE WHEN c_custkey % 11 = 0 THEN 'UNKNOWN'
-                           ELSE c_mktsegment END AS seg_b
-               FROM customer),
-         p AS (SELECT id_a, id_b,
-                      coalesce(name_a = name_b, FALSE) AS g_name,
-                      coalesce(levenshtein(name_a, name_b) <= 2, FALSE) AS g_near,
-                      coalesce(seg_a = seg_b, FALSE) AS g_seg,
-                      coalesce(abs(bal_a - bal_b) <= 1.5, FALSE) AS g_bal
-               FROM a JOIN b ON a.nk = b.nk),
-         st AS (SELECT count(*)::bigint AS n,
-                       sum(g_name::int)::bigint AS c1,
-                       sum(g_near::int)::bigint AS c2,
-                       sum(g_seg::int)::bigint AS c3,
-                       sum(g_bal::int)::bigint AS c4
-                FROM p),
-         cc AS (SELECT n,
-                       greatest(1, least(c1, n - 1)) AS c1,
-                       greatest(1, least(c2, n - 1)) AS c2,
-                       greatest(1, least(c3, n - 1)) AS c3,
-                       greatest(1, least(c4, n - 1)) AS c4
-                FROM st),
-         f AS (SELECT p.*,
-                      CASE WHEN g_name THEN (19 * n)::double / (20 * c1)::double
-                           ELSE (1 * n)::double / (20 * greatest(1, n - c1))::double END AS f1,
-                      CASE WHEN g_near THEN (99 * n)::double / (100 * c2)::double
-                           ELSE (1 * n)::double / (100 * greatest(1, n - c2))::double END AS f2,
-                      CASE WHEN g_seg THEN (9 * n)::double / (10 * c3)::double
-                           ELSE (1 * n)::double / (10 * greatest(1, n - c3))::double END AS f3,
-                      CASE WHEN g_bal THEN (23 * n)::double / (25 * c4)::double
-                           ELSE (2 * n)::double / (25 * greatest(1, n - c4))::double END AS f4
-               FROM p, cc),
-         m AS (SELECT id_a * 2 AS src, id_b * 2 + 1 AS dst FROM f
-               WHERE round(((((1.0 * f1) * f2) * f3) * f4), 4) >= 1.0),
-         recs AS (SELECT id_a * 2 AS node, name_a AS name, seg_a AS seg,
-                         bal_a AS bal
-                  FROM a
-                  UNION ALL
-                  SELECT id_b * 2 + 1, name_b, seg_b, bal_b FROM b),
-         und AS (SELECT src, dst FROM m UNION SELECT dst, src FROM m),
-         walk(id, comp) AS (
-           SELECT node, node FROM recs
-           UNION
-           SELECT u.dst, walk.comp FROM walk JOIN und u ON u.src = walk.id),
-         lab AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
-         g AS (SELECT l.comp, r.name, r.seg, r.bal
-               FROM recs r JOIN lab l ON r.node = l.id)
-    SELECT comp AS entity, count(*)::bigint AS n_records,
-           substr(max(lpad(length(name)::varchar, 2, '0') || name), 3) AS name,
-           coalesce(max(CASE WHEN seg <> 'UNKNOWN' THEN seg END),
-                    'UNKNOWN') AS mktsegment,
-           min(bal) AS acctbal
-    FROM g GROUP BY comp
-    """,
-)
-def golden_record_customers_q(spark, sf_dir):
-    """E116: golden-record survivorship — the MDM closure of the
-    linkage family (E115 FS scoring -> E6 connected components ->
-    deterministic field survivorship in ONE composed plan).  Matched
-    pairs (lr >= 1) become edges between the clean and dirtied record
-    universes (node = 2*id / 2*id+1), components merge each entity's
-    records, and survivorship picks per field: longest-then-
-    lexicographically-greatest name (provably recovers the clean name
-    against both planted corruptions), any non-'UNKNOWN' segment, the
-    conservative min balance — every rule an order-free aggregate, so
-    the twin is hash-exact.  Scale: the CC loop shuffles only the
-    sparse MATCH edges; survivorship is one group-by over 2n records;
-    everything upstream is the E115 pair plan."""
-    from ..operators.dedup import connected_components
-    from ..operators.linkage import fellegi_sunter_scores
-
-    cust = load_table(spark, sf_dir, "customer")
-    a, b, pairs = _customer_linkage_frames(cust)
-    scored = fellegi_sunter_scores(pairs, _CUSTOMER_M_PROBS, threshold=1.0)
-    edges = scored.where("is_match").select(
-        (F.col("id_a") * 2).alias("src_n"), (F.col("id_b") * 2 + 1).alias("dst_n")
-    )
-    recs = a.select(
-        (F.col("id_a") * 2).alias("node"),
-        F.col("name_a").alias("name"),
-        F.col("seg_a").alias("seg"),
-        F.col("bal_a").alias("bal"),
-    ).unionByName(
-        b.select(
-            (F.col("id_b") * 2 + 1).alias("node"),
-            F.col("name_b").alias("name"),
-            F.col("seg_b").alias("seg"),
-            F.col("bal_b").alias("bal"),
-        )
-    )
-    lab = connected_components(
-        edges, "src_n", "dst_n", nodes=recs.select(F.col("node").alias("id"))
-    )
-    g = recs.join(lab, recs["node"] == lab["id"])
-    return g.groupBy("comp").agg(
-        F.count(F.lit(1)).alias("n_records"),
-        F.expr(
-            "substring(max(concat(lpad(cast(length(name) as string), 2, '0'), name)), 3)"
-        ).alias("name"),
-        F.coalesce(
-            F.max(F.when(F.col("seg") != "UNKNOWN", F.col("seg"))), F.lit("UNKNOWN")
-        ).alias("mktsegment"),
-        F.min("bal").alias("acctbal"),
-    ).select(
-        F.col("comp").alias("entity"), "n_records", "name", "mktsegment", "acctbal"
-    )
 
 
 @q(
@@ -7773,77 +7027,6 @@ def time_weighted_avg_events_q(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     return time_weighted_avg(ev, "ts", "user_id", "value")
-
-
-@q(
-    "triangle_counts_dup_graph",
-    f"""
-    WITH w AS (SELECT doc_id, {WORDS_DD} AS ws FROM documents),
-         sh AS (SELECT doc_id,
-                       list_distinct(list_transform(generate_series(1, greatest(0, len(ws) - 2)),
-                                     i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sg
-                FROM w WHERE len(ws) >= 3),
-         sig AS (SELECT doc_id,
-                        list_min(list_transform(sg, s -> md5('0:' || s))) AS mh0,
-                        list_min(list_transform(sg, s -> md5('1:' || s))) AS mh1,
-                        list_min(list_transform(sg, s -> md5('2:' || s))) AS mh2,
-                        list_min(list_transform(sg, s -> md5('3:' || s))) AS mh3
-                 FROM sh),
-         bands AS (
-           SELECT doc_id, 0 AS band_idx, mh0 || '|' || mh1 AS band_val FROM sig
-           UNION ALL
-           SELECT doc_id, 1 AS band_idx, mh2 || '|' || mh3 AS band_val FROM sig),
-         p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bands a JOIN bands b
-                 ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-                AND a.doc_id < b.doc_id),
-         e AS (SELECT id_a AS u, id_b AS v FROM p
-               UNION
-               SELECT id_b AS u, id_a AS v FROM p),
-         deg AS (SELECT u, count(*)::bigint AS deg FROM e GROUP BY 1),
-         ed AS (SELECT n.id_a AS u, n.id_b AS v, da.deg AS deg_u, db.deg AS deg_v
-                FROM p n JOIN deg da ON n.id_a = da.u JOIN deg db ON n.id_b = db.u),
-         o AS (SELECT CASE WHEN deg_u < deg_v OR (deg_u = deg_v AND u < v)
-                           THEN u ELSE v END AS a,
-                      CASE WHEN deg_u < deg_v OR (deg_u = deg_v AND u < v)
-                           THEN v ELSE u END AS b,
-                      CASE WHEN deg_u < deg_v OR (deg_u = deg_v AND u < v)
-                           THEN deg_v ELSE deg_u END AS deg_b
-               FROM ed),
-         wdg AS (SELECT o1.a, o1.b AS x, o1.deg_b AS deg_x,
-                        o2.b AS y, o2.deg_b AS deg_y
-                 FROM o o1 JOIN o o2 ON o1.a = o2.a AND o1.b < o2.b),
-         wlh AS (SELECT a, x, y,
-                        CASE WHEN deg_x < deg_y OR (deg_x = deg_y AND x < y)
-                             THEN x ELSE y END AS lo,
-                        CASE WHEN deg_x < deg_y OR (deg_x = deg_y AND x < y)
-                             THEN y ELSE x END AS hi
-                 FROM wdg),
-         tri AS (SELECT a, x, y FROM wlh
-                 WHERE EXISTS (SELECT 1 FROM o WHERE o.a = wlh.lo AND o.b = wlh.hi)),
-         pn AS (SELECT unnest([a, x, y]) AS node FROM tri),
-         cnt AS (SELECT node, count(*)::bigint AS n_tri FROM pn GROUP BY 1)
-    SELECT d.u AS node, d.deg, coalesce(c.n_tri, 0)::bigint AS n_tri
-    FROM deg d LEFT JOIN cnt c ON d.u = c.node
-    """,
-)
-def triangle_counts_dup_graph_q(spark, sf_dir):
-    """E113: per-node triangle counts over the LSH duplicate-pair graph
-    (same edge derivation as E67 PageRank) via degree-ordered edge
-    orientation.  Triangle density separates a genuine template CLIQUE
-    (every pair collides -> triangles abound) from a chain of
-    borderline pairwise collisions (A~B~C with A!~C -> none) — the
-    signal clustering-coefficient curation rules need.  The
-    orientation bounds the wedge join at sum(d_out^2) = O(m^1.5)
-    instead of the naive sum(deg^2) a boilerplate hub turns quadratic,
-    and finds each triangle exactly once, so there is no dedup
-    shuffle.  Pure counting arithmetic — the twin replays CTE for CTE,
-    hash-exact."""
-    from ..operators.graph import triangle_counts
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "text", "doc_id", n_hashes=4, band_size=2, shingle_words=3)
-    return triangle_counts(pairs)
 
 
 @q(

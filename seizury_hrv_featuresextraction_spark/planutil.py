@@ -112,9 +112,18 @@ def literal_array(values, sql_type: str):
     text parses exactly, and float repr() text parses as an exact
     DECIMAL (or an exponent DOUBLE literal) whose cast to DOUBLE is
     correctly rounded — recovering the exact IEEE bits repr() encodes.
-    Values must be finite numbers.
+
+    Values are coerced here (int() for integral ``sql_type``s, float()
+    otherwise), so NumPy scalars format as plain numbers; a non-finite
+    value raises ValueError, since 'inf'/'nan' text would not parse.
     """
+    import math
+
     from pyspark.sql import functions as F
 
-    body = ",".join(repr(v) for v in values)
+    integral = sql_type.upper() in {"TINYINT", "SMALLINT", "INT", "INTEGER", "BIGINT", "LONG"}
+    vals = [int(v) if integral else float(v) for v in values]
+    if not integral and not all(math.isfinite(v) for v in vals):
+        raise ValueError(f"literal_array: non-finite value in {sql_type} array")
+    body = ",".join(repr(v) for v in vals)
     return F.expr(f"CAST(array({body}) AS ARRAY<{sql_type}>)")

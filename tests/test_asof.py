@@ -3,7 +3,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from seizury_hrv_featuresextraction_spark.operators.asof import asof_join, asof_join_pandas
+from seizury_hrv_featuresextraction_spark.operators.asof import asof_join
 
 
 @pytest.fixture(scope="module")
@@ -52,19 +52,6 @@ def test_native_asof_matches_merge_asof(spark, sides, direction):
     pd.testing.assert_series_equal(got["rv"], exp["rv"], check_names=False)
 
 
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-def test_pandas_asof_matches(spark, sides, direction):
-    left, right = sides
-    got = (
-        asof_join_pandas(left, right, on="ts", by="k", value_cols=["rv"], direction=direction)
-        .toPandas()
-        .sort_values(["k", "ts"])
-        .reset_index(drop=True)
-    )
-    exp = expected_merge_asof(left, right, direction)
-    pd.testing.assert_series_equal(got["rv"], exp["rv"], check_names=False)
-
-
 def test_exact_match_inclusive(spark, sides):
     """right.ts == left.ts must match in both directions."""
     left, right = sides
@@ -105,10 +92,5 @@ def test_matched_null_payload_survives(spark):
     assert out.loc[0, "rv"] == 100.0        # ts=5 matches right ts=1
     assert pd.isna(out.loc[1, "rv"])        # ts=9 matches right ts=8 (rv NULL)
 
-    pandas_twin = (
-        asof_join_pandas(left, right, on="ts", by="k", value_cols=["rv"], direction="backward")
-        .toPandas()
-        .sort_values("ts")
-        .reset_index(drop=True)
-    )
-    assert pandas_twin["rv"].isna().tolist() == out["rv"].isna().tolist()
+    exp = expected_merge_asof(left, right, "backward")
+    assert exp["rv"].isna().tolist() == out["rv"].isna().tolist()

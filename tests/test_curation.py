@@ -982,6 +982,9 @@ def test_bpe_encode_kernel_bit_identical_to_expression(spark):
         4: None,
         5: "  spaced   out\ttext  with  runs aaa  ",
         6: "low newest banana low",
+        # non-ASCII whitespace is not Java \s: it stays on the edge token
+        7: "\xa0low banana\u3000",
+        8: "\x1clow newest\x1f \x85widest",
     }
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     merges = bpe_train_merges(df, "text", k=5)

@@ -126,31 +126,6 @@ def test_zscore_and_class_weights(spark):
     assert np.isclose(cw[0], 4 / (2 * 3)) and np.isclose(cw[1], 4 / (2 * 1))
 
 
-def test_multimodal_stub(spark):
-    from seizury_hrv_featuresextraction_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        frame_sample_plan,
-        image_features,
-    )
-
-    rows = [
-        ("m1", "image", bytearray(b"\x01\x02"), (8, 8, None, None, "image/fake")),
-        ("m2", "image", bytearray(b"\x03\x04"), (8, 8, None, None, "image/fake")),
-        ("v1", "video", bytearray(b"\x05"), (None, None, None, 3.5, "video/fake")),
-    ]
-    df = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-    feats = image_features(df, out_size=(8, 8), embed_dim=4).toPandas()
-    assert len(feats) == 2 and all(len(e) == 4 for e in feats["embedding"])
-    # determinism: same payload -> same features
-    feats2 = image_features(df, out_size=(8, 8), embed_dim=4).toPandas()
-    pd.testing.assert_frame_equal(
-        feats.sort_values("media_id").reset_index(drop=True),
-        feats2.sort_values("media_id").reset_index(drop=True),
-    )
-    frames = frame_sample_plan(df, every_s=1.0).toPandas()
-    assert frames["frame_idx"].tolist() == [0, 1, 2]
-
-
 def test_connected_components_chain_and_singleton(spark):
     """Min-label propagation: a 4-node chain (needs >1 round), a separate
     pair, and an isolated node supplied via nodes=."""
@@ -385,32 +360,6 @@ def test_url_dedup_normalization_semantics(spark):
     assert nd["n"].iloc[1] == "https://a.example.com/page-1"
 
 
-def test_pcm16_decode_exact(spark):
-    """Real PCM16 decode (E10 r4): known int16 payloads, exact integer
-    accounting, odd-byte truncation, empty/sub-sample payloads dropped."""
-    import numpy as np
-
-    from seizury_hrv_featuresextraction_spark.operators.multimodal import pcm16_features
-
-    a = np.array([0, 1, -1, 32767, -32768, 1000], dtype="<i2")
-    b = np.array([-5], dtype="<i2")
-    rows = [
-        ("full", bytearray(a.tobytes())),
-        ("odd", bytearray(b.tobytes() + b"\x07")),  # trailing byte truncated
-        ("empty", bytearray(b"")),
-        ("one_byte", bytearray(b"\xff")),
-    ]
-    media = spark.createDataFrame(rows, "media_id string, payload binary")
-    got = {r["media_id"]: r.asDict() for r in pcm16_features(media).collect()}
-    assert set(got) == {"full", "odd"}  # sub-sample payloads dropped
-    f = got["full"]
-    assert f["n_samples"] == 6
-    assert f["sum_x"] == int(a.astype(np.int64).sum())
-    assert f["sum_sq"] == int((a.astype(np.int64) ** 2).sum())
-    assert f["peak"] == 32768
-    assert got["odd"] == {"media_id": "odd", "n_samples": 1, "sum_x": -5, "sum_sq": 25, "peak": 5}
-
-
 def test_query_surface_guard():
     """VERDICT r4 item 8: the driver snapshot silently truncates to the
     first 50 queries() entries — pin (a) every registered query has a
@@ -430,53 +379,6 @@ def test_query_surface_guard():
     assert prios == sorted(prios), "rotation broken: driver-verified query before an unverified one"
     # every never-driver-verified query must fit inside the 50-row window
     assert sum(1 for p in prios if p == 0) <= 50
-
-
-def test_wav_header_parse_and_decode(spark):
-    """r5 WAV path: native header parse recovers rate/channels/data-size
-    from bytes alone; invalid containers (bad magic, non-PCM, 8-bit) are
-    flagged invalid and excluded from decode; duration is exact-int."""
-    import struct
-
-    from seizury_hrv_featuresextraction_spark.operators.multimodal import (
-        wav_features,
-        wav_header,
-    )
-
-    def wav_bytes(sr, ch, samples, fmt=1, bits=16, magic=b"RIFF"):
-        data = np.asarray(samples, dtype="<i2").tobytes()
-        return (
-            magic + struct.pack("<I", 36 + len(data)) + b"WAVE"
-            + b"fmt " + struct.pack("<IHHIIHH", 16, fmt, ch, sr, sr * ch * bits // 8, ch * bits // 8, bits)
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-
-    rows = [
-        ("ok_mono", bytearray(wav_bytes(8000, 1, [0, 5, -5, 1000]))),
-        ("ok_stereo", bytearray(wav_bytes(16000, 2, [1, -1, 2, -2, 3, -3]))),
-        ("bad_magic", bytearray(wav_bytes(8000, 1, [1, 2], magic=b"RIFX"))),
-        ("not_pcm", bytearray(wav_bytes(8000, 1, [1, 2], fmt=3))),
-        ("eight_bit", bytearray(wav_bytes(8000, 1, [1, 2], bits=8))),
-    ]
-    media = spark.createDataFrame(rows, "media_id string, payload binary")
-    hdr = {r["media_id"]: r.asDict() for r in wav_header(media).collect()}
-    assert hdr["ok_mono"]["wav_valid"] and hdr["ok_stereo"]["wav_valid"]
-    assert hdr["ok_stereo"]["sample_rate"] == 16000 and hdr["ok_stereo"]["channels"] == 2
-    assert hdr["ok_mono"]["data_size"] == 8
-    assert not hdr["bad_magic"]["wav_valid"]
-    assert not hdr["not_pcm"]["wav_valid"]
-    assert not hdr["eight_bit"]["wav_valid"]
-
-    feats = {r["media_id"]: r.asDict() for r in wav_features(media).collect()}
-    assert set(feats) == {"ok_mono", "ok_stereo"}
-    m = feats["ok_mono"]
-    assert m == {
-        "media_id": "ok_mono", "sample_rate": 8000, "channels": 1, "n_samples": 4,
-        "n_frames": 4, "duration_ms": 0, "sum_x": 1000, "sum_sq": 1000050, "peak": 1000,
-    }
-    s = feats["ok_stereo"]
-    assert s["n_samples"] == 6 and s["n_frames"] == 3 and s["duration_ms"] == 0
-    assert s["sum_x"] == 0 and s["sum_sq"] == 28 and s["peak"] == 3
 
 
 def test_substring_dedup_vs_bruteforce(spark):
@@ -1175,58 +1077,6 @@ def test_fingerprint_dedup_against_corpus_paragraph_lift(spark):
     assert sorted(r["doc_id"] for r in s2.collect()) == [21]
     evid = fingerprint_overlap_against(crawl2, keys2, min_shared=2).collect()
     assert {(r["new_id"], r["ref_id"]) for r in evid} == {(20, 11)}
-
-
-def test_png_header_parse_real_png(spark):
-    """E10c: the parser must read a GENUINE PNG (stdlib-built, real
-    CRCs, real zlib IDAT), not just the synthetic gate wrapper."""
-    import struct
-    import zlib
-
-    from seizury_hrv_featuresextraction_spark.operators.multimodal import png_header
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + typ
-            + data
-            + struct.pack(">I", zlib.crc32(typ + data))
-        )
-
-    def make_png(w: int, h: int, depth: int = 8, color: int = 2) -> bytes:
-        ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, 0)
-        raw = b"".join(b"\x00" + bytes(3 * w) for _ in range(h))
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw))
-            + chunk(b"IEND", b"")
-        )
-
-    rows = [
-        ("ok1", make_png(640, 480)),
-        ("ok2", make_png(1, 1, depth=8, color=0)),
-        ("big", make_png(65535, 3)),
-        ("badmagic", b"\x88PNG\r\n\x1a\n" + make_png(10, 10)[8:]),
-        ("truncated", make_png(10, 10)[:20]),
-    ]
-    df = spark.createDataFrame(rows, "media_id string, payload binary")
-    got = {r.media_id: r for r in png_header(df).collect()}
-    assert (got["ok1"].width, got["ok1"].height) == (640, 480)
-    assert got["ok1"].png_valid and got["ok1"].bit_depth == 8
-    assert got["ok1"].color_type == 2 and got["ok1"].interlace == 0
-    assert (got["ok2"].width, got["ok2"].height, got["ok2"].color_type) == (1, 1, 0)
-    assert got["ok2"].png_valid
-    assert (got["big"].width, got["big"].height) == (65535, 3)
-    assert got["badmagic"].png_valid is False
-    # truncated must be FALSE, not NULL: `png_valid = false` quarantine
-    # filters drop NULL rows silently (r7 advice item)
-    assert got["truncated"].png_valid is False
-
-    # scan-stage: no exchange, no join, no Python
-    plan = png_header(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Join" not in plan
-    assert "Python" not in plan and "Arrow" not in plan
 
 
 def test_weighted_sample_replay_and_bias(spark):

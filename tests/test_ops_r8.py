@@ -185,52 +185,6 @@ def test_ivf_arrow_kernel_matches_expression_path(spark):
     assert first_a[0] == 1000 and first_e[0] == 1000
 
 
-def test_resample_interpolate_hand_computed_grid(spark):
-    """E81: grid placement, linear interpolation, exact-grid-hit,
-    duplicate-time collapse, tail forward-fill and sub-step spans,
-    all against hand arithmetic."""
-    from seizury_hrv_featuresextraction_spark.operators.windows import resample_interpolate
-
-    rows = [
-        ("A", 5.0, 10.0), ("A", 25.0, 30.0), ("A", 34.0, 50.0),
-        ("B", 10.0, 1.0), ("B", 20.0, 2.0),       # obs exactly on grid
-        ("C", 10.0, 1.0), ("C", 10.0, 3.0), ("C", 21.0, 3.0),  # dup time -> max
-        ("D", 5.0, 7.0),                            # span < step: no grid
-    ]
-    df = spark.createDataFrame(rows, "k string, e double, v double")
-    out = {
-        (r["k"], r["e"]): (r["v"], r["tail_fill"])
-        for r in resample_interpolate(df, on="e", by="k", value_col="v", step=10.0).collect()
-    }
-    # A: grid 10, 20, 30
-    assert out[("A", 10.0)][0] == 10.0 + 20.0 * 5.0 / 20.0          # 15
-    assert out[("A", 20.0)][0] == 10.0 + 20.0 * 15.0 / 20.0         # 25
-    assert abs(out[("A", 30.0)][0] - (30.0 + 20.0 * 5.0 / 9.0)) < 1e-12
-    assert not out[("A", 30.0)][1]                                   # next obs at 34 exists
-    # B: obs exactly on both grid points; right edge forward-fills
-    assert out[("B", 10.0)] == (1.0, False)
-    assert out[("B", 20.0)] == (2.0, True)
-    # C: duplicate t=10 collapses to max(v)=3
-    assert out[("C", 10.0)] == (3.0, False)
-    assert out[("C", 20.0)][0] == 3.0                                # flat segment
-    # D: no grid point inside [5, 5]
-    assert not any(k == "D" for k, _ in out)
-    assert len(out) == 7
-
-
-def test_resample_interpolate_partitioning_invariance(spark):
-    """Output is a pure function of the data, not of its layout."""
-    from seizury_hrv_featuresextraction_spark.operators.windows import resample_interpolate
-
-    rows = [(f"k{i % 7}", float(3 * i % 101) + i / 7.0, float(i * i % 53)) for i in range(300)]
-    df = spark.createDataFrame(rows, "k string, e double, v double")
-    a = resample_interpolate(df.repartition(1), "e", "k", "v", 10.0)
-    b = resample_interpolate(df.repartition(17, "v"), "e", "k", "v", 10.0)
-    pa = sorted(map(tuple, a.collect()))
-    pb = sorted(map(tuple, b.collect()))
-    assert pa == pb and len(pa) > 0
-
-
 def test_pit_leakage_audit_counts(spark):
     """E82: a user whose labels keep arriving after observations shows
     future-label counts + horizon; a clean user scores zeros; a user
@@ -450,32 +404,6 @@ def test_ks_statistic_exact_vs_scipy_formula(spark):
     assert ks_statistic(lo, hi, "v", ["k"]).collect()[0]["ks"] == 1.0
 
 
-def test_decay_features_hand_computed_and_head_normalization(spark):
-    """E88: EWMA values match a hand-rolled truncated-decay fold; the
-    first row equals its own value (weights renormalized, no warm-up
-    bias); keys are independent."""
-    from seizury_hrv_featuresextraction_spark.operators.windows import decay_features
-
-    rows = [("a", 1, 10.0), ("a", 2, 20.0), ("a", 3, 30.0),
-            ("a", 4, 40.0), ("a", 5, 50.0), ("a", 6, 60.0),
-            ("b", 1, 7.0)]
-    df = spark.createDataFrame(rows, "k string, t long, x double")
-    out = {(r["k"], r["t"]): r["ewma"]
-           for r in decay_features(df, ["k"], ["t"], "x", alpha=0.5, n_lags=4).collect()}
-
-    xs = [10.0, 20.0, 30.0, 40.0, 50.0, 60.0]
-    for i in range(6):
-        num, den = xs[i], 1.0
-        for j in range(1, 5):
-            if i - j >= 0:
-                num += (0.5 ** j) * xs[i - j]
-                den += 0.5 ** j
-        assert out[("a", i + 1)] == round(num / den, 6), i
-
-    assert out[("b", 1)] == 7.0     # head row: pure own value
-    assert out[("a", 1)] == 10.0    # key b never leaks into key a
-
-
 def test_calibration_bins_perfect_and_miscalibrated(spark):
     """E90: a perfectly calibrated feed yields gap ~= Laplace-free exact
     0 per bin; a systematically overconfident feed shows the gap; ECE
@@ -671,67 +599,6 @@ def test_logodds_keyness_planted_word_and_replay(spark):
         )
         z = delta / math.sqrt(1.0 / (c + a_w) + 1.0 / (rest + a_w))
         assert abs(r["zscore"] - round(z, 6)) < 2e-6, r
-
-
-def test_funnel_conversion_ordering_and_horizon(spark):
-    """E95: step k counts only events strictly AFTER the step k-1 anchor
-    and within the horizon; pre-view clicks and out-of-horizon clicks
-    don't convert; users without the first step vanish entirely."""
-    from datetime import datetime, timedelta
-
-    from seizury_hrv_featuresextraction_spark.operators.behavior import funnel_conversion
-
-    t0 = datetime(2024, 1, 1, 0, 0, 0)
-    h = timedelta(hours=1)
-    rows = [
-        # user 1: full funnel inside a 1h-per-hop horizon
-        (1, t0, "view"), (1, t0 + h / 2, "click"), (1, t0 + h, "purchase"),
-        # user 2: click BEFORE the first view -> stalls at step 1
-        (2, t0 + h / 2, "click"), (2, t0 + h, "view"),
-        # user 3: click outside the horizon -> stalls at step 1
-        (3, t0, "view"), (3, t0 + 3 * h, "click"),
-        # user 4: no view at all -> excluded
-        (4, t0, "click"), (4, t0 + h / 2, "purchase"),
-        # user 5: view+click ok, purchase exactly AT the anchor (not after) -> step 2
-        (5, t0, "view"), (5, t0 + h / 2, "click"), (5, t0 + h / 2, "purchase"),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-    out = funnel_conversion(df, steps=("view", "click", "purchase"), horizon_s=3600).collect()
-    assert len(out) == 1  # everyone's first view lands on the same day
-    r = out[0]
-    assert (r["n_step1"], r["n_step2"], r["n_step3"]) == (4, 2, 1)
-    assert r["conv_1_2"] == 0.5 and r["conv_2_3"] == 0.5
-
-
-def test_cohort_retention_triangle(spark):
-    """E96: hand-built two-cohort triangle — week-0 size anchors the
-    rate; a user active in weeks {0,2} counts in ages 0 and 2 only."""
-    from datetime import datetime, timedelta
-
-    from seizury_hrv_featuresextraction_spark.operators.behavior import cohort_retention
-
-    wk = timedelta(weeks=1)
-    # epoch-aligned Thursday so events sit cleanly inside epoch weeks
-    w0 = datetime(2024, 1, 4, 12, 0, 0)
-    rows = [
-        (1, w0), (1, w0 + wk), (1, w0 + 2 * wk),   # cohort A, ages 0,1,2
-        (2, w0), (2, w0 + 2 * wk),                 # cohort A, ages 0,2
-        (3, w0 + wk), (3, w0 + 2 * wk),            # cohort B, ages 0,1
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    got = {
-        (r["cohort_week"] - min(x["cohort_week"] for x in out), r["age_week"]): (
-            r["n_active"], r["cohort_size"], r["retention"],
-        )
-        for out in [cohort_retention(df).collect()]
-        for r in out
-    }
-    assert got[(0, 0)] == (2, 2, 1.0)
-    assert got[(0, 1)] == (1, 2, 0.5)
-    assert got[(0, 2)] == (2, 2, 1.0)
-    assert got[(1, 0)] == (1, 1, 1.0)
-    assert got[(1, 1)] == (1, 1, 1.0)
-    assert len(got) == 5
 
 
 def test_key_skew_report_uniform_and_degenerate(spark):

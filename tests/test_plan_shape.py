@@ -506,6 +506,26 @@ def test_scan_num_partitions_guard(spark):
         cached.unpersist()
 
 
+def test_literal_array_coerces_and_rejects_non_finite(spark):
+    """planutil.literal_array formats NumPy scalars as plain numbers
+    (numpy>=2 repr is 'np.int64(5)') and refuses values whose repr
+    would not parse as a number."""
+    import numpy as np
+    import pytest
+
+    from seizury_hrv_featuresextraction_spark.planutil import literal_array
+
+    row = spark.range(1).select(
+        literal_array([np.int64(5), 3, np.int32(-2)], "BIGINT").alias("i"),
+        literal_array([np.float64(0.1), 2, 1e-300], "DOUBLE").alias("d"),
+    ).first()
+    assert row["i"] == [5, 3, -2]
+    assert row["d"] == [0.1, 2.0, 1e-300]
+    for bad in (float("inf"), float("nan")):
+        with pytest.raises(ValueError):
+            literal_array([1.0, bad], "DOUBLE")
+
+
 def test_shuffle_shards_one_exchange_no_global_sort(spark):
     """E38 scale contract: the corpus shuffle is ONE hash exchange on
     the shard key + within-partition sorts — never a rangepartitioning
