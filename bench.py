@@ -49,7 +49,6 @@ HEADLINE = [
     "lsh_dup_pairs",
     "ngram_jaccard_pairs",
     "simhash_docs",
-    "cosine_topk",
     "hrv_time_features_windows",
 ]
 

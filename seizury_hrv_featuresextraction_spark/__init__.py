@@ -9,7 +9,7 @@ Layout
                     native Column builders (text, vectors).
 - ``operators/``  : reusable DataFrame operators (as-of join, windowing,
                     sessionization, labeling, filters, skew handling,
-                    dedup, similarity, stats).
+                    dedup, stats).
 - ``plans/``      : end-to-end pipelines (the flagship HRV feature plan,
                     sequence building).
 - ``sources/``    : table registry + partitioned sinks with lineage

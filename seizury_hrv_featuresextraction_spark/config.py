@@ -54,16 +54,13 @@ class HRVConfig:
     #     HRV definition, 1/128 s bins) ---
     tri_bin_seconds: float = 1.0 / 128.0
 
-    # --- optional tachogram cleaning (reference ecg_processing.py:52-53,
-    #     219-240); OFF by default: pre-tokenized input is already clean ---
-    apply_physio_filter: bool = False
-    rr_min_seconds: float = 0.2
+    # --- physiologic RR ceiling (reference ecg_processing.py:52-53);
+    #     plan_stats' windows-per-doc estimate assumes no token exceeds it ---
     rr_max_seconds: float = 2.0
 
     # --- physical layer ---
     max_windows_per_chunk: int = 512  # salted split threshold for long docs
-    repartition_chunks: bool = True
-    target_partitions: int = 0        # 0 -> spark.sql.shuffle.partitions
+    repartition_chunks: bool = True   # to spark.sql.shuffle.partitions
 
     def window_samples(self) -> int:
         return int(self.window_seconds * self.sampling_rate)

@@ -161,7 +161,7 @@ def explode_chunks(sequences: DataFrame, cfg: HRVConfig) -> DataFrame:
 
     chunks = sequences.select("doc_id", "tokens").mapInArrow(gen, schema=CHUNKS_SCHEMA)
     if cfg.repartition_chunks:
-        n = cfg.target_partitions or int(sequences.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n = int(sequences.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         chunks = chunks.repartition(n)
     return chunks
 

@@ -1321,3 +1321,35 @@ def shapley_attribution(
         "channel",
         F.round(F.col("cum") / F.lit(float(fact[k])), 6).alias("shapley"),
     )
+
+
+def rrf_fuse(legs: list[DataFrame], k: int = 10, rrf_k: int = 60) -> DataFrame:
+    """Reciprocal-rank fusion (Cormack/Clarke/Buettcher 2009) of several
+    ranked lists of (query_id, rank, doc_id): each list contributes
+    1/(rrf_k + rank) per (query, doc); a doc absent from a list
+    contributes nothing, so scores on different scales fuse without
+    normalization. Ranks are integers, so the fused score is exact to
+    round 6. Ties break on doc_id.
+
+    The legs are already bounded top-k lists, so fusion runs on
+    |queries| x leg_k x n_legs rows: one union, one keyed aggregate, one
+    rank window. Returns (query_id, rank, doc_id, rrf_score)."""
+    from functools import reduce
+
+    contribs = [
+        leg.select(
+            "query_id", "doc_id", (1.0 / (F.lit(rrf_k) + F.col("rank"))).alias("__c")
+        )
+        for leg in legs
+    ]
+    fused = (
+        reduce(lambda a, b: a.unionByName(b), contribs)
+        .groupBy("query_id", "doc_id")
+        .agg(F.round(F.sum("__c"), 6).alias("rrf_score"))
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("rrf_score"), F.asc("doc_id"))
+    return (
+        fused.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "doc_id", "rrf_score")
+    )

@@ -20,7 +20,6 @@ from ..functions.text import langid, quality_features, words
 from ..operators.asof import asof_join
 from ..operators.dedup import dedup_exact, minhash_lsh_pairs, ngram_jaccard_pairs
 from ..operators.filters import iqr_filter, median_mad_filter
-from ..operators.similarity import brute_force_topk, ivf_topk
 from ..operators.sketches import HLL_EST_NUM as _HLL_EST_NUM
 from ..operators.stats import class_weights, zscore_normalize
 from ..operators.windows import session_bounds, sliding_window_grid
@@ -810,205 +809,6 @@ def key_skew_events(spark, sf_dir):
     return key_skew_report(ev, ["user_id"])
 
 
-# E97 hybrid RRF fusion: same literal query set as E53 BM25 (re-declared
-# here because this registration precedes the E53 block in file order)
-_HY_QUERIES = [
-    (0, ["spark", "join", "fast"]),
-    (1, ["window", "agg", "scan"]),
-    (2, ["customer", "vector"]),
-]
-_HY_VALUES = ", ".join(f"({qid}, '{t}')" for qid, terms in _HY_QUERIES for t in terms)
-_HY_TERMS_IN = ", ".join(
-    f"'{t}'" for t in sorted({t for _, ts in _HY_QUERIES for t in ts})
-)
-_HY_QTEXT = ", ".join(f"({qid}, '{' '.join(terms)}')" for qid, terms in _HY_QUERIES)
-_HY_SCATTER = (
-    "list_sum(list_transform(ws,"
-    " w -> CASE WHEN ('0x' || substr(md5('e:' || w), 1, 15))::bigint % 16 = j"
-    " THEN (CASE WHEN ('0x' || substr(md5('s:' || w), 1, 1))::bigint % 2 = 0"
-    " THEN 1.0 ELSE -1.0 END)"
-    " ELSE 0.0 END))"
-)
-_COS16_DD = (
-    "list_sum(list_transform(generate_series(1, 16), i -> {a}[i] * {b}[i]))"
-    " / (sqrt(list_sum(list_transform(generate_series(1, 16), i -> {a}[i] * {a}[i])))"
-    " * sqrt(list_sum(list_transform(generate_series(1, 16), i -> {b}[i] * {b}[i]))))"
-)
-
-
-@q(
-    "hybrid_rrf_topk",
-    f"""
-    WITH q(query_id, term) AS (VALUES {_HY_VALUES}),
-    qt(query_id, qtext) AS (VALUES {_HY_QTEXT}),
-    base AS (SELECT doc_id, {WORDS_DD} AS ws FROM documents),
-    dl AS (SELECT doc_id, len(ws)::double AS dl FROM base),
-    tf AS (SELECT b.doc_id, t.w AS term, count(*)::double AS tf
-           FROM base b, unnest(b.ws) AS t(w)
-           WHERE t.w IN ({_HY_TERMS_IN})
-           GROUP BY b.doc_id, t.w),
-    dfq AS (SELECT term, count(*)::double AS df FROM tf GROUP BY term),
-    stats AS (SELECT count(*)::double AS n_docs, avg(dl) AS avgdl FROM dl),
-    bsc AS (SELECT q.query_id::bigint AS query_id, tf.doc_id,
-                   round(sum(ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-                             * (tf.tf * (1.2 + 1))
-                             / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / s.avgdl))), 6)
-                     AS score
-            FROM tf JOIN dfq d USING (term)
-                    JOIN q ON q.term = tf.term
-                    JOIN dl ON dl.doc_id = tf.doc_id
-                    CROSS JOIN stats s
-            GROUP BY q.query_id, tf.doc_id),
-    bmr AS (SELECT query_id, doc_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY score DESC, doc_id)::bigint AS rank
-            FROM bsc QUALIFY rank <= 20),
-    db AS (SELECT doc_id, ws FROM base WHERE len(ws) > 0),
-    dhit AS (SELECT doc_id,
-                    ('0x' || substr(md5('e:' || w), 1, 15))::bigint % 16 AS j,
-                    sum(CASE WHEN ('0x' || substr(md5('s:' || w), 1, 1))::bigint % 2 = 0
-                             THEN 1.0 ELSE -1.0 END) AS v
-             FROM db, unnest(ws) AS t(w) GROUP BY doc_id, j),
-    draw AS (SELECT d.doc_id, g.j, coalesce(s.v, 0.0) AS v
-             FROM db d CROSS JOIN unnest(generate_series(0, 15)) AS g(j)
-             LEFT JOIN dhit s ON s.doc_id = d.doc_id AND s.j = g.j),
-    dn AS (SELECT doc_id, sqrt(sum(v * v)) AS nrm FROM draw GROUP BY doc_id),
-    dvec AS (SELECT r.doc_id,
-                    list(CASE WHEN nrm > 0 THEN v / nrm ELSE v END ORDER BY j) AS dv
-             FROM draw r JOIN dn USING (doc_id) GROUP BY r.doc_id),
-    qws AS (SELECT query_id::bigint AS query_id,
-                   list_filter(string_split_regex(lower(trim(qtext)), '\\s+'),
-                               w -> w <> '') AS ws
-            FROM qt),
-    qraw AS (SELECT query_id, j, {_HY_SCATTER} AS v
-             FROM qws, unnest(generate_series(0, 15)) AS t(j)),
-    qn AS (SELECT query_id, sqrt(sum(v * v)) AS nrm FROM qraw GROUP BY query_id),
-    qvec AS (SELECT r.query_id,
-                    list(CASE WHEN nrm > 0 THEN v / nrm ELSE v END ORDER BY j) AS qv
-             FROM qraw r JOIN qn USING (query_id) GROUP BY r.query_id),
-    dsc AS (SELECT q.query_id, d.doc_id,
-                   {_COS16_DD.format(a='q.qv', b='d.dv')} AS score
-            FROM dvec d CROSS JOIN qvec q),
-    dnr AS (SELECT query_id, doc_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY score DESC, doc_id)::bigint AS rank
-            FROM dsc QUALIFY rank <= 20),
-    legs AS (SELECT query_id, doc_id, rank FROM bmr
-             UNION ALL SELECT query_id, doc_id, rank FROM dnr),
-    f AS (SELECT query_id, doc_id,
-                 round(sum(1.0 / (60 + rank)), 6) AS rrf_score
-          FROM legs GROUP BY 1, 2)
-    SELECT query_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY rrf_score DESC, doc_id)::bigint AS rank,
-           doc_id, rrf_score
-    FROM f
-    QUALIFY rank <= 10
-    """,
-)
-def hybrid_rrf_topk(spark, sf_dir):
-    """E97: hybrid search — BM25 lexical top-20 (E53) fused with a dense
-    hash-embedding cosine top-20 (E45 embedding) by reciprocal-rank
-    fusion 1/(60+rank). Twin replays both legs AND the fusion end-to-end
-    in SQL; ranks are integers, each contribution one IEEE division."""
-    from ..operators.retrieval import bm25_topk, dense_hash_topk, rrf_fuse
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    bm = bm25_topk(docs, _HY_QUERIES, k=20)
-    dn = dense_hash_topk(
-        docs,
-        [(qid, " ".join(terms)) for qid, terms in _HY_QUERIES],
-        k=20,
-        dim=16,
-    )
-    return rrf_fuse([bm, dn], k=10, rrf_k=60)
-
-
-def _mmr_round(r: int) -> str:
-    cos = _COS16_DD.format(a="c.dv", b="p.dv")
-    return f"""
-    s{r} AS (SELECT *, round(0.5 * rel - 0.5 * maxsim, 6) AS score,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY round(0.5 * rel - 0.5 * maxsim, 6) DESC,
-                                               doc_id) AS rn
-             FROM c{r - 1}),
-    p{r} AS (SELECT query_id, doc_id, dv, score FROM s{r} WHERE rn = 1),
-    c{r} AS (SELECT c.query_id, c.doc_id, c.rel, c.dv,
-                    greatest(c.maxsim, {cos}) AS maxsim
-             FROM s{r} c JOIN p{r} p ON p.query_id = c.query_id
-             WHERE c.rn > 1)"""
-
-
-@q(
-    "mmr_rerank_topk",
-    f"""
-    WITH qt(query_id, qtext) AS (VALUES {_HY_QTEXT}),
-    base AS (SELECT doc_id, {WORDS_DD} AS ws FROM documents),
-    db AS (SELECT doc_id, ws FROM base WHERE len(ws) > 0),
-    dhit AS (SELECT doc_id,
-                    ('0x' || substr(md5('e:' || w), 1, 15))::bigint % 16 AS j,
-                    sum(CASE WHEN ('0x' || substr(md5('s:' || w), 1, 1))::bigint % 2 = 0
-                             THEN 1.0 ELSE -1.0 END) AS v
-             FROM db, unnest(ws) AS t(w) GROUP BY doc_id, j),
-    draw AS (SELECT d.doc_id, g.j, coalesce(s.v, 0.0) AS v
-             FROM db d CROSS JOIN unnest(generate_series(0, 15)) AS g(j)
-             LEFT JOIN dhit s ON s.doc_id = d.doc_id AND s.j = g.j),
-    dn AS (SELECT doc_id, sqrt(sum(v * v)) AS nrm FROM draw GROUP BY doc_id),
-    dvec AS (SELECT r.doc_id,
-                    list(CASE WHEN nrm > 0 THEN v / nrm ELSE v END ORDER BY j) AS dv
-             FROM draw r JOIN dn USING (doc_id) GROUP BY r.doc_id),
-    qws AS (SELECT query_id::bigint AS query_id,
-                   list_filter(string_split_regex(lower(trim(qtext)), '\\s+'),
-                               w -> w <> '') AS ws
-            FROM qt),
-    qraw AS (SELECT query_id, j, {_HY_SCATTER} AS v
-             FROM qws, unnest(generate_series(0, 15)) AS t(j)),
-    qn AS (SELECT query_id, sqrt(sum(v * v)) AS nrm FROM qraw GROUP BY query_id),
-    qvec AS (SELECT r.query_id,
-                    list(CASE WHEN nrm > 0 THEN v / nrm ELSE v END ORDER BY j) AS qv
-             FROM qraw r JOIN qn USING (query_id) GROUP BY r.query_id),
-    dsc AS (SELECT q.query_id, d.doc_id, d.dv,
-                   {_COS16_DD.format(a='q.qv', b='d.dv')} AS dscore
-            FROM dvec d CROSS JOIN qvec q),
-    cand AS (SELECT query_id, doc_id, round(dscore, 6) AS rel, dv
-             FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                                ORDER BY dscore DESC, doc_id) AS rnk
-                   FROM dsc)
-             WHERE rnk <= 20),
-    c0 AS (SELECT query_id, doc_id, rel, dv, 0.0 AS maxsim FROM cand),
-    {",".join(_mmr_round(r) for r in range(1, 6))}
-    SELECT query_id, rank, doc_id, mmr_score FROM (
-      SELECT query_id, 1::bigint AS rank, doc_id, score AS mmr_score FROM p1
-      UNION ALL SELECT query_id, 2, doc_id, score FROM p2
-      UNION ALL SELECT query_id, 3, doc_id, score FROM p3
-      UNION ALL SELECT query_id, 4, doc_id, score FROM p4
-      UNION ALL SELECT query_id, 5, doc_id, score FROM p5)
-    """,
-)
-def mmr_rerank_topk(spark, sf_dir):
-    """E102: MMR diversified re-ranking of the dense top-20 (lam = 0.5,
-    an exactly-representable fraction so both engines' 1-lam literal is
-    bit-identical) down to 5 per query. Twin unrolls all five greedy
-    rounds in SQL (the E71 PCA unroll device)."""
-    from ..functions.vectors import hash_embed_udf
-    from ..operators.retrieval import dense_hash_topk, mmr_rerank
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    qtexts = [(qid, " ".join(terms)) for qid, terms in _HY_QUERIES]
-    dn = dense_hash_topk(docs, qtexts, k=20, dim=16)
-    # re-embed ONLY the candidate docs (<= |queries| x 20 rows; the
-    # broadcast semi-join keeps this second pass off the corpus)
-    cand_ids = dn.select("doc_id").distinct()
-    cand_vecs = docs.join(F.broadcast(cand_ids), "doc_id").select(
-        "doc_id", hash_embed_udf(16)(F.col("text")).alias("dv")
-    )
-    cands = (
-        dn.select("query_id", "doc_id", F.round("score", 6).alias("rel"))
-        .join(cand_vecs, "doc_id")
-    )
-    return mmr_rerank(cands, k=5, lam=0.5)
-
-
 @q(
     "negative_pairs_docs",
     """
@@ -1725,36 +1525,8 @@ def langid_docs(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# embeddings: similarity search / near-dup
+# embeddings: near-dup pairs
 # ---------------------------------------------------------------------------
-
-_DOT_DD = "list_sum(list_transform(generate_series(1, 64), i -> a.v[i] * b.v[i]))"
-
-
-@q(
-    "cosine_topk",
-    f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::double) AS v
-               FROM embeddings WHERE vec_id < 300),
-         q AS (SELECT * FROM e WHERE vec_id < 10),
-         scored AS (
-           SELECT q.vec_id AS query_id, a.vec_id AS corpus_id,
-                  list_sum(list_transform(generate_series(1, 64), i -> q.v[i] * a.v[i]))
-                  / (sqrt(list_sum(list_transform(generate_series(1, 64), i -> q.v[i] * q.v[i])))
-                   * sqrt(list_sum(list_transform(generate_series(1, 64), i -> a.v[i] * a.v[i])))) AS cos
-           FROM q JOIN e a ON a.vec_id <> q.vec_id)
-    SELECT query_id, corpus_id, round(cos, 6) AS cos,
-           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rank
-    FROM scored QUALIFY rank <= 3
-    """,
-)
-def cosine_topk(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
-    qs = emb.filter(F.col("vec_id") < 10)
-    out = brute_force_topk(emb, qs, "embedding", "vec_id", k=3)
-    return out.select(
-        "query_id", "corpus_id", F.round("cos", 6).alias("cos"), F.col("rank").cast("long").alias("rank")
-    )
 
 
 @q(
@@ -1843,11 +1615,6 @@ def embedding_near_dup_pairs_lsh(spark, sf_dir):
         emb, "embedding", "vec_id", min_cosine=0.25, n_planes=3, n_bands=12
     )
     return out.select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-
-
-# ivf_topk (the TRAINED path) is registered at the end of this module —
-# its DuckDB twin unrolls the fixed-iteration Lloyd loop and needs the
-# cosine helper defined below.
 
 
 # ---------------------------------------------------------------------------
@@ -1977,9 +1744,9 @@ def hrv_time_features_windows(spark, sf_dir):
     )
 
 
-# E83: pairwise Pearson over the time-domain feature table with the E71
-# integer-exactness device. Scales pick the quantization grain: 1 ms for
-# the ms-valued features (int64 squares stay far from overflow at any
+# E83: pairwise Pearson over the time-domain feature table with exact
+# int64 sums over quantized values. Scales pick the quantization grain:
+# 1 ms for the ms-valued features (int64 squares stay far from overflow at any
 # corpus size the agg can see), x100 for the two ratio features.
 _CORR_FEATS: list[tuple[str, int]] = [
     ("rr_mean", 1),
@@ -2648,126 +2415,6 @@ def dedup_components_q(spark, sf_dir):
     return comp.select(F.col("id").alias("doc_id"), F.col("comp").alias("component"))
 
 
-_COS_DD = (
-    "list_sum(list_transform(generate_series(1, 64), i -> {a}[i] * {b}[i]))"
-    " / (sqrt(list_sum(list_transform(generate_series(1, 64), i -> {a}[i] * {a}[i])))"
-    " * sqrt(list_sum(list_transform(generate_series(1, 64), i -> {b}[i] * {b}[i]))))"
-)
-
-
-@q(
-    "ivf_topk_fixed",
-    f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::double) AS v
-               FROM embeddings WHERE vec_id < 200),
-         cent AS (SELECT (vec_id + 1)::int AS cid, v AS cvec FROM e WHERE vec_id < 8),
-         asg0 AS (
-           SELECT e.vec_id AS corpus_id, e.v AS cv, c.cid,
-                  row_number() OVER (PARTITION BY e.vec_id
-                                     ORDER BY {_COS_DD.format(a='e.v', b='c.cvec')} DESC, c.cid) AS rk
-           FROM e CROSS JOIN cent c),
-         asg AS (SELECT corpus_id, cv, cid AS list_id FROM asg0 WHERE rk = 1),
-         q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-         ql0 AS (
-           SELECT q.query_id, q.qv, c.cid,
-                  row_number() OVER (PARTITION BY q.query_id
-                                     ORDER BY {_COS_DD.format(a='q.qv', b='c.cvec')} DESC, c.cid) AS rk
-           FROM q CROSS JOIN cent c),
-         ql AS (SELECT query_id, qv, cid AS list_id FROM ql0 WHERE rk <= 3),
-         scored AS (
-           SELECT ql.query_id, a.corpus_id, {_COS_DD.format(a='ql.qv', b='a.cv')} AS cos
-           FROM ql JOIN asg a ON a.list_id = ql.list_id
-           WHERE a.corpus_id <> ql.query_id)
-    SELECT query_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rank,
-           corpus_id, round(cos, 6) AS cos
-    FROM scored QUALIFY rank <= 3
-    """,
-)
-def ivf_topk_fixed(spark, sf_dir):
-    """IVF SEARCH path under a full DuckDB oracle: with a fixed centroid
-    table (the first 8 vectors) the whole pipeline — shuffle-free
-    broadcast-argmax assignment, n_probe list selection, in-list exact
-    top-k — is SQL-expressible. Only the k-means TRAINING loop stays
-    rows-only (ivf_topk above) with its pytest recall gate."""
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    from ..functions.vectors import to_double
-
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        (F.col("vec_id") + 1).cast("int").alias("cid"),
-        to_double(F.col("embedding")).alias("cvec"),
-    )
-    qs = emb.filter(F.col("vec_id") < 5)
-    out = ivf_topk(emb, qs, "embedding", "vec_id", k=3, n_probe=3, centroids=cent)
-    return out.select(
-        "query_id",
-        F.col("rank").cast("long").alias("rank"),
-        "corpus_id",
-        F.round("cos", 6).alias("cos"),
-    )
-
-
-@q(
-    "semantic_dedup_embeddings",
-    f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::double) AS v
-               FROM embeddings),
-         planted AS (
-           SELECT vec_id, v FROM e
-           UNION ALL
-           SELECT vec_id + 100000000, v FROM e WHERE vec_id % 10 = 0
-           UNION ALL
-           SELECT vec_id + 200000000, list_transform(v, x -> x * 2) FROM e WHERE vec_id % 10 = 5),
-         cent AS (SELECT (vec_id + 1)::int AS cid, v AS cvec FROM e WHERE vec_id < 8),
-         asg0 AS (
-           SELECT p.vec_id, p.v, c.cid,
-                  row_number() OVER (PARTITION BY p.vec_id
-                                     ORDER BY {_COS_DD.format(a='p.v', b='c.cvec')} DESC, c.cid) AS rk
-           FROM planted p CROSS JOIN cent c),
-         asg AS (SELECT vec_id, v, cid AS cluster FROM asg0 WHERE rk = 1),
-         dropped AS (
-           SELECT DISTINCT x.vec_id
-           FROM asg x JOIN asg y ON x.cluster = y.cluster AND y.vec_id < x.vec_id
-           WHERE {_COS_DD.format(a='x.v', b='y.v')} >= 0.9)
-    SELECT a.vec_id, a.cluster::bigint AS cluster
-    FROM asg a
-    WHERE NOT EXISTS (SELECT 1 FROM dropped d WHERE d.vec_id = a.vec_id)
-    """,
-)
-def semantic_dedup_embeddings(spark, sf_dir):
-    """E49: SemDeDup (Abbas et al. 2023) — semantic near-dup removal:
-    cluster (fixed first-8 centroids, broadcast argmax, zero corpus
-    shuffle), pairwise cosine only WITHIN clusters, drop every row with
-    a smaller-id same-cluster neighbor at cos >= 0.9. The corpus is the
-    embeddings table plus DETERMINISTIC planted dups (exact copies at
-    +1e8 for vec_id%10==0, 2x-scaled copies at +2e8 for vec_id%10==5 —
-    scale-invariance makes cos exactly ~1); natural pairs max out at
-    cos 0.60 (measured both SFs), so tau=0.9 sits 0.3 from any knife
-    edge. Planted offsets are +1e8/+2e8 so ids stay UNIQUE on every
-    corpus incl. the sf1.0 replica set (ids to ~9e6): duplicate ids
-    break the smaller-id drop rule's well-ordering — found at sf1.0
-    where +1e6 offsets collided with replica ids (engine kept both
-    same-id rows, the twin's per-id window collapsed them). Output
-    (vec_id, cluster) audits the assignment too."""
-    from ..functions.vectors import to_double
-    from ..operators.similarity import semantic_dedup
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    copies = emb.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 100000000).alias("vec_id"), "embedding"
-    )
-    scaled = emb.filter(F.col("vec_id") % 10 == 5).select(
-        (F.col("vec_id") + 200000000).alias("vec_id"),
-        F.transform("embedding", lambda x: (x * F.lit(2.0)).cast("float")).alias("embedding"),
-    )
-    corpus = emb.unionByName(copies).unionByName(scaled)
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        (F.col("vec_id") + 1).cast("int").alias("cid"),
-        to_double(F.col("embedding")).alias("cvec"),
-    )
-    return semantic_dedup(corpus, "embedding", "vec_id", cent, tau=0.9, with_cluster=True)
-
-
 @q(
     "deterministic_sample",
     """
@@ -3056,84 +2703,6 @@ def hrv_features_flagship_oracle_grid(spark, sf_dir):
         F.round("ApEn", 6).alias("apen"),
         F.round("TRI_INDEX", 6).alias("tri_index"),
         F.col("label").cast("long").alias("label"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# TRAINED IVF twin (VERDICT r2 item 4): the k-means training loop is
-# deterministic (md5-hash-ordered seeding, fixed 3 Lloyd iterations,
-# bounded train sample), so it unrolls into three chained
-# assign -> mean-per-(cid,pos) -> reassemble CTE blocks; search then
-# mirrors the ivf_topk_fixed twin on the trained centroids.
-# ---------------------------------------------------------------------------
-
-
-def _lloyd_iter_cte(i: int) -> str:
-    cos = _COS_DD.format(a="t.v", b="c.cvec")
-    return f"""a{i} AS (
-      SELECT t.vec_id, t.v, c.cid,
-             row_number() OVER (PARTITION BY t.vec_id
-                                ORDER BY {cos} DESC, c.cid) AS rk
-      FROM e t CROSS JOIN cent{i - 1} c),
-    m{i} AS (
-      SELECT a.cid, p.pos, avg(a.v[p.pos]) AS mx
-      FROM a{i} a CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS pos) p
-      WHERE a.rk = 1
-      GROUP BY a.cid, p.pos),
-    cent{i} AS (SELECT cid, list(mx ORDER BY pos) AS cvec FROM m{i} GROUP BY cid)"""
-
-
-_IVF_TRAINED_SQL = f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::double) AS v
-               FROM embeddings WHERE vec_id < 200),
-         h AS (SELECT vec_id, v, ('0x' || substr(md5(vec_id::varchar), 1, 15))::bigint AS hh
-               FROM e),
-         cent0 AS (
-           SELECT row_number() OVER (ORDER BY hh) AS cid, v AS cvec
-           FROM h QUALIFY row_number() OVER (ORDER BY hh) <= 8),
-    {_lloyd_iter_cte(1)},
-    {_lloyd_iter_cte(2)},
-    {_lloyd_iter_cte(3)},
-         asg0 AS (
-           SELECT e.vec_id AS corpus_id, e.v AS cv, c.cid,
-                  row_number() OVER (PARTITION BY e.vec_id
-                                     ORDER BY {_COS_DD.format(a='e.v', b='c.cvec')} DESC, c.cid) AS rk
-           FROM e CROSS JOIN cent3 c),
-         asg AS (SELECT corpus_id, cv, cid AS list_id FROM asg0 WHERE rk = 1),
-         q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-         ql0 AS (
-           SELECT q.query_id, q.qv, c.cid,
-                  row_number() OVER (PARTITION BY q.query_id
-                                     ORDER BY {_COS_DD.format(a='q.qv', b='c.cvec')} DESC, c.cid) AS rk
-           FROM q CROSS JOIN cent3 c),
-         ql AS (SELECT query_id, qv, cid AS list_id FROM ql0 WHERE rk <= 3),
-         scored AS (
-           SELECT ql.query_id, a.corpus_id, {_COS_DD.format(a='ql.qv', b='a.cv')} AS cos
-           FROM ql JOIN asg a ON a.list_id = ql.list_id
-           WHERE a.corpus_id <> ql.query_id)
-    SELECT query_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rank,
-           corpus_id, round(cos, 6) AS cos
-    FROM scored QUALIFY rank <= 3
-"""
-
-
-@q("ivf_topk", _IVF_TRAINED_SQL)
-def ivf_topk_q(spark, sf_dir):
-    """IVF with TRAINED centroids under a full DuckDB oracle: Lloyd on
-    the md5-hash-ordered sample is deterministic and fixed-iteration, so
-    the twin replays seeding + 3 assign/mean rounds as unrolled CTEs.
-    (Was rows-only through r2 — 'iterative k-means: not SQL-expressible'
-    stopped being true once dedup_components shipped an iterated-CTE
-    twin.) Recall vs exact search is separately pytest-gated."""
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    qs = emb.filter(F.col("vec_id") < 5)
-    out = ivf_topk(emb, qs, "embedding", "vec_id", k=3, n_lists=8, n_probe=3)
-    return out.select(
-        "query_id",
-        F.col("rank").cast("long").alias("rank"),
-        "corpus_id",
-        F.round("cos", 6).alias("cos"),
     )
 
 
@@ -5652,8 +5221,8 @@ def _bpe_twin_sql(k: int) -> str:
     candidate positions: consecutive candidates only occur for l = r
     runs, where greedy takes odd ranks within each island; the rebuild
     drops j when j-1 was selected and replaces selected j with l || r.
-    Same device family as the Lloyd unroll (ivf_topk) and the E12b
-    BFD policy replay — iteration state carried CTE block to block."""
+    Same device family as the E12b BFD policy replay — iteration state
+    carried CTE block to block."""
     parts = [f"""
     wsrc AS (SELECT unnest({WORDS_DD}) AS word FROM documents),
     wc AS (SELECT word, count(*)::bigint AS cnt FROM wsrc GROUP BY word),
@@ -5874,65 +5443,6 @@ ORACLE["tokenizer_pipeline"] = ORACLE["tokenizer_pipeline"].replace(
 )
 
 
-_BM25_QUERIES = [
-    (0, ["spark", "join", "fast"]),
-    (1, ["window", "agg", "scan"]),
-    (2, ["customer", "vector"]),
-]
-_BM25_VALUES = ", ".join(
-    f"({qid}, '{t}')" for qid, terms in _BM25_QUERIES for t in terms
-)
-_BM25_TERMS_IN = ", ".join(
-    f"'{t}'" for t in sorted({t for _, ts in _BM25_QUERIES for t in ts})
-)
-
-
-@q(
-    "bm25_topk_docs",
-    f"""
-    WITH q(query_id, term) AS (VALUES {_BM25_VALUES}),
-    base AS (SELECT doc_id,
-                    list_filter(string_split_regex(lower(trim(coalesce(text, ''))), '\\s+'),
-                                w -> w <> '') AS ws
-             FROM documents),
-    dl AS (SELECT doc_id, len(ws)::double AS dl FROM base),
-    tf AS (SELECT b.doc_id, t.w AS term, count(*)::double AS tf
-           FROM base b, unnest(b.ws) AS t(w)
-           WHERE t.w IN ({_BM25_TERMS_IN})
-           GROUP BY b.doc_id, t.w),
-    dfq AS (SELECT term, count(*)::double AS df FROM tf GROUP BY term),
-    stats AS (SELECT count(*)::double AS n_docs, avg(dl) AS avgdl FROM dl),
-    scored AS (SELECT q.query_id::bigint AS query_id, tf.doc_id,
-                      round(sum(ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-                                * (tf.tf * (1.2 + 1))
-                                / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / s.avgdl))), 6)
-                        AS score
-               FROM tf JOIN dfq d USING (term)
-                       JOIN q ON q.term = tf.term
-                       JOIN dl ON dl.doc_id = tf.doc_id
-                       CROSS JOIN stats s
-               GROUP BY q.query_id, tf.doc_id)
-    SELECT query_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id)::bigint
-             AS rank,
-           doc_id, score
-    FROM scored
-    QUALIFY rank <= 5
-    """,
-)
-def bm25_topk_docs(spark, sf_dir):
-    """E53: BM25 sparse lexical retrieval — Lucene-flavoured idf/tf
-    saturation over an inverted index built in ONE corpus scan (the
-    explode is pre-filtered to the query vocab while still an array, so
-    only (doc, query-term) hits leave the scan stage; df folds out of
-    the tf table; N/avgdl broadcast as a 1-row scalar). See
-    operators/retrieval.py for the 100 TB shape argument."""
-    from ..operators.retrieval import bm25_topk
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return bm25_topk(docs, _BM25_QUERIES, k=5)
-
-
 @q(
     "merge_upsert_crawl",
     """
@@ -6101,87 +5611,6 @@ ORACLE["tokenizer_fertility"] = ORACLE["tokenizer_fertility"].replace(
 
 
 @q(
-    "cluster_profile_embeddings",
-    f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::double) AS v
-               FROM embeddings),
-    cent AS (SELECT (vec_id + 1)::int AS cid, v AS cvec FROM e WHERE vec_id < 8),
-    asg0 AS (SELECT e.vec_id, e.v, c.cid,
-                    row_number() OVER (PARTITION BY e.vec_id
-                                       ORDER BY {_COS_DD.format(a='e.v', b='c.cvec')} DESC, c.cid) AS rk
-             FROM e CROSS JOIN cent c),
-    asg AS (SELECT vec_id, v, cid AS cluster_id FROM asg0 WHERE rk = 1),
-    ex AS (SELECT cluster_id, (i - 1)::bigint AS dim, v[i] AS val
-           FROM asg, unnest(generate_series(1, len(v))) AS t(i))
-    SELECT cluster_id, dim, count(*)::bigint AS n,
-           round(avg(val), 6) AS mean,
-           round(sum(val * val) / count(*) - avg(val) * avg(val), 6) AS var
-    FROM ex GROUP BY cluster_id, dim
-    """,
-)
-def cluster_profile_embeddings(spark, sf_dir):
-    """E57: ANN-index diagnostics — per-cluster per-dimension (n, mean,
-    population var) under the fixed-centroid device (first 8 vectors,
-    as ivf_topk_fixed): broadcast-argmax assignment keeps the corpus
-    shuffle-free; the posexplode amplification is map-local (partial
-    agg bounds the exchange at clusters x dim x tasks). The twin
-    assigns independently via a row_number window."""
-    from ..functions.vectors import to_double
-    from ..operators.similarity import cluster_profile
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        (F.col("vec_id") + 1).cast("int").alias("cid"),
-        to_double(F.col("embedding")).alias("cvec"),
-    )
-    return cluster_profile(emb, cent)
-
-
-@q(
-    "cluster_profile_incremental",
-    f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::double) AS v
-               FROM embeddings),
-    cent AS (SELECT (vec_id + 1)::int AS cid, v AS cvec FROM e WHERE vec_id < 8),
-    asg0 AS (SELECT e.vec_id, e.v, c.cid,
-                    row_number() OVER (PARTITION BY e.vec_id
-                                       ORDER BY {_COS_DD.format(a='e.v', b='c.cvec')} DESC, c.cid) AS rk
-             FROM e CROSS JOIN cent c),
-    asg AS (SELECT vec_id, v, cid AS cluster_id FROM asg0 WHERE rk = 1),
-    ex AS (SELECT cluster_id, (i - 1)::bigint AS dim, v[i] AS val
-           FROM asg, unnest(generate_series(1, len(v))) AS t(i))
-    SELECT cluster_id, dim, count(*)::bigint AS n,
-           round(avg(val), 6) AS mean,
-           round(sum(val * val) / count(*) - avg(val) * avg(val), 6) AS var
-    FROM ex GROUP BY cluster_id, dim
-    """,
-)
-def cluster_profile_incremental_q(spark, sf_dir):
-    """E62: MAINTAINED ANN-index profile — the corpus arrives as two
-    ingest batches (even / odd vec_ids); each batch is profiled alone
-    (broadcast-argmax, exchange bounded at clusters x dim x tasks) and
-    merged by raw-sufficient-statistic sums, the accumulated corpus
-    never rescanned (the E47/E50c maintained-table pattern for the
-    ANN index). The twin recomputes the profile over the WHOLE corpus
-    one-shot — agreement IS the incremental-equals-batch guarantee."""
-    from ..functions.vectors import to_double
-    from ..operators.similarity import (
-        cluster_profile_raw,
-        finalize_cluster_profile,
-        merge_cluster_profiles,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        (F.col("vec_id") + 1).cast("int").alias("cid"),
-        to_double(F.col("embedding")).alias("cvec"),
-    )
-    old = cluster_profile_raw(emb.filter(F.col("vec_id") % 2 == 0), cent)
-    new = cluster_profile_raw(emb.filter(F.col("vec_id") % 2 == 1), cent)
-    return finalize_cluster_profile(merge_cluster_profiles(old, new))
-
-
-@q(
     "corpus_datacard",
     f"""
     WITH w AS (SELECT doc_id, source, text, {WORDS_DD} AS ws FROM documents),
@@ -6296,85 +5725,6 @@ def split_leakage_audit_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, "text", "doc_id", n_hashes=4, band_size=2, shingle_words=3)
     return split_leakage_audit(pairs, val_pct=20, test_pct=20)
-
-
-@q(
-    "quantized_topk_embeddings",
-    """
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::double) AS v
-               FROM embeddings WHERE vec_id < 300),
-    mx AS (SELECT i AS d, max(abs(v[i])) AS m
-           FROM e, unnest(generate_series(1, 64)) AS t(i) GROUP BY i),
-    sc AS (SELECT list(CASE WHEN m > 0 THEN m / 127.0 ELSE 1.0 END ORDER BY d) AS sl
-           FROM mx),
-    qz AS (SELECT vec_id,
-                  list_transform(generate_series(1, 64),
-                      i -> greatest(-127, least(127, floor(v[i] / sl[i] + 0.5)))::bigint) AS c
-           FROM e, sc),
-    scored AS (
-      SELECT qs.vec_id AS query_id, a.vec_id AS corpus_id,
-             list_sum(list_transform(generate_series(1, 64), i -> qs.c[i] * a.c[i]))
-             / (sqrt(list_sum(list_transform(generate_series(1, 64), i -> qs.c[i] * qs.c[i])))
-              * sqrt(list_sum(list_transform(generate_series(1, 64), i -> a.c[i] * a.c[i])))) AS qcos
-      FROM (SELECT * FROM qz WHERE vec_id < 10) qs
-      JOIN qz a ON a.vec_id <> qs.vec_id)
-    SELECT query_id, corpus_id, round(qcos, 6) AS qcos,
-           row_number() OVER (PARTITION BY query_id ORDER BY qcos DESC, corpus_id) AS rank
-    FROM scored QUALIFY rank <= 3
-    """,
-)
-def quantized_topk_embeddings(spark, sf_dir):
-    """E59: cosine top-k over symmetric int8-quantized embeddings (the
-    FAISS-SQ8 memory path: 4x smaller at rest than float32). Integer
-    dot products into correctly-rounded IEEE sqrt/divide make an ANN
-    score bit-reproducible cross-engine — the twin replays scales,
-    codes, and ranking in full. Rank ties (likely with integer codes)
-    break on corpus_id in both engines."""
-    from ..operators.similarity import quantized_topk
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
-    qs = emb.filter(F.col("vec_id") < 10)
-    out = quantized_topk(emb, qs, "embedding", "vec_id", k=3)
-    return out.select(
-        "query_id",
-        "corpus_id",
-        F.round("qcos", 6).alias("qcos"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-@q(
-    "jl_projection_embeddings",
-    """
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::double) AS v
-               FROM embeddings),
-    mx AS (SELECT i AS d, max(abs(v[i])) AS m
-           FROM e, unnest(generate_series(1, 64)) AS t(i) GROUP BY i),
-    sc AS (SELECT list(CASE WHEN m > 0 THEN m / 127.0 ELSE 1.0 END ORDER BY d) AS sl
-           FROM mx),
-    qz AS (SELECT vec_id,
-                  list_transform(generate_series(1, 64),
-                      i -> greatest(-127, least(127, floor(v[i] / sl[i] + 0.5)))::bigint) AS c
-           FROM e, sc),
-    sg AS (SELECT j, list(CASE WHEN ('0x' || substr(md5('jl:' || j::varchar || ':' || d::varchar), 1, 8))::bigint % 2 = 0
-                               THEN 1 ELSE -1 END ORDER BY d) AS srow
-           FROM unnest(generate_series(0, 15)) AS t(j),
-                unnest(generate_series(0, 63)) AS u(d)
-           GROUP BY j)
-    SELECT qz.vec_id, sg.j::bigint AS j,
-           list_sum(list_transform(generate_series(1, 64), i -> qz.c[i] * sg.srow[i]))::bigint AS p
-    FROM qz, sg
-    """,
-)
-def jl_projection_embeddings(spark, sf_dir):
-    """E84: deterministic ±1 JL projection 64→16 over int8 codes — the
-    distance-faithful sketch rung of the vector ladder; everything
-    in-row (zero exchange), every coordinate an exact int64 the twin
-    regenerates from the same md5 matrix."""
-    from ..operators.similarity import jl_sign_projection
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return jl_sign_projection(emb, "embedding", "vec_id", out_dim=16, dim=64)
 
 
 @q(
@@ -6608,103 +5958,6 @@ def source_overlap_matrix_q(spark, sf_dir):
     return source_overlap_matrix(
         docs, "text", "source", shingle_words=3, target_k=64, oversample=4
     )
-
-
-_ZORDER_TERMS = " + ".join(
-    f"(((len_bucket >> {b}) & 1) << {2 * b}) + (((src_bucket >> {b}) & 1) << {2 * b + 1})"
-    for b in range(8)
-)
-
-
-@q(
-    "zorder_keys_docs",
-    f"""
-    WITH d AS (SELECT doc_id,
-                      least(n_chars // 16, 255)::bigint AS len_bucket,
-                      ('0x' || substr(md5(source), 1, 2))::bigint AS src_bucket
-               FROM documents)
-    SELECT doc_id, len_bucket, src_bucket,
-           ({_ZORDER_TERMS})::bigint AS zkey
-    FROM d
-    """,
-)
-def zorder_keys_docs_q(spark, sf_dir):
-    """E66: Z-order (Morton) clustering key over (length band, source
-    hash byte) — the Delta/Iceberg OPTIMIZE ZORDER BY device.  Sorting
-    the corpus by this key makes parquet min/max zone maps tight boxes
-    in BOTH dimensions, so a predicate on either axis (or both) prunes
-    most row groups at metadata time; the write path
-    (operators/layout.py:write_zordered) adds exactly ONE range
-    exchange, amortized over every future scan.  Key computation is
-    pure integer shift/and codegen, zero shuffle, replayed bit-for-bit
-    by the twin; the measured skipping win is pytest- and BENCH-gated
-    (tests/test_layout.py, BENCH/layout.md)."""
-    from ..operators.layout import zorder_keys_docs
-
-    return zorder_keys_docs(load_table(spark, sf_dir, "documents"))
-
-
-def _pca_iter_sql(t: int) -> str:
-    """One unrolled fixed-point power-iteration round: matvec, scale
-    recovery, sign-split magnitude division (floor/trunc-agnostic)."""
-    return f"""
-    w{t} AS (SELECT gn.i AS d, sum(gn.g * v.v)::bigint AS w
-             FROM gn JOIN v{t - 1} v ON v.d = gn.j GROUP BY 1),
-    wd{t} AS (SELECT greatest(1, max(abs(w)) >> 20)::bigint AS d FROM w{t}),
-    v{t} AS (SELECT d, (CASE WHEN w >= 0 THEN w // (SELECT d FROM wd{t})
-                             ELSE -((-w) // (SELECT d FROM wd{t})) END)::bigint AS v
-             FROM w{t})"""
-
-
-@q(
-    "pca_top_component_embeddings",
-    f"""
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::double) AS v
-               FROM embeddings),
-    sc AS (SELECT CASE WHEN m > 0 THEN m / 127.0 ELSE 1.0 END AS s
-           FROM (SELECT max(abs(v[i])) AS m
-                 FROM e, unnest(generate_series(1, 64)) AS t(i))),
-    qz AS MATERIALIZED (SELECT vec_id,
-                  list_transform(generate_series(1, 64),
-                      i -> greatest(-127, least(127, floor(v[i] / s + 0.5)))::bigint) AS c
-           FROM e, sc),
-    nn AS (SELECT count(*)::bigint AS n FROM qz),
-    si AS (SELECT i, sum(c[i])::bigint AS s
-           FROM qz, unnest(generate_series(1, 64)) AS t(i) GROUP BY i),
-    sij AS MATERIALIZED (SELECT i, j, sum(c[i] * c[j])::bigint AS s
-            FROM qz, unnest(generate_series(1, 64)) AS t(i),
-                      unnest(generate_series(1, 64)) AS t2(j)
-            GROUP BY i, j),
-    g AS MATERIALIZED (SELECT sij.i, sij.j,
-                 ((SELECT n FROM nn) * sij.s - a.s * b.s)::bigint AS g
-          FROM sij JOIN si a ON a.i = sij.i JOIN si b ON b.i = sij.j),
-    gm AS (SELECT greatest(1, max(abs(g)) >> 30)::bigint AS d FROM g),
-    gn AS MATERIALIZED (SELECT i, j, (CASE WHEN g >= 0 THEN g // (SELECT d FROM gm)
-                              ELSE -((-g) // (SELECT d FROM gm)) END)::bigint AS g
-           FROM g),
-    v0 AS (SELECT DISTINCT i AS d, 1048576::bigint AS v FROM gn),
-    {",".join(_pca_iter_sql(t) for t in (1, 2, 3))},
-    fl AS (SELECT (CASE WHEN v < 0 THEN -1 ELSE 1 END)::bigint AS f
-           FROM v3 WHERE v <> 0 ORDER BY d LIMIT 1)
-    SELECT d::bigint AS d,
-           (v * coalesce((SELECT f FROM fl), 1))::bigint AS loading_fp
-    FROM v3
-    """,
-)
-def pca_top_component_embeddings_q(spark, sf_dir):
-    """E71: deterministic top principal component of the int8-quantized
-    embedding corpus (scale 2^20 fixed point) — the drift/variance-axis
-    diagnostic.  Gram statistics are exact integers via
-    G = n*S_ij - S_i*S_j over E59 codes (distributed, exchange bounded
-    at dim^2 rows per task); the dim x dim power iteration is integer
-    fixed-point with sign-split magnitude division so Python, Spark and
-    DuckDB truncate identically.  The twin replays quantization, Gram,
-    and all three unrolled iterations ENTIRELY in SQL — an independent
-    integer-for-integer derivation of the same vector."""
-    from ..operators.similarity import pca_top_component
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pca_top_component(emb, "embedding", "vec_id", dim=64, iters=3)
 
 
 @q(
@@ -7062,38 +6315,6 @@ def span_corruption_plan_docs(spark, sf_dir):
         "doc_id", F.size(words_fn(F.coalesce(F.col("text"), F.lit("")))).cast("long").alias("n_tokens")
     )
     return span_corruption_plan(base, "n_tokens", "doc_id", density=0.15, span_len=3)
-
-
-@q(
-    "hamming_topk_embeddings",
-    """
-    WITH codes AS (
-      SELECT vec_id,
-             list_sum(list_transform(generate_series(1, 32),
-               j -> CASE WHEN embedding[j] > 0 THEN 1::bigint << (32 - j) ELSE 0::bigint END))::bigint AS lo,
-             list_sum(list_transform(generate_series(1, 32),
-               j -> CASE WHEN embedding[j + 32] > 0 THEN 1::bigint << (32 - j) ELSE 0::bigint END))::bigint AS hi
-      FROM embeddings),
-    q AS (SELECT vec_id AS query_id, lo AS qlo, hi AS qhi FROM codes WHERE vec_id < 5),
-    scored AS (SELECT q.query_id, c.vec_id AS corpus_id,
-                      (bit_count(xor(c.lo, q.qlo)) + bit_count(xor(c.hi, q.qhi)))::bigint AS hamming
-               FROM codes c, q WHERE c.vec_id <> q.query_id),
-    r AS (SELECT query_id, corpus_id, hamming,
-                 row_number() OVER (PARTITION BY query_id ORDER BY hamming, corpus_id) AS rank
-          FROM scored)
-    SELECT query_id, rank::bigint AS rank, corpus_id, hamming FROM r WHERE rank <= 10
-    """,
-)
-def hamming_topk_embeddings_q(spark, sf_dir):
-    """E80: binary sign-quantized Hamming top-k — the 1-bit rung of the
-    vector-compression ladder (float -> E59 int8 -> sign bits): 32x
-    smaller at rest, distance = two XOR+popcounts, ranking fully
-    integer hence bit-reproducible. Corpus codes are scan-stage; the
-    only exchange carries the map-local top-k survivors."""
-    from ..operators.similarity import hamming_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return hamming_topk(emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id", k=10, dim=64)
 
 
 @q(

@@ -191,9 +191,12 @@ def plan_stats(
       finalize the AQE plan and can eagerly run shuffle stages — see
       planutil.scan_num_partitions) and 0 is reported, which selects the
       skew-safe chunked plan.
-    - ``max_windows_per_doc``: an UPPER BOUND on any one doc's window
-      count, derived from max(n_tok) x the physiologic RR ceiling
-      (cfg.rr_max_seconds). Computed from the n_tok int column only — a
+    - ``max_windows_per_doc``: any one doc's window count, estimated from
+      max(n_tok) x the physiologic RR ceiling (cfg.rr_max_seconds). It is
+      an upper bound only if every token is <= rr_max_seconds * 1000 ms,
+      and nothing checks that: a doc of longer tokens has more windows
+      than this (which can misroute the plan choice, never the output).
+      Computed from the n_tok int column only — a
       column-pruned scan that never touches the token arrays; on an
       Iceberg table this is a free upper_bounds stats lookup, so the
       one-column agg here is the honest local stand-in. None when the

@@ -12,7 +12,6 @@ from seizury_hrv_featuresextraction_spark.operators.dedup import (
     simhash_near_dups,
 )
 from seizury_hrv_featuresextraction_spark.operators.filters import iqr_filter, median_mad_filter
-from seizury_hrv_featuresextraction_spark.operators.similarity import brute_force_topk, ivf_topk
 from seizury_hrv_featuresextraction_spark.operators.stats import class_weights, zscore_normalize
 
 
@@ -72,29 +71,21 @@ def test_embedding_near_dups_and_topk(spark):
     pdf = _embs()
     df = spark.createDataFrame(pdf)
     pairs = embedding_near_dups(df, "embedding", "vec_id", min_cosine=0.95).toPandas()
-    assert (0, 1) in set(map(tuple, pairs[["id_a", "id_b"]].to_numpy()))
+    got = set(map(tuple, pairs[["id_a", "id_b"]].to_numpy().tolist()))
+    assert (0, 1) in got
 
-    topk = brute_force_topk(df, df.filter(F.col("vec_id") == 0), "embedding", "vec_id", k=3).toPandas()
-    assert topk.sort_values("rank")["corpus_id"].iloc[0] == 1
-
-    # exact numpy cross-check of the full ranking for query 0
+    # exact numpy cross-check: every (id_a < id_b) pair at cos >= 0.95, no more
     v = np.array([r for r in pdf["embedding"]])
-    cos = (v @ v[0]) / (np.linalg.norm(v, axis=1) * np.linalg.norm(v[0]))
-    cos[0] = -np.inf
-    exp_top = np.argsort(-cos)[:3]
-    assert topk.sort_values("rank")["corpus_id"].tolist() == list(exp_top)
-
-
-def test_ivf_topk_recall(spark):
-    pdf = _embs(n=60)
-    df = spark.createDataFrame(pdf)
-    q = df.filter(F.col("vec_id") < 3)
-    exact = brute_force_topk(df, q, "embedding", "vec_id", k=1).toPandas()
-    approx = ivf_topk(df, q, "embedding", "vec_id", k=1, n_lists=4, n_probe=4).toPandas()
-    # n_probe == n_lists -> exhaustive -> must equal exact top-1
-    e = exact.sort_values("query_id")["corpus_id"].tolist()
-    a = approx.sort_values("query_id")["corpus_id"].tolist()
-    assert a == e
+    u = v / np.linalg.norm(v, axis=1, keepdims=True)
+    cos = u @ u.T
+    ids = pdf["vec_id"].tolist()
+    exp = {
+        (ids[i], ids[j])
+        for i in range(len(ids))
+        for j in range(i + 1, len(ids))
+        if cos[i, j] >= 0.95
+    }
+    assert got == exp
 
 
 def test_filters_match_numpy(spark):
@@ -379,6 +370,9 @@ def test_query_surface_guard():
     assert prios == sorted(prios), "rotation broken: driver-verified query before an unverified one"
     # every never-driver-verified query must fit inside the 50-row window
     assert sum(1 for p in prios if p == 0) <= 50
+    # surface ratchet: the exported query set only shrinks toward the
+    # paper's surface; each cut lowers this bound
+    assert len(QUERIES) <= 134
 
 
 def test_substring_dedup_vs_bruteforce(spark):
@@ -859,56 +853,6 @@ def test_dedup_against_corpus_semantics(spark):
     )
     assert exact_only == [11, 12]  # near-dup survives the exact-only pass
     assert 11 not in both  # ...but drops once banding runs
-
-
-def test_semantic_dedup_matches_numpy_replay(spark):
-    """E49 SemDeDup vs a NumPy replay of its exact rules: broadcast-argmax
-    cluster assignment (ties to smallest cid), drop any row with a
-    same-cluster smaller-id neighbor at cos >= tau. Planted exact and
-    2x-scaled copies must drop (scale-invariant cosine); the replay pins
-    every survivor, not just the planted ones."""
-    from seizury_hrv_featuresextraction_spark.functions.vectors import to_double
-    from seizury_hrv_featuresextraction_spark.operators.similarity import semantic_dedup
-
-    rng = np.random.default_rng(11)
-    n, d, tau = 30, 16, 0.95
-    base = rng.standard_normal((n, d))
-    rows = [(i, list(map(float, base[i]))) for i in range(n)]
-    rows.append((100, list(map(float, base[4]))))          # exact copy of 4
-    rows.append((101, list(map(float, base[7] * 2.0))))    # scaled copy of 7
-    pdf = pd.DataFrame(rows, columns=["vec_id", "embedding"])
-    df = spark.createDataFrame(pdf)
-
-    cent = df.filter(F.col("vec_id") < 4).select(
-        (F.col("vec_id") + 1).cast("int").alias("cid"),
-        to_double(F.col("embedding")).alias("cvec"),
-    )
-    out = (
-        semantic_dedup(df, "embedding", "vec_id", cent, tau=tau, with_cluster=True)
-        .toPandas()
-        .sort_values("vec_id")
-    )
-
-    v = np.array([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-    ids = pdf["vec_id"].to_numpy()
-    c = v[:4] / np.linalg.norm(v[:4], axis=1, keepdims=True)
-    u = v / np.linalg.norm(v, axis=1, keepdims=True)
-    cos_cent = u @ c.T
-    cluster = np.argmax(cos_cent, axis=1) + 1  # ties impossible with random data
-    cos_all = u @ u.T
-    dropped = {
-        ids[i]
-        for i in range(len(ids))
-        for j in range(len(ids))
-        if ids[j] < ids[i] and cluster[j] == cluster[i] and cos_all[i, j] >= tau
-    }
-    keep = sorted(int(x) for x in ids if x not in dropped)
-
-    assert out["vec_id"].tolist() == keep
-    assert 100 in dropped and 101 in dropped  # planted copies removed
-    got_cluster = dict(zip(out["vec_id"], out["cluster"]))
-    exp_cluster = {int(ids[i]): int(cluster[i]) for i in range(len(ids)) if ids[i] not in dropped}
-    assert got_cluster == {k: exp_cluster[k] for k in got_cluster}
 
 
 def _winnow_brute(ws, k, w):

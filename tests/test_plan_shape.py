@@ -56,42 +56,6 @@ def test_fused_plan_zero_shuffles(spark, tmp_path):
     assert "FileScan parquet" in plan
 
 
-def test_ivf_assignment_no_corpus_shuffle(spark):
-    """VERDICT r1 item 2: nearest-centroid assignment must not shuffle the
-    corpus — centroids ride as a single-row broadcast array and the argmax
-    is a native higher-order expression. Only the tiny centroid-side
-    collect_list agg may exchange (SinglePartition); hash/range
-    repartitioning of the corpus is a regression."""
-    import numpy as np
-
-    from seizury_hrv_featuresextraction_spark.operators.similarity import _assign_nearest
-
-    rng = np.random.default_rng(3)
-    corpus = spark.createDataFrame(
-        [(int(i), [float(x) for x in rng.normal(size=8)]) for i in range(50)],
-        "corpus_id int, cv array<double>",
-    )
-    cent = spark.createDataFrame(
-        [(int(i), [float(x) for x in rng.normal(size=8)]) for i in range(4)],
-        "cid int, cvec array<double>",
-    )
-    assigned = _assign_nearest(corpus, cent, "cv", "list_id")
-    plan = _plan(assigned)
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert "Exchange rangepartitioning" not in plan, plan
-    assert "Window" not in plan, plan
-    # correctness of the argmax vs a NumPy loop
-    got = {r.corpus_id: r.list_id for r in assigned.collect()}
-    C = {r.cid: np.array(r.cvec) for r in cent.collect()}
-    for r in corpus.collect():
-        v = np.array(r.cv)
-        best = min(
-            sorted(C),
-            key=lambda c: (-float(v @ C[c] / (np.linalg.norm(v) * np.linalg.norm(C[c]))), c),
-        )
-        assert got[r.corpus_id] == best
-
-
 def test_partition_pruned_bucket_scan(spark, tmp_path):
     """O3/O5: a bucket filter over the bucket=<k> directory layout must
     prune the file listing (PartitionFilters), not scan-and-discard."""
@@ -653,59 +617,6 @@ def test_winnowing_and_budget_select_plan_shapes(spark):
     assert re.search(r"Exchange hashpartitioning\(source#\d+, __b#\d+", plan), plan
     assert "BroadcastExchange" in plan, plan
     assert not re.search(r"windowspecdefinition\(source#\d+, prob", plan), plan
-
-
-def test_semantic_dedup_salted_pair_join(spark):
-    """E49 scale contract: the pair self-join keys on (cluster, salt) —
-    parallelism salt x n_clusters, not capped at n_clusters — with the y
-    side replicated per salt (explode). At broadcastable sizes the pair
-    join is a BHJ on the same salted keys (also asserted); with
-    broadcast off, both sides exchange on (cluster, __s)."""
-    import pandas as pd
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from seizury_hrv_featuresextraction_spark.functions.vectors import to_double
-    from seizury_hrv_featuresextraction_spark.operators.similarity import semantic_dedup
-
-    rng = np.random.default_rng(3)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": range(40),
-            "embedding": [list(map(float, rng.standard_normal(8))) for _ in range(40)],
-        }
-    )
-    df = spark.createDataFrame(pdf).repartition(8)
-    cent = df.filter("vec_id < 4").select(
-        (F.col("vec_id") + 1).cast("int").alias("cid"),
-        to_double(F.col("embedding")).alias("cvec"),
-    )
-
-    def pair_join_lines(plan):
-        return [
-            ln for ln in plan.splitlines()
-            if ("SortMergeJoin" in ln or "BroadcastHashJoin" in ln)
-            and "cluster#" in ln and "__s#" in ln
-        ]
-
-    out = semantic_dedup(df, "embedding", "vec_id", cent, tau=0.95, with_cluster=True, salt=4)
-    plan = _plan(out)
-    assert pair_join_lines(plan), plan  # join keys carry the salt
-    assert "explode" in plan.lower(), plan  # y side replicated
-
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = _plan(
-            semantic_dedup(df, "embedding", "vec_id", cent, tau=0.95, with_cluster=True, salt=4)
-        )
-        salted_ex = [
-            k for k in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-            if "cluster#" in k and "__s#" in k
-        ]
-        assert len(salted_ex) >= 2, plan  # both pair sides shuffle on (cluster, salt)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
 
 
 def test_tokenizer_pipeline_two_corpus_exchanges(spark):

@@ -1,88 +1,8 @@
-"""E53 BM25 retrieval: Spark plan vs a dict-based pure-Python replay of
-the Lucene BM25 formula, plus plan-shape checks (pre-filtered explode,
-broadcast query/df sides)."""
+"""Tokenizer fertility (E56): per-source fertility and compression of a
+learned BPE merge list against a dict replay, plus its plan shape; and
+reciprocal-rank fusion (E97) against hand-computed scores."""
 
 from __future__ import annotations
-
-import math
-
-import pytest
-
-from seizury_hrv_featuresextraction_spark.operators.retrieval import bm25_topk
-
-DOCS = [
-    (0, "spark join fast spark spark window"),
-    (1, "window agg scan window table"),
-    (2, "customer vector scan join"),
-    (3, "the quick brown fox"),
-    (4, ""),  # empty doc still counts toward N / avgdl
-    (5, None),  # NULL text treated as empty
-    (6, "spark window spark window agg agg scan join"),
-]
-QUERIES = [(0, ["spark", "join"]), (1, ["window", "agg", "scan"])]
-K1, B = 1.2, 0.75
-
-
-def _reference_bm25(docs, queries, k):
-    toks = {d: (t or "").lower().split() for d, t in docs}
-    n = float(len(toks))
-    avgdl = sum(len(v) for v in toks.values()) / n
-    df = {}
-    for ws in toks.values():
-        for t in set(ws):
-            df[t] = df.get(t, 0) + 1
-    out = []
-    for qid, terms in queries:
-        scored = []
-        for d, ws in toks.items():
-            s = 0.0
-            for t in dict.fromkeys(terms):
-                tf = float(ws.count(t))
-                if tf == 0:
-                    continue
-                idf = math.log(1 + (n - df[t] + 0.5) / (df[t] + 0.5))
-                s += idf * tf * (K1 + 1) / (tf + K1 * (1 - B + B * len(ws) / avgdl))
-            if s > 0:
-                scored.append((round(s, 6), d))
-        scored.sort(key=lambda x: (-x[0], x[1]))
-        out.extend(
-            (qid, r + 1, d, s) for r, (s, d) in enumerate(scored[:k])
-        )
-    return sorted(out)
-
-
-def test_bm25_matches_reference_replay(spark):
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    got = sorted(
-        (r.query_id, r.rank, r.doc_id, r.score)
-        for r in bm25_topk(docs, QUERIES, k=3).collect()
-    )
-    want = _reference_bm25(DOCS, QUERIES, k=3)
-    assert [g[:3] for g in got] == [w[:3] for w in want]
-    for g, w in zip(got, want):
-        assert g[3] == pytest.approx(w[3], abs=1e-6)
-
-
-def test_bm25_duplicate_query_terms_count_once(spark):
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    once = bm25_topk(docs, [(0, ["spark"])], k=3).collect()
-    twice = bm25_topk(docs, [(0, ["spark", "spark"])], k=3).collect()
-    assert sorted(map(tuple, once)) == sorted(map(tuple, twice))
-
-
-def test_bm25_plan_shape(spark):
-    """Pins the 100 TB shape: exactly TWO corpus scans (tf stream +
-    scalar stats — df comes from a window over the tf stream, not a
-    groupBy branch that would rescan the corpus), query table and
-    scalars broadcast, and every hash exchange over the BOUNDED
-    (doc, query-term) hit stream, never the raw corpus."""
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    plan = bm25_topk(docs, QUERIES, k=3)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastExchange") == 2  # scalar stats + query table
-    # tf agg, df window, per-(query,doc) agg, top-k window — all bounded
-    assert plan.count("Exchange hashpartitioning") == 4
-    # two corpus scans, one query-literal scan
-    assert plan.count("Scan ExistingRDD[doc_id") == 2
 
 
 def test_tokenizer_fertility_replay(spark):
@@ -151,324 +71,11 @@ def test_tokenizer_fertility_plan_one_exchange(spark):
     assert "Join" not in plan
 
 
-def test_cluster_profile_numpy_replay(spark):
-    """E57: per-cluster per-dim mean/var against a NumPy replay with
-    the same argmax-cosine assignment."""
-    import numpy as np
-
-    from seizury_hrv_featuresextraction_spark.operators.similarity import (
-        cluster_profile,
-    )
-
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(40, 6).astype("float32")
-    corpus = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(40)],
-        "vec_id long, embedding array<float>",
-    )
-    cent = spark.createDataFrame(
-        [(i + 1, [float(x) for x in vecs[i].astype("float64")]) for i in range(3)],
-        "cid int, cvec array<double>",
-    )
-    got = {
-        (r.cluster_id, r.dim): (r.n, r.mean, r.var)
-        for r in cluster_profile(corpus, cent).collect()
-    }
-
-    v = vecs.astype("float64")
-    c = v[:3]
-    cos = (v @ c.T) / (
-        np.linalg.norm(v, axis=1)[:, None] * np.linalg.norm(c, axis=1)[None, :]
-    )
-    asg = np.argmax(cos, axis=1) + 1  # ties impossible with random data
-    for cid in (1, 2, 3):
-        sel = v[asg == cid]
-        for d in range(6):
-            n, mean, var = got[(cid, d)]
-            assert n == len(sel)
-            assert mean == round(float(sel[:, d].mean()), 6)
-            assert var == round(float(sel[:, d].var()), 6)
-
-
-def test_cluster_profile_plan_zero_corpus_shuffle_before_agg(spark):
-    """Assignment is broadcast-argmax: the only hash exchange is the
-    bounded (cluster, dim) aggregate."""
-    from seizury_hrv_featuresextraction_spark.operators.similarity import (
-        cluster_profile,
-    )
-
-    corpus = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<float>"
-    )
-    cent = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "cid int, cvec array<double>"
-    )
-    plan = (
-        cluster_profile(corpus, cent)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "BroadcastNestedLoopJoin" in plan  # the 1-row centroid pack
-
-
-def test_quantized_topk_numpy_replay_and_recall(spark):
-    """E59: int8 codes match a NumPy replay of the exact same formula
-    (floor(x/s + 0.5) clamp 127, s = maxabs/127), and quantized top-10
-    recall vs the float brute-force path clears 0.9 on random data."""
-    import numpy as np
-
-    from seizury_hrv_featuresextraction_spark.operators.similarity import (
-        brute_force_topk,
-        quantization_scales,
-        quantized_topk,
-    )
-
-    rng = np.random.RandomState(11)
-    vecs = rng.randn(120, 8).astype("float32")
-    corpus = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(120)],
-        "vec_id long, embedding array<float>",
-    )
-    queries = corpus.filter("vec_id < 6")
-
-    scales = quantization_scales(corpus, "embedding", dim=8)
-    v = vecs.astype("float64")
-    s_ref = np.abs(v).max(axis=0) / 127.0
-    s_ref[s_ref == 0.0] = 1.0
-    assert np.array_equal(np.array(scales), s_ref)
-
-    q_ref = np.clip(np.floor(v / s_ref + 0.5), -127, 127).astype("int64")
-    got = quantized_topk(corpus, queries, "embedding", "vec_id", k=10, dim=8).collect()
-    # replay ranking: integer dots, IEEE norms, corpus_id tiebreak
-    norms = np.sqrt((q_ref * q_ref).sum(axis=1).astype("float64"))
-    for qid in range(6):
-        qcos = (q_ref @ q_ref[qid]).astype("float64") / (norms * norms[qid])
-        order = sorted(
-            (i for i in range(120) if i != qid), key=lambda i: (-qcos[i], i)
-        )[:10]
-        rows = sorted((r for r in got if r.query_id == qid), key=lambda r: r.rank)
-        assert [r.corpus_id for r in rows] == order
-        for r in rows:
-            assert r.qcos == qcos[r.corpus_id]
-
-    # recall@10 vs the float path — on data with neighbor STRUCTURE
-    # (20 clusters of 6): random gaussian points are all equidistant,
-    # so "recall" there measures tie-order noise, not the quantizer
-    centers = rng.randn(20, 16) * 4.0
-    cvecs = (centers.repeat(6, axis=0) + rng.randn(120, 16)).astype("float32")
-    ccorpus = spark.createDataFrame(
-        [(i, [float(x) for x in cvecs[i]]) for i in range(120)],
-        "vec_id long, embedding array<float>",
-    )
-    cqueries = ccorpus.filter("vec_id < 6")
-    exact = brute_force_topk(ccorpus, cqueries, "embedding", "vec_id", k=10).collect()
-    approx = quantized_topk(ccorpus, cqueries, "embedding", "vec_id", k=10, dim=16).collect()
-    hits = 0
-    for qid in range(6):
-        e = {r.corpus_id for r in exact if r.query_id == qid}
-        g = {r.corpus_id for r in approx if r.query_id == qid}
-        hits += len(e & g)
-    assert hits / 60.0 >= 0.9
-
-
-def test_quantized_topk_plan_broadcast_no_corpus_shuffle(spark):
-    """Corpus side reaches the scored stream without a hash exchange:
-    broadcast query join, the only hash exchange is the rank window on
-    the k-bounded stream."""
-    from seizury_hrv_featuresextraction_spark.operators.similarity import (
-        quantized_topk,
-    )
-
-    corpus = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(20)],
-        "vec_id long, embedding array<float>",
-    )
-    out = quantized_topk(corpus, corpus.filter("vec_id < 2"), "embedding", "vec_id", k=3, dim=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_incremental_profile_equals_one_shot(spark):
-    """E62: three-batch incremental merge == one-shot profile, bit-for-
-    bit on n and at round-6 on mean/var; a second increment chained on
-    the merged table also matches."""
-    import numpy as np
-
-    from seizury_hrv_featuresextraction_spark.operators.similarity import (
-        cluster_profile,
-        cluster_profile_raw,
-        finalize_cluster_profile,
-        merge_cluster_profiles,
-    )
-
-    rng = np.random.RandomState(3)
-    vecs = rng.randn(60, 5).astype("float32")
-    full = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(60)],
-        "vec_id long, embedding array<float>",
-    )
-    cent = spark.createDataFrame(
-        [(i + 1, [float(x) for x in vecs[i].astype("float64")]) for i in range(3)],
-        "cid int, cvec array<double>",
-    )
-    batches = [full.filter(f"vec_id % 3 = {k}") for k in range(3)]
-    # chain: maintained = b0; += b1; += b2 (each merge reads only the
-    # maintained table and the new batch's profile)
-    maintained = cluster_profile_raw(batches[0], cent)
-    for b in batches[1:]:
-        maintained = merge_cluster_profiles(maintained, cluster_profile_raw(b, cent))
-    inc = {
-        (r.cluster_id, r.dim): (r.n, r.mean, r.var)
-        for r in finalize_cluster_profile(maintained).collect()
-    }
-    one = {
-        (r.cluster_id, r.dim): (r.n, r.mean, r.var)
-        for r in cluster_profile(full, cent).collect()
-    }
-    assert set(inc) == set(one)
-    for k in one:
-        assert inc[k][0] == one[k][0], k
-        assert abs(inc[k][1] - one[k][1]) <= 1e-6, k
-        assert abs(inc[k][2] - one[k][2]) <= 1e-6, k
-
-
-def test_merge_cluster_profiles_plan_bounded_exchange(spark):
-    """The merge is union + one (cluster, dim)-key agg — no join, no
-    rescan of the maintained side."""
-    from seizury_hrv_featuresextraction_spark.operators.similarity import (
-        merge_cluster_profiles,
-    )
-
-    a = spark.createDataFrame(
-        [(1, 0, 2, 1.0, 2.0)], "cluster_id int, dim long, n long, s double, s2 double"
-    )
-    b = spark.createDataFrame(
-        [(1, 0, 3, 2.0, 5.0)], "cluster_id int, dim long, n long, s double, s2 double"
-    )
-    out = merge_cluster_profiles(a, b)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-    row = out.collect()[0]
-    assert (row.n, row.s, row.s2) == (5, 3.0, 7.0)
-
-
-# ---------------------------------------------------------------------------
-# E71 deterministic PCA top component
-# ---------------------------------------------------------------------------
-
-
-def _pca_ref(vecs, iters=3):
-    """Pure-python integer replay of the whole E71 pipeline."""
-    import math
-
-    dim = len(vecs[0])
-    m = max(abs(x) for v in vecs for x in v)
-    s = m / 127.0 if m > 0 else 1.0  # GLOBAL scale — per-dim kills PCA
-    codes = [
-        [max(-127, min(127, math.floor(v[i] / s + 0.5))) for i in range(dim)]
-        for v in vecs
-    ]
-    n = len(codes)
-    s = [sum(c[i] for c in codes) for i in range(dim)]
-    sij = [[sum(c[i] * c[j] for c in codes) for j in range(dim)] for i in range(dim)]
-    g = [[n * sij[i][j] - s[i] * s[j] for j in range(dim)] for i in range(dim)]
-
-    def sdiv(w, d):
-        return -((-w) // d) if w < 0 else w // d
-
-    gd = max(1, max(abs(x) for row in g for x in row) >> 30)
-    gn = [[sdiv(x, gd) for x in row] for row in g]
-    v = [1 << 20] * dim
-    for _ in range(iters):
-        w = [sum(gn[i][j] * v[j] for j in range(dim)) for i in range(dim)]
-        wd = max(1, max(abs(x) for x in w) >> 20)
-        v = [sdiv(x, wd) for x in w]
-    flip = next((x for x in v if x != 0), 1)
-    return [-x for x in v] if flip < 0 else v
-
-
-def _planted_vecs(n=400, dim=16):
-    # strong planted axis: dominant direction e0+e1, plus small
-    # deterministic noise on every dim
-    out = []
-    for r in range(n):
-        a = ((r * 37) % 19) - 9  # strong signed coefficient
-        v = [0.01 * (((r * 13 + i * 7) % 11) - 5) for i in range(dim)]
-        v[0] += a * 1.0
-        v[1] += a * 0.8
-        out.append(v)
-    return out
-
-
-def test_pca_matches_integer_replay(spark):
-    from seizury_hrv_featuresextraction_spark.operators.similarity import (
-        pca_top_component,
-    )
-
-    vecs = _planted_vecs()
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    got = {
-        r.d: r.loading_fp
-        for r in pca_top_component(df, dim=16, iters=3).collect()
-    }
-    # replay must run on the float32-rounded values Spark reads
-    import numpy as np
-
-    vecs32 = [list(map(float, np.array(v, dtype=np.float32))) for v in vecs]
-    want = _pca_ref(vecs32, iters=3)
-    assert got == {i + 1: want[i] for i in range(16)}
-
-
-def test_pca_finds_planted_axis(spark):
-    import numpy as np
-
-    from seizury_hrv_featuresextraction_spark.operators.similarity import (
-        pca_top_component,
-    )
-
-    vecs = _planted_vecs()
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    out = pca_top_component(df, dim=16, iters=8).collect()
-    v = np.array([r.loading_fp for r in sorted(out, key=lambda r: r.d)], float)
-    axis = np.zeros(16)
-    axis[0], axis[1] = 1.0, 0.8
-    cos = abs(v @ axis) / (np.linalg.norm(v) * np.linalg.norm(axis))
-    assert cos > 0.99, cos
-
-
-def test_pca_partitioning_invariance(spark):
-    from seizury_hrv_featuresextraction_spark.operators.similarity import (
-        pca_top_component,
-    )
-
-    vecs = _planted_vecs(n=120)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    a = sorted((r.d, r.loading_fp) for r in pca_top_component(df, dim=16).collect())
-    b = sorted(
-        (r.d, r.loading_fp)
-        for r in pca_top_component(df.repartition(17), dim=16).collect()
-    )
-    assert a == b
-
-
 def test_rrf_fuse_hand_computed(spark):
-    """E97: fused score = sum of 1/(rrf_k + rank) over the legs that
-    contain the doc; docs in a single leg score lower than docs in both;
+    """Fused score = sum of 1/(rrf_k + rank) over the legs that contain
+    the doc; docs in a single leg score lower than docs in both;
     deterministic doc_id tiebreak on equal scores."""
-    from seizury_hrv_featuresextraction_spark.operators.retrieval import rrf_fuse
+    from seizury_hrv_featuresextraction_spark.operators.stats import rrf_fuse
 
     leg_a = spark.createDataFrame(
         [(0, 1, 10), (0, 2, 11), (0, 3, 12)], "query_id long, rank long, doc_id long"
@@ -485,70 +92,3 @@ def test_rrf_fuse_hand_computed(spark):
     assert got[12] == (3, round(1 / 63, 6))
     assert got[99] == (4, round(1 / 63, 6))
     assert len(got) == 4
-
-
-def test_dense_hash_topk_excludes_empty_and_ranks_overlap_first(spark):
-    """E97 dense leg: a doc sharing the query's words must outrank an
-    unrelated doc; empty/whitespace docs never appear."""
-    from seizury_hrv_featuresextraction_spark.operators.retrieval import dense_hash_topk
-
-    rows = [
-        (1, "spark join fast spark join"),
-        (2, "completely unrelated words about gardening and weather patterns"),
-        (3, "   "),
-        (4, None),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = dense_hash_topk(docs, [(0, "spark join fast")], k=10, dim=16).collect()
-    ids = [r["doc_id"] for r in sorted(out, key=lambda r: r["rank"])]
-    assert ids[0] == 1
-    assert 3 not in ids and 4 not in ids
-
-
-def test_mmr_rerank_diversifies_and_replays(spark):
-    """E102: three near-identical top-relevance docs must NOT fill the
-    head of the MMR list — after the first, a less-relevant but novel
-    doc wins; full greedy trajectory replayed in pure Python."""
-    import numpy as np
-
-    from seizury_hrv_featuresextraction_spark.operators.retrieval import mmr_rerank
-
-    def vec(x, y):
-        n = (x * x + y * y) ** 0.5
-        return [x / n, y / n] + [0.0] * 14
-
-    # docs 1-3: same direction (mutual cos 1.0), rel 0.9; doc 4:
-    # orthogonal, rel 0.5; doc 5: opposite, rel 0.1
-    rows = [
-        (0, 1, 0.9, vec(1.0, 0.0)),
-        (0, 2, 0.9, vec(1.0, 0.0)),
-        (0, 3, 0.9, vec(1.0, 0.0)),
-        (0, 4, 0.5, vec(0.0, 1.0)),
-        (0, 5, 0.1, vec(-1.0, 0.0)),
-    ]
-    df = spark.createDataFrame(
-        rows, "query_id long, doc_id long, rel double, dv array<double>"
-    )
-    out = sorted(mmr_rerank(df, k=4, lam=0.5).collect(), key=lambda r: r["rank"])
-    order = [r["doc_id"] for r in out]
-    # pick1: doc 1 (rel tie -> smallest id). pick2: doc 4 (novel) beats
-    # docs 2,3 (0.5*0.9-0.5*1.0 = -0.05 < 0.5*0.5-0.5*0 = 0.25) and
-    # doc 5 (0.5*0.1+0.5 = 0.55 ... vs -0.05 and 0.25)
-    assert order[0] == 1
-    assert order[1] in (4, 5)
-
-    # pure-Python greedy replay
-    cand = {d: (rel, np.array(v)) for _, d, rel, v in rows}
-    sel, maxsim = [], {d: 0.0 for d in cand}
-    for _ in range(4):
-        best = max(
-            ((round(0.5 * cand[d][0] - 0.5 * maxsim[d], 6), -d), d)
-            for d in cand
-            if d not in sel
-        )[1]
-        sel.append(best)
-        for d in cand:
-            if d not in sel:
-                c = float(cand[d][1] @ cand[best][1])
-                maxsim[d] = max(maxsim[d], c)
-    assert order == sel
