@@ -60,7 +60,7 @@ class HRVConfig:
 
     # --- physical layer ---
     max_windows_per_chunk: int = 512  # salted split threshold for long docs
-    repartition_chunks: bool = True   # to spark.sql.shuffle.partitions
+    repartition_chunks: bool = True   # to defaultParallelism, one task per slot
 
     def window_samples(self) -> int:
         return int(self.window_seconds * self.sampling_rate)

@@ -11,7 +11,12 @@ doc's decoded tachogram into self-contained chunks of at most
 seconds of RR rows so no window spans a chunk boundary — results are
 exactly the per-doc computation, just re-batched. A plain round-robin
 ``repartition`` afterwards spreads the chunks of a long doc across the
-cluster; that is the flagship plan's ONE shuffle.
+cluster; that is the flagship plan's ONE shuffle. It targets
+``defaultParallelism``, one task per slot: the kernel stage pays its
+Python worker boundary once per task, and AQE never coalesces a
+user-set ``repartition(n)``, so the session's shuffle-partition default
+(sized for Catalyst shuffles AQE does coalesce) would add tasks that
+each pay that boundary again.
 
 At 100 TB: chunk size bounds both task runtime and task memory
 (each chunk carries <= max_windows * stride + window seconds of RR), so
@@ -161,8 +166,7 @@ def explode_chunks(sequences: DataFrame, cfg: HRVConfig) -> DataFrame:
 
     chunks = sequences.select("doc_id", "tokens").mapInArrow(gen, schema=CHUNKS_SCHEMA)
     if cfg.repartition_chunks:
-        n = int(sequences.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        chunks = chunks.repartition(n)
+        chunks = chunks.repartition(sequences.sparkSession.sparkContext.defaultParallelism)
     return chunks
 
 

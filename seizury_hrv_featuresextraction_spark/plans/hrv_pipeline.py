@@ -4,7 +4,9 @@ Logical plan (SURVEY.md §4's physical sketch, Spark-first):
 
     parquet/iceberg scan (doc_id, tokens)         column-pruned
       -> mapInArrow explode_chunks                narrow, Arrow
-      -> repartition(N)                           the ONE shuffle (skew)
+      -> repartition(N)                           the ONE shuffle (skew); N =
+                                                  defaultParallelism, one task
+                                                  per slot
       -> mapInArrow hrv_kernel                    narrow, Arrow, cached
                                                   Lomb-Scargle designs
       -> broadcast join label intervals           no shuffle

@@ -59,6 +59,33 @@ def test_chunking_invariance(spark, fixture_tables):
     assert (ga == gb).all()
 
 
+def test_partition_count_invariance(spark, fixture_tables, tiny_cfg):
+    """The chunk shuffle's partition count only places rows: chunked with
+    and without the repartition, and the fused plan, give equal rows."""
+    from dataclasses import replace
+
+    seq, ann = fixture_tables
+    seq_df = spark.createDataFrame(seq, schema=SEQUENCES_SCHEMA)
+    ann_df = spark.createDataFrame(ann, schema=ANNOTATIONS_SCHEMA)
+    runs = [
+        extract_features(seq_df, ann_df, tiny_cfg, fused=False).toPandas(),
+        extract_features(seq_df, ann_df, replace(tiny_cfg, repartition_chunks=False), fused=False).toPandas(),
+        extract_features(seq_df, ann_df, tiny_cfg, fused=True).toPandas(),
+    ]
+    ref = runs[0].sort_values(KEYS, kind="mergesort").reset_index(drop=True)
+    assert len(ref) > 0
+    for other in runs[1:]:
+        assert_frames_allclose(
+            other,
+            ref,
+            float_cols=ALL_FEATURES + ["window_start_time", "window_center_time", "window_end_time"],
+            key_cols=KEYS,
+        )
+        o = other.sort_values(KEYS, kind="mergesort").reset_index(drop=True)
+        for c in ("n_beats", "label"):
+            assert (o[c].to_numpy() == ref[c].to_numpy()).all(), c
+
+
 def test_no_annotations_all_normal(spark, fixture_tables, tiny_cfg):
     seq, _ = fixture_tables
     got = run_engine(spark, seq.iloc[:2], None, tiny_cfg)

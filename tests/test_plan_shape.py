@@ -56,6 +56,23 @@ def test_fused_plan_zero_shuffles(spark, tmp_path):
     assert "FileScan parquet" in plan
 
 
+def test_chunk_shuffle_sized_to_parallelism(spark, tmp_path):
+    """The chunk shuffle runs one kernel task per slot, whatever the
+    session's shuffle-partition default: AQE never coalesces a user-set
+    repartition(n), so each partition past the slot count adds one more
+    Python task's fixed cost."""
+    sdf, adf = _setup(spark, tmp_path)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        plan = _plan(extract_features(sdf, adf, DEFAULT_CONFIG, fused=False))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    counts = [int(n) for n in re.findall(r"RoundRobinPartitioning\((\d+)\)", plan)]
+    assert counts, plan
+    assert set(counts) == {spark.sparkContext.defaultParallelism}, counts
+
+
 def test_partition_pruned_bucket_scan(spark, tmp_path):
     """O3/O5: a bucket filter over the bucket=<k> directory layout must
     prune the file listing (PartitionFilters), not scan-and-discard."""
