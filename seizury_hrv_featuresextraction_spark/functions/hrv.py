@@ -311,7 +311,7 @@ def triangular_index(rr_sec: np.ndarray, bin_seconds: float) -> float:
 
 
 # ---------------------------------------------------------------------------
-# full per-window vector + per-chunk driver
+# full per-window vector + batched window kernel
 # ---------------------------------------------------------------------------
 
 
@@ -341,41 +341,6 @@ class WindowKernel:
         out[22] = triangular_index(rr_sec, cfg.tri_bin_seconds)
         return out
 
-    def windows_for_chunk(
-        self,
-        rr_sec: np.ndarray,
-        rr_t: np.ndarray,
-        win_lo: int,
-        n_win: int,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Features for global windows [win_lo, win_lo + n_win).
-
-        Window i covers samples [i*step, i*step + spw]; RR membership is
-        start_time <= rr_t <= end_time, inclusive both ends
-        (ecg_processing.py:365). Returns (win_ids, features[n_win, 23]).
-
-        Windows are batched BY BEAT COUNT: all windows with n beats share
-        one (k, n) matrix, so the time/frequency/Poincaré kernels become
-        row-wise array ops and the Lomb-Scargle becomes one (k, n) x
-        (n, n_freq) GEMM per group instead of n_win separate mat-vecs.
-        Only the entropy pair-counting and the histogram argmax stay
-        per-window (they are O(n^2)/O(n log n) on ~35 beats — cheap).
-        """
-        cfg = self.cfg
-        fs = cfg.sampling_rate
-        spw = cfg.window_samples()
-        step = cfg.step_samples()
-        ids = np.arange(win_lo, win_lo + n_win, dtype=np.int64)
-        # EXACT membership: rr_sec values are integer-millisecond tokens
-        # (the engine's input contract), so recover the ms grid and
-        # compare ms*fs vs samples*1000 in int64 — identical on every
-        # engine; a float cumsum flips boundary-exact beats (see skew.py)
-        tok_ms = np.rint(np.asarray(rr_sec, dtype=np.float64) * 1000.0).astype(np.int64)
-        t_scaled = np.cumsum(tok_ms) * fs
-        lo_idx = np.searchsorted(t_scaled, ids * step * 1000, side="left")
-        hi_idx = np.searchsorted(t_scaled, (ids * step + spw) * 1000, side="right")
-        return ids, self.windows_from_bounds(rr_sec, lo_idx, hi_idx, rr_t)
-
     ALL_PARTS = frozenset({"time", "freq", "poincare", "entropy", "tri"})
 
     def windows_from_bounds(
@@ -392,7 +357,12 @@ class WindowKernel:
         fallback. ``parts`` restricts computation to the named feature
         groups (guide §4.1 — a consumer that only reads the time-domain
         columns should not pay for the spectral GEMM or the O(n^2)
-        entropy counts); skipped groups stay NaN and must not be read."""
+        entropy counts); skipped groups stay NaN and must not be read.
+
+        Windows are batched BY BEAT COUNT: all windows with n beats share
+        one (k, n) matrix, so the per-window kernels become row-wise array
+        ops and the Lomb-Scargle becomes one (k, n) x (n, n_freq) GEMM per
+        group instead of one mat-vec per window."""
         cfg = self.cfg
         if parts is None:
             parts = self.ALL_PARTS

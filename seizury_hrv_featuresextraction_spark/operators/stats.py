@@ -648,10 +648,9 @@ def correlation_matrix(
 
 
 def psi_bin(value_col: str, bin_width: float, n_bins: int) -> Column:
-    """E85: the shared fixed-edge bin assignment (width * i clamped to
-    [0, n_bins-1]) — data-independent and in-row, used identically by
-    the batch drift_psi and the streaming bin maintainer so both sides
-    bucket bit-identically."""
+    """E85: drift_psi's fixed-edge bin assignment (width * i clamped to
+    [0, n_bins-1]) — data-independent and in-row, so the reference and
+    current sides bucket bit-identically."""
     return F.greatest(
         F.lit(0).cast("long"),
         F.least(
@@ -1320,36 +1319,4 @@ def shapley_attribution(
     return folded.where(F.col("rn") == 1).select(
         "channel",
         F.round(F.col("cum") / F.lit(float(fact[k])), 6).alias("shapley"),
-    )
-
-
-def rrf_fuse(legs: list[DataFrame], k: int = 10, rrf_k: int = 60) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack/Clarke/Buettcher 2009) of several
-    ranked lists of (query_id, rank, doc_id): each list contributes
-    1/(rrf_k + rank) per (query, doc); a doc absent from a list
-    contributes nothing, so scores on different scales fuse without
-    normalization. Ranks are integers, so the fused score is exact to
-    round 6. Ties break on doc_id.
-
-    The legs are already bounded top-k lists, so fusion runs on
-    |queries| x leg_k x n_legs rows: one union, one keyed aggregate, one
-    rank window. Returns (query_id, rank, doc_id, rrf_score)."""
-    from functools import reduce
-
-    contribs = [
-        leg.select(
-            "query_id", "doc_id", (1.0 / (F.lit(rrf_k) + F.col("rank"))).alias("__c")
-        )
-        for leg in legs
-    ]
-    fused = (
-        reduce(lambda a, b: a.unionByName(b), contribs)
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("__c"), 6).alias("rrf_score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("rrf_score"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "rrf_score")
     )

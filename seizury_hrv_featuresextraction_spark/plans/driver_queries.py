@@ -20,7 +20,6 @@ from ..functions.text import langid, quality_features, words
 from ..operators.asof import asof_join
 from ..operators.dedup import dedup_exact, minhash_lsh_pairs, ngram_jaccard_pairs
 from ..operators.filters import iqr_filter, median_mad_filter
-from ..operators.sketches import HLL_EST_NUM as _HLL_EST_NUM
 from ..operators.stats import class_weights, zscore_normalize
 from ..operators.windows import session_bounds, sliding_window_grid
 from ..sources.registry import annotations_from_events, load_table, sequences_from_events
@@ -5837,191 +5836,6 @@ def ks_drift_daily(spark, sf_dir):
 
 
 @q(
-    "cms_heavy_ngrams",
-    f"""
-    WITH w AS (SELECT {WORDS_DD} AS ws FROM documents),
-    g AS (SELECT array_to_string(ws[i:i+2], ' ') AS ngram
-          FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-          WHERE len(ws) >= 3)
-    SELECT ngram, count(*)::bigint AS cnt
-    FROM g GROUP BY ngram HAVING count(*) >= 5
-    """,
-)
-def cms_heavy_ngrams_q(spark, sf_dir):
-    """E58: heavy-hitter 3-grams (global count >= 5) via a count-min
-    sketch candidate filter + exact verification of the surviving
-    occurrence stream. CMS never underestimates, so the output is
-    EXACTLY the true heavy-hitter set — which is why the twin is the
-    INDEPENDENT exact group-count (no sketch replication): agreement
-    proves the sketch path loses nothing. Sketch exchange is bounded
-    at depth*width cells per map task; no distinct-ngram shuffle
-    exists in the plan (the thing that kills exact counting at
-    100 TB)."""
-    from ..operators.sketches import cms_heavy_ngrams
-
-    docs = load_table(spark, sf_dir, "documents")
-    return cms_heavy_ngrams(docs, "text", n=3, min_count=5, depth=4, width=4096)
-
-
-# shared by the E64/E65 sketch twins: distinct-insensitive 3-word
-# shingle stream per source, and the full HLL register/Z replay over it
-_SHINGLE3_CTES = f"""
-    w AS (SELECT source, {WORDS_DD} AS ws FROM documents),
-    shd AS (SELECT source, array_to_string(ws[i:i+2], ' ') AS s
-            FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-            WHERE len(ws) >= 3)"""
-_HLL_CTES = (
-    _SHINGLE3_CTES
-    + """,
-    hd AS (SELECT source, md5('hll:' || s) AS d FROM shd),
-    rr AS (SELECT source,
-                  ('0x' || substr(d, 1, 2))::bigint AS reg,
-                  least(61 - length(bin(('0x' || substr(d, 3, 15))::bigint)), 40) AS rho
-           FROM hd),
-    mx AS (SELECT source, reg, max(rho) AS rho FROM rr GROUP BY 1, 2),
-    ag AS (SELECT source,
-                  count(*)::bigint AS n_registers_hit,
-                  (sum(1::bigint << (40 - rho))
-                   + (256 - count(*)) * (1::bigint << 40))::bigint AS z_scaled
-           FROM mx GROUP BY 1)"""
-)
-
-
-@q(
-    "hll_distinct_shingles",
-    f"""
-    WITH {_HLL_CTES}
-    SELECT source, n_registers_hit, z_scaled,
-           {_HLL_EST_NUM!r} / z_scaled::double AS est_distinct
-    FROM ag
-    """,
-)
-def hll_distinct_shingles_q(spark, sf_dir):
-    """E64: HyperLogLog distinct-shingles-per-source (p=8, 256
-    registers) — the data-card vocabulary stat whose EXACT form
-    shuffles every distinct shingle (billions of keys at 100 TB); the
-    sketch's shuffle is sources x 256 register rows via native max
-    map-side combine.  The twin replays the ENTIRE sketch (registers,
-    capped rho, dyadic Z sum, shared estimate literal), so the
-    value-hash gate proves bit-identical registers AND estimates:
-    rho = 61 - len(minimal binary of the 60-bit md5 tail) in both
-    engines (Spark conv(hex,16,2) == DuckDB bin(int)), capped at 40 so
-    Z stays an order-free exact int64 dyadic sum, and the estimate is
-    one IEEE division of a shared decimal literal by that integer.
-    Accuracy vs exact counts is pytest-gated (tests/test_sketches.py)."""
-    from ..operators.sketches import hll_distinct_shingles
-
-    docs = load_table(spark, sf_dir, "documents")
-    return hll_distinct_shingles(docs, "text", "source", shingle_words=3)
-
-
-@q(
-    "source_overlap_matrix",
-    f"""
-    WITH {_HLL_CTES},
-    est AS (SELECT max({_HLL_EST_NUM!r} / z_scaled::double) AS n_max FROM ag),
-    thr AS (SELECT floor(least(1.0, 256.0 / n_max) * 1152921504606846976.0)::bigint AS t
-            FROM est),
-    samp AS (SELECT DISTINCT source,
-                    ('0x' || substr(md5('kmv:' || s), 1, 15))::bigint AS h
-             FROM shd
-             WHERE ('0x' || substr(md5('kmv:' || s), 1, 15))::bigint < (SELECT t FROM thr)),
-    sizes AS (SELECT source, count(*)::bigint AS n FROM samp GROUP BY 1),
-    shared AS (SELECT a.source AS source_a, b.source AS source_b,
-                      count(*)::bigint AS n_shared
-               FROM samp a JOIN samp b ON a.h = b.h AND a.source < b.source
-               GROUP BY 1, 2)
-    SELECT source_a, source_b, sa.n AS n_a, sb.n AS n_b, n_shared,
-           (sa.n + sb.n - n_shared)::bigint AS n_union,
-           n_shared::double / (sa.n + sb.n - n_shared)::double AS jaccard_est
-    FROM shared
-    JOIN sizes sa ON sa.source = shared.source_a
-    JOIN sizes sb ON sb.source = shared.source_b
-    """,
-)
-def source_overlap_matrix_q(spark, sf_dir):
-    """E65: cross-source shingle-overlap matrix via a sketch-calibrated
-    uniform hash sample (the theta-sketch fixed-threshold view of KMV).
-    The exact stat needs the full distinct (source, shingle) shuffle
-    plus a shingle self-join — both corpus-sized; here {{h < t}} is an
-    unbiased sample of every source's distinct-shingle set under the
-    SAME inclusion rule, so pair Jaccard over samples estimates the
-    true matrix while the corpus itself never shuffles (scan-stage
-    threshold filter; only sampled rows reach an exchange).  t is
-    calibrated from the E64 HLL max estimate — bit-identical doubles
-    in both engines, so the twin replays the calibration, the sample,
-    and the pair math EXACTLY (integer counts; the one float column is
-    a single division of exact integers)."""
-    from ..operators.sketches import source_overlap_matrix
-
-    docs = load_table(spark, sf_dir, "documents")
-    return source_overlap_matrix(
-        docs, "text", "source", shingle_words=3, target_k=64, oversample=4
-    )
-
-
-@q(
-    "source_novelty_vs_ref",
-    f"""
-    WITH wn AS (SELECT source, {WORDS_DD} AS ws FROM documents WHERE doc_id % 3 <> 0),
-    shn AS MATERIALIZED (SELECT source, array_to_string(ws[i:i+2], ' ') AS s
-           FROM wn, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-           WHERE len(ws) >= 3),
-    hd AS (SELECT source, md5('hll:' || s) AS d FROM shn),
-    rr AS (SELECT source, ('0x' || substr(d, 1, 2))::bigint AS reg,
-                  least(61 - length(bin(('0x' || substr(d, 3, 15))::bigint)), 40) AS rho
-           FROM hd),
-    mx AS (SELECT source, reg, max(rho) AS rho FROM rr GROUP BY 1, 2),
-    ag AS (SELECT source, count(*)::bigint AS nh,
-                  (sum(1::bigint << (40 - rho))
-                   + (256 - count(*)) * (1::bigint << 40))::bigint AS z
-           FROM mx GROUP BY 1),
-    est AS (SELECT max({_HLL_EST_NUM!r} / z::double) AS n_max FROM ag),
-    thr AS (SELECT floor(least(1.0, 256.0 / n_max) * 1152921504606846976.0)::bigint AS t
-            FROM est),
-    sampn AS MATERIALIZED (
-        SELECT DISTINCT source, ('0x' || substr(md5('kmv:' || s), 1, 15))::bigint AS h
-        FROM shn
-        WHERE ('0x' || substr(md5('kmv:' || s), 1, 15))::bigint < (SELECT t FROM thr)),
-    wr AS (SELECT {WORDS_DD} AS ws FROM documents WHERE doc_id % 3 = 0),
-    shr AS (SELECT array_to_string(ws[i:i+2], ' ') AS s
-            FROM wr, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-            WHERE len(ws) >= 3),
-    sampr AS MATERIALIZED (
-        SELECT DISTINCT ('0x' || substr(md5('kmv:' || s), 1, 15))::bigint AS h
-        FROM shr
-        WHERE ('0x' || substr(md5('kmv:' || s), 1, 15))::bigint < (SELECT t FROM thr)),
-    sizes AS (SELECT source, count(*)::bigint AS n_samp FROM sampn GROUP BY 1),
-    nv AS (SELECT s.source, count(*)::bigint AS n_novel
-           FROM sampn s
-           WHERE NOT EXISTS (SELECT 1 FROM sampr r WHERE r.h = s.h)
-           GROUP BY 1)
-    SELECT sizes.source, n_samp,
-           (n_samp - coalesce(n_novel, 0))::bigint AS n_seen,
-           coalesce(n_novel, 0)::bigint AS n_novel,
-           coalesce(n_novel, 0)::double / n_samp::double AS novelty_est
-    FROM sizes LEFT JOIN nv ON nv.source = sizes.source
-    """,
-)
-def source_novelty_vs_ref_q(spark, sf_dir):
-    """E74: per-source novelty of a new crawl vs a reference corpus —
-    the mixture-planning stat ("how much NEW text does this source
-    contribute") whose exact form needs a full distinct-shingle
-    shuffle of BOTH corpora.  One hash threshold (calibrated from the
-    new side's E64 HLL max estimate) samples both shingle universes
-    under the SAME inclusion rule, so sampled novel/sampled total is
-    unbiased; both sides filter at scan stage, only sampled rows reach
-    the anti-join, all stats exact integers.  Deterministic split for
-    the gate: ref = doc_id % 3 == 0, new = the rest."""
-    from ..operators.sketches import source_novelty_vs_reference
-
-    docs = load_table(spark, sf_dir, "documents")
-    new = docs.where(F.col("doc_id") % 3 != 0)
-    ref = docs.where(F.col("doc_id") % 3 == 0)
-    return source_novelty_vs_reference(new, ref, "text", "source")
-
-
-@q(
     "weighted_sample_docs",
     """
     WITH h AS (SELECT source, doc_id, n_chars,
@@ -6114,44 +5928,6 @@ def snapshot_diff_crawls_q(spark, sf_dir):
         )
     )
     return snapshot_diff(v1, v2, "doc_id", "fp")
-
-
-@q(
-    "length_quantile_sketch",
-    """
-    WITH h AS (SELECT source,
-                      CASE WHEN n_chars < 8 THEN n_chars
-                           ELSE (length(bin(n_chars::bigint)) - 3) * 4
-                                + (n_chars // (1::bigint << (length(bin(n_chars::bigint)) - 3))) + 4
-                      END AS b
-               FROM documents),
-    hist AS (SELECT source, b, count(*)::bigint AS c FROM h GROUP BY 1, 2),
-    cum AS (SELECT source, b,
-                   sum(c) OVER (PARTITION BY source ORDER BY b) AS cum,
-                   sum(c) OVER (PARTITION BY source) AS n,
-                   CASE WHEN b < 8 THEN b::bigint
-                        ELSE ((4 + (b - 8) % 4)::bigint << ((b - 8) // 4)) END AS lb
-            FROM hist)
-    SELECT source, max(n)::bigint AS n,
-           min(CASE WHEN cum >= (1 * n + 1) // 2 THEN lb END)::bigint AS q1_2_lb,
-           min(CASE WHEN cum >= (9 * n + 9) // 10 THEN lb END)::bigint AS q9_10_lb,
-           min(CASE WHEN cum >= (99 * n + 99) // 100 THEN lb END)::bigint AS q99_100_lb
-    FROM cum GROUP BY source
-    """,
-)
-def length_quantile_sketch_q(spark, sf_dir):
-    """E68: HDR-histogram quantile sketch over doc length per source —
-    p50/p90/p99 lower bounds each within +25% of the true order
-    statistic, with the shuffle bounded at sources x O(4*log2(max))
-    bucket rows instead of the per-group sort an exact quantile needs
-    (numeric_profile's documented percentile_approx swap, made
-    deterministic).  Two mantissa bits per octave, rank thresholds
-    exact ceil-division integers, histogram merges by addition — the
-    twin replays bucket ids, bounds, and rank selection bit-for-bit."""
-    from ..operators.sketches import hdr_quantile_sketch
-
-    docs = load_table(spark, sf_dir, "documents")
-    return hdr_quantile_sketch(docs, "n_chars", "source")
 
 
 @q(

@@ -245,15 +245,11 @@ def plan_stats(
 # caps before the chunk-split plan's rebalancing is worth its shuffle
 _FUSED_SKEW_HEADROOM = 8
 
-# fused-vs-chunked volume crossover, calibrated from the INTERLEAVED
-# same-action sweep (BENCH/scale_sweep.md, r5): below ~500k tokens/core
-# the job is overhead-dominated and fused's avoided shuffle round-trip
-# is the whole gap (1M tokens: fused 2.6x chunked; 4M: 1.4x); at ~20M
-# tokens (625k/core) the two plans measure equal, and above it the
-# chunked plan's rebalancing edges ahead (100M: chunked 1.1x). NB the
-# r4 bench's apparent opposite ordering at 4M compared a count() timing
-# against a noop-write timing — different actions; bench.py now times
-# all three variants interleaved under the same action.
+# fused-vs-chunked volume crossover: below ~500k tokens/core the job is
+# overhead-dominated and fused's avoided shuffle round-trip is the whole
+# gap. Re-timed on 4 vCPUs (ROADMAP.md item 5, interleaved, same action):
+# fused is 0.79x chunked's time on 0.51M bounded-doc tokens and within
+# 5% of it at ~8M tokens, long-tailed or not.
 _FUSED_MAX_TOKENS_PER_CORE = 500_000
 
 

@@ -192,7 +192,7 @@ def make_hrv_stream_fn(
         tok = np.concatenate([np.asarray(buf, dtype=np.int64)] + ready)
 
         # exact integer grid arithmetic, identical to the batch plan
-        # (operators/skew.py / functions/hrv.py windows_for_chunk)
+        # (operators/skew.py _chunk_batch)
         t_ms = int(off_ms) + np.cumsum(tok)
         t_total = int(t_ms[-1]) if tok.size else int(off_ms)
         n_samples = (t_total * fs) // 1000

@@ -372,7 +372,36 @@ def test_query_surface_guard():
     assert sum(1 for p in prios if p == 0) <= 50
     # surface ratchet: the exported query set only shrinks toward the
     # paper's surface; each cut lowers this bound
-    assert len(QUERIES) <= 134
+    assert len(QUERIES) <= 129
+
+
+def test_script_imports_resolve():
+    """Scripts no test runs (the driver entry, tools/, perfbench/) must
+    not keep importing a name a cut removed from the package: every
+    ``from seizury_hrv_featuresextraction_spark... import name`` in them,
+    including imports nested inside functions, resolves."""
+    import ast
+    import importlib
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    scripts = [root / "__spark_entry__.py", *sorted(root.glob("tools/*.py")), *sorted(root.glob("perfbench/*.py"))]
+    checked, broken = 0, []
+    for path in scripts:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not (isinstance(node, ast.ImportFrom) and node.level == 0
+                    and (node.module or "").split(".")[0] == "seizury_hrv_featuresextraction_spark"):
+                continue
+            where = f"{path.relative_to(root)}:{node.lineno} {node.module}"
+            try:
+                mod = importlib.import_module(node.module)
+            except ImportError as e:
+                broken.append(f"{where}: {e}")
+                continue
+            checked += len(node.names)
+            broken += [f"{where}: no name {a.name}" for a in node.names if not hasattr(mod, a.name)]
+    assert checked > 0
+    assert not broken, "\n".join(broken)
 
 
 def test_substring_dedup_vs_bruteforce(spark):

@@ -1,6 +1,5 @@
 """Tokenizer fertility (E56): per-source fertility and compression of a
-learned BPE merge list against a dict replay, plus its plan shape; and
-reciprocal-rank fusion (E97) against hand-computed scores."""
+learned BPE merge list against a dict replay, plus its plan shape."""
 
 from __future__ import annotations
 
@@ -69,26 +68,3 @@ def test_tokenizer_fertility_plan_one_exchange(spark):
     )
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Join" not in plan
-
-
-def test_rrf_fuse_hand_computed(spark):
-    """Fused score = sum of 1/(rrf_k + rank) over the legs that contain
-    the doc; docs in a single leg score lower than docs in both;
-    deterministic doc_id tiebreak on equal scores."""
-    from seizury_hrv_featuresextraction_spark.operators.stats import rrf_fuse
-
-    leg_a = spark.createDataFrame(
-        [(0, 1, 10), (0, 2, 11), (0, 3, 12)], "query_id long, rank long, doc_id long"
-    ).select("query_id", "rank", "doc_id")
-    leg_b = spark.createDataFrame(
-        [(0, 1, 11), (0, 2, 10), (0, 3, 99)], "query_id long, rank long, doc_id long"
-    ).select("query_id", "rank", "doc_id")
-    out = rrf_fuse([leg_a, leg_b], k=10, rrf_k=60).collect()
-    got = {r["doc_id"]: (r["rank"], r["rrf_score"]) for r in out}
-    # doc 10: rank 1 in A, rank 2 in B; doc 11: rank 2 in A, rank 1 in B
-    both = round(1 / 61 + 1 / 62, 6)
-    assert got[10] == (1, both)  # tie with 11 -> smaller doc_id wins
-    assert got[11] == (2, both)
-    assert got[12] == (3, round(1 / 63, 6))
-    assert got[99] == (4, round(1 / 63, 6))
-    assert len(got) == 4

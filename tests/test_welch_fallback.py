@@ -46,10 +46,10 @@ def test_welch_fallback_kernel_path():
     assert freq[0] > 0  # total power
     assert 0 <= freq[4] <= 100 and 0 <= freq[6] <= 100  # normalized %
 
-    # batched chunk path routes through the same fallback (window 0 spans
-    # [0, 30 s] — compare against the masked slice, not the full series)
-    ids, feats = k.windows_for_chunk(rr, t, 0, 1)
+    # batched kernel path routes through the same fallback (window 0 spans
+    # [0, 30 s]: a prefix of the series, passed as [lo, hi) beat bounds)
     mask = (t >= 0.0) & (t <= 30.0)
+    feats = k.windows_from_bounds(rr, np.array([0]), np.array([mask.sum()]), t)
     v_win = k.feature_vector(rr[mask], t[mask])
     assert np.allclose(feats[0], v_win, rtol=1e-12, atol=0, equal_nan=True)
 
