@@ -29,14 +29,6 @@ from ..planutil import literal_array
 # ---------------------------------------------------------------------------
 
 
-def _word_ngrams(ws: Column, n: int) -> Column:
-    """All (overlapping, non-distinct) space-joined word n-grams."""
-    return F.transform(
-        _safe_range(F.size(ws) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
-    )
-
-
 def _sorted_run_stats(sorted_arr: Column, zero_prev: Column) -> Column:
     """One aggregate pass over a SORTED array returning
     struct(best = max run length == max per-value count,

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import doc_fingerprint, simhash64, word_shingles, word_shingles_of, words
+from ..functions.text import doc_fingerprint, simhash64, word_shingles_of, words
 from ..functions.vectors import cosine, lsh_band_buckets, lsh_bucket, to_double
 
 

@@ -7,13 +7,15 @@
 - ``detection_metrics``: confusion counts, sensitivity/specificity and
   FPR-per-hour (fp / (neg_windows * stride / 3600),
   evaluate_loso.py:253-288) as native aggregations.
+- ``pit_leakage_audit``: counts the future labels that joining each
+  key's latest label would leak, against the point-in-time as-of join.
 - ``latest_alarm_before_onset``: arg-max by time (stream_emulator.py:
   366-368) via max_by.
+- ``auc_by_group``: exact ROC AUC per group, the AUC of the
+  reference's window metrics (evaluate_loso.py:253-288).
 """
 
 from __future__ import annotations
-
-import math
 
 from collections.abc import Sequence
 
@@ -160,65 +162,6 @@ def latest_alarm_before_onset(alarms: DataFrame, events: DataFrame) -> DataFrame
     )
 
 
-def calibration_bins(
-    df: DataFrame,
-    prob_col: str,
-    label_col: str,
-    n_bins: int = 10,
-) -> DataFrame:
-    """E90: reliability-diagram bins + per-bin expected-calibration-error
-    terms for a probabilistic classifier (Guo et al. 2017's ECE) — does
-    prob 0.8 actually mean 80% positives; the acceptance gate a quality
-    classifier (E40) must pass before its scores drive corpus selection.
-
-    Determinism devices: the probability is quantized to an exact int64
-    micro-unit first (p6 = round(p * 1e6) — feed an engine-stable prob,
-    e.g. the classifier's round-6 output, and both engines recover the
-    IDENTICAL integer), binning is pure integer arithmetic
-    (p6 * n_bins / 1e6, clamped), and per-bin sufficient statistics
-    (n, n_pos, sum_p6) are exact order-free int64 sums; mean confidence,
-    accuracy, |gap| and the ECE term n*gap/N are each ONE fixed double-op
-    sequence from those integers — value-twinnable at round(·,6), immune
-    to float-summation order.
-
-    Scale shape: one map-side-combined groupBy bounded at n_bins rows;
-    the N total rides a broadcast crossJoin. ECE itself = sum(ece_term).
-    """
-    p6 = F.round(F.col(prob_col) * 1000000).cast("long")
-    b = F.least(
-        F.lit(n_bins - 1).cast("long"), F.floor(p6 * n_bins / F.lit(1000000))
-    )
-    g = (
-        df.select(
-            b.alias("bin"),
-            p6.alias("__p6"),
-            F.col(label_col).cast("long").alias("__y"),
-        )
-        .groupBy("bin")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("__y").alias("n_pos"),
-            F.sum("__p6").alias("__sum_p6"),
-        )
-    )
-    tot = g.agg(F.sum("n").alias("__N"))
-    g = g.crossJoin(F.broadcast(tot))
-    conf = F.col("__sum_p6").cast("double") / (F.col("n") * 1000000).cast("double")
-    acc = F.col("n_pos").cast("double") / F.col("n").cast("double")
-    gap = F.abs(acc - conf)
-    return g.select(
-        "bin",
-        "n",
-        "n_pos",
-        F.round(conf, 6).alias("mean_conf"),
-        F.round(acc, 6).alias("accuracy"),
-        F.round(gap, 6).alias("gap"),
-        F.round(F.col("n").cast("double") * gap / F.col("__N").cast("double"), 6).alias(
-            "ece_term"
-        ),
-    )
-
-
 def auc_by_group(
     df: DataFrame,
     score_col: str,
@@ -226,10 +169,10 @@ def auc_by_group(
     group_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """E91: EXACT ROC AUC per group via the Mann-Whitney U statistic —
-    the ranking-quality companion of the E90 calibration gate (a
-    classifier can be well-calibrated and still rank poorly, and vice
-    versa). Ties handled by the midrank convention, but computed
-    WITHOUT fractional ranks: per distinct score s,
+    the AUC among the reference's window metrics (O40, next to the
+    confusion counts, sensitivity, specificity and FPR per hour of
+    evaluate_loso.py:253-288). Ties handled by the midrank convention,
+    but computed WITHOUT fractional ranks: per distinct score s,
 
         num2 += 2 * c_pos(s) * cum_neg(<s) + c_pos(s) * c_neg(s)
 
@@ -279,625 +222,5 @@ def auc_by_group(
                 / (2 * F.col("n_pos") * F.col("n_neg")).cast("double"),
                 6,
             ),
-        )
-    )
-
-
-def cohen_kappa(
-    df: DataFrame,
-    pred_col: str,
-    label_col: str,
-    group_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """E99: Cohen's kappa — chance-corrected agreement between two
-    binary raters (here: a classifier vs a reference label), the QA
-    statistic that exposes "95% accuracy" on a 95%-skewed label as the
-    zero-information rater it is. Computed entirely from the exact
-    int64 confusion counts with ONE final division:
-
-        kappa = (n*(n11+n00) - M) / (n^2 - M),
-        M = (n11+n10)*(n11+n01) + (n01+n00)*(n10+n00)
-
-    (algebraically (po-pe)/(1-pe) with the fractions cleared), NULL
-    when the denominator is 0 (both raters constant — kappa undefined).
-    po/pe are also emitted (round-6) for the report.
-
-    Scale shape: one map-side-combined groupBy on the group key — the
-    corpus collapses to four integers per group; nothing else touches
-    it."""
-    keys = list(group_cols or [])
-    p = F.col(pred_col).cast("long")
-    y = F.col(label_col).cast("long")
-    g = (
-        df.select(*keys, p.alias("__p"), y.alias("__y"))
-        .groupBy(*keys)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.col("__p") * F.col("__y")).cast("long").alias("n11"),
-            F.sum(F.col("__p") * (1 - F.col("__y"))).cast("long").alias("n10"),
-            F.sum((1 - F.col("__p")) * F.col("__y")).cast("long").alias("n01"),
-            F.sum((1 - F.col("__p")) * (1 - F.col("__y"))).cast("long").alias("n00"),
-        )
-    )
-    m = (F.col("n11") + F.col("n10")) * (F.col("n11") + F.col("n01")) + (
-        F.col("n01") + F.col("n00")
-    ) * (F.col("n10") + F.col("n00"))
-    agree = F.col("n11") + F.col("n00")
-    den = F.col("n") * F.col("n") - m
-    return g.select(
-        *keys,
-        "n",
-        "n11",
-        "n10",
-        "n01",
-        "n00",
-        F.round(agree.cast("double") / F.col("n").cast("double"), 6).alias("po"),
-        F.round(m.cast("double") / (F.col("n") * F.col("n")).cast("double"), 6).alias("pe"),
-        F.when(
-            den != 0,
-            F.round((F.col("n") * agree - m).cast("double") / den.cast("double"), 6),
-        ).alias("kappa"),
-    )
-
-
-def isotonic_calibration(
-    scored: DataFrame,
-    score_col: str,
-    label_col: str,
-) -> DataFrame:
-    """E117: EXACT isotonic regression of a binary label on an integer
-    score — the PAV calibrator (Zadrozny & Elkan 2002) that E90's
-    reliability bins diagnose the need for: the monotone map from raw
-    classifier score to calibrated probability, with no binning
-    artifacts and no parametric (Platt) assumption.
-
-    Distributed device: the corpus collapses to ONE bounded
-    per-distinct-score table (cnt, pos) — ``score_col`` must already be
-    quantized to a bounded integer grid (the E90 device; e.g. centi-
-    probabilities 0..100) — and the fit is computed by the MINIMAX
-    characterization of isotonic regression
-
-        fit(i) = max_{k <= i} min_{j >= i} avg(y over scores k..j)
-
-    (Robertson/Wright/Dykstra), not by the sequential PAV sweep: every
-    pooled average is one exact-int64-difference division via prefix
-    sums, and the min/max lattice is two grouped aggregates over an
-    O(S^3/6) join of BOUNDED tables — corpus-independent work (S=101
-    -> ~170k rows), fully order-free, hash-exact in any engine.  The
-    sequential PAV sweep would be a driver-local loop; this form keeps
-    the whole fit declarative and twin-able.
-
-    Returns one row per distinct score: (score, n, n_pos, iso_p),
-    iso_p monotone non-decreasing in score.  The only corpus-scale
-    exchange is the distinct-score aggregate; the single-partition
-    prefix window and the joins touch only the bounded table.
-    """
-    g = (
-        scored
-        # NULL scores would sort NULLS FIRST into the prefix window and
-        # contaminate every real score's cumulative sums while the row
-        # itself vanished from the non-equi joins; NULL labels would
-        # count in cnt but not pos, silently becoming negatives — both
-        # are dropped up front as out-of-contract rows
-        .where(F.col(score_col).isNotNull() & F.col(label_col).isNotNull())
-        .groupBy(F.col(score_col).alias("s"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col(label_col).cast("long")).alias("pos"),
-        )
-    )
-    w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ps = g.select(
-        "s",
-        "cnt",
-        "pos",
-        F.sum("cnt").over(w).alias("ccnt"),
-        F.sum("pos").over(w).alias("cpos"),
-    ).select(
-        "s",
-        "cnt",
-        "pos",
-        "ccnt",
-        "cpos",
-        (F.col("ccnt") - F.col("cnt")).alias("pcnt"),
-        (F.col("cpos") - F.col("pos")).alias("ppos"),
-        # the bounded (<= S rows) prefix table is referenced four times
-        # below — materialize it once (the E113 device) or every branch
-        # re-expands the corpus-scale distinct-score aggregate
-    ).localCheckpoint(eager=True)
-    k = ps.select(F.col("s").alias("sk"), "pcnt", "ppos")
-    j = ps.select(F.col("s").alias("sj"), "ccnt", "cpos")
-    pairs = k.join(j, F.col("sk") <= F.col("sj")).select(
-        "sk",
-        "sj",
-        (
-            (F.col("cpos") - F.col("ppos")).cast("double")
-            / (F.col("ccnt") - F.col("pcnt")).cast("double")
-        ).alias("r"),
-    )
-    i = ps.select(F.col("s").alias("si"), F.col("cnt").alias("n"), F.col("pos").alias("n_pos"))
-    inner = pairs.join(i, (F.col("sk") <= F.col("si")) & (F.col("sj") >= F.col("si")))
-    mik = inner.groupBy("si", "sk").agg(F.min("r").alias("m"))
-    fit = mik.groupBy("si").agg(F.max("m").alias("fit"))
-    return (
-        i.join(fit, "si")
-        .select(
-            F.col("si").alias("score"),
-            "n",
-            "n_pos",
-            F.round("fit", 6).alias("iso_p"),
-        )
-    )
-
-
-def kaplan_meier(
-    subjects: DataFrame,
-    group_col: str,
-    duration_col: str,
-    observed_col: str,
-) -> DataFrame:
-    """E118: Kaplan-Meier product-limit survival estimator per group —
-    the standard right-censored time-to-event curve (churn, failure,
-    time-to-first-error) an A/B readout needs when many subjects are
-    still event-free at observation end: dropping censored subjects
-    biases survival down, counting them as events biases it up; KM is
-    the unbiased estimator.
-
-    ``subjects`` has ONE row per subject: integer ``duration_col`` (the
-    bounded time grid is the caller's quantization, e.g. hours) and
-    boolean/int ``observed_col`` (1 = the event happened at duration,
-    0 = right-censored there).  Returns per (group, event time t):
-    n_risk (subjects with duration >= t), d_events (events AT t), and
-    km = prod_{t' <= t} (1 - d/n) — one row per DISTINCT event time.
-
-    Determinism device: the survival product is order-DEPENDENT float
-    work, but its order is the time order, so it is computed as
-    exp(cumulative-window-sum of ln(1 - d/n)) OVER (ORDER BY t) — a
-    sorted prefix fold both engines execute in the identical sequence
-    (the repo's BM25/SampEn ln device, with the window, not a group
-    agg, carrying the float sum), then round-6.  d and n are exact
-    int64 counts; 1 - d/n is one exact-int64 division.
-
-    Scale shape: subjects collapse to per-(group, duration) counts via
-    ONE map-side-combined groupBy (the E87/E91 distinct-value device);
-    the at-risk counts and the survival fold are two frames over ONE
-    sort of that bounded distinct-time table partitioned by group —
-    the subject table is exchanged once, pre-aggregated.
-    """
-    g = (
-        subjects
-        # NULL durations would sort NULLS FIRST into Spark's survival
-        # window but NULLS LAST in a SQL twin (the isotonic guard's
-        # defect class); NULL observed flags would silently censor —
-        # both are out-of-contract rows, dropped up front
-        .where(F.col(duration_col).isNotNull() & F.col(observed_col).isNotNull())
-        .groupBy(F.col(group_col).alias("grp"), F.col(duration_col).cast("long").alias("t"))
-        .agg(
-            F.count(F.lit(1)).alias("n_at"),
-            F.sum(F.col(observed_col).cast("long")).alias("d"),
-        )
-    )
-    w_desc = (
-        Window.partitionBy("grp")
-        .orderBy(F.col("t").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_asc = (
-        Window.partitionBy("grp")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    r = g.select(
-        "grp",
-        "t",
-        "d",
-        F.sum("n_at").over(w_desc).alias("n_risk"),
-    )
-    # d = n_risk (everyone at risk dies) can only occur at the group's
-    # LAST time point, and ln(0) is an error in DuckDB — branch that
-    # terminal row to an exact 0.0 instead of folding ln(0) into the sum
-    term = F.when(
-        (F.col("d") > 0) & (F.col("d") < F.col("n_risk")),
-        F.log(F.lit(1.0) - F.col("d").cast("double") / F.col("n_risk").cast("double")),
-    ).otherwise(F.lit(0.0))
-    out = r.select(
-        "grp",
-        "t",
-        "d",
-        "n_risk",
-        F.when(F.col("d") >= F.col("n_risk"), F.lit(0.0))
-        .otherwise(F.exp(F.sum(term).over(w_asc)))
-        .alias("_s"),
-    )
-    return (
-        out.where(F.col("d") > 0)
-        .select(
-            F.col("grp").alias(group_col),
-            F.col("t").alias("t"),
-            F.col("n_risk").cast("long").alias("n_risk"),
-            F.col("d").cast("long").alias("d_events"),
-            F.round("_s", 6).alias("km"),
-        )
-    )
-
-
-def logrank_test(
-    subjects: DataFrame,
-    group_col: str,
-    duration_col: str,
-    observed_col: str,
-    group_a_value,
-) -> DataFrame:
-    """E119: two-sample log-rank (Mantel-Cox) test — the significance
-    companion of the E118 KM curves: are two variants' survival
-    distributions different, accounting for censoring?  Group A is the
-    rows where ``group_col == group_a_value``; everything else is B.
-
-    One row out: O_A (observed events in A, exact int64), E_A
-    (expected under H0: sum over event times of n_A * d / n), V (the
-    hypergeometric variance sum n_A*n_B*d*(n-d) / (n^2*(n-1))) and
-    chi2 = (O_A - E_A)^2 / V (~ chi-square, 1 df, under H0).
-
-    Determinism: per-time counts are exact int64 via ONE conditional
-    aggregate on the duration (no per-group time axes to reconcile);
-    at-risk counts are desc-ordered cumulative windows; the E and V
-    accumulations are float, so they fold as ASC-ordered cumulative
-    windows over the bounded distinct-time table and the totals are
-    read off the last event-time row — both engines execute the
-    identical fold sequence (the E118 device).  Single-subject times
-    (n = 1) contribute 0 variance by the d(n-d) = 0 numerator; the
-    n - 1 = 0 denominator is branched, not divided.
-
-    Scale: the corpus collapses to per-duration counts in one map-side
-    combined exchange; all remaining work is windows over the bounded
-    distinct-time table (single-partition by design — the time axis of
-    a 2-arm test is small by construction).
-    """
-    is_a = F.col(group_col) == F.lit(group_a_value)
-    obs = F.col(observed_col).cast("long")
-    # same NULL-duration/observed guard as kaplan_meier: the ASC/DESC
-    # cumulative windows place NULL t on opposite ends in Spark vs a
-    # SQL twin, and the summary row is read off the max event time
-    subjects = subjects.where(
-        F.col(duration_col).isNotNull() & F.col(observed_col).isNotNull()
-    )
-    g = subjects.groupBy(F.col(duration_col).cast("long").alias("t")).agg(
-        F.count(F.lit(1)).alias("na"),
-        F.sum(obs).alias("d"),
-        F.sum(F.when(is_a, 1).otherwise(0).cast("long")).alias("na0"),
-        F.sum(F.when(is_a, obs).otherwise(F.lit(0).cast("long"))).alias("d0"),
-    )
-    w_desc = Window.orderBy(F.col("t").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    r = g.select(
-        "t",
-        "d",
-        "d0",
-        F.sum("na").over(w_desc).alias("n"),
-        F.sum("na0").over(w_desc).alias("n0"),
-    ).where(F.col("d") > 0)
-    e0 = F.col("n0").cast("double") * F.col("d").cast("double") / F.col("n").cast("double")
-    v = F.when(
-        F.col("n") > 1,
-        (
-            F.col("n0").cast("double")
-            * (F.col("n") - F.col("n0")).cast("double")
-            * F.col("d").cast("double")
-            * (F.col("n") - F.col("d")).cast("double")
-        )
-        / (
-            F.col("n").cast("double")
-            * F.col("n").cast("double")
-            * (F.col("n") - 1).cast("double")
-        ),
-    ).otherwise(F.lit(0.0))
-    w_asc = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = r.select(
-        "t",
-        F.sum("d0").over(w_asc).alias("o_a"),
-        F.sum(e0).over(w_asc).alias("e_a"),
-        F.sum(v).over(w_asc).alias("v"),
-    )
-    last = cum.orderBy(F.col("t").desc()).limit(1)
-    return last.select(
-        F.col("o_a").cast("long").alias("o_a"),
-        F.round("e_a", 6).alias("e_a"),
-        F.round("v", 6).alias("var_lr"),
-        F.round(
-            F.when(
-                F.col("v") > 0,
-                (F.col("o_a").cast("double") - F.col("e_a"))
-                * (F.col("o_a").cast("double") - F.col("e_a"))
-                / F.col("v"),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("chi2"),
-    )
-
-
-def cuped_adjust(
-    subjects: DataFrame,
-    group_col: str,
-    x_col: str,
-    y_col: str,
-) -> DataFrame:
-    """E120: CUPED variance-reduced experiment readout (Deng et al.
-    2013, WSDM — the industry-standard A/B variance-reduction device):
-    adjust each subject's post-period metric y by its PRE-period
-    covariate x, y_adj = y - theta * (x - mean(x)), theta =
-    cov(x, y) / var(x) estimated POOLED across arms (pre-period data
-    is independent of assignment, so the adjustment is unbiased), and
-    report per-arm adjusted means; the achievable variance shrink is
-    1 - corr(x, y)^2.
-
-    Exactness device (the E71/E86 integer-Gram family): ``x_col`` and
-    ``y_col`` must already be int64-quantized (the caller's scale
-    lever, cf. E114) — all sufficient statistics (n, Sx, Sy, Sxx, Syy,
-    Sxy) are then EXACT order-free int64 sums, theta and rho^2 are
-    single divisions of exact integer polynomials (n*Sxy - Sx*Sy over
-    n*Sxx - Sx^2 etc.), and each arm's adjusted mean is one fixed
-    float sequence over exact inputs — hash-exact in any engine with
-    no tolerance.  Degenerate pre-period (constant x) branches theta
-    and rho^2 to 0 rather than dividing by zero.
-
-    Scale: ONE subject-level aggregate per arm plus ONE pooled 1-row
-    stats frame broadcast back (the repo's crossJoin-broadcast
-    device); nothing subject-scale is shuffled twice.
-    """
-    x = F.col(x_col).cast("long")
-    y = F.col(y_col).cast("long")
-    # count(*) would count rows whose NULL x/y the sums skip, silently
-    # corrupting theta's integer polynomials — NULL metrics are
-    # out-of-contract rows, dropped before any statistic
-    subjects = subjects.where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-    pooled = subjects.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-        F.sum(x * y).alias("sxy"),
-    )
-    arms = subjects.groupBy(F.col(group_col).alias("grp")).agg(
-        F.count(F.lit(1)).alias("n_v"),
-        F.sum(x).alias("sx_v"),
-        F.sum(y).alias("sy_v"),
-    )
-    j = arms.crossJoin(F.broadcast(pooled))
-    cov_num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx_num = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary_num = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    theta = F.when(
-        varx_num > 0, cov_num.cast("double") / varx_num.cast("double")
-    ).otherwise(F.lit(0.0))
-    rho2 = F.when(
-        (varx_num > 0) & (vary_num > 0),
-        (cov_num.cast("double") * cov_num.cast("double"))
-        / (varx_num.cast("double") * vary_num.cast("double")),
-    ).otherwise(F.lit(0.0))
-    mean_y = F.col("sy_v").cast("double") / F.col("n_v").cast("double")
-    mean_adj = mean_y - theta * (
-        F.col("sx_v").cast("double") / F.col("n_v").cast("double")
-        - F.col("sx").cast("double") / F.col("n").cast("double")
-    )
-    return j.select(
-        F.col("grp").alias(group_col),
-        F.col("n_v").cast("long").alias("n_subjects"),
-        F.round(mean_y, 6).alias("mean_y"),
-        F.round(mean_adj, 6).alias("mean_y_cuped"),
-        F.round(theta, 6).alias("theta"),
-        F.round(rho2, 6).alias("var_reduction"),
-    )
-
-
-# Poisson(1) CDF at k = 0..8, shared with the DuckDB twin as plan
-# literals: both engines compare the SAME doubles, so the hash-derived
-# weights are bit-identical (the inverse-CDF lookup truncates at 9)
-POISSON1_CDF = (
-    0.36787944117144233,
-    0.7357588823428847,
-    0.9196986029286058,
-    0.9810118431238463,
-    0.9963401531726563,
-    0.9994058151824183,
-    0.999916758850712,
-    0.9999897508033253,
-    0.999998874797402,
-)
-
-
-def bootstrap_mean_ci(
-    subjects: DataFrame,
-    group_col: str,
-    id_col: str,
-    y_col: str,
-    n_boot: int = 64,
-    salt: str = "bs",
-) -> DataFrame:
-    """E121: per-group mean with a Poisson-bootstrap confidence
-    interval — the SCALE-NATIVE bootstrap (Chamandy et al., Google
-    2012): classical resampling needs n draws WITH replacement from a
-    distributed table (a shuffle per resample); poissonization gives
-    each row an independent Poisson(1) multiplicity instead, so all
-    ``n_boot`` resamples are computed in ONE map-local pass — the
-    weight is a pure function of (id, b), no state, no shuffle, and
-    the resample is reproducible under retries/resume (the E73
-    determinism rule: never rand()).
-
-    Weights: u = md5-hash(salt, id, b) mapped to [0, 1); w = Poisson(1)
-    inverse-CDF lookup against the POISSON1_CDF plan literals (shared
-    verbatim with the twin, so both engines compare identical doubles;
-    the lookup truncates at multiplicity 9, P ~ 1e-6).
-    ``y_col`` must be int64 (the E120 quantization lever): each
-    resample's sums sum(w*y), sum(w) are then EXACT integers and
-    mean_b is one division.  CI = nearest-rank 2.5/97.5 percentiles
-    over the n_boot resample means, picked by row_number over the
-    BOUNDED (group, n_boot) table with b as the deterministic
-    tie-break.
-
-    Scale: one subject-scale map-local explode (x n_boot), one
-    (group, b) aggregate of exact ints, then bounded-table windows.
-    """
-    # NULL ids would hash to a SHARED weight stream in Spark (concat_ws
-    # skips NULL segments) yet vanish in a ||-concatenation twin; NULL
-    # metrics would deflate every resample mean (weights kept, products
-    # skipped) — both out-of-contract, dropped up front
-    subjects = subjects.where(F.col(id_col).isNotNull() & F.col(y_col).isNotNull())
-    b = F.explode(F.sequence(F.lit(0), F.lit(int(n_boot) - 1))).alias("b")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.lit(salt), F.col("_id").cast("string"), F.col("b").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        / F.lit(4294967296.0)
-    )
-    w = sum(
-        (F.col("u") >= F.lit(float(c))).cast("long") for c in POISSON1_CDF
-    )
-    amplified = (
-        subjects.select(F.col(group_col).alias("grp"), F.col(id_col).alias("_id"),
-                        F.col(y_col).cast("long").alias("y"), b)
-        .withColumn("u", u)
-        .withColumn("w", w)
-    )
-    means = (
-        amplified.groupBy("grp", "b")
-        .agg(F.sum(F.col("w") * F.col("y")).alias("swy"), F.sum("w").alias("sw"))
-        .where(F.col("sw") > 0)
-        .select(
-            "grp",
-            "b",
-            (F.col("swy").cast("double") / F.col("sw").cast("double")).alias("mean_b"),
-        )
-    )
-    w_rank = Window.partitionBy("grp").orderBy("mean_b", "b")
-    w_all = Window.partitionBy("grp")
-    # rank the percentiles against the SURVIVING resample count, not the
-    # nominal n_boot: sw = 0 resamples are dropped (P ~ e^-n per group),
-    # and a fixed rank of 63 would match nothing in a small group,
-    # emitting NULL CI bounds.  ceil(q * cnt) in exact integer form so
-    # both engines agree on boundary counts
-    ranked = means.select(
-        "grp",
-        "mean_b",
-        F.row_number().over(w_rank).alias("rn"),
-        F.count(F.lit(1)).over(w_all).alias("cnt"),
-    )
-    lo_rn = F.greatest(F.lit(1).cast("long"), F.expr("(25 * cnt + 999) div 1000"))
-    hi_rn = F.expr("(975 * cnt + 999) div 1000")
-    ci = (
-        ranked.groupBy("grp")
-        .agg(
-            F.max(F.when(F.col("rn") == lo_rn, F.col("mean_b"))).alias("ci_lo"),
-            F.max(F.when(F.col("rn") == hi_rn, F.col("mean_b"))).alias("ci_hi"),
-            F.count(F.lit(1)).alias("n_boot"),
-        )
-    )
-    point = subjects.groupBy(F.col(group_col).alias("grp")).agg(
-        F.count(F.lit(1)).alias("n_subjects"),
-        F.sum(F.col(y_col).cast("long")).alias("sy"),
-    )
-    return (
-        point.join(ci, "grp")
-        .select(
-            F.col("grp").alias(group_col),
-            F.col("n_subjects").cast("long").alias("n_subjects"),
-            F.round(F.col("sy").cast("double") / F.col("n_subjects").cast("double"), 6).alias(
-                "mean_y"
-            ),
-            F.round("ci_lo", 6).alias("ci_lo"),
-            F.round("ci_hi", 6).alias("ci_hi"),
-            F.col("n_boot").cast("long").alias("n_boot"),
-        )
-    )
-
-
-def winsorized_mean(
-    subjects: DataFrame,
-    group_col: str,
-    y_col: str,
-    lo_pct_num: int = 1,
-    hi_pct_num: int = 99,
-    pct_den: int = 100,
-) -> DataFrame:
-    """E122: per-group winsorized mean — the standard robust A/B
-    metric treatment (a single whale user can move a raw mean by more
-    than any plausible treatment effect; winsorization clips to the
-    [p_lo, p_hi] quantiles instead of dropping rows, keeping the
-    estimator unbiased-ish under bounded contamination).
-
-    EXACT, no approximate percentiles: the corpus collapses to
-    per-(group, distinct value) counts (the E87/E91 device), the
-    nearest-rank quantile cut points are found from cumulative counts
-    with pure integer arithmetic (k_lo = ceil(p_lo * n), k_hi =
-    ceil(p_hi * n), both as (num * n + den - 1) div den), and the
-    winsorized sum folds cnt * clip(y, lo, hi) over the distinct-value
-    table — every statistic an exact order-free int64, the mean the
-    single final division.  NULL metrics are out-of-contract rows,
-    dropped up front.
-
-    Scale: ONE map-side-combined (group, value) aggregate exchanges
-    the corpus pre-aggregated; the cumulative window sorts only the
-    distinct-value table partitioned by group.
-    """
-    if not (0 <= lo_pct_num < hi_pct_num <= pct_den):
-        raise ValueError("percentile bounds must satisfy 0 <= lo < hi <= den")
-    g = (
-        subjects.where(F.col(y_col).isNotNull())
-        .groupBy(F.col(group_col).alias("grp"), F.col(y_col).cast("long").alias("y"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w_asc = (
-        Window.partitionBy("grp")
-        .orderBy("y")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("grp")
-    r = g.select(
-        "grp",
-        "y",
-        "cnt",
-        F.sum("cnt").over(w_asc).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
-        F.sum(F.col("cnt") * F.col("y")).over(w_all).alias("sy"),
-    )
-    k_lo = F.expr(f"({int(lo_pct_num)} * n + {int(pct_den)} - 1) div {int(pct_den)}")
-    k_hi = F.expr(f"({int(hi_pct_num)} * n + {int(pct_den)} - 1) div {int(pct_den)}")
-    cuts = r.groupBy("grp").agg(
-        F.min(F.when(F.col("cum") >= k_lo, F.col("y"))).alias("y_lo"),
-        F.min(F.when(F.col("cum") >= k_hi, F.col("y"))).alias("y_hi"),
-        F.max("n").alias("n"),
-        F.max("sy").alias("sy"),
-    )
-    j = g.join(cuts, "grp")
-    clipped = F.greatest(F.col("y_lo"), F.least(F.col("y_hi"), F.col("y")))
-    return (
-        j.groupBy("grp")
-        .agg(
-            F.max("n").alias("n"),
-            F.max("sy").alias("sy"),
-            F.max("y_lo").alias("y_lo"),
-            F.max("y_hi").alias("y_hi"),
-            F.sum(F.col("cnt") * clipped).alias("swin"),
-        )
-        .select(
-            F.col("grp").alias(group_col),
-            F.col("n").cast("long").alias("n_subjects"),
-            F.round(F.col("sy").cast("double") / F.col("n").cast("double"), 6).alias("mean_raw"),
-            F.round(F.col("swin").cast("double") / F.col("n").cast("double"), 6).alias(
-                "mean_winsorized"
-            ),
-            F.col("y_lo").cast("long").alias("y_lo"),
-            F.col("y_hi").cast("long").alias("y_hi"),
         )
     )

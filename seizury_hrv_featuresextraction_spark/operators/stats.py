@@ -1092,231 +1092,3 @@ def quantile_normalize(
         F.round("__q", 6).alias("cdf"),
         F.col("__target").alias("target"),
     )
-
-
-def theil_sen_slope(
-    series: DataFrame,
-    key_col: str,
-    t_col: str,
-    y_col: str,
-) -> DataFrame:
-    """E123: per-key Theil-Sen robust trend — the median of all
-    pairwise slopes (Sen 1968), the robust-regression companion of the
-    E88 EWMA trend: OLS has breakdown point 0 (one corrupted day flips
-    the fitted sign), Theil-Sen tolerates ~29% outliers, the right
-    estimator for per-user/per-source health trends over noisy
-    telemetry.
-
-    Exactness: ``t_col`` and ``y_col`` must be int64 (the repo's
-    quantization lever) — every pairwise slope is ONE exact-int64-
-    difference division (identical doubles both engines), and the
-    median is the LOWER median selected by row_number with the pair's
-    (t1, t2) as deterministic tie-break (the robust_outliers exact-
-    median device; no interpolation, no approximate percentile).
-    NULL t/y rows are dropped up front; duplicate timestamps collapse
-    map-side by max (pairs need distinct t); keys with a single
-    distinct t are dropped (no slope exists).
-
-    Scale: the pair join is per-key (one shuffle on the key) and the
-    pair count is bounded by the series length the caller's time
-    quantization implies — days per user, not events per user; the
-    median rank window sorts only each key's bounded pair list.
-    """
-    o = (
-        series.where(F.col(t_col).isNotNull() & F.col(y_col).isNotNull())
-        .groupBy(F.col(key_col).alias("k"), F.col(t_col).cast("long").alias("t"))
-        .agg(F.max(F.col(y_col).cast("long")).alias("y"))
-    )
-    a = o.select(F.col("k"), F.col("t").alias("t1"), F.col("y").alias("y1"))
-    b = o.select(F.col("k"), F.col("t").alias("t2"), F.col("y").alias("y2"))
-    pairs = a.join(b, "k").where(F.col("t1") < F.col("t2")).select(
-        "k",
-        "t1",
-        "t2",
-        (
-            (F.col("y2") - F.col("y1")).cast("double")
-            / (F.col("t2") - F.col("t1")).cast("double")
-        ).alias("slope"),
-    )
-    w_rank = Window.partitionBy("k").orderBy("slope", "t1", "t2")
-    w_all = Window.partitionBy("k")
-    ranked = pairs.select(
-        "k",
-        "slope",
-        F.row_number().over(w_rank).alias("rn"),
-        F.count(F.lit(1)).over(w_all).alias("n_pairs"),
-    )
-    days = o.groupBy("k").agg(F.count(F.lit(1)).alias("n_t"))
-    med = ranked.where(F.col("rn") == F.expr("(n_pairs + 1) div 2")).select(
-        "k", F.col("n_pairs").cast("long").alias("n_pairs"), F.round("slope", 6).alias("slope_ts")
-    )
-    return (
-        days.join(med, "k")
-        .select(
-            F.col("k").alias(key_col),
-            F.col("n_t").cast("long").alias("n_t"),
-            "n_pairs",
-            "slope_ts",
-        )
-    )
-
-
-# Benford first-digit probabilities log10(1 + 1/d), d = 1..9 — plan
-# literals shared verbatim with the DuckDB twin (identical doubles)
-BENFORD_P = (
-    0.3010299956639812,
-    0.17609125905568124,
-    0.12493873660829993,
-    0.09691001300805642,
-    0.07918124604762482,
-    0.06694678963061322,
-    0.05799194697768673,
-    0.05115252244738129,
-    0.04575749056067514,
-)
-
-
-def benford_audit(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-) -> DataFrame:
-    """E125: Benford's-law first-significant-digit audit per group —
-    the classic data-forensics screen (fabricated, unit-mixed or
-    truncated numeric feeds drift off the log10(1 + 1/d) curve long
-    before any schema check fires).  Wrong-looking sources get flagged
-    BEFORE their rows poison a training corpus.
-
-    First significant digit via string math — no float log in the
-    digit extraction: the value's abs is formatted, zeros/dots
-    stripped, first char taken (rows with no significant digit — 0 or
-    NULL — are dropped as contract rows).  Per group: the nine digit
-    counts as ONE conditional aggregate row, then chi2 = sum_d
-    (c_d - n*p_d)^2 / (n*p_d) written as NINE EXPLICIT TERMS folded in
-    fixed d = 1..9 order (a group-sum of floats would be shuffle-order
-    nondeterministic; the unrolled expression is one deterministic
-    sequence over exact int64 counts and the shared BENFORD_P
-    literals).  One map-side-combined exchange; output is one bounded
-    row per group, hash-exact.
-    """
-    first = F.substring(
-        F.regexp_replace(F.format_number(F.abs(F.col(value_col)).cast("double"), 10), "[0.,]", ""),
-        1,
-        1,
-    )
-    d = df.where(F.col(value_col).isNotNull()).select(
-        F.col(group_col).alias("grp"), first.alias("fd")
-    ).where(F.col("fd") != "")
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for k in range(1, 10):
-        aggs.append(
-            F.sum((F.col("fd") == str(k)).cast("long")).alias(f"c{k}")
-        )
-    g = d.groupBy("grp").agg(*aggs)
-    chi2 = F.lit(0.0)
-    for k in range(1, 10):
-        e = F.col("n").cast("double") * F.lit(BENFORD_P[k - 1])
-        diff = F.col(f"c{k}").cast("double") - e
-        chi2 = chi2 + diff * diff / e
-    return g.select(
-        F.col("grp").alias(group_col),
-        F.col("n").cast("long").alias("n_values"),
-        *[F.col(f"c{k}").cast("long").alias(f"c{k}") for k in range(1, 10)],
-        F.round(chi2, 6).alias("chi2"),
-    )
-
-
-def shapley_attribution(
-    users: DataFrame,
-    mask_col: str,
-    conv_col: str,
-    channel_names: Sequence[str],
-) -> DataFrame:
-    """E126: EXACT Shapley-value attribution over a bounded channel
-    universe — the game-theoretic answer to "which source/channel
-    actually drives conversions" (marketing attribution; the identical
-    machinery is data-source Shapley for training-corpus valuation,
-    Ghorbani & Zou 2019): last-touch over-credits closers, first-touch
-    over-credits openers, Shapley is the unique efficient symmetric
-    split.
-
-    ``users`` has one row per subject: ``mask_col`` the int bitmask of
-    channels the subject was exposed to (bit i = channel_names[i]) and
-    boolean/int ``conv_col``.  The coalition value v(S) is the
-    conversion rate among subjects exposed to EXACTLY S (empty masks
-    contribute v = 0 — documented, deterministic).  k = len(channels)
-    must be small (<= 8): the whole computation lives on the COMPLETE
-    2^k-row mask table, so it is corpus-independent after one subject
-    aggregate.
-
-    phi_i = sum over S without i of |S|!(k-|S|-1)!/k! * (v(S+i) - v(S));
-    the factorial weights are exact integer plan literals (scaled by
-    k!), each v one exact-count division, and the 2^(k-1)-term float
-    sum folds in ASC mask order via a cumulative window (the E118
-    ordered-fold device) — hash-exact in any engine.  Efficiency holds
-    by construction: sum phi_i = v(full) - v(empty).
-    """
-    k = len(channel_names)
-    if not (1 <= k <= 8):
-        raise ValueError("channel universe must have 1..8 members")
-    n_masks = 1 << k
-    fact = [1] * (k + 1)
-    for i in range(1, k + 1):
-        fact[i] = fact[i - 1] * i
-    spark = users.sparkSession
-    g = users.groupBy(F.col(mask_col).cast("long").alias("mask")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col(conv_col).cast("long")).alias("c"),
-    )
-    full = spark.range(n_masks).select(F.col("id").alias("mask"))
-    m = full.join(g, "mask", "left").select(
-        "mask",
-        F.when(
-            F.coalesce(F.col("n"), F.lit(0)) > 0,
-            F.col("c").cast("double") / F.col("n").cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("v"),
-    ).localCheckpoint(eager=True)  # 2^k rows, referenced per channel
-    chans = spark.createDataFrame(
-        [(i, name, 1 << i) for i, name in enumerate(channel_names)],
-        "ci long, channel string, bit long",
-    )
-    a = m.select(F.col("mask").alias("s"), F.col("v").alias("v_s"))
-    b = m.select(F.col("mask").alias("s_i"), F.col("v").alias("v_si"))
-    pairs = (
-        chans.join(a, F.expr("(s & bit) = 0"))
-        .join(b, F.expr("s_i = (s | bit)"))
-        .select(
-            "ci",
-            "channel",
-            "s",
-            (
-                F.expr(
-                    "CASE "
-                    + " ".join(
-                        f"WHEN bit_count(s) = {sz} THEN {fact[sz] * fact[k - sz - 1]}"
-                        for sz in range(k)
-                    )
-                    + " END"
-                ).cast("double")
-                * (F.col("v_si") - F.col("v_s"))
-            ).alias("term"),
-        )
-    )
-    w_asc = (
-        Window.partitionBy("ci")
-        .orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_desc = Window.partitionBy("ci").orderBy(F.col("s").desc())
-    folded = pairs.select(
-        "ci",
-        "channel",
-        F.sum("term").over(w_asc).alias("cum"),
-        F.row_number().over(w_desc).alias("rn"),
-    )
-    return folded.where(F.col("rn") == 1).select(
-        "channel",
-        F.round(F.col("cum") / F.lit(float(fact[k])), 6).alias("shapley"),
-    )

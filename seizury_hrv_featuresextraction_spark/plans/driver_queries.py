@@ -711,65 +711,6 @@ def robust_outliers_events(spark, sf_dir):
 
 
 @q(
-    "agreement_kappa_docs",
-    f"""
-    WITH w AS (SELECT doc_id, source, lang, {WORDS_DD} AS ws FROM documents),
-    e AS (SELECT doc_id, unnest(ws) AS word FROM w),
-    b AS (SELECT doc_id,
-                 ('0x' || substr(md5('f:' || word), 1, 15))::bigint % 1024 AS j
-          FROM e),
-    s AS (SELECT doc_id,
-                 sum(('0x' || substr(md5('w:' || j::varchar), 1, 8))::bigint
-                     / 4294967296.0 - 0.5) AS dot
-          FROM b GROUP BY doc_id),
-    f AS (SELECT w.source,
-                 (round(CASE WHEN len(w.ws) > 0
-                             THEN coalesce(s.dot, 0.0) / len(w.ws)
-                             ELSE 0.0 END, 6) > 0.0)::int AS p,
-                 (w.lang = 'en')::int AS y
-          FROM w LEFT JOIN s ON s.doc_id = w.doc_id),
-    g AS (SELECT source, count(*)::bigint AS n,
-                 sum(p * y)::bigint AS n11, sum(p * (1 - y))::bigint AS n10,
-                 sum((1 - p) * y)::bigint AS n01,
-                 sum((1 - p) * (1 - y))::bigint AS n00
-          FROM f GROUP BY source)
-    SELECT source, n, n11, n10, n01, n00,
-           round((n11 + n00)::double / n::double, 6) AS po,
-           round(((n11 + n10) * (n11 + n01)
-                  + (n01 + n00) * (n10 + n00))::double / (n * n)::double, 6) AS pe,
-           CASE WHEN n * n - ((n11 + n10) * (n11 + n01)
-                              + (n01 + n00) * (n10 + n00)) <> 0
-                THEN round((n * (n11 + n00)
-                            - ((n11 + n10) * (n11 + n01)
-                               + (n01 + n00) * (n10 + n00)))::double
-                           / (n * n - ((n11 + n10) * (n11 + n01)
-                                       + (n01 + n00) * (n10 + n00)))::double, 6)
-           END AS kappa
-    FROM g
-    """,
-)
-def agreement_kappa_docs(spark, sf_dir):
-    """E99: per-source Cohen's kappa between the E40 quality classifier
-    keep decision and the is-English reference — chance-corrected
-    agreement from exact int64 confusion counts, single final division.
-    Twin replays classifier + kappa end-to-end."""
-    from ..operators.curation import hashed_linear_classifier, md5_feature_weights
-    from ..operators.dedup import spread
-    from ..operators.evaluation import cohen_kappa
-
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source"))
-    scored = hashed_linear_classifier(
-        docs,
-        md5_feature_weights(1024),
-        bias=0.0,
-        threshold=0.0,
-        score_round=6,
-        extra_cols=("source", "lang"),
-    ).withColumn("y", (F.col("lang") == "en").cast("long"))
-    return cohen_kappa(scored, "keep", "y", ["source"])
-
-
-@q(
     "key_skew_events",
     """
     WITH kc AS (SELECT user_id, count(*)::bigint AS cnt FROM events GROUP BY user_id),
@@ -4429,538 +4370,6 @@ def linear_quality_docs(spark, sf_dir):
 
 
 @q(
-    "classifier_calibration_bins",
-    f"""
-    WITH w AS (SELECT doc_id, lang, {WORDS_DD} AS ws FROM documents),
-    e AS (SELECT doc_id, unnest(ws) AS word FROM w),
-    b AS (SELECT doc_id,
-                 ('0x' || substr(md5('f:' || word), 1, 15))::bigint % 1024 AS j
-          FROM e),
-    s AS (SELECT doc_id,
-                 sum(('0x' || substr(md5('w:' || j::varchar), 1, 8))::bigint
-                     / 4294967296.0 - 0.5) AS dot
-          FROM b GROUP BY doc_id),
-    f AS (SELECT w.doc_id, w.lang, len(w.ws)::bigint AS n_words,
-                 coalesce(s.dot, 0.0) AS dot
-          FROM w LEFT JOIN s ON s.doc_id = w.doc_id),
-    p AS (SELECT round(round(1.0 / (1.0 + exp(-(CASE WHEN n_words > 0
-                                                     THEN dot / n_words
-                                                     ELSE 0.0 END))), 6)
-                       * 1000000)::bigint AS p6,
-                 CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-          FROM f),
-    g AS (SELECT least(9, (p6 * 10) // 1000000) AS bin,
-                 count(*)::bigint AS n, sum(y)::bigint AS n_pos,
-                 sum(p6)::bigint AS sum_p6
-          FROM p GROUP BY 1),
-    t AS (SELECT sum(n) AS nn FROM g)
-    SELECT bin, n, n_pos,
-           round(sum_p6::double / (n * 1000000)::double, 6) AS mean_conf,
-           round(n_pos::double / n::double, 6) AS accuracy,
-           round(abs(n_pos::double / n::double
-                     - sum_p6::double / (n * 1000000)::double), 6) AS gap,
-           round(n::double * abs(n_pos::double / n::double
-                                 - sum_p6::double / (n * 1000000)::double)
-                 / nn::double, 6) AS ece_term
-    FROM g, t
-    """,
-)
-def classifier_calibration_bins(spark, sf_dir):
-    """E90: reliability bins + ECE terms for the E40 quality classifier
-    probed against the is-English label — probs quantized to exact int64
-    micro-units, integer binning, order-free integer sufficient stats,
-    one bounded n_bins exchange. Twin replays classifier + calibration
-    end-to-end."""
-    from ..operators.curation import hashed_linear_classifier, md5_feature_weights
-    from ..operators.dedup import spread
-    from ..operators.evaluation import calibration_bins
-
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang"))
-    scored = hashed_linear_classifier(
-        docs,
-        md5_feature_weights(1024),
-        bias=0.0,
-        threshold=0.0,
-        score_round=6,
-        extra_cols=("lang",),
-    ).withColumn("y", (F.col("lang") == "en").cast("long"))
-    return calibration_bins(scored, "prob", "y", n_bins=10)
-
-
-@q(
-    "isotonic_calibration_docs",
-    f"""
-    WITH w AS (SELECT doc_id, lang, {WORDS_DD} AS ws FROM documents),
-    e AS (SELECT doc_id, unnest(ws) AS word FROM w),
-    b AS (SELECT doc_id,
-                 ('0x' || substr(md5('f:' || word), 1, 15))::bigint % 1024 AS j
-          FROM e),
-    s AS (SELECT doc_id,
-                 sum(('0x' || substr(md5('w:' || j::varchar), 1, 8))::bigint
-                     / 4294967296.0 - 0.5) AS dot
-          FROM b GROUP BY doc_id),
-    f AS (SELECT w.doc_id, w.lang, len(w.ws)::bigint AS n_words,
-                 coalesce(s.dot, 0.0) AS dot
-          FROM w LEFT JOIN s ON s.doc_id = w.doc_id),
-    p AS (SELECT round(round(1.0 / (1.0 + exp(-(CASE WHEN n_words > 0
-                                                     THEN dot / n_words
-                                                     ELSE 0.0 END))), 6)
-                       * 1000000)::bigint // 10000 AS sc,
-                 CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-          FROM f),
-    q2 AS (SELECT sc, count(*)::bigint AS cnt, sum(y)::bigint AS pos
-           FROM p GROUP BY 1),
-    ps AS (SELECT sc, cnt, pos,
-                  sum(cnt) OVER (ORDER BY sc ROWS UNBOUNDED PRECEDING) AS ccnt,
-                  sum(pos) OVER (ORDER BY sc ROWS UNBOUNDED PRECEDING) AS cpos
-           FROM q2),
-    ps2 AS (SELECT sc, cnt, pos, ccnt, cpos,
-                   ccnt - cnt AS pcnt, cpos - pos AS ppos
-            FROM ps),
-    pr AS (SELECT k.sc AS sk, j.sc AS sj,
-                  (j.cpos - k.ppos)::double / (j.ccnt - k.pcnt)::double AS r
-           FROM ps2 k JOIN ps2 j ON k.sc <= j.sc),
-    inr AS (SELECT i.sc AS si, pr.sk, min(r) AS m
-            FROM pr JOIN ps2 i ON pr.sk <= i.sc AND pr.sj >= i.sc
-            GROUP BY 1, 2),
-    ft AS (SELECT si, max(m) AS fit FROM inr GROUP BY 1)
-    SELECT q2.sc AS score, q2.cnt AS n, q2.pos AS n_pos,
-           round(ft.fit, 6) AS iso_p
-    FROM q2 JOIN ft ON q2.sc = ft.si
-    """,
-)
-def isotonic_calibration_docs_q(spark, sf_dir):
-    """E117: exact isotonic (PAV) calibration of the E40 quality
-    classifier against the is-English label — the monotone calibrator
-    E90's reliability bins diagnose the need for.  Probs quantized to
-    centi-units (the E90 int64 device) collapse the corpus to a <=101-
-    row distinct-score table; the fit is the MINIMAX characterization
-    (max_k<=i min_j>=i pooled mean) — every pooled mean an exact-int64
-    prefix-difference division, the lattice two grouped aggregates
-    over bounded-table joins (corpus-independent O(S^3/6) rows) — so
-    the twin replays it hash-exact.  Only corpus-scale exchange: the
-    distinct-score aggregate."""
-    from ..operators.curation import hashed_linear_classifier, md5_feature_weights
-    from ..operators.dedup import spread
-    from ..operators.evaluation import isotonic_calibration
-
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang"))
-    scored = hashed_linear_classifier(
-        docs,
-        md5_feature_weights(1024),
-        bias=0.0,
-        threshold=0.0,
-        score_round=6,
-        extra_cols=("lang",),
-    ).select(
-        F.expr("cast(round(prob * 1000000) as bigint) div 10000").alias("sc"),
-        (F.col("lang") == "en").cast("long").alias("y"),
-    )
-    return isotonic_calibration(scored, "sc", "y")
-
-
-_SURVIVAL_SUBS_SQL = """
-    WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_type FROM events),
-    per AS (SELECT user_id, min(us) AS t0, max(us) AS tc,
-                   min(CASE WHEN event_type = 'error' THEN us END) AS te
-            FROM e GROUP BY 1),
-    subs AS (SELECT user_id % 2 AS variant,
-                    (coalesce(te, tc) - t0) // 3600000000 AS t,
-                    (te IS NOT NULL)::int AS obs
-             FROM per)"""
-
-
-def _survival_subjects(spark, sf_dir):
-    """Shared E118/E119 subject prep: per-user time-to-first-'error' in
-    hours from the first event, right-censored at the last event;
-    variant = user_id % 2.  One place so the two queries (and their
-    twins via _SURVIVAL_SUBS_SQL) cannot drift apart."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
-        "event_type",
-    )
-    per = ev.groupBy("user_id").agg(
-        F.min("us").alias("t0"),
-        F.max("us").alias("tc"),
-        F.min(F.when(F.col("event_type") == "error", F.col("us"))).alias("te"),
-    )
-    return per.select(
-        (F.col("user_id") % 2).alias("variant"),
-        F.expr("(coalesce(te, tc) - t0) div 3600000000").alias("dur_h"),
-        F.col("te").isNotNull().cast("long").alias("observed"),
-    )
-
-
-@q(
-    "km_survival_events",
-    _SURVIVAL_SUBS_SQL + """,
-    g AS (SELECT variant, t, count(*)::bigint AS n_at, sum(obs)::bigint AS d
-          FROM subs GROUP BY 1, 2),
-    r AS (SELECT variant, t, d,
-                 sum(n_at) OVER (PARTITION BY variant ORDER BY t DESC
-                                 ROWS UNBOUNDED PRECEDING) AS n_risk
-          FROM g),
-    s AS (SELECT variant, t, d, n_risk,
-                 CASE WHEN d >= n_risk THEN 0.0
-                      ELSE exp(sum(CASE WHEN d > 0 AND d < n_risk
-                                        THEN ln(1.0 - d::double / n_risk::double)
-                                        ELSE 0.0 END)
-                               OVER (PARTITION BY variant ORDER BY t
-                                     ROWS UNBOUNDED PRECEDING)) END AS s
-          FROM r)
-    SELECT variant, t, n_risk::bigint AS n_risk, d::bigint AS d_events,
-           round(s, 6) AS km
-    FROM s WHERE d > 0
-    """,
-)
-def km_survival_events_q(spark, sf_dir):
-    """E118: Kaplan-Meier survival per A/B variant — time-to-first-
-    'error' in hours from each user's first event, right-censored at
-    their last activity (the unbiased readout when many users are
-    still error-free at observation end: dropping censored users
-    biases survival down, counting them as events biases it up).
-    Subjects collapse to per-(variant, hour) exact counts; the at-risk
-    and survival folds are two frames over one bounded distinct-time
-    sort; the product is exp(ordered-window-sum of ln terms) — the
-    BM25/SampEn ln device with a DETERMINISTIC fold order, so the twin
-    replays it; the everyone-dies terminal row branches to exact 0.0
-    (ln(0) is an error in DuckDB)."""
-    from ..operators.evaluation import kaplan_meier
-
-    return kaplan_meier(_survival_subjects(spark, sf_dir), "variant", "dur_h", "observed")
-
-
-@q(
-    "logrank_test_events",
-    _SURVIVAL_SUBS_SQL + """,
-    g AS (SELECT t, count(*)::bigint AS na, sum(obs)::bigint AS d,
-                 sum(CASE WHEN variant = 0 THEN 1 ELSE 0 END)::bigint AS na0,
-                 sum(CASE WHEN variant = 0 THEN obs ELSE 0 END)::bigint AS d0
-          FROM subs GROUP BY 1),
-    r AS (SELECT t, d, d0,
-                 sum(na) OVER (ORDER BY t DESC ROWS UNBOUNDED PRECEDING) AS n,
-                 sum(na0) OVER (ORDER BY t DESC ROWS UNBOUNDED PRECEDING) AS n0
-          FROM g),
-    r2 AS (SELECT * FROM r WHERE d > 0),
-    cum AS (SELECT t,
-                   sum(d0) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS o_a,
-                   sum(n0::double * d::double / n::double)
-                     OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS e_a,
-                   sum(CASE WHEN n > 1
-                            THEN (n0::double * (n - n0)::double * d::double
-                                  * (n - d)::double)
-                                 / (n::double * n::double * (n - 1)::double)
-                            ELSE 0.0 END)
-                     OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS v
-            FROM r2),
-    lastrow AS (SELECT * FROM cum ORDER BY t DESC LIMIT 1)
-    SELECT o_a::bigint AS o_a, round(e_a, 6) AS e_a, round(v, 6) AS var_lr,
-           round(CASE WHEN v > 0
-                      THEN (o_a::double - e_a) * (o_a::double - e_a) / v
-                      ELSE 0.0 END, 6) AS chi2
-    FROM lastrow
-    """,
-)
-def logrank_test_events_q(spark, sf_dir):
-    """E119: two-sample log-rank (Mantel-Cox) test between the E118 A/B
-    variants — the significance readout for the survival curves (are
-    the two arms' time-to-first-error distributions different, with
-    censoring handled?).  Per-time counts are one conditional
-    aggregate on the duration; at-risk counts are desc-ordered
-    cumulative windows; the float E/V accumulations fold in ASC time
-    order over the bounded distinct-time table so both engines execute
-    the identical sequence, and the single summary row is read off the
-    last event time.  n = 1 times contribute zero variance by branch,
-    not division."""
-    from ..operators.evaluation import logrank_test
-
-    return logrank_test(_survival_subjects(spark, sf_dir), "variant", "dur_h", "observed", 0)
-
-
-@q(
-    "cuped_ab_events",
-    """
-    WITH per AS (SELECT user_id,
-                        sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                                 THEN CAST(round(value) AS bigint)
-                                 ELSE 0 END)::bigint AS x,
-                        sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-                                 THEN CAST(round(value) AS bigint)
-                                 ELSE 0 END)::bigint AS y
-                 FROM events GROUP BY 1),
-    subs AS (SELECT user_id % 2 AS variant, x, y FROM per),
-    pooled AS (SELECT count(*)::bigint AS n, sum(x)::bigint AS sx,
-                      sum(y)::bigint AS sy, sum(x * x)::bigint AS sxx,
-                      sum(y * y)::bigint AS syy, sum(x * y)::bigint AS sxy
-               FROM subs),
-    arms AS (SELECT variant, count(*)::bigint AS n_v,
-                    sum(x)::bigint AS sx_v, sum(y)::bigint AS sy_v
-             FROM subs GROUP BY 1),
-    jj AS (SELECT * FROM arms, pooled),
-    c AS (SELECT *,
-                 n * sxy - sx * sy AS cov_num,
-                 n * sxx - sx * sx AS varx_num,
-                 n * syy - sy * sy AS vary_num
-          FROM jj),
-    t AS (SELECT *,
-                 CASE WHEN varx_num > 0
-                      THEN cov_num::double / varx_num::double
-                      ELSE 0.0 END AS theta,
-                 CASE WHEN varx_num > 0 AND vary_num > 0
-                      THEN (cov_num::double * cov_num::double)
-                           / (varx_num::double * vary_num::double)
-                      ELSE 0.0 END AS rho2
-          FROM c)
-    SELECT variant, n_v AS n_subjects,
-           round(sy_v::double / n_v::double, 6) AS mean_y,
-           round(sy_v::double / n_v::double
-                 - theta * (sx_v::double / n_v::double
-                            - sx::double / n::double), 6) AS mean_y_cuped,
-           round(theta, 6) AS theta,
-           round(rho2, 6) AS var_reduction
-    FROM t
-    """,
-)
-def cuped_ab_events_q(spark, sf_dir):
-    """E120: CUPED variance-reduced A/B readout (Deng et al. 2013) —
-    post-period metric (value sum, Jan 16+) adjusted by the pre-period
-    covariate (Jan 1-15 value sum) with theta estimated pooled across
-    arms; per-value int64 quantization makes every sufficient
-    statistic an exact order-free integer sum, so theta, rho^2 and the
-    adjusted means are fixed float sequences over exact inputs and the
-    twin is hash-exact.  One subject-level aggregate per arm + a
-    broadcast 1-row pooled stats frame."""
-    from ..operators.evaluation import cuped_adjust
-
-    split = "TIMESTAMP '2024-01-16 00:00:00'"
-    per = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.expr(f"ts < {split}"),
-                    F.expr("cast(round(value) as bigint)"),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("x"),
-            F.sum(
-                F.when(
-                    F.expr(f"ts >= {split}"),
-                    F.expr("cast(round(value) as bigint)"),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("y"),
-        )
-    )
-    subs = per.select((F.col("user_id") % 2).alias("variant"), "x", "y")
-    return cuped_adjust(subs, "variant", "x", "y")
-
-
-@q(
-    "bootstrap_ci_events",
-    """
-    WITH per AS (SELECT user_id,
-                        sum(CAST(round(value) AS bigint))::bigint AS y
-                 FROM events GROUP BY 1),
-    subs AS (SELECT user_id % 2 AS variant, user_id, y FROM per),
-    amp AS (SELECT variant, user_id, y,
-                   unnest(generate_series(0, 63)) AS b
-            FROM subs),
-    uw AS (SELECT variant, b, y,
-                  ('0x' || substr(md5('bs:' || user_id::varchar || ':'
-                                       || b::varchar), 1, 8))::bigint
-                  / 4294967296.0 AS u
-           FROM amp),
-    ww AS (SELECT variant, b, y,
-                  ((u >= 0.36787944117144233)::int
-                   + (u >= 0.7357588823428847)::int
-                   + (u >= 0.9196986029286058)::int
-                   + (u >= 0.9810118431238463)::int
-                   + (u >= 0.9963401531726563)::int
-                   + (u >= 0.9994058151824183)::int
-                   + (u >= 0.999916758850712)::int
-                   + (u >= 0.9999897508033253)::int
-                   + (u >= 0.999998874797402)::int)::bigint AS w
-           FROM uw),
-    m AS (SELECT variant, b, sum(w * y)::bigint AS swy, sum(w)::bigint AS sw
-          FROM ww GROUP BY 1, 2),
-    mb AS (SELECT variant, b, swy::double / sw::double AS mean_b
-           FROM m WHERE sw > 0),
-    rk AS (SELECT variant, b, mean_b,
-                  row_number() OVER (PARTITION BY variant
-                                     ORDER BY mean_b, b) AS rn,
-                  count(*) OVER (PARTITION BY variant) AS cnt
-           FROM mb),
-    ci AS (SELECT variant,
-                  max(CASE WHEN rn = greatest(1, (25 * cnt + 999) // 1000)
-                           THEN mean_b END) AS ci_lo,
-                  max(CASE WHEN rn = (975 * cnt + 999) // 1000
-                           THEN mean_b END) AS ci_hi,
-                  count(*)::bigint AS n_boot
-           FROM rk GROUP BY 1),
-    pt AS (SELECT variant, count(*)::bigint AS n_subjects,
-                  sum(y)::bigint AS sy
-           FROM subs GROUP BY 1)
-    SELECT pt.variant, n_subjects,
-           round(sy::double / n_subjects::double, 6) AS mean_y,
-           round(ci_lo, 6) AS ci_lo, round(ci_hi, 6) AS ci_hi, n_boot
-    FROM pt JOIN ci ON pt.variant = ci.variant
-    """,
-)
-def bootstrap_ci_events_q(spark, sf_dir):
-    """E121: Poisson-bootstrap CI for the per-variant mean user value —
-    the scale-native bootstrap (Chamandy et al., Google 2012):
-    classical resampling needs a shuffle per resample; hash-derived
-    Poisson(1) multiplicities compute all 64 resamples in ONE
-    map-local pass, reproducible under retry/resume (never rand()).
-    Weights are an inverse-CDF lookup against shared plan literals,
-    resample sums are exact integers, and the nearest-rank 2.5/97.5
-    percentiles come from a row_number window over the bounded
-    (variant, 64) table with b as the deterministic tie-break — the
-    twin replays everything hash-exact."""
-    from ..operators.evaluation import bootstrap_mean_ci
-
-    per = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.sum(F.expr("cast(round(value) as bigint)")).alias("y"))
-    )
-    subs = per.select((F.col("user_id") % 2).alias("variant"), "user_id", "y")
-    return bootstrap_mean_ci(subs, "variant", "user_id", "y", n_boot=64)
-
-
-@q(
-    "shapley_attribution_events",
-    """
-    WITH per AS (SELECT user_id,
-                        (max((event_type = 'click')::int)
-                         + 2 * max((event_type = 'error')::int)
-                         + 4 * max((event_type = 'signup')::int)
-                         + 8 * max((event_type = 'view')::int))::bigint AS mask,
-                        max((event_type = 'purchase')::int)::bigint AS conv
-                 FROM events GROUP BY 1),
-    g AS (SELECT mask, count(*)::bigint AS n, sum(conv)::bigint AS c
-          FROM per GROUP BY 1),
-    f AS (SELECT unnest(generate_series(0, 15))::bigint AS mask),
-    m AS (SELECT f.mask,
-                 CASE WHEN coalesce(g.n, 0) > 0
-                      THEN g.c::double / g.n::double ELSE 0.0 END AS v
-          FROM f LEFT JOIN g ON f.mask = g.mask),
-    ch AS (SELECT * FROM (VALUES (0, 'click', 1), (1, 'error', 2),
-                                 (2, 'signup', 4), (3, 'view', 8))
-                       AS t(ci, channel, bit)),
-    p AS (SELECT ch.ci, ch.channel, a.mask AS s,
-                 (CASE bit_count(a.mask) WHEN 0 THEN 6 WHEN 1 THEN 2
-                                         WHEN 2 THEN 2 WHEN 3 THEN 6
-                  END)::double * (b.v - a.v) AS term
-          FROM ch JOIN m a ON (a.mask & ch.bit) = 0
-                  JOIN m b ON b.mask = (a.mask | ch.bit)),
-    f2 AS (SELECT ci, channel,
-                  sum(term) OVER (PARTITION BY ci ORDER BY s
-                                  ROWS UNBOUNDED PRECEDING) AS cum,
-                  row_number() OVER (PARTITION BY ci ORDER BY s DESC) AS rn
-           FROM p)
-    SELECT channel, round(cum / 24.0, 6) AS shapley FROM f2 WHERE rn = 1
-    """,
-)
-def shapley_attribution_events_q(spark, sf_dir):
-    """E126: exact Shapley attribution of purchase conversion across
-    the four exposure channels (click/error/signup/view) — the
-    game-theoretic split (last-touch over-credits closers; Shapley is
-    the unique efficient symmetric answer; the identical machinery is
-    data-source Shapley for corpus valuation, Ghorbani & Zou 2019).
-    One subject aggregate collapses the corpus to the COMPLETE 16-row
-    mask table; coalition values are exact-count divisions, the
-    factorial weights exact integer literals, and each channel's
-    8-term float sum folds in ASC mask order (the E118 device) — the
-    twin replays the lattice hash-exact."""
-    from ..operators.stats import shapley_attribution
-
-    per = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            (
-                F.max((F.col("event_type") == "click").cast("long"))
-                + 2 * F.max((F.col("event_type") == "error").cast("long"))
-                + 4 * F.max((F.col("event_type") == "signup").cast("long"))
-                + 8 * F.max((F.col("event_type") == "view").cast("long"))
-            ).alias("mask"),
-            F.max((F.col("event_type") == "purchase").cast("long")).alias("conv"),
-        )
-    )
-    return shapley_attribution(per, "mask", "conv", ["click", "error", "signup", "view"])
-
-
-@q(
-    "benford_audit_events",
-    """
-    WITH d AS (SELECT event_type AS grp,
-                      substr(regexp_replace(printf('%.10f', abs(value)),
-                                            '[0.,]', '', 'g'), 1, 1) AS fd
-               FROM events WHERE value IS NOT NULL),
-    d2 AS (SELECT grp, fd FROM d WHERE fd <> ''),
-    g AS (SELECT grp, count(*)::bigint AS n,
-                 sum((fd = '1')::int)::bigint AS c1,
-                 sum((fd = '2')::int)::bigint AS c2,
-                 sum((fd = '3')::int)::bigint AS c3,
-                 sum((fd = '4')::int)::bigint AS c4,
-                 sum((fd = '5')::int)::bigint AS c5,
-                 sum((fd = '6')::int)::bigint AS c6,
-                 sum((fd = '7')::int)::bigint AS c7,
-                 sum((fd = '8')::int)::bigint AS c8,
-                 sum((fd = '9')::int)::bigint AS c9
-          FROM d2 GROUP BY 1)
-    SELECT grp AS event_type, n AS n_values,
-           c1, c2, c3, c4, c5, c6, c7, c8, c9,
-           round(0.0
-             + (c1::double - n::double * 0.3010299956639812)
-               * (c1::double - n::double * 0.3010299956639812)
-               / (n::double * 0.3010299956639812)
-             + (c2::double - n::double * 0.17609125905568124)
-               * (c2::double - n::double * 0.17609125905568124)
-               / (n::double * 0.17609125905568124)
-             + (c3::double - n::double * 0.12493873660829993)
-               * (c3::double - n::double * 0.12493873660829993)
-               / (n::double * 0.12493873660829993)
-             + (c4::double - n::double * 0.09691001300805642)
-               * (c4::double - n::double * 0.09691001300805642)
-               / (n::double * 0.09691001300805642)
-             + (c5::double - n::double * 0.07918124604762482)
-               * (c5::double - n::double * 0.07918124604762482)
-               / (n::double * 0.07918124604762482)
-             + (c6::double - n::double * 0.06694678963061322)
-               * (c6::double - n::double * 0.06694678963061322)
-               / (n::double * 0.06694678963061322)
-             + (c7::double - n::double * 0.05799194697768673)
-               * (c7::double - n::double * 0.05799194697768673)
-               / (n::double * 0.05799194697768673)
-             + (c8::double - n::double * 0.05115252244738129)
-               * (c8::double - n::double * 0.05115252244738129)
-               / (n::double * 0.05115252244738129)
-             + (c9::double - n::double * 0.04575749056067514)
-               * (c9::double - n::double * 0.04575749056067514)
-               / (n::double * 0.04575749056067514), 6) AS chi2
-    FROM g
-    """,
-)
-def benford_audit_events_q(spark, sf_dir):
-    """E125: Benford first-significant-digit audit of the event value
-    per event type — the classic data-forensics screen (fabricated,
-    unit-mixed or truncated numeric feeds drift off log10(1 + 1/d)
-    long before a schema check fires).  Digit extraction is string
-    math (no float log), the nine counts are one conditional
-    aggregate, and chi2 unrolls as nine explicit terms folded in fixed
-    d = 1..9 order over shared plan literals — a group-sum of floats
-    would be shuffle-order nondeterministic, the unrolled expression
-    is one deterministic sequence, so the twin is hash-exact."""
-    from ..operators.stats import benford_audit
-
-    ev = load_table(spark, sf_dir, "events")
-    return benford_audit(ev, "event_type", "value")
-
-
-@q(
     "k_anonymity_customers",
     """
     WITH q AS (SELECT c_nationkey AS nation,
@@ -4995,105 +4404,6 @@ def k_anonymity_customers_q(spark, sf_dir):
         "c_mktsegment",
     )
     return k_anonymity_audit(cust, ["nation", "bal_band"], "c_mktsegment", k=5, l_div=2)
-
-
-@q(
-    "theil_sen_trend_events",
-    """
-    WITH d AS (SELECT user_id,
-                      epoch_us(ts) // 86400000000 AS day,
-                      CAST(round(value) AS bigint) AS v
-               FROM events
-               WHERE ts IS NOT NULL AND value IS NOT NULL),
-    per AS (SELECT user_id, day, sum(v)::bigint AS y
-            FROM d GROUP BY 1, 2),
-    o AS (SELECT user_id AS k, day AS t, max(y)::bigint AS y
-          FROM per GROUP BY 1, 2),
-    p AS (SELECT a.k, a.t AS t1, b.t AS t2,
-                 (b.y - a.y)::double / (b.t - a.t)::double AS slope
-          FROM o a JOIN o b ON a.k = b.k AND a.t < b.t),
-    rk AS (SELECT k, slope, t1, t2,
-                  row_number() OVER (PARTITION BY k
-                                     ORDER BY slope, t1, t2) AS rn,
-                  count(*) OVER (PARTITION BY k) AS n_pairs
-           FROM p),
-    dd AS (SELECT k, count(*)::bigint AS n_t FROM o GROUP BY 1),
-    med AS (SELECT k, n_pairs::bigint AS n_pairs, round(slope, 6) AS slope_ts
-            FROM rk WHERE rn = (n_pairs + 1) // 2)
-    SELECT dd.k AS user_id, dd.n_t, med.n_pairs, med.slope_ts
-    FROM dd JOIN med ON dd.k = med.k
-    """,
-)
-def theil_sen_trend_events_q(spark, sf_dir):
-    """E123: per-user Theil-Sen robust trend of daily value totals —
-    the median of all pairwise slopes (Sen 1968; breakdown ~29% vs
-    OLS's 0).  Time quantized to days, metric to int64 units, so each
-    pairwise slope is one exact-integer-difference division and the
-    LOWER median is picked by row_number with (t1, t2) as the
-    deterministic tie-break — hash-exact twin.  Pair count per key is
-    bounded by the DAY count the quantization implies, never the
-    event count."""
-    from ..operators.stats import theil_sen_slope
-
-    per = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("ts").isNotNull() & F.col("value").isNotNull())
-        .groupBy(
-            "user_id",
-            F.expr("unix_micros(cast(ts as timestamp)) div 86400000000").alias("day"),
-        )
-        .agg(F.sum(F.expr("cast(round(value) as bigint)")).alias("y"))
-    )
-    return theil_sen_slope(per, "user_id", "day", "y")
-
-
-@q(
-    "winsorized_mean_events",
-    """
-    WITH per AS (SELECT user_id,
-                        sum(CAST(round(value) AS bigint))::bigint AS y
-                 FROM events GROUP BY 1),
-    subs AS (SELECT user_id % 2 AS variant, y FROM per),
-    g AS (SELECT variant, y, count(*)::bigint AS cnt FROM subs GROUP BY 1, 2),
-    r AS (SELECT variant, y, cnt,
-                 sum(cnt) OVER (PARTITION BY variant ORDER BY y
-                                ROWS UNBOUNDED PRECEDING) AS cum,
-                 sum(cnt) OVER (PARTITION BY variant) AS n,
-                 sum(cnt * y) OVER (PARTITION BY variant) AS sy
-          FROM g),
-    cuts AS (SELECT variant,
-                    min(CASE WHEN cum >= (1 * n + 99) // 100 THEN y END) AS y_lo,
-                    min(CASE WHEN cum >= (99 * n + 99) // 100 THEN y END) AS y_hi,
-                    max(n) AS n, max(sy) AS sy
-             FROM r GROUP BY 1),
-    j AS (SELECT g.variant, g.y, g.cnt, c.y_lo, c.y_hi, c.n, c.sy
-          FROM g JOIN cuts c ON g.variant = c.variant)
-    SELECT variant, max(n)::bigint AS n_subjects,
-           round(max(sy)::double / max(n)::double, 6) AS mean_raw,
-           round(sum(cnt * greatest(y_lo, least(y_hi, y)))::double
-                 / max(n)::double, 6) AS mean_winsorized,
-           max(y_lo)::bigint AS y_lo, max(y_hi)::bigint AS y_hi
-    FROM j GROUP BY variant
-    """,
-)
-def winsorized_mean_events_q(spark, sf_dir):
-    """E122: per-variant winsorized mean user value — the robust A/B
-    metric treatment (a whale user moves a raw mean more than any
-    plausible treatment effect; clipping to the exact nearest-rank
-    [p1, p99] keeps every subject).  No approximate percentiles: the
-    corpus collapses to per-(variant, distinct value) counts, cut
-    points come from cumulative counts in pure integer arithmetic, and
-    the winsorized sum folds cnt * clip(y) over the bounded
-    distinct-value table — hash-exact twin."""
-    from ..operators.evaluation import winsorized_mean
-
-    per = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.sum(F.expr("cast(round(value) as bigint)")).alias("y"))
-    )
-    subs = per.select((F.col("user_id") % 2).alias("variant"), "y")
-    return winsorized_mean(subs, "variant", "y")
 
 
 @q(

@@ -372,7 +372,7 @@ def test_query_surface_guard():
     assert sum(1 for p in prios if p == 0) <= 50
     # surface ratchet: the exported query set only shrinks toward the
     # paper's surface; each cut lowers this bound
-    assert len(QUERIES) <= 129
+    assert len(QUERIES) <= 118
 
 
 def test_script_imports_resolve():
@@ -402,6 +402,33 @@ def test_script_imports_resolve():
             broken += [f"{where}: no name {a.name}" for a in node.names if not hasattr(mod, a.name)]
     assert checked > 0
     assert not broken, "\n".join(broken)
+
+
+def test_no_unused_imports():
+    """Every name a package module binds with a top-level ``import`` or
+    ``from ... import`` is used in that module, so a cut cannot leave an
+    import behind. ``__init__.py`` files re-export and are skipped."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "seizury_hrv_featuresextraction_spark"
+    checked, unused = 0, []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.Import):
+                bound = [a.asname or a.name.split(".")[0] for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                bound = [a.asname or a.name for a in node.names]
+            else:
+                continue
+            checked += len(bound)
+            unused += [f"{path.relative_to(pkg.parent)}:{node.lineno} {b}" for b in bound if b not in used]
+    assert checked > 0
+    assert not unused, "\n".join(unused)
 
 
 def test_substring_dedup_vs_bruteforce(spark):

@@ -300,38 +300,6 @@ def test_ks_statistic_exact_vs_scipy_formula(spark):
     assert ks_statistic(lo, hi, "v", ["k"]).collect()[0]["ks"] == 1.0
 
 
-def test_calibration_bins_perfect_and_miscalibrated(spark):
-    """E90: a perfectly calibrated feed yields gap ~= Laplace-free exact
-    0 per bin; a systematically overconfident feed shows the gap; ECE
-    terms replay in pure Python and sum to n-weighted mean gap."""
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import (
-        calibration_bins,
-    )
-
-    # perfectly calibrated: in the 0.25-bin, exactly 25% positives
-    rows = []
-    for i in range(200):
-        p = 0.25 if i < 100 else 0.75
-        y = 1 if (i % 4 == 0 if i < 100 else i % 4 != 0) else 0
-        rows.append((p, y))
-    df = spark.createDataFrame(rows, "prob double, y long")
-    out = {r["bin"]: r for r in calibration_bins(df, "prob", "y", 10).collect()}
-    assert set(out) == {2, 7}
-    assert out[2]["mean_conf"] == 0.25 and out[2]["accuracy"] == 0.25
-    assert out[2]["gap"] == 0.0 and out[7]["gap"] == 0.0
-
-    # overconfident: prob 0.9 but only 50% positives
-    bad = spark.createDataFrame([(0.9, i % 2) for i in range(100)], "prob double, y long")
-    r = calibration_bins(bad, "prob", "y", 10).collect()[0]
-    assert r["bin"] == 9 and r["n"] == 100 and r["n_pos"] == 50
-    assert r["mean_conf"] == 0.9 and r["accuracy"] == 0.5
-    assert r["gap"] == 0.4 and r["ece_term"] == 0.4  # single bin: n/N = 1
-
-    # prob exactly 1.0 clamps into the last bin
-    edge = spark.createDataFrame([(1.0, 1)], "prob double, y long")
-    assert calibration_bins(edge, "prob", "y", 10).collect()[0]["bin"] == 9
-
-
 def test_auc_by_group_matches_sklearn_formula_with_ties(spark):
     """E91: AUC matches a pure-Python pairwise count (ties = 1/2 credit)
     on a tied sample; perfect ranking gives 1.0, inverted 0.0, constant
@@ -769,128 +737,3 @@ def test_null_handling_review_fixes(spark):
     out = grouped_mad_outliers(df, "value", ["g"], "id", z_thresh=3.5).collect()
     assert [r["id"] for r in out] == [6]  # the 1000.0 spike, nothing else
     assert out[0]["med"] == 5.0
-
-
-# --- E123: Theil-Sen robust trend -----------------------------------------
-
-def test_theil_sen_matches_replay_and_resists_outlier(spark):
-    from seizury_hrv_featuresextraction_spark.operators.stats import theil_sen_slope
-
-    # key 1: clean slope 3 line with ONE corrupted day (OLS would bend,
-    # the pairwise-slope median must not); key 2: single day dropped;
-    # duplicate (k, t) collapses by max; NULL rows dropped
-    rows = (
-        [(1, t, 3 * t + 10) for t in range(8)]
-        + [(1, 4, 1000), (2, 5, 7), (1, None, 5), (1, 3, None)]
-    )
-    df = spark.createDataFrame(rows, "k long, t long, y long")
-    got = {r.k: (r.n_t, r.n_pairs, r.slope_ts) for r in
-           theil_sen_slope(df, "k", "t", "y").collect()}
-    assert set(got) == {1}  # key 2 has one point -> no slope
-    n_t, n_pairs, slope = got[1]
-    assert n_t == 8 and n_pairs == 28
-    # replay: dup day 4 keeps max(22, 1000) = 1000, lower median of the
-    # 28 pairwise slopes
-    pts = {t: 3 * t + 10 for t in range(8)}
-    pts[4] = 1000
-    slopes = sorted(
-        (pts[t2] - pts[t1]) / (t2 - t1)
-        for t1 in pts for t2 in pts if t1 < t2
-    )
-    assert slope == round(slopes[(28 + 1) // 2 - 1], 6)
-    # robustness: the corrupted day leaves the median slope at the
-    # clean value 3.0 (7 of 8 points are colinear)
-    assert slope == 3.0
-
-
-# --- E125: Benford first-digit audit --------------------------------------
-
-def test_benford_audit_digits_and_chi2(spark):
-    from seizury_hrv_featuresextraction_spark.operators.stats import (
-        BENFORD_P,
-        benford_audit,
-    )
-    import math
-
-    # the literal table IS log10(1 + 1/d)
-    for d in range(1, 10):
-        assert abs(BENFORD_P[d - 1] - math.log10(1 + 1 / d)) < 1e-15
-
-    # digit extraction: sub-1 values, exact powers, zeros/NULLs dropped
-    rows = [
-        ("a", 123.0), ("a", 0.052), ("a", 20.1), ("a", 0.9), ("a", 9000.0),
-        ("a", 0.0), ("a", None),
-    ]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r = benford_audit(df, "g", "v").collect()[0]
-    assert r.n_values == 5
-    assert (r.c1, r.c2, r.c5, r.c9) == (1, 1, 1, 2)
-    # chi2 replay in the same fixed fold order
-    cs = [r.c1, r.c2, r.c3, r.c4, r.c5, r.c6, r.c7, r.c8, r.c9]
-    chi2 = 0.0
-    for k in range(9):
-        e = r.n_values * BENFORD_P[k]
-        chi2 += (cs[k] - e) * (cs[k] - e) / e
-    assert r.chi2 == round(chi2, 6)
-
-
-def test_benford_separates_conforming_from_uniform(spark):
-    from seizury_hrv_featuresextraction_spark.operators.stats import benford_audit
-
-    import math
-
-    # group "ok": approximately Benford via a geometric ramp 10^(i/200);
-    # group "bad": uniform first digits 1..9 repeated
-    ok = [("ok", float(10 ** (i / 200))) for i in range(600)]
-    bad = [("bad", float(d)) for d in range(1, 10)] * 67
-    df = spark.createDataFrame(ok + bad, "g string, v double")
-    got = {r.g: r.chi2 for r in benford_audit(df, "g", "v").collect()}
-    assert got["bad"] > 10 * max(got["ok"], 1.0)
-
-
-# --- E126: exact Shapley attribution --------------------------------------
-
-def test_shapley_matches_brute_force_and_is_efficient(spark):
-    from seizury_hrv_featuresextraction_spark.operators.stats import (
-        shapley_attribution,
-    )
-    import itertools
-    import math
-
-    # 3 channels; conversion only when A and B are both present
-    rows = []
-    for mask in range(8):
-        n = 10 + mask
-        conv = n // 2 if (mask & 1 and mask & 2) else 0
-        rows += [(mask, 1)] * conv + [(mask, 0)] * (n - conv)
-    df = spark.createDataFrame(rows, "mask long, conv long")
-    got = {r.channel: r.shapley for r in
-           shapley_attribution(df, "mask", "conv", ["A", "B", "C"]).collect()}
-
-    by = {}
-    for mask, c in rows:
-        n0, c0 = by.get(mask, (0, 0))
-        by[mask] = (n0 + 1, c0 + c)
-    v = {m: (by[m][1] / by[m][0] if by.get(m, (0, 0))[0] else 0.0) for m in range(8)}
-    k = 3
-    want = {}
-    for i, name in enumerate(["A", "B", "C"]):
-        phi = 0.0
-        for s in range(8):
-            if s & (1 << i):
-                continue
-            w = math.factorial(bin(s).count("1")) * math.factorial(k - bin(s).count("1") - 1)
-            phi += w * (v[s | (1 << i)] - v[s])
-        want[name] = phi / math.factorial(k)
-    for name in want:
-        assert abs(got[name] - want[name]) < 1e-6
-    # efficiency: shares sum to v(full) - v(empty); symmetry: A == B by
-    # construction; null player: C contributes ~0
-    assert abs(sum(got.values()) - (v[7] - v[0])) < 1e-5
-    assert abs(got["A"] - got["B"]) < 1e-9
-    assert abs(got["C"]) < 0.02
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        shapley_attribution(df, "mask", "conv", ["a"] * 9)

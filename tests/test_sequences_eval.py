@@ -89,387 +89,3 @@ def test_latest_alarm(spark):
     events = spark.createDataFrame(pd.DataFrame({"doc_id": ["d1"], "onset": [60.0]}))
     out = latest_alarm_before_onset(alarms, events).toPandas()
     assert out.iloc[0]["latest_alarm"] == 50.0 and out.iloc[0]["warning_seconds"] == 10.0
-
-
-def test_cohen_kappa_known_values_and_degenerate(spark):
-    """E99: kappa replays the closed form on a hand confusion matrix;
-    perfect agreement -> 1, independence-level agreement -> ~0, both
-    raters constant -> NULL."""
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import cohen_kappa
-
-    # hand matrix: n11=20, n10=5, n01=10, n00=15 -> po=0.7
-    rows = (
-        [(1, 1)] * 20 + [(1, 0)] * 5 + [(0, 1)] * 10 + [(0, 0)] * 15
-    )
-    df = spark.createDataFrame([(p, y) for p, y in rows], "p long, y long")
-    r = cohen_kappa(df, "p", "y").collect()[0]
-    n, m = 50, (25 * 30 + 25 * 20)
-    assert (r["n11"], r["n10"], r["n01"], r["n00"]) == (20, 5, 10, 15)
-    assert r["po"] == 0.7
-    assert r["pe"] == round(m / (n * n), 6)
-    assert r["kappa"] == round((n * 35 - m) / (n * n - m), 6)
-
-    # perfect agreement
-    df = spark.createDataFrame([(1, 1)] * 3 + [(0, 0)] * 3, "p long, y long")
-    assert cohen_kappa(df, "p", "y").collect()[0]["kappa"] == 1.0
-
-    # both raters constant -> denominator 0 -> NULL
-    df = spark.createDataFrame([(1, 1)] * 4, "p long, y long")
-    assert cohen_kappa(df, "p", "y").collect()[0]["kappa"] is None
-
-    # grouped: each group independent
-    df = spark.createDataFrame(
-        [("a", 1, 1), ("a", 0, 0), ("b", 1, 0), ("b", 0, 1)], "g string, p long, y long"
-    )
-    got = {r["g"]: r["kappa"] for r in cohen_kappa(df, "p", "y", ["g"]).collect()}
-    assert got["a"] == 1.0 and got["b"] == -1.0
-
-
-# --- E117: exact isotonic calibration (minimax == PAV) --------------------
-
-def _pav(points):
-    """points: list of (score, cnt, pos) sorted by score -> PAV fit per
-    distinct score, the textbook pool-adjacent-violators sweep."""
-    blocks = [[s, cnt, pos] for s, cnt, pos in points]  # [last_s, w, wsum]
-    out = []
-    for b in blocks:
-        out.append(b[:])
-        while len(out) >= 2 and out[-2][2] * out[-1][1] >= out[-1][2] * out[-2][1]:
-            s, w, ws = out.pop()
-            out[-1][1] += w
-            out[-1][2] += ws
-            out[-1][0] = s
-    fits = {}
-    lo = None
-    for last_s, w, ws in out:
-        for s, cnt, pos in points:
-            if (lo is None or s > lo) and s <= last_s:
-                fits[s] = ws / w
-        lo = last_s
-    return fits
-
-
-def test_isotonic_matches_pav_and_is_monotone(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import (
-        isotonic_calibration,
-    )
-
-    # scores with a violation (dip at s=2) and ties to pool
-    rows = []
-    data = [(0, 4, 0), (1, 3, 2), (2, 5, 1), (3, 2, 2), (4, 6, 5)]
-    for s, cnt, pos in data:
-        rows += [(s, 1)] * pos + [(s, 0)] * (cnt - pos)
-    df = spark.createDataFrame(rows, "sc long, y long")
-    got = {r.score: (r.n, r.n_pos, r.iso_p) for r in
-           isotonic_calibration(df, "sc", "y").collect()}
-    want = _pav(data)
-    assert set(got) == set(want)
-    for s, cnt, pos in data:
-        assert got[s][0] == cnt and got[s][1] == pos
-        assert abs(got[s][2] - want[s]) < 1e-6, (s, got[s][2], want[s])
-    # monotone non-decreasing
-    fits = [got[s][2] for s in sorted(got)]
-    assert fits == sorted(fits)
-    # PAV conservation: sum(w * fit) == sum(pos)
-    assert abs(sum(got[s][2] * got[s][0] for s in got)
-               - sum(p for _, _, p in data)) < 1e-3
-
-
-def test_isotonic_already_monotone_is_identity(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import (
-        isotonic_calibration,
-    )
-
-    rows = [(0, 0)] * 5 + [(1, 1)] * 2 + [(1, 0)] * 2 + [(2, 1)] * 5
-    df = spark.createDataFrame(rows, "sc long, y long")
-    got = {r.score: r.iso_p for r in isotonic_calibration(df, "sc", "y").collect()}
-    assert got == {0: 0.0, 1: 0.5, 2: 1.0}
-
-
-def test_isotonic_null_scores_and_labels_dropped(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import (
-        isotonic_calibration,
-    )
-
-    clean = [(0, 0)] * 5 + [(1, 1)] * 2 + [(1, 0)] * 2 + [(2, 1)] * 5
-    dirty = clean + [(None, 1)] * 7 + [(0, None)] * 3
-    want = {r.score: (r.n, r.n_pos, r.iso_p) for r in isotonic_calibration(
-        spark.createDataFrame(clean, "sc long, y long"), "sc", "y").collect()}
-    got = {r.score: (r.n, r.n_pos, r.iso_p) for r in isotonic_calibration(
-        spark.createDataFrame(dirty, "sc long, y long"), "sc", "y").collect()}
-    # NULL scores must not contaminate real scores' prefix sums, and
-    # NULL labels must not silently count as negatives
-    assert got == want
-
-
-def test_kaplan_meier_matches_textbook_replay(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import kaplan_meier
-
-    # group A: classic mixed events/censoring; group B: full death at
-    # the last time point (the ln(0) branch)
-    subs = [
-        ("A", 2, 1), ("A", 2, 1), ("A", 2, 0), ("A", 5, 1), ("A", 7, 0), ("A", 9, 0),
-        ("B", 1, 1), ("B", 3, 1), ("B", 3, 1),
-    ]
-    df = spark.createDataFrame(subs, "grp string, dur long, obs long")
-    got = {(r.grp, r.t): (r.n_risk, r.d_events, r.km) for r in
-           kaplan_meier(df, "grp", "dur", "obs").collect()}
-
-    def km_replay(rows):
-        import collections
-        by_t = collections.defaultdict(lambda: [0, 0])
-        for d, o in rows:
-            by_t[d][0] += 1
-            by_t[d][1] += o
-        out, s, at_risk = {}, 1.0, len(rows)
-        for t in sorted(by_t):
-            n_at, d = by_t[t]
-            if d > 0:
-                s *= 1.0 - d / at_risk
-                out[t] = (at_risk, d, round(s, 6))
-            at_risk -= n_at
-        return out
-
-    for grp in ("A", "B"):
-        want = km_replay([(d, o) for g, d, o in subs if g == grp])
-        assert {t: got[(grp, t)] for g, t in got if g == grp} == want
-    # planted checks: A's curve = 1*(1-2/6)=0.666667 then *(1-1/3)=0.444444;
-    # B dies out -> exact 0.0 terminal
-    assert got[("A", 2)] == (6, 2, 0.666667)
-    assert got[("A", 5)] == (3, 1, 0.444444)
-    assert got[("B", 3)] == (2, 2, 0.0)
-
-
-def test_kaplan_meier_censor_only_group_has_no_rows(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import kaplan_meier
-
-    df = spark.createDataFrame(
-        [("C", 4, 0), ("C", 8, 0)], "grp string, dur long, obs long"
-    )
-    assert kaplan_meier(df, "grp", "dur", "obs").count() == 0
-
-
-def _logrank_replay(subs, a):
-    """Ordered-fold float replay of the Mantel-Cox statistic."""
-    import collections
-
-    by_t = collections.defaultdict(lambda: [0, 0, 0, 0])  # na, d, na0, d0
-    for g, t, o in subs:
-        row = by_t[t]
-        row[0] += 1
-        row[1] += o
-        if g == a:
-            row[2] += 1
-            row[3] += o
-    n = n0 = 0
-    rows = []
-    for t in sorted(by_t, reverse=True):
-        na, d, na0, d0 = by_t[t]
-        n += na
-        n0 += na0
-        if d > 0:
-            rows.append((t, d, d0, n, n0))
-    o_a = e_a = v = 0.0
-    oi = 0
-    for t, d, d0, n, n0 in sorted(rows):
-        oi += d0
-        e_a += n0 * d / n
-        if n > 1:
-            v += (n0 * (n - n0) * d * (n - d)) / (n * n * (n - 1))
-    chi2 = (oi - e_a) ** 2 / v if v > 0 else 0.0
-    return oi, round(e_a, 6), round(v, 6), round(chi2, 6)
-
-
-def test_logrank_matches_ordered_replay(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import logrank_test
-
-    subs = [
-        ("A", 2, 1), ("A", 3, 0), ("A", 5, 1), ("A", 9, 0),
-        ("B", 1, 1), ("B", 2, 1), ("B", 4, 1), ("B", 6, 0), ("B", 6, 1),
-    ]
-    df = spark.createDataFrame(subs, "grp string, dur long, obs long")
-    r = logrank_test(df, "grp", "dur", "obs", "A").collect()[0]
-    o, e, v, c = _logrank_replay(subs, "A")
-    assert (r.o_a, r.e_a, r.var_lr, r.chi2) == (o, e, v, c)
-
-
-def test_logrank_identical_groups_near_zero(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import logrank_test
-
-    arm = [(2, 1), (4, 1), (6, 0), (8, 1)]
-    subs = [("A", t, o) for t, o in arm] + [("B", t, o) for t, o in arm]
-    df = spark.createDataFrame(subs, "grp string, dur long, obs long")
-    r = logrank_test(df, "grp", "dur", "obs", "A").collect()[0]
-    # perfectly mirrored arms: observed == expected exactly
-    assert r.chi2 == 0.0 and abs(r.o_a - r.e_a) < 1e-9
-
-
-def test_logrank_separated_groups_large_chi2(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import logrank_test
-
-    subs = [("A", t, 1) for t in range(1, 9)] + [("B", t, 1) for t in range(20, 28)]
-    df = spark.createDataFrame(subs, "grp string, dur long, obs long")
-    r = logrank_test(df, "grp", "dur", "obs", "A").collect()[0]
-    # A dies out long before B even starts: strongly significant
-    assert r.chi2 > 10.0
-
-
-def test_cuped_matches_numpy_replay_and_reduces_variance(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import cuped_adjust
-
-    import numpy as np
-
-    rng = [(i % 2, 10 + 3 * i % 17, 0) for i in range(40)]
-    # y correlated with x plus a deterministic arm effect
-    subs = [(v, x, 2 * x + 5 + v * 7 + (i % 3)) for i, (v, x, _) in enumerate(rng)]
-    df = spark.createDataFrame(subs, "variant long, x long, y long")
-    got = {r.variant: r for r in cuped_adjust(df, "variant", "x", "y").collect()}
-
-    xs = np.array([x for _, x, _ in subs], float)
-    ys = np.array([y for _, _, y in subs], float)
-    theta = ((len(xs) * (xs * ys).sum() - xs.sum() * ys.sum())
-             / (len(xs) * (xs * xs).sum() - xs.sum() ** 2))
-    for v in (0, 1):
-        sel = [s for s in subs if s[0] == v]
-        my = sum(s[2] for s in sel) / len(sel)
-        madj = my - theta * (sum(s[1] for s in sel) / len(sel) - xs.mean())
-        assert abs(got[v].mean_y - my) < 1e-6
-        assert abs(got[v].mean_y_cuped - madj) < 1e-6
-        assert abs(got[v].theta - theta) < 1e-6
-    # strong x-y correlation -> large promised variance reduction, and
-    # the adjusted arm difference still shows the planted +7 effect
-    assert got[0].var_reduction > 0.8
-    assert abs((got[1].mean_y_cuped - got[0].mean_y_cuped) - 7.0) < 1.0
-
-
-def test_cuped_constant_covariate_degrades_gracefully(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import cuped_adjust
-
-    subs = [(0, 5, 10), (0, 5, 14), (1, 5, 20)]
-    df = spark.createDataFrame(subs, "variant long, x long, y long")
-    got = {r.variant: r for r in cuped_adjust(df, "variant", "x", "y").collect()}
-    assert got[0].theta == 0.0 and got[0].var_reduction == 0.0
-    assert got[0].mean_y_cuped == got[0].mean_y == 12.0
-
-
-def test_bootstrap_ci_brackets_mean_and_is_deterministic(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import (
-        bootstrap_mean_ci,
-    )
-
-    subs = [(i % 2, i, 100 + (i * 37) % 60) for i in range(200)]
-    df = spark.createDataFrame(subs, "variant long, uid long, y long")
-    r1 = {r.variant: r for r in bootstrap_mean_ci(df, "variant", "uid", "y").collect()}
-    for v in (0, 1):
-        r = r1[v]
-        assert r.ci_lo <= r.mean_y <= r.ci_hi  # CI brackets the point estimate
-        assert r.ci_hi - r.ci_lo < 20  # sane width for this spread
-        assert r.n_boot == 64 and r.n_subjects == 100
-    # pure function of (id, b): a repartitioned rerun is BIT-identical
-    r2 = {r.variant: r for r in
-          bootstrap_mean_ci(df.repartition(7), "variant", "uid", "y").collect()}
-    assert {v: tuple(r1[v]) for v in r1} == {v: tuple(r2[v]) for v in r2}
-
-
-def test_bootstrap_weights_are_poisson_like(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import (
-        POISSON1_CDF,
-        bootstrap_mean_ci,  # noqa: F401  (imported for the literal table)
-    )
-    import math
-
-    # the CDF literals themselves are the Poisson(1) CDF
-    c = 0.0
-    for k, lit in enumerate(POISSON1_CDF):
-        c += math.exp(-1) / math.factorial(k)
-        assert abs(lit - c) < 1e-15
-
-
-def test_survival_family_null_contracts(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import (
-        bootstrap_mean_ci,
-        cuped_adjust,
-        kaplan_meier,
-        logrank_test,
-    )
-
-    # NULL durations/observed/metrics/ids are out-of-contract rows and
-    # must be DROPPED, not silently sorted/counted (Spark and DuckDB
-    # put NULL sort keys on opposite ends; count(*) counts rows whose
-    # NULLs the sums skip)
-    km_clean = [("A", 2, 1), ("A", 5, 0), ("A", 7, 1)]
-    km_dirty = km_clean + [("A", None, 1), ("A", 3, None)]
-    km = lambda rows: {  # noqa: E731
-        (r.grp, r.t): (r.n_risk, r.d_events, r.km)
-        for r in kaplan_meier(
-            spark.createDataFrame(rows, "grp string, dur long, obs long"),
-            "grp", "dur", "obs",
-        ).collect()
-    }
-    assert km(km_dirty) == km(km_clean)
-
-    lr = lambda rows: tuple(  # noqa: E731
-        logrank_test(
-            spark.createDataFrame(rows, "grp string, dur long, obs long"),
-            "grp", "dur", "obs", "A",
-        ).collect()[0]
-    )
-    lr_clean = [("A", 2, 1), ("A", 6, 0), ("B", 3, 1), ("B", 9, 1)]
-    assert lr(lr_clean + [("B", None, 1), ("A", 4, None)]) == lr(lr_clean)
-
-    cu_clean = [(0, 1, 2), (0, 3, 7), (1, 2, 5), (1, 4, 9)]
-    cu = lambda rows: {  # noqa: E731
-        r.variant: tuple(r)
-        for r in cuped_adjust(
-            spark.createDataFrame(rows, "variant long, x long, y long"),
-            "variant", "x", "y",
-        ).collect()
-    }
-    assert cu(cu_clean + [(0, None, 4), (1, 5, None)]) == cu(cu_clean)
-
-    bs_clean = [(0, i, 10 + i) for i in range(12)]
-    bs = lambda rows: {  # noqa: E731
-        r.variant: tuple(r)
-        for r in bootstrap_mean_ci(
-            spark.createDataFrame(rows, "variant long, uid long, y long"),
-            "variant", "uid", "y",
-        ).collect()
-    }
-    assert bs(bs_clean + [(0, None, 99), (0, 50, None)]) == bs(bs_clean)
-
-
-def test_bootstrap_tiny_group_ci_never_null(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import (
-        bootstrap_mean_ci,
-    )
-
-    # a 1-subject group loses ~e^-1 of its resamples to sw = 0: the
-    # percentile ranks must target the SURVIVING count, not nominal 64
-    df = spark.createDataFrame([(0, 7, 42)], "variant long, uid long, y long")
-    r = bootstrap_mean_ci(df, "variant", "uid", "y").collect()[0]
-    assert r.ci_lo == r.ci_hi == r.mean_y == 42.0
-    assert 0 < r.n_boot < 64
-
-
-def test_winsorized_mean_clips_whales_exactly(spark):
-    from seizury_hrv_featuresextraction_spark.operators.evaluation import (
-        winsorized_mean,
-    )
-
-    # 98 ordinary subjects + one tiny + one whale in group 0
-    ys = list(range(10, 108)) + [0, 1000000]
-    subs = [(0, y) for y in ys] + [(1, 5), (1, 7), (1, None)]
-    df = spark.createDataFrame(subs, "variant long, y long")
-    got = {r.variant: r for r in winsorized_mean(df, "variant", "y").collect()}
-    r0 = got[0]
-    # nearest-rank cut points on n=100: k_lo=1 -> smallest value,
-    # k_hi=99 -> 99th smallest = 107
-    assert (r0.y_lo, r0.y_hi) == (0, 107)
-    want = sorted(ys)
-    clipped = [min(max(y, 0), 107) for y in want]
-    assert r0.mean_winsorized == round(sum(clipped) / 100, 6)
-    assert r0.mean_raw == round(sum(ys) / 100, 6)
-    # the whale moved the raw mean ~10000x more than the winsorized one
-    assert r0.mean_raw > 10000 and r0.mean_winsorized < 70
-    # NULL metric dropped from the contract (group 1: n=2)
-    assert got[1].n_subjects == 2 and got[1].mean_winsorized == 6.0

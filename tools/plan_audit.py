@@ -4,8 +4,8 @@ sort-merge joins, Python/Arrow stages, and parquet scan column sets.
 
 Writes BENCH/plan_audit.md. This is the whole-surface complement to the
 targeted asserts in tests/test_plan_shape.py: a refactor that sneaks an
-extra shuffle or flips a broadcast join to SMJ anywhere in the 69-query
-surface shows up as a diff of this table.
+extra shuffle or flips a broadcast join to SMJ in any registered query
+shows up as a diff of this table.
 
 Usage: python tools/plan_audit.py  (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
 """
