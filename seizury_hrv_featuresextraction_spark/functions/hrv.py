@@ -236,14 +236,105 @@ def approximate_entropy(rr_sec: np.ndarray, m: int = 2, r_tol: float = 0.2) -> f
     return phi(m) - phi(m + 1)
 
 
+def _neighbour_pairs(Z: np.ndarray, r: np.ndarray, rows: np.ndarray):
+    """Yield batches (g, i, j) of every pair of positions i != j of row g
+    of Z with ``|Z[g, i] - Z[g, j]| <= r[g]``, over the given rows, each
+    pair once.
+
+    Each row is sorted once. ``fl(x - y)`` is monotone in x, so along a
+    sorted row the pairs (a, a + d) that match form a prefix in d: a row
+    leaves the scan at its first lag d without a hit, and the scan ends
+    when no row is left. A batch is yielded once it holds Z.size pairs,
+    so memory stays O(Z.size).
+    """
+    Zr = Z[rows]
+    order = np.argsort(Zr, axis=1)
+    S = np.take_along_axis(Zr, order, axis=1)
+    rs = r[rows, None]
+    n = Z.shape[1]
+    batch, held = [], 0
+    for d in range(1, n):
+        q = np.flatnonzero(S[:, d:] - S[:, :-d] <= rs)
+        if not q.size:
+            break
+        w = q // (n - d)
+        at = q + w * d  # flat position of (w, a) in the (rows, n) arrays
+        of = order.ravel()
+        batch.append((rows[w], of[at], of[at + d]))
+        held += q.size
+        if held >= Z.size:
+            yield tuple(map(np.concatenate, zip(*batch)))
+            batch, held = [], 0
+        live = np.zeros(rows.size, dtype=bool)
+        live[w] = True
+        if not live.all():
+            rows, order, S, rs = rows[live], order[live], S[live], rs[live]
+    if batch:
+        yield tuple(map(np.concatenate, zip(*batch)))
+
+
+def _template_match_counts(
+    Z: np.ndarray, r: np.ndarray, ok: np.ndarray, m: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(C2, C3), (kb, K) and (kb, K-1) int64: per template start, how
+    many length-m (resp. m+1) templates lie within Chebyshev distance
+    ``r`` of it, self-match included — the row sums of the lag-AND
+    ``|z_i - z_j| <= r`` tables, counted from sorted-neighbour pairs.
+
+    Only rows with ``ok`` are scanned (a constant row would match every
+    pair); the others keep their diagonal count and must be masked by
+    the caller.
+    """
+    kb, n = Z.shape
+    K = n - m + 1
+    zf = Z.ravel()
+    c2 = np.zeros(kb * K, dtype=np.int64)
+    c3 = np.zeros(kb * (K - 1), dtype=np.int64)
+    for g, i, j in _neighbour_pairs(Z, r, np.flatnonzero(ok)):
+        # a pair of length-m templates: both starts < K, lags 1..m-1 match
+        keep = (i < K) & (j < K)
+        g, i, j = g[keep], i[keep], j[keep]
+        for t in range(1, m):
+            keep = np.abs(zf[g * n + i + t] - zf[g * n + j + t]) <= r[g]
+            g, i, j = g[keep], i[keep], j[keep]
+        c2 += np.bincount(np.concatenate((g * K + i, g * K + j)), minlength=c2.size)
+        # ... and of length m+1: both starts < K-1, lag m matches too
+        keep = (i < K - 1) & (j < K - 1)
+        g, i, j = g[keep], i[keep], j[keep]
+        keep = np.abs(zf[g * n + i + m] - zf[g * n + j + m]) <= r[g]
+        g, i, j = g[keep], i[keep], j[keep]
+        c3 += np.bincount(np.concatenate((g * (K - 1) + i, g * (K - 1) + j)), minlength=c3.size)
+    # the diagonal, by the same expression as every other pair
+    E = np.abs(Z - Z) <= r[:, None]
+    diag = E[:, :K]
+    for t in range(1, m):
+        diag = diag & E[:, t : t + K]
+    C2 = c2.reshape(kb, K) + diag
+    C3 = c3.reshape(kb, K - 1) + (diag[:, : K - 1] & E[:, m : m + K - 1])
+    return C2, C3
+
+
 def batch_entropies(
-    Y: np.ndarray, m: int = 2, r_tol: float = 0.2, block: int = 64
+    Y: np.ndarray, m: int = 2, r_tol: float = 0.2, block: int = 512
 ) -> tuple[np.ndarray, np.ndarray]:
     """SampEn + ApEn for a (k, n) batch of same-length windows.
 
-    3D pairwise Chebyshev matrices per block — numerically identical to
-    the scalar kernels (same formulas, same guards), just evaluated for
-    `block` windows at once.
+    Bit-identical to the scalar kernels by construction. A template pair
+    matches when ``|z_i - z_j| <= r`` holds at every lag; candidates come
+    from a scan of each sorted row (``_neighbour_pairs``) and each is then
+    checked at the other lags with that same expression. Float
+    subtraction is monotone, so the scan finds exactly the pairs with
+    ``fl(|z_i - z_j|) <= r``: every pair is decided by the float
+    operation the scalar kernels use, for any float input, ties included.
+    The integer match counts are therefore equal, and so is every formula
+    applied after them. The reference keeps ``r`` in seconds while it
+    compares z-scores, so at an sd of 100 ms only pairs within ~2 ms
+    match, a percent or two: a dense (n, n) table would be nearly all
+    misses.
+
+    Memory is O(block * n): no (block, n, n) table is built (64 windows
+    of 4096 beats made that table 8.6 GB). ``block`` only bounds the
+    working set; the outputs do not depend on it.
     """
     k, n = Y.shape
     out_s = np.zeros(k)
@@ -259,25 +350,12 @@ def batch_entropies(
         ok = sd > 0
         Z = (Yb - Yb.mean(axis=1, keepdims=True)) / np.where(sd == 0, 1.0, sd)[:, None]
         r = r_tol * sd
-        # one full (n, n) |z_i - z_j| <= r table; a lag-t Chebyshev match
-        # is the AND of diagonal-shifted views (max(a,b) <= r == a<=r and
-        # b<=r), so the float max matrices never materialize. |a-b| is
-        # exactly symmetric, so every matrix below is symmetric with an
-        # all-true diagonal when r >= 0.
-        B = np.abs(Z[:, :, None] - Z[:, None, :]) <= r[:, None, None]
-        BM = B[:, :K, :K]
-        for t in range(1, m):
-            BM = BM & B[:, t : t + K, t : t + K]
-        BM1 = BM[:, : K - 1, : K - 1] & B[:, m : m + K - 1, m : m + K - 1]
-        # ApEn row-counts (self-matches included) — and the SampEn pair
-        # counts fall out of the same matrices: for a symmetric match
-        # matrix with a true diagonal, matches = 2 * (pairs i<j) + K, so
-        # the triu gather is redundant. Chebyshev(m+1) >= Chebyshev(m)
-        # keeps a nested in b exactly as the scalar kernel requires.
+        C2, C3 = _template_match_counts(Z, r, ok, m)
+        # every match count is symmetric with its self-match on the
+        # diagonal, so the SampEn pair counts i<j are (row-sum total - K)/2;
+        # Chebyshev(m+1) >= Chebyshev(m) keeps a nested in b
         with np.errstate(divide="ignore", invalid="ignore"):
-            C2 = BM.sum(axis=2)
             phi_m = np.where(C2 > 0, np.log(C2 / K), 0.0).sum(axis=1) / K
-            C3 = BM1.sum(axis=2)
             phi_m1 = np.where(C3 > 0, np.log(C3 / (K - 1)), 0.0).sum(axis=1) / (K - 1)
         b = (C2.sum(axis=1) - K) >> 1
         a = (C3.sum(axis=1) - (K - 1)) >> 1
@@ -356,8 +434,8 @@ class WindowKernel:
         the rr_t array). ``rr_t`` is required only for the Welch
         fallback. ``parts`` restricts computation to the named feature
         groups (guide §4.1 — a consumer that only reads the time-domain
-        columns should not pay for the spectral GEMM or the O(n^2)
-        entropy counts); skipped groups stay NaN and must not be read.
+        columns should not pay for the spectral GEMM or the entropy
+        match counts); skipped groups stay NaN and must not be read.
 
         Windows are batched BY BEAT COUNT: all windows with n beats share
         one (k, n) matrix, so the per-window kernels become row-wise array

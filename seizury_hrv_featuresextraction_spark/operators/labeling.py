@@ -64,6 +64,13 @@ def is_seizure_event(event_type: Column) -> Column:
     )
 
 
+def _to_sample(t: Column, fs: Column) -> Column:
+    """Seconds -> sample index as the reference's ``int(t * fs)``
+    (labelers.py:66-68): truncation toward zero, so a negative fractional
+    onset maps to 0, not -1 as ``floor`` would give."""
+    return (t * fs).cast("long")
+
+
 def build_label_intervals(
     annotations: DataFrame,
     doc_dims: DataFrame,
@@ -84,8 +91,8 @@ def build_label_intervals(
                 Window.partitionBy("doc_id").orderBy("onset", "duration", "event_type")
             ),
         )
-        .withColumn("onset_s", F.floor(F.col("onset") * fs))
-        .withColumn("dur_s", F.floor(F.coalesce(F.col("duration"), F.lit(0.0)) * fs))
+        .withColumn("onset_s", _to_sample(F.col("onset"), fs))
+        .withColumn("dur_s", _to_sample(F.coalesce(F.col("duration"), F.lit(0.0)), fs))
         .withColumn("sz_lo", F.greatest(F.lit(0), F.col("onset_s")))
         .withColumn("sz_hi", F.least(F.col("n_samples"), F.col("onset_s") + F.col("dur_s")))
     )
@@ -100,8 +107,8 @@ def build_label_intervals(
 
     t_target = F.col("onset") - F.lit(cfg.sph_seconds)
     half = F.lit(cfg.label_width_seconds / 2.0)
-    tgt_lo = F.greatest(F.lit(0), F.floor((t_target - half) * fs))
-    tgt_hi = F.least(F.col("n_samples"), F.floor((t_target + half) * fs))
+    tgt_lo = F.greatest(F.lit(0), _to_sample(t_target - half, fs))
+    tgt_hi = F.least(F.col("n_samples"), _to_sample(t_target + half, fs))
     keep = (t_target >= 0) & ((t_target - half) >= 0)
     if cfg.skip_overlap:
         keep = keep & (tgt_hi <= F.col("sz_lo"))

@@ -46,21 +46,6 @@ CHUNKS_SCHEMA = T.StructType(
     ]
 )
 
-_KEY_FIELDS = [
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("window_id", T.LongType(), False),
-    T.StructField("window_start_time", T.DoubleType(), False),
-    T.StructField("window_center_time", T.DoubleType(), False),
-    T.StructField("window_end_time", T.DoubleType(), False),
-    T.StructField("center_sample", T.LongType(), False),
-    T.StructField("n_beats", T.IntegerType(), False),
-]
-
-# kernel output: keys + 23 float64 features (label joined on afterwards)
-FEATURES_KERNEL_SCHEMA = T.StructType(
-    _KEY_FIELDS + [T.StructField(name, T.DoubleType(), True) for name in ALL_FEATURES]
-)
-
 # what actually crosses the Python->JVM Arrow boundary: the four
 # window-time/center columns are pure functions of window_id and are
 # reattached as native expressions (32 fewer bytes/row through Arrow)
@@ -71,11 +56,4 @@ FEATURES_ARROW_SCHEMA = T.StructType(
         T.StructField("n_beats", T.IntegerType(), False),
     ]
     + [T.StructField(name, T.DoubleType(), True) for name in ALL_FEATURES]
-)
-
-# final output table (D5 shape: ids first, features, label last)
-FEATURES_OUTPUT_COLUMNS = (
-    ["subject_id", "recording_id", "window_start_time", "window_center_time", "window_end_time"]
-    + ALL_FEATURES
-    + ["label"]
 )

@@ -147,3 +147,48 @@ def test_empty_and_degenerate_inputs(spark, tiny_cfg):
     sdf = spark.createDataFrame(short, schema=SEQUENCES_SCHEMA)
     assert extract_features(sdf, None, tiny_cfg).count() == 0
     assert extract_features(sdf, None, tiny_cfg, fused=True).count() == 0
+
+
+def _labels_one_event(spark, onset, duration, cfg):
+    """Window labels of one 320 s doc with one seizure event, from the
+    chunked plan, the fused plan and ``oracle_labels``."""
+    from seizury_hrv_featuresextraction_spark.oracle import n_samples_for, oracle_labels, window_grid
+
+    tokens = [780, 800, 820, 800] * 100  # 320 000 ms
+    doc = "sub-901_ses-01_run-01"
+    seq = pd.DataFrame([{"doc_id": doc, "tokens": tokens, "n_tok": len(tokens), "source": "t"}])
+    ann = pd.DataFrame([{"doc_id": doc, "onset": onset, "duration": duration, "event_type": "sz"}])
+    seq_df = spark.createDataFrame(seq, schema=SEQUENCES_SCHEMA)
+    ann_df = spark.createDataFrame(ann, schema=ANNOTATIONS_SCHEMA)
+    got = {}
+    for fused in (False, True):
+        out = extract_features(seq_df, ann_df, cfg, fused=fused).toPandas().sort_values("window_id")
+        got[fused] = out["label"].to_numpy()
+    n_samples = n_samples_for(sum(tokens), cfg)
+    dense = oracle_labels(n_samples, ann, cfg)
+    exp = np.array([dense[center] for _, _, center, _ in window_grid(n_samples, cfg)])
+    return got[False], got[True], exp
+
+
+def test_label_sample_index_truncates_like_reference(spark, tiny_cfg):
+    """The reference converts seconds to samples with int(t * fs), which
+    truncates toward zero: onset -0.001 s is sample 0, not -1, so the
+    ictal span [0, 3841) holds window 0's center sample 3840."""
+    chunked, fused, exp = _labels_one_event(spark, -0.001, 15.00390625, tiny_cfg)
+    assert exp[0] == 2
+    assert (chunked == exp).all()
+    assert (fused == exp).all()
+
+
+def test_label_target_clamped_to_recording_end(spark, tiny_cfg):
+    """An event past the end of its recording: only the clamp of the SPH
+    target's end to n_samples keeps it clear of the ictal start in the
+    skip_overlap test, so the target interval survives and window 58 is
+    labeled 1."""
+    from dataclasses import replace
+
+    cfg = replace(tiny_cfg, sph_seconds=5.0)
+    chunked, fused, exp = _labels_one_event(spark, 321.0, 10.0, cfg)
+    assert len(exp) == 59 and exp[58] == 1
+    assert (chunked == exp).all()
+    assert (fused == exp).all()
