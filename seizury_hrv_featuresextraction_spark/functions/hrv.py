@@ -172,20 +172,25 @@ def poincare_features(rr_sec: np.ndarray, out: np.ndarray) -> None:
     out[19] = sd1 / sd2 if sd2 > 0 else 0.0
 
 
-def _chebyshev_pairs(z: np.ndarray, m: int) -> np.ndarray:
-    """All-pairs Chebyshev distance matrix between length-m templates of z.
-
-    Returns D with shape (K, K), K = len(z) - m + 1, D[i, j] =
-    max_k |z[i+k] - z[j+k]|.  Vectorized over the pair axes; windows hold
-    a few dozen beats so K^2 stays tiny.
-    """
-    k = z.size - m + 1
+def _chebyshev_rows(z: np.ndarray, m: int, rows: slice) -> np.ndarray:
+    """Rows ``rows`` of the all-pairs Chebyshev distance matrix between
+    length-m templates of z: D[i, j] = max_k |z[i+k] - z[j+k]| for i in
+    rows and every template start j."""
     emb = np.lib.stride_tricks.sliding_window_view(z, m)  # (K, m)
-    return np.abs(emb[:, None, :] - emb[None, :, :]).max(axis=2)
+    return np.abs(emb[rows, None, :] - emb[None, :, :]).max(axis=2)
+
+
+def _row_blocks(k: int, m: int):
+    """Row slices over k rows, each small enough that its (rows, k, m)
+    difference array holds at most ~2**20 floats (8 MB) at any window
+    length."""
+    step = max(1, (1 << 20) // (k * m))
+    for s in range(0, k, step):
+        yield slice(s, min(s + step, k))
 
 
 def sample_entropy(rr_sec: np.ndarray, m: int = 2, r_tol: float = 0.2) -> float:
-    """Reference-parity SampEn (vectorized).
+    """Reference-parity SampEn (vectorized over row blocks).
 
     b counts pairs i<j over template starts 0..n-m (Chebyshev(m) <= r);
     a additionally requires j <= n-m-1 and Chebyshev(m+1) <= r; the final
@@ -200,23 +205,27 @@ def sample_entropy(rr_sec: np.ndarray, m: int = 2, r_tol: float = 0.2) -> float:
         return 0.0
     z = (rr_sec - rr_sec.mean()) / sd
     r = r_tol * sd
-    d_m = _chebyshev_pairs(z, m)  # (n-m+1, n-m+1)
-    iu = np.triu_indices(n - m + 1, k=1)
-    match_m = d_m[iu] <= r
-    b = int(np.count_nonzero(match_m))
-    # a: pairs with j <= n-m-1 (both m+1 templates exist)
-    d_m1 = _chebyshev_pairs(z, m + 1)  # (n-m, n-m)
-    iu1 = np.triu_indices(n - m, k=1)
-    # match on BOTH lengths (m+1 match implies m match except the reference
-    # nests the check — equivalent since Chebyshev(m+1) >= Chebyshev(m))
-    a = int(np.count_nonzero((d_m1[iu1] <= r) & (d_m[: n - m, : n - m][iu1] <= r)))
+    k = n - m + 1
+    a = b = 0
+    for rows in _row_blocks(k, m + 1):
+        i = np.arange(rows.start, rows.stop)[:, None]
+        match_m = (_chebyshev_rows(z, m, rows) <= r) & (np.arange(k) > i)
+        b += int(np.count_nonzero(match_m))
+        # a: pairs with j <= n-m-1 (both m+1 templates exist); match on
+        # BOTH lengths (m+1 match implies m match except the reference
+        # nests the check — equivalent since Chebyshev(m+1) >= Chebyshev(m))
+        rows1 = slice(rows.start, min(rows.stop, k - 1))
+        if rows1.start < rows1.stop:
+            match_m1 = _chebyshev_rows(z, m + 1, rows1) <= r
+            a += int(np.count_nonzero(match_m1 & match_m[: rows1.stop - rows1.start, : k - 1]))
     if a == 0 or b == 0:
         return 0.0
     return float(-np.log((a / b) * ((n - m + 2) / (n - m))))
 
 
 def approximate_entropy(rr_sec: np.ndarray, m: int = 2, r_tol: float = 0.2) -> float:
-    """Reference-parity ApEn (vectorized; self-matches included)."""
+    """Reference-parity ApEn (vectorized over row blocks; self-matches
+    included)."""
     n = rr_sec.size
     if n < m + 1:
         return 0.0
@@ -228,8 +237,9 @@ def approximate_entropy(rr_sec: np.ndarray, m: int = 2, r_tol: float = 0.2) -> f
 
     def phi(mm: int) -> float:
         k = n - mm + 1
-        d = _chebyshev_pairs(z, mm)
-        counts = (d <= r).sum(axis=1)  # includes self-match
+        counts = np.concatenate(
+            [(_chebyshev_rows(z, mm, rows) <= r).sum(axis=1) for rows in _row_blocks(k, mm)]
+        )  # includes self-match
         nz = counts > 0
         return float(np.log(counts[nz] / k).sum() / k)
 

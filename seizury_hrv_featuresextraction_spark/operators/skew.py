@@ -53,6 +53,12 @@ def _chunk_batch(batch: pa.RecordBatch, cfg: HRVConfig) -> pa.RecordBatch | None
     tok_list = batch.column(1)
     offsets = tok_list.offsets.to_numpy(zero_copy_only=False)
     flat_tok = tok_list.values.to_numpy(zero_copy_only=False).astype(np.int64)
+    neg = offsets[0] + np.flatnonzero(flat_tok[offsets[0] : offsets[-1]] < 0)
+    if neg.size:
+        # a negative RR interval makes the beat-time cumsum non-monotone,
+        # and searchsorted would then return wrong windows silently
+        d = int(np.searchsorted(offsets, neg[0], side="right") - 1)
+        raise ValueError(f"doc_id {doc_ids[d]!r}: negative RR token {flat_tok[neg[0]]}")
     ship_rr_t = cfg.use_welch_fallback  # only the Welch path consumes times
 
     out_doc: list[str] = []

@@ -168,6 +168,10 @@ def make_hrv_stream_fn(
                     )
                 continue
             pending[ci] = [int(x) for x in toks]
+            if min(pending[ci], default=0) < 0:
+                # same contract as the batch chunk stage: a negative RR
+                # interval breaks the monotone beat-time grid
+                raise ValueError(f"doc_id {doc_id!r}: negative RR token in chunk_idx={ci}")
         ready: list[np.ndarray] = []
         while next_chunk in pending:
             ready.append(np.asarray(pending.pop(next_chunk), dtype=np.int64))

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from seizury_hrv_featuresextraction_spark.functions.hrv import ALL_FEATURES
 from seizury_hrv_featuresextraction_spark.oracle import oracle_pipeline
@@ -192,3 +193,20 @@ def test_label_target_clamped_to_recording_end(spark, tiny_cfg):
     assert len(exp) == 59 and exp[58] == 1
     assert (chunked == exp).all()
     assert (fused == exp).all()
+
+
+@pytest.mark.parametrize("fused", [False, True], ids=["chunked", "fused"])
+def test_negative_token_raises_naming_doc(spark, tiny_cfg, fused):
+    """A negative RR token fails the job with a ValueError naming its doc:
+    it would make the beat-time cumsum non-monotone, and searchsorted
+    would then pick wrong windows without error. Zero tokens stay valid."""
+    rows = pd.DataFrame(
+        [
+            {"doc_id": "ok", "tokens": [800] * 60 + [0] + [800] * 60, "n_tok": 121, "source": "t"},
+            {"doc_id": "bad", "tokens": [800] * 60 + [-3] + [800] * 60, "n_tok": 121, "source": "t"},
+        ]
+    )
+    seq = spark.createDataFrame(rows, schema=SEQUENCES_SCHEMA)
+    assert extract_features(seq.where("doc_id = 'ok'"), None, tiny_cfg, fused=fused).count() > 0
+    with pytest.raises(Exception, match=r"ValueError: doc_id 'bad': negative RR token -3"):
+        extract_features(seq, None, tiny_cfg, fused=fused).collect()

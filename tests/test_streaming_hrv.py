@@ -11,6 +11,7 @@ import time
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -168,6 +169,37 @@ def test_streaming_hrv_out_of_order_across_microbatches(spark, tmp_path):
             rtol=1e-9, atol=1e-12, equal_nan=True,
         ), name
     assert not streamed.duplicated(["doc_id", "window_id"]).any()
+
+
+@pytest.mark.timeout(300)
+def test_streaming_negative_token_raises_naming_doc(spark, tmp_path):
+    """The streaming chunk function holds the batch chunk stage's contract:
+    a negative RR token fails the query with a ValueError naming its doc.
+    Zero tokens stay valid."""
+    from seizury_hrv_featuresextraction_spark.streaming.hrv_stream import make_hrv_stream_fn
+
+    src = str(tmp_path / "tok_stream")
+    chunks = pd.DataFrame(
+        [("ok", 0, [800] * 50 + [0]), ("bad", 0, [800] * 20), ("bad", 1, [800, -7, 800])],
+        columns=["doc_id", "chunk_idx", "tokens"],
+    )
+    spark.createDataFrame(chunks, schema=CHUNK_SCHEMA).coalesce(1).write.parquet(src)
+    stream_in = spark.readStream.schema(CHUNK_SCHEMA).parquet(src)
+    q = (
+        streaming_hrv_features(stream_in, CFG)
+        .writeStream.format("memory")
+        .queryName("hrv_stream_negative")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        with pytest.raises(StreamingQueryException, match=r"ValueError: doc_id 'bad': negative RR token in chunk_idx=1"):
+            q.awaitTermination(240)
+    finally:
+        q.stop()
+    fn = make_hrv_stream_fn(CFG)
+    assert len(_drive(fn, [[("d0", 0, [800] * 50 + [0] + [800] * 50)]])) > 0
 
 
 class FakeState:

@@ -10,9 +10,10 @@ Package and launch:
         --output /data/features_out \
         --buckets 64
 
-Runs the resumable bucket-at-a-time flagship plan (checkpoint.py): on a
-restart with the same config it skips every bucket whose lineage manifest
-matches the config md5.
+Runs the resumable bucket-at-a-time flagship plan (checkpoint.py) in the
+engine's session (``session.get_spark``) on the master spark-submit was
+given: on a restart with the same config it skips every bucket whose
+lineage manifest matches the config md5.
 """
 
 from __future__ import annotations
@@ -40,13 +41,15 @@ def main():
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from pyspark import SparkConf, SparkContext
 
     from seizury_hrv_featuresextraction_spark.checkpoint import run_resumable
     from seizury_hrv_featuresextraction_spark.config import HRVConfig
+    from seizury_hrv_featuresextraction_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("seizury-hrv-features").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # attach to spark-submit's JVM first, so the conf holds its --master
+    SparkContext._ensure_initialized()
+    spark = get_spark("seizury-hrv-features", master=SparkConf().get("spark.master", None))
     cfg = HRVConfig(
         sph_seconds=args.sph_seconds,
         window_seconds=args.window_seconds,
