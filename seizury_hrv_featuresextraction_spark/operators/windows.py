@@ -165,93 +165,3 @@ def debounce(
     )
     return out.drop("__pos", "__run", "__pos_rank", "__cand")
 
-
-def time_weighted_avg(
-    obs: DataFrame,
-    on: str,
-    by: str,
-    value_col: str,
-    bucket_us: int = 3_600_000_000,
-    value_scale: int = 100,
-) -> DataFrame:
-    """E114: per-(key, bucket) TIME-weighted average of an irregular
-    series under zero-order hold — each observation's value holds from
-    its timestamp to the NEXT observation, and that holding interval is
-    apportioned across the fixed time buckets it spans.  The plain
-    row-average the O21-O26 aggs compute over-weights bursts (10 events
-    in a minute count 10x); TWA is the telemetry/feature-store answer
-    and what "average heart rate over the hour" actually means for
-    irregular RR observations.
-
-    Returns (``by``, bucket_us_start, covered_us, twa) — buckets a key
-    never covers are absent; covered_us < bucket_us flags partial
-    coverage at series edges (the last observation holds nothing: its
-    horizon is unknown).
-
-    Exactness device: the weighted integral is INT64 fixed-point —
-    v_fp = round(v * value_scale) and microsecond overlaps are exact
-    integers, and per group sum(v_fp * ov) <= value_scale * max|v| *
-    bucket_us no matter how many rows land in the bucket (overlaps
-    within one bucket tile it), so the sum cannot overflow and is
-    shuffle-order-free.  The only float op is the final one divide of
-    two exact int64s — bit-identical in any engine, twin-able without
-    tolerance.
-
-    Scale shape (the union+window gap-fill device): duplicate
-    timestamps are collapsed map-side (max per (key, t) — makes the
-    hold interval well-defined), ONE window sort per key finds each
-    observation's horizon, bucket apportionment is map-local
-    sequence+explode (amplification = buckets spanned, bounded by
-    span/bucket), and ONE (key, bucket) agg finishes — zero joins,
-    nothing but the corpus exchanged once for the sort and once
-    (pre-aggregated) for the group.
-    """
-    o = (
-        obs.select(
-            F.col(by).alias("k"),
-            F.unix_micros(F.col(on).cast("timestamp")).alias("us"),
-            F.col(value_col).cast("double").alias("v"),
-        )
-        .where(F.col("us").isNotNull() & F.col("v").isNotNull())
-        .groupBy("k", "us")
-        .agg(F.max("v").alias("v"))
-    )
-    w = Window.partitionBy("k").orderBy("us")
-    s = o.withColumn("nxt", F.lead("us").over(w)).where(
-        F.col("nxt").isNotNull() & (F.col("nxt") > F.col("us"))
-    )
-    B = F.lit(int(bucket_us))
-    bus = int(bucket_us)
-    # FLOOR division, not `div` (which truncates toward zero): pre-epoch
-    # timestamps must land in bucket -1, not be folded into bucket 0 and
-    # have their sub-epoch mass dropped; x - positive_mod(x) is exactly
-    # divisible, so the truncating div after it IS the floor
-    fd_lo = f"(us - ((us % {bus} + {bus}) % {bus})) div {bus}"
-    fd_hi = f"((nxt - 1) - (((nxt - 1) % {bus} + {bus}) % {bus})) div {bus}"
-    seg = s.select(
-        "k",
-        "us",
-        "nxt",
-        F.round(F.col("v") * F.lit(int(value_scale))).cast("long").alias("v_fp"),
-        F.explode(F.sequence(F.expr(fd_lo), F.expr(fd_hi))).alias("b"),
-    )
-    ov = seg.select(
-        "k",
-        "b",
-        "v_fp",
-        (
-            F.least(F.col("nxt"), (F.col("b") + 1) * B) - F.greatest(F.col("us"), F.col("b") * B)
-        ).alias("o_us"),
-    )
-    g = ov.groupBy("k", "b").agg(
-        F.sum(F.col("v_fp") * F.col("o_us")).alias("num"),
-        F.sum("o_us").alias("den"),
-    )
-    return g.select(
-        F.col("k").alias(by),
-        (F.col("b") * B).cast("long").alias("bucket_us_start"),
-        F.col("den").cast("long").alias("covered_us"),
-        F.round(
-            F.col("num").cast("double") / F.col("den").cast("double") / F.lit(float(value_scale)), 6
-        ).alias("twa"),
-    )

@@ -416,69 +416,6 @@ def skew_join_events_dim(spark, sf_dir):
 
 
 @q(
-    "scd2_history_crawl",
-    """
-    WITH v1 AS (SELECT doc_id, 1::bigint AS version, md5(text) AS content
-                FROM documents),
-    v2 AS (SELECT doc_id, 2::bigint AS version,
-                  md5(CASE WHEN doc_id % 3 = 0 THEN text || ' rev2' ELSE text END)
-                    AS content
-           FROM documents WHERE doc_id % 11 <> 0),
-    v3 AS (SELECT doc_id, 3::bigint AS version,
-                  md5(CASE WHEN doc_id % 5 = 0 THEN text || ' rev3'
-                           WHEN doc_id % 3 = 0 THEN text || ' rev2'
-                           ELSE text END) AS content
-           FROM documents),
-    t AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2 UNION ALL SELECT * FROM v3),
-    l AS (SELECT *, lag(content) OVER (PARTITION BY doc_id ORDER BY version) AS pc,
-                 lag(version) OVER (PARTITION BY doc_id ORDER BY version) AS pv
-          FROM t),
-    r AS (SELECT *, (CASE WHEN pc IS NULL OR content <> pc OR version <> pv + 1
-                          THEN 1 ELSE 0 END)::bigint AS new_run
-          FROM l),
-    c AS (SELECT *, sum(new_run) OVER (PARTITION BY doc_id
-                                       ORDER BY version)::bigint AS run
-          FROM r)
-    SELECT doc_id, content,
-           min(version)::bigint AS valid_from,
-           max(version)::bigint AS valid_to,
-           (max(version) = 3) AS is_current
-    FROM c GROUP BY doc_id, run, content
-    """,
-)
-def scd2_history_crawl(spark, sf_dir):
-    """E107: SCD2 history from three synthesized full crawl snapshots —
-    planted rev-2/rev-3 changes, a %11 delete-in-v2 + re-insert-in-v3
-    gap (two history rows even when content reasserts), and unchanged
-    carries collapsing to one interval. One per-key window exchange."""
-    from ..operators.merge import scd2_history
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    v1 = docs.select(
-        "doc_id", F.lit(1).cast("long").alias("version"), F.md5("text").alias("content")
-    )
-    v2 = docs.filter(F.col("doc_id") % 11 != 0).select(
-        "doc_id",
-        F.lit(2).cast("long").alias("version"),
-        F.md5(
-            F.when(F.col("doc_id") % 3 == 0, F.concat(F.col("text"), F.lit(" rev2")))
-            .otherwise(F.col("text"))
-        ).alias("content"),
-    )
-    v3 = docs.select(
-        "doc_id",
-        F.lit(3).cast("long").alias("version"),
-        F.md5(
-            F.when(F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit(" rev3")))
-            .when(F.col("doc_id") % 3 == 0, F.concat(F.col("text"), F.lit(" rev2")))
-            .otherwise(F.col("text"))
-        ).alias("content"),
-    )
-    snaps = v1.unionByName(v2).unionByName(v3)
-    return scd2_history(snaps, "doc_id", "content", "version", current_version=3)
-
-
-@q(
     "rollup_corpus_stats",
     """
     SELECT coalesce(source, '__all__') AS source,
@@ -4753,76 +4690,6 @@ ORACLE["tokenizer_pipeline"] = ORACLE["tokenizer_pipeline"].replace(
 
 
 @q(
-    "merge_upsert_crawl",
-    """
-    WITH cur AS (SELECT doc_id,
-                        (CASE WHEN doc_id % 5 = 1 THEN 3 ELSE 0 END)::bigint AS version,
-                        text, source, 0 AS is_new
-                 FROM documents),
-    upd AS (SELECT doc_id, 2::bigint AS version, text || ' rev2' AS text,
-                   source, 1 AS is_new
-            FROM documents WHERE doc_id % 3 = 0
-            UNION ALL
-            SELECT doc_id, 2::bigint AS version, text || ' stale' AS text,
-                   source, 1 AS is_new
-            FROM documents WHERE doc_id % 5 = 1 AND doc_id % 3 <> 0
-            UNION ALL
-            SELECT doc_id + 100000 AS doc_id, 2::bigint AS version,
-                   'new ' || text AS text, source, 1 AS is_new
-            FROM documents WHERE doc_id % 7 = 0),
-    t AS (SELECT * FROM cur UNION ALL SELECT * FROM upd),
-    g AS (SELECT doc_id, version, text, source, is_new,
-                 row_number() OVER (PARTITION BY doc_id
-                                    ORDER BY version DESC, is_new DESC) AS rn,
-                 max(is_new) OVER (PARTITION BY doc_id) AS any_new,
-                 min(is_new) OVER (PARTITION BY doc_id) AS all_new
-          FROM t)
-    SELECT doc_id, version, source, md5(text) AS text_md5,
-           CASE WHEN all_new = 1 THEN 'insert'
-                WHEN any_new = 1 AND is_new = 1 THEN 'update'
-                ELSE 'carry' END AS action
-    FROM g WHERE rn = 1
-    """,
-)
-def merge_upsert_crawl(spark, sf_dir):
-    """E54: Iceberg MERGE INTO semantics (latest-wins crawl-snapshot
-    upsert) as ONE max_by key-aggregate — no join, no window sort, the
-    action accounting folded into the same map-side combine. The
-    derived batch plants all three actions: rev-2 updates (doc_id%3),
-    a STALE replay that must lose to a newer current row (doc_id%5=1 ->
-    carry), and brand-new keys (doc_id%7 shifted +100000 -> insert).
-    The twin resolves winners independently via a row_number window."""
-    from ..operators.merge import merge_upsert
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    cur = d.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 5 == 1, F.lit(3)).otherwise(F.lit(0)).cast("long").alias("version"),
-        "text",
-        "source",
-    )
-    upd = (
-        d.filter(F.col("doc_id") % 3 == 0)
-        .select("doc_id", F.lit(2).cast("long").alias("version"),
-                F.concat(F.col("text"), F.lit(" rev2")).alias("text"), "source")
-        .unionByName(
-            d.filter((F.col("doc_id") % 5 == 1) & (F.col("doc_id") % 3 != 0))
-            .select("doc_id", F.lit(2).cast("long").alias("version"),
-                    F.concat(F.col("text"), F.lit(" stale")).alias("text"), "source")
-        )
-        .unionByName(
-            d.filter(F.col("doc_id") % 7 == 0)
-            .select((F.col("doc_id") + 100000).alias("doc_id"),
-                    F.lit(2).cast("long").alias("version"),
-                    F.concat(F.lit("new "), F.col("text")).alias("text"), "source")
-        )
-    )
-    return merge_upsert(cur, upd).select(
-        "doc_id", "version", "source", F.md5("text").alias("text_md5"), "action"
-    )
-
-
-@q(
     "line_dedup_docs",
     f"""
     WITH d AS (SELECT doc_id, text FROM documents),
@@ -5181,66 +5048,6 @@ def weighted_sample_docs_q(spark, sf_dir):
 
 
 @q(
-    "snapshot_diff_crawls",
-    """
-    WITH v1 AS (SELECT doc_id, md5(coalesce(text, '')) AS fp FROM documents),
-    v2t AS (SELECT doc_id,
-                   CASE WHEN doc_id % 10 = 3
-                        THEN coalesce(text, '') || ' rev2 marker'
-                        ELSE coalesce(text, '') END AS text
-            FROM documents WHERE doc_id % 20 <> 7
-            UNION ALL
-            SELECT doc_id + 100000000 AS doc_id, coalesce(text, '') AS text
-            FROM documents WHERE doc_id % 25 = 0),
-    v2 AS (SELECT doc_id, md5(text) AS fp FROM v2t),
-    j AS (SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-                 a.fp AS fp_old, b.fp AS fp_new
-          FROM v1 a FULL OUTER JOIN v2 b ON a.doc_id = b.doc_id)
-    SELECT doc_id,
-           CASE WHEN fp_old IS NULL THEN 'added'
-                WHEN fp_new IS NULL THEN 'removed'
-                WHEN fp_old <> fp_new THEN 'changed'
-                ELSE 'unchanged' END AS kind,
-           fp_old, fp_new
-    FROM j
-    WHERE (fp_old IS NULL OR fp_new IS NULL OR fp_old <> fp_new)
-    """,
-)
-def snapshot_diff_crawls_q(spark, sf_dir):
-    """E69: row-level snapshot diff (added/removed/changed) between a
-    crawl and its successor — the audit half of the E54 MERGE story.
-    Spark side is the union + ONE key-aggregate device (no join, no
-    window; map-side combine folds both sides' fingerprints per key);
-    the twin is an INDEPENDENT FULL OUTER JOIN formulation, so the
-    gate cross-checks the aggregate encoding.  v2 is derived
-    deterministically in both engines: drop doc_id%20==7, rewrite
-    doc_id%10==3, add doc_id%25==0 under offset ids (+1e8 — outside any
-    stress-replica id space; the +1e6 form collided with sf1.0
-    replica-1 ids and broke the unique-key snapshot contract)."""
-    from ..operators.merge import snapshot_diff
-
-    docs = load_table(spark, sf_dir, "documents")
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    v1 = docs.select("doc_id", F.md5(txt).alias("fp"))
-    v2 = (
-        docs.where(F.col("doc_id") % 20 != 7)
-        .select(
-            "doc_id",
-            F.md5(
-                F.when(F.col("doc_id") % 10 == 3, F.concat(txt, F.lit(" rev2 marker")))
-                .otherwise(txt)
-            ).alias("fp"),
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 25 == 0).select(
-                (F.col("doc_id") + 100000000).alias("doc_id"), F.md5(txt).alias("fp")
-            )
-        )
-    )
-    return snapshot_diff(v1, v2, "doc_id", "fp")
-
-
-@q(
     "fuzzy_dup_pairs",
     f"""
     WITH t AS (SELECT doc_id,
@@ -5318,54 +5125,6 @@ def domain_link_graph_docs(spark, sf_dir):
         ).alias("html"),
     )
     return domain_link_graph(shell, "html", "doc_id", "src_domain")
-
-
-@q(
-    "time_weighted_avg_events",
-    """
-    WITH o AS (SELECT user_id AS k, epoch_us(ts) AS us, max(value) AS v
-               FROM events
-               WHERE value IS NOT NULL AND ts IS NOT NULL
-               GROUP BY 1, 2),
-         s AS (SELECT k, us, v,
-                      lead(us) OVER (PARTITION BY k ORDER BY us) AS nxt
-               FROM o),
-         seg AS (SELECT k, us, nxt, CAST(round(v * 100) AS bigint) AS v_fp
-                 FROM s WHERE nxt IS NOT NULL AND nxt > us),
-         x AS (SELECT k, us, nxt, v_fp,
-                      unnest(generate_series(
-                        (us - ((us % 3600000000 + 3600000000) % 3600000000))
-                          // 3600000000,
-                        ((nxt - 1) - (((nxt - 1) % 3600000000 + 3600000000)
-                                      % 3600000000)) // 3600000000)) AS b
-               FROM seg),
-         ov AS (SELECT k, b, v_fp,
-                       least(nxt, (b + 1) * 3600000000)
-                       - greatest(us, b * 3600000000) AS o_us
-                FROM x),
-         g AS (SELECT k, b, sum(v_fp * o_us)::bigint AS num,
-                      sum(o_us)::bigint AS den
-               FROM ov GROUP BY 1, 2)
-    SELECT k AS user_id, (b * 3600000000)::bigint AS bucket_us_start,
-           den AS covered_us,
-           round(num::double / den::double / 100.0, 6) AS twa
-    FROM g
-    """,
-)
-def time_weighted_avg_events_q(spark, sf_dir):
-    """E114: hourly TIME-weighted average of the irregular per-user
-    event value under zero-order hold, holding intervals apportioned
-    across bucket boundaries by map-local sequence+explode.  The row
-    average over-weights bursts; TWA is what "average level over the
-    hour" means for irregular telemetry/RR observations.  Integral is
-    exact int64 fixed-point (per-bucket overlaps tile the bucket, so
-    the sum is bounded and shuffle-order-free); the single final
-    divide of two exact int64s is the only float op — twin hash-exact
-    without tolerance."""
-    from ..operators.windows import time_weighted_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    return time_weighted_avg(ev, "ts", "user_id", "value")
 
 
 @q(

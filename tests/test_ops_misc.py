@@ -372,7 +372,7 @@ def test_query_surface_guard():
     assert sum(1 for p in prios if p == 0) <= 50
     # surface ratchet: the exported query set only shrinks toward the
     # paper's surface; each cut lowers this bound
-    assert len(QUERIES) <= 118
+    assert len(QUERIES) <= 114
 
 
 def test_script_imports_resolve():

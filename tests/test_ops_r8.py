@@ -696,28 +696,12 @@ def test_target_encode_loo_keeps_null_category_rows(spark):
 
 
 def test_null_handling_review_fixes(spark):
-    """r8 review: NULL-content SCD2 runs stay contiguous; NULL-group
-    anchors still draw negatives; NULL values neither rank in the MAD
-    median nor poison flags."""
+    """r8 review: NULL-group anchors still draw negatives; NULL values
+    neither rank in the MAD median nor poison flags."""
     from seizury_hrv_featuresextraction_spark.operators.filters import (
         grouped_mad_outliers,
     )
-    from seizury_hrv_featuresextraction_spark.operators.merge import scd2_history
     from seizury_hrv_featuresextraction_spark.operators.stats import negative_samples
-
-    # SCD2: NULL content across v1-v3 = ONE run; NULL<->'a' transitions split
-    rows = [(1, 1, None), (1, 2, None), (1, 3, None), (2, 1, "a"), (2, 2, None), (2, 3, "a")]
-    df = spark.createDataFrame(rows, "k long, version long, content string")
-    got = {
-        (r["k"], r["valid_from"]): (r["content"], r["valid_to"])
-        for r in scd2_history(df, "k", "content", "version", 3).collect()
-    }
-    assert got == {
-        (1, 1): (None, 3),
-        (2, 1): ("a", 1),
-        (2, 2): (None, 2),
-        (2, 3): ("a", 3),
-    }
 
     # negative sampling: NULL-group anchor pairs with every group
     rows = [(i, f"s{i % 3}") for i in range(20)] + [(100, None)]

@@ -115,76 +115,3 @@ def test_debounce_run_length(spark):
     assert a == [False, False, True, False, False, False, False, False, False, False]
     assert b == [False, False, False, True]  # latch is per key, not global
 
-
-# --- E114: time-weighted average under zero-order hold --------------------
-
-def test_time_weighted_avg_matches_replay(spark):
-    from seizury_hrv_featuresextraction_spark.operators.windows import time_weighted_avg
-
-    B = 100  # tiny bucket (us) to exercise multi-bucket spanning
-    # key 1: obs at 10 (v=2) held to 250 (spans buckets 0,1,2),
-    #        obs at 250 (v=4) held to 260, last obs 260 holds nothing
-    # key 2: duplicate timestamp (max collapses to 7), single interval
-    rows = [
-        (1, 10, 2.0), (1, 250, 4.0), (1, 260, 9.0),
-        (2, 50, 3.0), (2, 50, 7.0), (2, 150, 1.0),
-    ]
-    import datetime
-
-    df = spark.createDataFrame(
-        [(k, datetime.datetime.utcfromtimestamp(us / 1e6), v) for k, us, v in rows],
-        "user_id long, ts timestamp, value double",
-    )
-    got = {
-        (r.user_id, r.bucket_us_start): (r.covered_us, r.twa)
-        for r in time_weighted_avg(df, "ts", "user_id", "value", bucket_us=B).collect()
-    }
-    assert got == {
-        # key 1 bucket 0: v=2 over [10,100) -> 90us of 2.0
-        (1, 0): (90, 2.0),
-        # bucket 1: v=2 over [100,200)
-        (1, 100): (100, 2.0),
-        # bucket 2: v=2 over [200,250) + v=4 over [250,260)
-        (1, 200): (60, round((2.0 * 50 + 4.0 * 10) / 60, 6)),
-        # key 2: dup ts collapsed to max v=7 over [50,100)+[100,150)
-        (2, 0): (50, 7.0),
-        (2, 100): (50, 7.0),
-    }
-
-
-def test_time_weighted_avg_null_and_single_obs(spark):
-    from seizury_hrv_featuresextraction_spark.operators.windows import time_weighted_avg
-
-    import datetime
-
-    df = spark.createDataFrame(
-        [
-            (1, datetime.datetime.utcfromtimestamp(10 / 1e6), None),  # null value dropped
-            (2, datetime.datetime.utcfromtimestamp(10 / 1e6), 5.0),   # single obs: no horizon
-        ],
-        "user_id long, ts timestamp, value double",
-    )
-    assert time_weighted_avg(df, "ts", "user_id", "value", bucket_us=100).count() == 0
-
-
-def test_time_weighted_avg_pre_epoch_floor_bucketing(spark):
-    from seizury_hrv_featuresextraction_spark.operators.windows import time_weighted_avg
-
-    import datetime
-
-    # obs at -50us held to +30us with 100us buckets: 50us of mass in
-    # bucket -100 (floor division), 30us in bucket 0 — truncating
-    # division would fold everything into bucket 0 and drop the
-    # pre-epoch 50us entirely
-    df = spark.createDataFrame(
-        [
-            (1, datetime.datetime.utcfromtimestamp(0) + datetime.timedelta(microseconds=-50), 2.0),
-            (1, datetime.datetime.utcfromtimestamp(0) + datetime.timedelta(microseconds=30), 9.0),
-        ],
-        "user_id long, ts timestamp, value double",
-    )
-    got = {
-        (r.user_id, r.bucket_us_start): (r.covered_us, r.twa)
-        for r in time_weighted_avg(df, "ts", "user_id", "value", bucket_us=100).collect()
-    }
-    assert got == {(1, -100): (50, 2.0), (1, 0): (30, 2.0)}
