@@ -30,7 +30,6 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import HRVConfig
 from ..schemas import CHUNKS_SCHEMA
@@ -174,68 +173,3 @@ def explode_chunks(sequences: DataFrame, cfg: HRVConfig) -> DataFrame:
     if cfg.repartition_chunks:
         chunks = chunks.repartition(sequences.sparkSession.sparkContext.defaultParallelism)
     return chunks
-
-
-def skew_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_id_col: str,
-    hot_threshold: int = 100_000,
-    n_salts: int = 16,
-    max_hot_keys: int = 10_000,
-) -> DataFrame:
-    """E108: hot/cold split equi-join for skewed keys — the executable
-    form of what the E98 key-skew report diagnoses. Keys whose LEFT
-    count exceeds ``hot_threshold`` take a salted path: the left row's
-    salt is a deterministic hash of its unique ``left_id_col`` (NOT a
-    rand() — resume/retry must reproduce the same placement), the right
-    side's hot rows replicate across all n_salts via an in-row explode,
-    and the join key becomes (key, salt), splitting each hot key's rows
-    over n_salts tasks. Cold keys join normally — no replication cost
-    where none is needed. The union is row-for-row equal to the plain
-    join (pinned by pytest); this operator changes the SHUFFLE PLACEMENT
-    only, never the result.
-
-    Scale shape: one map-side-combined left key count; the hot-key list
-    is collected (bounded — hot keys are by definition few; a corpus
-    with > ``max_hot_keys`` of them raises rather than silently building
-    a huge broadcast) and broadcast as a literal isin filter on both
-    sides, so the split itself is scan-stage. Replication cost =
-    |right hot rows| x n_salts, the standard salted-join trade.
-
-    AQE's skew-join handles SORT-MERGE skew post-hoc at runtime; this
-    operator is the declarative form for when the skew is known/measured
-    up front (and works for broadcast-ineligible many-to-many joins
-    where AQE's splitting does not apply)."""
-    cnt = left.groupBy(on).agg(F.count(F.lit(1)).alias("__c"))
-    hot_rows = cnt.filter(F.col("__c") > hot_threshold).select(on).limit(max_hot_keys + 1).collect()
-    if len(hot_rows) > max_hot_keys:
-        raise ValueError(
-            f"skew_join: more than {max_hot_keys} keys exceed "
-            f"hot_threshold={hot_threshold}; raise the threshold"
-        )
-    hot_keys = [r[on] for r in hot_rows]
-    if not hot_keys:
-        return left.join(right, on)
-    cold = left.filter(~F.col(on).isin(hot_keys)).join(
-        right.filter(~F.col(on).isin(hot_keys)), on
-    )
-    salt = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("sj:"), F.col(left_id_col).cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(n_salts),
-    )
-    hot_l = left.filter(F.col(on).isin(hot_keys)).withColumn("__salt", salt)
-    hot_r = (
-        right.filter(F.col(on).isin(hot_keys))
-        .withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-        .withColumn("__salt", F.col("__salt").cast("long"))
-    )
-    hot = hot_l.join(hot_r, [on, "__salt"]).drop("__salt")
-    return cold.unionByName(hot)

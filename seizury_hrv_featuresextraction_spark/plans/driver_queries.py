@@ -302,120 +302,6 @@ def datacard_incremental(spark, sf_dir):
 
 
 @q(
-    "contrastive_pipeline",
-    f"""
-    WITH fpd AS (SELECT doc_id, text, source,
-                        substr(md5(regexp_replace(lower(trim(text)),
-                                                  '\\s+', ' ', 'g')), 1, 16) AS fp
-                 FROM documents),
-    kept AS (SELECT doc_id, text, source FROM (
-               SELECT *, min(doc_id) OVER (PARTITION BY fp) AS keeper FROM fpd)
-             WHERE doc_id = keeper),
-    w AS (SELECT doc_id, source, {WORDS_DD} AS ws FROM kept),
-    e AS (SELECT doc_id, unnest(ws) AS word FROM w),
-    b AS (SELECT doc_id,
-                 ('0x' || substr(md5('f:' || word), 1, 15))::bigint % 1024 AS j
-          FROM e),
-    s AS (SELECT doc_id,
-                 sum(('0x' || substr(md5('w:' || j::varchar), 1, 8))::bigint
-                     / 4294967296.0 - 0.5) AS dot
-          FROM b GROUP BY doc_id),
-    good AS (SELECT w.doc_id, w.source
-             FROM w LEFT JOIN s ON s.doc_id = w.doc_id
-             WHERE round(CASE WHEN len(w.ws) > 0
-                              THEN coalesce(s.dot, 0.0) / len(w.ws)
-                              ELSE 0.0 END, 6) > 0.0),
-    pb AS (SELECT doc_id AS cid, source AS cg,
-                  ('0x' || substr(md5('cp:b:' || doc_id::varchar), 1, 15))::bigint
-                    % 16 AS b,
-                  ('0x' || substr(md5('cp:o:' || doc_id::varchar), 1, 15))::bigint AS o
-           FROM good),
-    pool AS (SELECT b, cid, cg FROM (
-               SELECT *, row_number() OVER (PARTITION BY b ORDER BY o, cid) AS rn
-               FROM pb)
-             WHERE rn <= 32),
-    a AS (SELECT doc_id AS anchor_id, source AS ag,
-                 ('0x' || substr(md5('cp:p:' || doc_id::varchar), 1, 15))::bigint
-                   % 16 AS p
-          FROM good),
-    j AS (SELECT a.anchor_id, pool.cid, pool.cg,
-                 ('0x' || substr(md5('cp:r:' || a.anchor_id::varchar || ':'
-                                     || pool.cid::varchar), 1, 15))::bigint AS rh
-          FROM a JOIN pool ON pool.b = a.p
-                          AND pool.cid <> a.anchor_id AND pool.cg <> a.ag)
-    SELECT anchor_id, rank, cid AS neg_id, cg AS neg_source
-    FROM (SELECT anchor_id, cid, cg,
-                 row_number() OVER (PARTITION BY anchor_id ORDER BY rh, cid) AS rank
-          FROM j)
-    WHERE rank <= 4
-    """,
-)
-def contrastive_pipeline(spark, sf_dir):
-    """E109: contrastive-training data-prep closure — exact dedup
-    (window keeper, E1) -> quality-classifier gate (E40) -> deterministic
-    negative mining (E93) in ONE composed plan; the twin replays all
-    three stages. The E30/E75 composition device: closures pin that the
-    stage contracts actually compose, not just pass alone."""
-    from ..operators.curation import hashed_linear_classifier, md5_feature_weights
-    from ..operators.dedup import dedup_exact_keep, spread
-    from ..operators.stats import negative_samples
-
-    docs = spread(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    )
-    kept = dedup_exact_keep(docs, "text", "doc_id")
-    scored = hashed_linear_classifier(
-        kept,
-        md5_feature_weights(1024),
-        bias=0.0,
-        threshold=0.0,
-        score_round=6,
-        extra_cols=("source",),
-    )
-    good = scored.filter(F.col("keep")).select("doc_id", "source")
-    return negative_samples(
-        good, "doc_id", "source", k=4, pool_size=32, n_buckets=16, seed="cp:"
-    )
-
-
-@q(
-    "skew_join_events_dim",
-    f"""
-    WITH dim AS (SELECT user_id, min({EPOCH_DD}) AS first_seen,
-                        count(*)::bigint AS n_events
-                 FROM events GROUP BY user_id)
-    SELECT e.event_id, e.user_id, e.event_type,
-           round(dim.first_seen, 6) AS first_seen, dim.n_events
-    FROM events e JOIN dim ON dim.user_id = e.user_id
-    """,
-)
-def skew_join_events_dim(spark, sf_dir):
-    """E108: hot/cold salted skew join of the events fact against a
-    per-user dim — hot_threshold forced low so REAL rows take the
-    salted path at gate scale; the result is row-identical to the plain
-    join (the twin), because the operator only changes shuffle
-    placement."""
-    from ..operators.skew import skew_join
-
-    ev = _ev(spark, sf_dir)
-    dim = ev.groupBy("user_id").agg(
-        F.round(F.min("e"), 6).alias("first_seen"),
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-    )
-    joined = skew_join(
-        ev.select("event_id", "user_id", "event_type"),
-        dim,
-        on="user_id",
-        left_id_col="event_id",
-        hot_threshold=20,  # force most users onto the salted path
-        n_salts=8,
-    )
-    return joined.select(
-        "event_id", "user_id", "event_type", "first_seen", "n_events"
-    )
-
-
-@q(
     "rollup_corpus_stats",
     """
     SELECT coalesce(source, '__all__') AS source,
@@ -570,46 +456,6 @@ def lexical_stats_docs(spark, sf_dir):
 
 
 @q(
-    "quantile_normalize_docs",
-    """
-    WITH sc AS (SELECT source AS g, n_chars AS v, count(*)::bigint AS c
-                FROM documents GROUP BY 1, 2),
-    s2 AS (SELECT g, v, c,
-                  (sum(c) OVER (PARTITION BY g ORDER BY v))::bigint AS cum,
-                  (sum(c) OVER (PARTITION BY g))::bigint AS ns
-           FROM sc),
-    gc AS (SELECT v, sum(c)::bigint AS cg FROM sc GROUP BY v),
-    g2 AS (SELECT v, (sum(cg) OVER (ORDER BY v))::bigint AS cumg,
-                  (sum(cg) OVER ())::bigint AS n
-           FROM gc),
-    u AS (SELECT g, v, c, cum::double / ns::double AS q, 0 AS tag,
-                 NULL::bigint AS gv
-          FROM s2
-          UNION ALL
-          SELECT NULL, NULL, NULL, cumg::double / n::double AS q, 1 AS tag,
-                 v AS gv
-          FROM g2),
-    f AS (SELECT *, min(gv) OVER (ORDER BY q, tag
-                                  ROWS BETWEEN CURRENT ROW
-                                  AND UNBOUNDED FOLLOWING) AS target
-          FROM u)
-    SELECT g AS source, v AS n_chars, c AS n, round(q, 6) AS cdf, target
-    FROM f WHERE tag = 0
-    """,
-)
-def quantile_normalize_docs(spark, sf_dir):
-    """E101: exact quantile normalization of per-source doc-length
-    distributions onto the global distribution — the collapse device
-    (one (source, value) count exchange) + union-window as-of CDF
-    lookup; no range join, no corpus sort. Twin replays the same
-    construction."""
-    from ..operators.stats import quantile_normalize
-
-    docs = load_table(spark, sf_dir, "documents")
-    return quantile_normalize(docs, "n_chars", "source")
-
-
-@q(
     "robust_outliers_events",
     """
     WITH d AS (SELECT event_type, event_id, value::double AS value FROM events
@@ -645,85 +491,6 @@ def robust_outliers_events(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     return grouped_mad_outliers(ev, "value", ["event_type"], "event_id", z_thresh=3.5)
-
-
-@q(
-    "key_skew_events",
-    """
-    WITH kc AS (SELECT user_id, count(*)::bigint AS cnt FROM events GROUP BY user_id),
-    cc AS (SELECT cnt, count(*)::bigint AS n_keys FROM kc GROUP BY cnt),
-    cw AS (SELECT cnt, n_keys,
-                  (sum(n_keys) OVER (ORDER BY cnt))::bigint AS cum_keys,
-                  (sum(n_keys) OVER ())::bigint AS nk
-           FROM cc),
-    ce AS (SELECT *, cum_keys - n_keys + 1 AS start_rank FROM cw)
-    SELECT 'user_id' AS key,
-           max(nk)::bigint AS n_keys,
-           sum(cnt * n_keys)::bigint AS n_rows,
-           max(cnt)::bigint AS max_cnt,
-           round(sum(cnt * n_keys)::double / max(nk)::double, 6) AS mean_cnt,
-           min(CASE WHEN cum_keys >= ceil(0.50 * nk) THEN cnt END)::bigint AS p50_cnt,
-           min(CASE WHEN cum_keys >= ceil(0.90 * nk) THEN cnt END)::bigint AS p90_cnt,
-           min(CASE WHEN cum_keys >= ceil(0.99 * nk) THEN cnt END)::bigint AS p99_cnt,
-           round(max(cnt)::double
-                 / (sum(cnt * n_keys)::double / max(nk)::double), 6) AS max_to_mean,
-           round(max(cnt)::double / sum(cnt * n_keys)::double, 6) AS top1_share,
-           round((2.0 * (sum(cnt * (n_keys * start_rank
-                                    + (n_keys * (n_keys - 1)) // 2)))::double)
-                 / (max(nk)::double * sum(cnt * n_keys)::double)
-                 - (max(nk) + 1)::double / max(nk)::double, 6) AS gini
-    FROM ce
-    """,
-)
-def key_skew_events(spark, sf_dir):
-    """E98: hot-key / partition-skew report over the events stream's
-    user_id — exact count-distribution stats + Gini via the
-    count-of-counts device (one corpus exchange, everything downstream
-    bounded by distinct count values)."""
-    from ..operators.stats import key_skew_report
-
-    ev = load_table(spark, sf_dir, "events")
-    return key_skew_report(ev, ["user_id"])
-
-
-@q(
-    "negative_pairs_docs",
-    """
-    WITH ids AS (SELECT doc_id::bigint AS cid, source AS cg FROM documents),
-    pb AS (SELECT cid, cg,
-                  ('0x' || substr(md5('ns:b:' || cid::varchar), 1, 15))::bigint % 16 AS b,
-                  ('0x' || substr(md5('ns:o:' || cid::varchar), 1, 15))::bigint AS o
-           FROM ids),
-    pool AS (SELECT b, cid, cg FROM (
-               SELECT *, row_number() OVER (PARTITION BY b ORDER BY o, cid) AS rn
-               FROM pb)
-             WHERE rn <= 32),
-    a AS (SELECT doc_id::bigint AS anchor_id, source AS ag,
-                 ('0x' || substr(md5('ns:p:' || doc_id::varchar), 1, 15))::bigint % 16 AS p
-          FROM documents),
-    j AS (SELECT a.anchor_id, pool.cid, pool.cg,
-                 ('0x' || substr(md5('ns:r:' || a.anchor_id::varchar || ':'
-                                     || pool.cid::varchar), 1, 15))::bigint AS rh
-          FROM a JOIN pool ON pool.b = a.p
-                          AND pool.cid <> a.anchor_id AND pool.cg <> a.ag)
-    SELECT anchor_id, rank, cid AS neg_id, cg AS neg_source
-    FROM (SELECT anchor_id, cid, cg,
-                 row_number() OVER (PARTITION BY anchor_id ORDER BY rh, cid) AS rank
-          FROM j)
-    WHERE rank <= 4
-    """,
-)
-def negative_pairs_docs(spark, sf_dir):
-    """E93: deterministic contrastive negative sampling — k negatives per
-    anchor from a hash-bucketed literal pool, self/same-source excluded.
-    Corpus touched once, zero post-pool exchanges (plan-literal device);
-    twin replays pool draw + per-anchor hash ranking as a plain join."""
-    from ..operators.stats import negative_samples
-
-    docs = load_table(spark, sf_dir, "documents")
-    return negative_samples(
-        docs, "doc_id", "source", k=4, pool_size=32, n_buckets=16, seed="ns:"
-    )
 
 
 @q(
@@ -1621,77 +1388,6 @@ def hrv_time_features_windows(spark, sf_dir):
     )
 
 
-# E83: pairwise Pearson over the time-domain feature table with exact
-# int64 sums over quantized values. Scales pick the quantization grain:
-# 1 ms for the ms-valued features (int64 squares stay far from overflow at any
-# corpus size the agg can see), x100 for the two ratio features.
-_CORR_FEATS: list[tuple[str, int]] = [
-    ("rr_mean", 1),
-    ("sdnn", 1),
-    ("rmssd", 1),
-    ("pnn50", 100),
-    ("nn50", 1),
-    ("tri_index", 100),
-]
-
-
-def _corr_twin_sql() -> str:
-    names = [c for c, _ in _CORR_FEATS]
-    qexprs = ",\n             ".join(
-        f"floor(round({c}, 6) * {s}) AS q_{i}" for i, (c, s) in enumerate(_CORR_FEATS)
-    )
-    notnull = " AND ".join(f"{c} IS NOT NULL" for c in names)
-    sums = ["count(*)::bigint AS n"]
-    for i in range(len(names)):
-        sums.append(f"sum(q_{i})::bigint AS s_{i}")
-        sums.append(f"sum(q_{i} * q_{i})::bigint AS ss_{i}")
-        for j in range(i + 1, len(names)):
-            sums.append(f"sum(q_{i} * q_{j})::bigint AS sp_{i}_{j}")
-    pair_rows = []
-    for i in range(len(names)):
-        for j in range(i + 1, len(names)):
-            pair_rows.append(
-                f"SELECT '{names[i]}' AS feat_i, '{names[j]}' AS feat_j, n,"
-                f" s_{i} AS sum_i, s_{j} AS sum_j, ss_{i} AS sum_ii,"
-                f" ss_{j} AS sum_jj, sp_{i}_{j} AS sum_ij FROM sums"
-            )
-    union = "\n      UNION ALL ".join(pair_rows)
-    return f"""
-    WITH {_GRID_MEMBER_CTES},
-    {_TIME_CTES},
-    feat AS (
-      SELECT agg.rr_mean, agg.sdnn, agg.rmssd, agg.pnn50, agg.nn50,
-             round(agg.n_beats::double / mx.mb, 6) AS tri_index
-      FROM agg JOIN mx ON mx.user_id = agg.user_id AND mx.win_id = agg.win_id
-      WHERE agg.n_beats >= 5),
-    quant AS (
-      SELECT {qexprs}
-      FROM feat WHERE {notnull}),
-    sums AS (SELECT {", ".join(sums)} FROM quant),
-    pairs AS ({union})
-    SELECT feat_i, feat_j, n, sum_i, sum_j, sum_ii, sum_jj, sum_ij,
-           CASE WHEN (n::double * sum_ii::double - sum_i::double * sum_i::double) > 0
-                 AND (n::double * sum_jj::double - sum_j::double * sum_j::double) > 0
-                THEN round((n::double * sum_ij::double - sum_i::double * sum_j::double)
-                           / (sqrt(n::double * sum_ii::double - sum_i::double * sum_i::double)
-                              * sqrt(n::double * sum_jj::double - sum_j::double * sum_j::double)), 6)
-           END AS corr
-    FROM pairs
-    """
-
-
-@q("feature_correlation_matrix", _corr_twin_sql())
-def feature_correlation_matrix_q(spark, sf_dir):
-    """E83: which HRV features carry independent signal — exact-integer
-    sufficient statistics (one scan, one single-row exchange, zero
-    joins), correlation as one fixed double-op sequence so the full
-    matrix value-hashes against the twin's independent recomputation."""
-    from ..operators.stats import correlation_matrix
-
-    feats = hrv_time_features_windows(spark, sf_dir)
-    return correlation_matrix(feats, _CORR_FEATS)
-
-
 @q(
     "sliding_grid",
     f"""
@@ -2292,52 +1988,6 @@ def dedup_components_q(spark, sf_dir):
     return comp.select(F.col("id").alias("doc_id"), F.col("comp").alias("component"))
 
 
-@q(
-    "deterministic_sample",
-    """
-    SELECT doc_id, lang
-    FROM documents
-    WHERE ('0x' || substr(md5('s1' || doc_id::varchar), 1, 4))::int < 9830
-    """,
-)
-def deterministic_sample(spark, sf_dir):
-    """Content-addressed 15% sample (rate*65536 = 9830): identical row
-    selection on any engine/run/partitioning — the resumable, join-stable
-    alternative to df.sample for 100 TB training-data curation."""
-    from ..operators.stats import hash_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return hash_sample(docs, "doc_id", rate=0.15, seed="s1").select("doc_id", "lang")
-
-
-@q(
-    "sequence_packing",
-    """
-    WITH s AS (
-      SELECT doc_id, n_chars, (doc_id % 16)::int AS shard,
-             (sum(n_chars) OVER (PARTITION BY doc_id % 16 ORDER BY doc_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              - n_chars)::bigint AS off
-      FROM documents)
-    SELECT shard, (off // 4000)::bigint AS bin,
-           count(*) AS n_docs, sum(n_chars)::bigint AS total_chars
-    FROM s GROUP BY shard, off // 4000
-    """,
-)
-def sequence_packing(spark, sf_dir):
-    """Pretraining batch assembly: per-shard contiguous packing of docs
-    into 4000-char bins by exclusive running offset (one shuffle on the
-    shard key; no global sort). Returns per-bin occupancy."""
-    from ..operators.stats import pack_sequences
-
-    docs = load_table(spark, sf_dir, "documents")
-    packed = pack_sequences(docs, "doc_id", "n_chars", budget=4000, n_shards=16)
-    return packed.groupBy("shard", "bin").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # THE COMPOSED FULL-FLAGSHIP TWIN: every feature slice CTE chain (time,
 # spectral+Poincare, entropy) joined with the FixedSPH interval-label
@@ -2584,33 +2234,10 @@ def hrv_features_flagship_oracle_grid(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# r3 training-data curation additions (SURVEY §2.12 E14-E17): stratified
-# rebalancing, per-source quotas, TF-IDF salient terms, semi-structured
-# (JSON) metadata extraction — each pure Catalyst with a DuckDB twin.
+# r3 training-data curation additions (SURVEY §2.12 E15-E17): per-source
+# quotas, TF-IDF salient terms, semi-structured (JSON) metadata
+# extraction — each pure Catalyst with a DuckDB twin.
 # ---------------------------------------------------------------------------
-
-
-@q(
-    "stratified_sample",
-    """
-    SELECT doc_id, lang
-    FROM documents
-    WHERE ('0x' || substr(md5('s2' || doc_id::varchar), 1, 4))::int
-          < (CASE WHEN lang = 'en' THEN 6553 ELSE 39321 END)
-    """,
-)
-def stratified_sample(spark, sf_dir):
-    """E14: skew-rebalancing sample — head language (en) kept at 10%,
-    tail languages at 60%; selection is content-addressed (md5 prefix)
-    so it is stable across runs, engines and resumes. Scan-stage filter,
-    zero shuffle."""
-    from ..operators.stats import stratified_hash_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = stratified_hash_sample(
-        docs, "doc_id", "lang", {"en": 0.1}, default_rate=0.6, seed="s2"
-    )
-    return out.select("doc_id", "lang")
 
 
 @q(
@@ -3878,96 +3505,6 @@ def fingerprint_overlap_against_corpus_docs(spark, sf_dir):
 
 
 @q(
-    "corpus_shuffle_shards",
-    """
-    WITH h AS (SELECT doc_id,
-                      ('0x' || substr(md5('0:' || doc_id::varchar), 1, 15))::bigint AS hv
-               FROM documents),
-         s AS (SELECT doc_id, hv, hv % 8 AS shard FROM h)
-    SELECT doc_id, shard::bigint AS shard,
-           (row_number() OVER (PARTITION BY shard ORDER BY hv, doc_id) - 1)::bigint AS pos
-    FROM s
-    """,
-)
-def corpus_shuffle_shards(spark, sf_dir):
-    """E38: deterministic corpus shuffle + sharding — the global
-    training-order permutation (docs must not arrive in crawl order)
-    as ONE shard-key shuffle + local sorts, never a global ORDER BY.
-    (shard, pos) are pure functions of (doc_id, seed): resume-stable,
-    reproducible, and derivable by the twin from the same md5 device
-    used by the stratified sampler / quota cap."""
-    from ..operators.stats import shuffle_shards
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return shuffle_shards(docs, "doc_id", n_shards=8, seed=0).select(
-        "doc_id", F.col("shard").cast("long").alias("shard"), "pos"
-    )
-
-
-@q(
-    "length_bucketed_batches",
-    """
-    WITH d AS (SELECT doc_id, n_chars,
-                      CAST(ceil(n_chars / 128.0) AS bigint) AS len_bucket,
-                      md5(doc_id::varchar) AS h
-               FROM documents),
-         r AS (SELECT doc_id, n_chars, len_bucket,
-                      row_number() OVER (PARTITION BY len_bucket ORDER BY h, doc_id) - 1 AS rk
-               FROM d),
-         b AS (SELECT doc_id, n_chars, len_bucket,
-                      (rk // 8)::bigint AS batch_id, (rk % 8)::bigint AS pos_in_batch
-               FROM r)
-    SELECT doc_id, len_bucket, batch_id, pos_in_batch,
-           max(n_chars) OVER (PARTITION BY len_bucket, batch_id)::bigint AS pad_len,
-           (max(n_chars) OVER (PARTITION BY len_bucket, batch_id) - n_chars)::bigint AS pad_waste
-    FROM b
-    """,
-)
-def length_bucketed_batches(spark, sf_dir):
-    """E39: length-bucketed batching over the documents table (n_chars
-    as the length; same op serves n_tok on sequences) — deterministic
-    pad-batches of 8 docs per 128-char length bucket with the per-batch
-    pad target and padding waste. Two-level salted row_number (r5
-    verdict fix): rank within (len_bucket, md5-prefix salt) + broadcast
-    count-grid offsets, so a hot length bucket spreads over 256 tasks
-    instead of one; the pad window repartitions on the balanced
-    (len_bucket, batch_id) key (plan + brute-identity pytest)."""
-    from ..operators.stats import length_bucketed_batches as op
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return op(docs, "doc_id", "n_chars", bucket_size=128, batch_docs=8).select(
-        "doc_id", "len_bucket", "batch_id", "pos_in_batch", "pad_len", "pad_waste"
-    )
-
-
-@q(
-    "mixture_sample_docs",
-    """
-    WITH c AS (SELECT source, count(*)::double AS n FROM documents GROUP BY source),
-    t AS (SELECT sum(n) AS tot, sum(pow(n, 0.6)) AS z FROM c),
-    r AS (SELECT source, round(least(1.0, 0.5 * tot / z * pow(n, 0.6) / n) * 65536)::bigint AS thr
-          FROM c, t)
-    SELECT d.doc_id, d.source
-    FROM documents d JOIN r USING (source)
-    WHERE ('0x' || substr(md5('mix:' || d.doc_id::varchar), 1, 4))::bigint < thr
-    """,
-)
-def mixture_sample_docs(spark, sf_dir):
-    """E41: temperature-weighted source-mixture sampling (p_g ∝
-    n_g^0.6, target 50% of the corpus) — the multilingual/multi-source
-    rebalancing pass of LLM pretraining. Rates are DERIVED from a tiny
-    group-count agg (vs the configured rates of stratified_sample),
-    broadcast back, and rows keep via the deterministic md5 device with
-    an integer-rounded threshold so the 16-bit compare is
-    integer-vs-integer in both engines (pow's 1-ulp cross-library drift
-    cannot flip it off a knife edge)."""
-    from ..operators.stats import mixture_sample
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    return mixture_sample(docs, "doc_id", "source", alpha=0.6, target_frac=0.5)
-
-
-@q(
     "dedup_against_corpus_docs",
     f"""
     WITH split AS (SELECT *, ('0x' || substr(md5('xc:' || doc_id::varchar), 1, 15))::bigint % 3 AS res
@@ -4904,150 +4441,6 @@ def split_leakage_audit_q(spark, sf_dir):
 
 
 @q(
-    "feature_drift_psi",
-    """
-    WITH b AS (SELECT i AS bin FROM unnest(generate_series(0, 19)) AS t(i)),
-    r AS (SELECT greatest(0, least(19, floor(value / 25.0)))::bigint AS bin,
-                 count(*) AS cnt_ref
-          FROM events WHERE event_type = 'view' GROUP BY 1),
-    c AS (SELECT greatest(0, least(19, floor(value / 25.0)))::bigint AS bin,
-                 count(*) AS cnt_cur
-          FROM events WHERE event_type = 'purchase' GROUP BY 1),
-    j AS (SELECT b.bin,
-                 coalesce(r.cnt_ref, 0)::bigint AS cnt_ref,
-                 coalesce(c.cnt_cur, 0)::bigint AS cnt_cur
-          FROM b LEFT JOIN r ON b.bin = r.bin LEFT JOIN c ON b.bin = c.bin),
-    t AS (SELECT sum(cnt_ref) AS n_ref, sum(cnt_cur) AS n_cur FROM j)
-    SELECT bin, cnt_ref, cnt_cur,
-           round((cnt_ref + 1)::double / (n_ref + 20), 6) AS p_ref,
-           round((cnt_cur + 1)::double / (n_cur + 20), 6) AS p_cur,
-           round(((cnt_cur + 1)::double / (n_cur + 20)
-                  - (cnt_ref + 1)::double / (n_ref + 20))
-                 * ln(((cnt_cur + 1)::double / (n_cur + 20))
-                      / ((cnt_ref + 1)::double / (n_ref + 20))), 6) AS psi_term
-    FROM j, t
-    """,
-)
-def feature_drift_psi(spark, sf_dir):
-    """E85: PSI drift monitor between the 'view' (reference) and
-    'purchase' (current) value distributions — fixed data-independent
-    bins (width 25 x 20, scan-stage assignment), Laplace-smoothed
-    proportions from exact int64 counts, one bounded exchange per side.
-    Twin replays bins, smoothing and the ln psi term end-to-end."""
-    from ..operators.stats import drift_psi
-
-    ev = load_table(spark, sf_dir, "events")
-    return drift_psi(
-        ev.filter(F.col("event_type") == "view"),
-        ev.filter(F.col("event_type") == "purchase"),
-        "value",
-        bin_width=25.0,
-        n_bins=20,
-    )
-
-
-@q(
-    "target_encode_docs",
-    """
-    WITH g AS (SELECT lang, count(*) AS cnt_g, sum(n_chars) AS sum_g
-               FROM documents GROUP BY lang),
-    t AS (SELECT count(*) AS n, sum(n_chars) AS s FROM documents)
-    SELECT doc_id, d.lang, n_chars,
-           round((((sum_g - n_chars)::double
-                   + 20.0 * (s::double / n::double))
-                  / ((cnt_g - 1 + 20)::double)) / 1.0, 6) AS te_lang
-    FROM documents d JOIN g ON d.lang = g.lang, t
-    """,
-)
-def target_encode_docs(spark, sf_dir):
-    """E86: leakage-safe leave-one-out target encoding of lang by mean
-    doc length (m=20 Bayesian smoothing) — the row's own target never
-    enters its encoding; all sufficient statistics exact int64, the
-    encoding one fixed double-op sequence, category stats broadcast
-    back so the corpus is never shuffled."""
-    from ..operators.stats import target_encode_loo
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    return target_encode_loo(docs, "lang", "n_chars", m=20, scale=1)
-
-
-@q(
-    "ks_drift_daily",
-    """
-    WITH u AS (SELECT floor(epoch_us(ts) / 86400000000)::bigint AS day, value,
-                      CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_ref
-               FROM events WHERE event_type IN ('click', 'view')),
-    g AS (SELECT day, value, sum(is_ref)::bigint AS cr, sum(1 - is_ref)::bigint AS cc
-          FROM u GROUP BY day, value),
-    w AS (SELECT day,
-                 sum(cr) OVER (PARTITION BY day ORDER BY value) AS ccr,
-                 sum(cc) OVER (PARTITION BY day ORDER BY value) AS ccc,
-                 sum(cr) OVER (PARTITION BY day) AS nr,
-                 sum(cc) OVER (PARTITION BY day) AS nc
-          FROM g)
-    SELECT day, max(nr)::bigint AS n_ref, max(nc)::bigint AS n_cur,
-           max(abs(ccr * nc - ccc * nr))::bigint AS d_num,
-           round(max(abs(ccr * nc - ccc * nr))::double
-                 / (max(nr) * max(nc))::double, 6) AS ks
-    FROM w GROUP BY day
-    HAVING max(nr) > 0 AND max(nc) > 0
-    """,
-)
-def ks_drift_daily(spark, sf_dir):
-    """E87: exact per-day two-sample KS statistic between the 'click'
-    and 'view' value distributions — integer sup-distance numerator
-    over pooled distinct values, one division at the end; the CDF
-    window sorts the distinct-value table partitioned by day, never
-    the corpus."""
-    from ..operators.stats import ks_statistic
-
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.floor(F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86400000000)).cast("long")
-    )
-    return ks_statistic(
-        ev.filter(F.col("event_type") == "click"),
-        ev.filter(F.col("event_type") == "view"),
-        "value",
-        key_cols=["day"],
-    )
-
-
-@q(
-    "weighted_sample_docs",
-    """
-    WITH h AS (SELECT source, doc_id, n_chars,
-                      ('0x' || substr(md5('wps:' || doc_id::varchar), 1, 15))::bigint
-                      AS hv
-               FROM documents WHERE n_chars > 0),
-    pr AS (SELECT source, doc_id, n_chars,
-                  hv::double / n_chars::double AS priority
-           FROM h),
-    rk AS (SELECT *, row_number() OVER (PARTITION BY source
-                                        ORDER BY priority, doc_id) AS rn
-           FROM pr)
-    SELECT source, doc_id, n_chars::bigint AS n_chars, priority
-    FROM rk WHERE rn <= 20
-    """,
-)
-def weighted_sample_docs_q(spark, sf_dir):
-    """E73: deterministic weighted sampling without replacement
-    (priority sampling, Duffield et al.) — 20 docs per source with
-    inclusion probability scaling in n_chars (token-weighted corpus
-    draws), as a pure function of (id, weight): reproducible across
-    runs, partitionings, engines, and resume, unlike rand()-based
-    weighted reservoirs.  priority = exact-int 60-bit md5 hash as a
-    double divided by the exact-int weight — one correctly-rounded
-    IEEE division, so even the float column value-hashes identically.
-    One group-key shuffle + rank window (the E39 salted-rank device
-    applies unchanged if a group outgrows a task)."""
-    from ..operators.stats import weighted_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = weighted_sample(docs, "doc_id", "n_chars", "source", k=20)
-    return out.select("source", "doc_id", F.col("n_chars").cast("long").alias("n_chars"), "priority")
-
-
-@q(
     "fuzzy_dup_pairs",
     f"""
     WITH t AS (SELECT doc_id,
@@ -5160,36 +4553,6 @@ def span_corruption_plan_docs(spark, sf_dir):
         "doc_id", F.size(words_fn(F.coalesce(F.col("text"), F.lit("")))).cast("long").alias("n_tokens")
     )
     return span_corruption_plan(base, "n_tokens", "doc_id", density=0.15, span_len=3)
-
-
-@q(
-    "epoch_shard_plan",
-    """
-    WITH e AS (SELECT doc_id, unnest(generate_series(0, 2)) AS epoch FROM documents),
-    h AS (SELECT doc_id, epoch,
-                 ('0x' || substr(md5('0:' || epoch::varchar || ':' || doc_id::varchar), 1, 15))::bigint AS hh
-          FROM e)
-    SELECT doc_id, epoch::bigint AS epoch, (hh % 8)::bigint AS shard,
-           (row_number() OVER (PARTITION BY epoch, hh % 8 ORDER BY hh, doc_id) - 1)::bigint AS pos
-    FROM h
-    """,
-)
-def epoch_shard_plan_docs(spark, sf_dir):
-    """E78: multi-epoch training-order plan — all epochs' global
-    permutations from ONE corpus scan (in-row epoch amplification +
-    one composite (epoch, shard) exchange) instead of one
-    scan-and-shuffle job per epoch; epoch e's slice is exactly
-    shuffle_shards(seed='0:e') (pytest-pinned)."""
-    from ..operators.stats import epoch_shard_plan
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = epoch_shard_plan(docs.select("doc_id"), "doc_id", n_shards=8, n_epochs=3, seed=0)
-    return out.select(
-        "doc_id",
-        F.col("epoch").cast("long").alias("epoch"),
-        F.col("shard").cast("long").alias("shard"),
-        "pos",
-    )
 
 
 # ---------------------------------------------------------------------------

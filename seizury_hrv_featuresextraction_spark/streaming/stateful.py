@@ -142,7 +142,7 @@ def streaming_feature_buffer(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    def batch_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def batch_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         frames = list(fn(key, iter([pdf]), _BatchState()))
         return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(
             columns=[f.name for f in PREDICTION_SCHEMA.fields]

@@ -164,38 +164,6 @@ def test_connected_components_random_vs_union_find(spark):
     assert got == exp_map
 
 
-def test_pack_sequences_matches_pandas(spark):
-    import pandas as pd
-
-    from seizury_hrv_featuresextraction_spark.operators.stats import pack_sequences
-
-    pdf = pd.DataFrame({"doc_id": range(100), "sz": [(7 * i) % 23 + 1 for i in range(100)]})
-    got = (
-        pack_sequences(spark.createDataFrame(pdf), "doc_id", "sz", budget=40, n_shards=4)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pdf["shard"] = pdf["doc_id"] % 4
-    pdf["offset"] = pdf.groupby("shard")["sz"].cumsum() - pdf["sz"]
-    pdf["bin"] = pdf["offset"] // 40
-    for c in ("shard", "offset", "bin"):
-        assert got[c].tolist() == pdf[c].tolist(), c
-
-
-def test_hash_sample_partitioning_invariant(spark):
-    from seizury_hrv_featuresextraction_spark.operators.stats import hash_sample
-
-    df = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    a = sorted(r.doc_id for r in hash_sample(df, "doc_id", 0.2).collect())
-    b = sorted(
-        r.doc_id for r in hash_sample(df.repartition(13), "doc_id", 0.2).collect()
-    )
-    assert a == b and 0 < len(a) < 2000
-    # rate is approximately honored (binomial bounds, wide margin)
-    assert 250 < len(a) < 550
-
-
 def test_embedding_banded_lsh_subset_and_recall(spark):
     """Band-OR LSH (the registered scale path): candidates verified by
     exact cosine must be a SUBSET of brute force, and with enough bands
@@ -234,10 +202,9 @@ def test_plane_weights_exact_and_stable():
 
 
 def test_stratified_sample_and_cap_properties(spark):
-    from seizury_hrv_featuresextraction_spark.operators.stats import (
-        cap_per_group,
-        stratified_hash_sample,
-    )
+    """E15 per-group quota: at most ``k`` rows per group, and the same
+    rows whatever the input partitioning."""
+    from seizury_hrv_featuresextraction_spark.operators.stats import cap_per_group
 
     pdf = pd.DataFrame(
         {
@@ -247,19 +214,6 @@ def test_stratified_sample_and_cap_properties(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    samp = stratified_hash_sample(df, "doc_id", "lang", {"en": 0.1}, default_rate=0.6, seed="s2")
-    out = samp.toPandas()
-    # subset + per-stratum rates within binomial tolerance
-    assert set(out["doc_id"]) <= set(pdf["doc_id"])
-    en = (out["lang"] == "en").sum() / 1000
-    rest = (out["lang"] != "en").sum() / 1000
-    assert 0.06 < en < 0.14 and 0.52 < rest < 0.68, (en, rest)
-    # deterministic: repartitioned input selects the SAME ids
-    out2 = stratified_hash_sample(
-        df.repartition(13), "doc_id", "lang", {"en": 0.1}, default_rate=0.6, seed="s2"
-    ).toPandas()
-    assert set(out2["doc_id"]) == set(out["doc_id"])
-
     capped = cap_per_group(df, "doc_id", "src", k=11).toPandas()
     assert capped.groupby("src").size().max() <= 11
     capped2 = cap_per_group(df.repartition(17), "doc_id", "src", k=11).toPandas()
@@ -372,7 +326,7 @@ def test_query_surface_guard():
     assert sum(1 for p in prios if p == 0) <= 50
     # surface ratchet: the exported query set only shrinks toward the
     # paper's surface; each cut lowers this bound
-    assert len(QUERIES) <= 114
+    assert len(QUERIES) <= 97
 
 
 def test_script_imports_resolve():
@@ -595,36 +549,6 @@ def test_substring_dedup_apply_empty_and_null_text(spark):
         for d in (1, 2, 3):
             assert got[d]["text_clean"] == "" and got[d]["n_words"] == 0 and got[d]["n_removed"] == 0
         assert got[0]["n_words"] == 8 and got[0]["n_removed"] == 0
-
-
-def test_mixture_sample_temperature_rebalance(spark):
-    """E41: temperature sampling keeps the tail whole (rate caps at 1)
-    and downsamples the head to its n^alpha share; selection is
-    deterministic (same rows on rerun) and the corpus side joins the
-    broadcast rate table (no sort-merge join)."""
-    from seizury_hrv_featuresextraction_spark.operators.stats import mixture_sample
-
-    rows = (
-        [(i, "head") for i in range(900)]
-        + [(1000 + i, "mid") for i in range(90)]
-        + [(2000 + i, "tail") for i in range(10)]
-    )
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    out = mixture_sample(df, "doc_id", "source", alpha=0.6, target_frac=0.5)
-    kept = [(r["doc_id"], r["source"]) for r in out.collect()]
-    by = {}
-    for _, s in kept:
-        by[s] = by.get(s, 0) + 1
-    # rates: head ~0.42 (downsampled), mid ~1.06 -> cap 1, tail ~2.55 -> cap 1
-    assert by["mid"] == 90 and by["tail"] == 10
-    assert 0.33 * 900 < by["head"] < 0.52 * 900, by
-    # deterministic
-    kept2 = [(r["doc_id"], r["source"]) for r in mixture_sample(df, "doc_id", "source", alpha=0.6, target_frac=0.5).collect()]
-    assert sorted(kept) == sorted(kept2)
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
 
 
 def test_importance_sample_monotone_and_deterministic(spark):
@@ -1077,50 +1001,3 @@ def test_fingerprint_dedup_against_corpus_paragraph_lift(spark):
     assert sorted(r["doc_id"] for r in s2.collect()) == [21]
     evid = fingerprint_overlap_against(crawl2, keys2, min_shared=2).collect()
     assert {(r["new_id"], r["ref_id"]) for r in evid} == {(20, 11)}
-
-
-def test_weighted_sample_replay_and_bias(spark):
-    """E73 priority sampling: hashlib replay of the exact draw, weight
-    bias (heavy rows overrepresented vs uniform), determinism across
-    partitionings, non-positive weights dropped."""
-    import hashlib
-
-    from seizury_hrv_featuresextraction_spark.operators.stats import weighted_sample
-
-    rows = []
-    for g in range(8):
-        for i in range(200):
-            did = g * 1000 + i
-            w = 1000 if i < 20 else 10  # 10% heavy rows, 100x weight
-            rows.append((did, f"g{g}", w))
-    rows.append((99999, "g0", 0))    # dropped: zero weight
-    rows.append((99998, "g0", -5))   # dropped: negative weight
-    df = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
-
-    out = weighted_sample(df, "doc_id", "n_chars", "source", k=25)
-    got = {(r.source, r.doc_id): r.priority for r in out.collect()}
-    assert all(d not in (99999, 99998) for _, d in got)
-
-    # exact replay
-    def pri(did, w):
-        h = int(hashlib.md5(f"wps:{did}".encode()).hexdigest()[:15], 16)
-        return float(h) / float(w)
-
-    by_g: dict = {}
-    for did, g, w in rows:
-        if w > 0:
-            by_g.setdefault(g, []).append((pri(did, w), did, w))
-    want = {}
-    for g, lst in by_g.items():
-        for p, did, w in sorted(lst)[:25]:
-            want[(g, did)] = p
-    assert got == want
-
-    # bias: heavy rows are 10% of the population but must dominate the
-    # sample (inclusion prob scales with weight; 100x weight, k=25/200)
-    heavy = sum(1 for (_, d) in got if d % 1000 < 20)
-    assert heavy / len(got) > 0.5, heavy
-
-    # partitioning invariance
-    out2 = weighted_sample(df.repartition(13), "doc_id", "n_chars", "source", k=25)
-    assert {(r.source, r.doc_id) for r in out2.collect()} == set(want)

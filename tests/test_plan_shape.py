@@ -130,25 +130,17 @@ def test_dedup_keeper_no_broadcast_of_groups(spark):
 
 
 def test_curation_ops_plan_shapes(spark):
-    """E14/E15 scale contracts: the stratified sample is a scan-stage
-    filter (zero Exchange); the per-group cap shuffles exactly once (the
+    """E15 scale contract: the per-group cap shuffles exactly once (the
     group-key window) and never broadcasts."""
     import pandas as pd
 
-    from seizury_hrv_featuresextraction_spark.operators.stats import (
-        cap_per_group,
-        stratified_hash_sample,
-    )
+    from seizury_hrv_featuresextraction_spark.operators.stats import cap_per_group
 
     pdf = pd.DataFrame(
         {"doc_id": range(100), "lang": ["en" if i % 2 else "de" for i in range(100)],
          "src": [f"s{i % 5}" for i in range(100)]}
     )
     df = spark.createDataFrame(pdf)
-
-    samp = stratified_hash_sample(df, "doc_id", "lang", {"en": 0.2}, default_rate=0.7)
-    plan = _plan(samp)
-    assert "Exchange" not in plan, plan
 
     capped = cap_per_group(df, "doc_id", "src", k=3)
     plan = _plan(capped)
@@ -505,91 +497,6 @@ def test_literal_array_coerces_and_rejects_non_finite(spark):
     for bad in (float("inf"), float("nan")):
         with pytest.raises(ValueError):
             literal_array([1.0, bad], "DOUBLE")
-
-
-def test_shuffle_shards_one_exchange_no_global_sort(spark):
-    """E38 scale contract: the corpus shuffle is ONE hash exchange on
-    the shard key + within-partition sorts — never a rangepartitioning
-    (global ORDER BY) exchange, never a broadcast. Determinism: same
-    seed reproduces the permutation, a different seed changes it."""
-    import pandas as pd
-
-    from seizury_hrv_featuresextraction_spark.operators.stats import shuffle_shards
-
-    df = spark.createDataFrame(pd.DataFrame({"doc_id": range(200)})).repartition(8)
-    out = shuffle_shards(df, "doc_id", n_shards=4, seed=0)
-    plan = _plan(out)
-    assert "BroadcastExchange" not in plan, plan
-    assert "rangepartitioning" not in plan, plan
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
-
-    a = {r["doc_id"]: (r["shard"], r["pos"]) for r in out.collect()}
-    b = {r["doc_id"]: (r["shard"], r["pos"]) for r in shuffle_shards(df, "doc_id", 4, seed=0).collect()}
-    assert a == b  # resume-stable
-    c = {r["doc_id"]: (r["shard"], r["pos"]) for r in shuffle_shards(df, "doc_id", 4, seed=1).collect()}
-    assert a != c  # a fresh permutation
-    # every shard's positions are dense 0..k-1 and the shards partition the ids
-    by_shard: dict[int, list[int]] = {}
-    for sh, pos in a.values():
-        by_shard.setdefault(sh, []).append(pos)
-    assert sum(len(v) for v in by_shard.values()) == 200
-    for v in by_shard.values():
-        assert sorted(v) == list(range(len(v)))
-
-
-def test_length_bucketed_batches_salted_rank(spark):
-    """E39 scale contract (r5 verdict fix): NO window partitions by the
-    bare length bucket — the rank runs two-level (salted rank within
-    (len_bucket, hash-prefix salt) + broadcast count offsets), so a hot
-    length bucket spreads over 16**salt_hex_chars tasks instead of one.
-    Plan: exactly 4 hash exchanges — two corpus-sized (salted-rank
-    window, balanced per-batch pad window) and two over the bounded
-    count grid (count agg, offset window) — + 1 broadcast (the offset
-    grid). Output must be bit-identical to the single-window brute
-    formulation, and batch semantics hold (dense positions, pad_len =
-    batch max, waste >= 0)."""
-    import hashlib
-
-    import pandas as pd
-
-    from seizury_hrv_featuresextraction_spark.operators.stats import length_bucketed_batches
-
-    pdf = pd.DataFrame({"doc_id": range(100), "n": [10 + 7 * (i % 40) for i in range(100)]})
-    df = spark.createDataFrame(pdf).repartition(8)
-    out = length_bucketed_batches(df, "doc_id", "n", bucket_size=64, batch_docs=4)
-    plan = _plan(out)
-    assert len(re.findall(r"BroadcastExchange", plan)) == 1, plan
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 4, plan
-    # the straggler shape would be the corpus row_number partitioned by
-    # len_bucket alone; it must carry the salt as a partition key (the
-    # remaining bare-len_bucket window is the sum over the count grid)
-    rn_specs = re.findall(r"row_number\(\) windowspecdefinition\(([^)]*)\)", plan)
-    assert rn_specs, plan
-    for spec in rn_specs:
-        assert "__salt" in spec, plan
-
-    rows = out.collect()
-    assert len(rows) == 100
-
-    # brute single-task reference: global md5-hash order within each bucket
-    brute = {}
-    for i, n in zip(pdf["doc_id"], pdf["n"]):
-        bucket = -(-int(n) // 64)
-        brute.setdefault(bucket, []).append((hashlib.md5(str(i).encode()).hexdigest(), i, n))
-    expect = {}
-    for bucket, members in brute.items():
-        members.sort()
-        for rk, (_, i, n) in enumerate(members):
-            expect[i] = (bucket, rk // 4, rk % 4)
-    by_batch: dict[tuple, list] = {}
-    for r in rows:
-        assert expect[r["doc_id"]] == (r["len_bucket"], r["batch_id"], r["pos_in_batch"])
-        by_batch.setdefault((r["len_bucket"], r["batch_id"]), []).append(r)
-    for (_, _), members in by_batch.items():
-        assert sorted(m["pos_in_batch"] for m in members) == list(range(len(members)))
-        mx = max(m["n"] for m in members)
-        assert all(m["pad_len"] == mx and m["pad_waste"] == mx - m["n"] and m["pad_waste"] >= 0 for m in members)
-        assert len(members) <= 4
 
 
 def test_winnowing_and_budget_select_plan_shapes(spark):

@@ -81,3 +81,24 @@ def test_batch_state_function_matches_deque(spark):
     es = exp["score"].to_numpy(dtype=float)
     assert np.allclose(gs, es, rtol=1e-12, atol=0, equal_nan=True)
     assert got["alarm"].sum() > 0  # fixture actually fires
+
+
+def test_batch_paths_infer_grouped_map_eval_type(spark):
+    """The batch fallbacks hand ``applyInPandas`` a fully annotated
+    ``(key, pdf) -> pdf`` function, so PySpark infers the grouped-map
+    eval type from the hints instead of warning on every plan build."""
+    import warnings
+
+    from seizury_hrv_featuresextraction_spark.streaming.hrv_stream import streaming_hrv_features
+
+    chunks = spark.createDataFrame([], "doc_id string, chunk_idx int, tokens array<int>")
+    features = spark.createDataFrame(_input(3))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        streaming_hrv_features(chunks)
+        streaming_feature_buffer(
+            features, ["f1", "f2"], seq_len=2, threshold=0.5, k_consecutive=1,
+            event_time_col="event_time",
+        )
+    msgs = [str(w.message) for w in caught]
+    assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs
