@@ -31,6 +31,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from .. import grid
 from ..config import HRVConfig
 from ..schemas import CHUNKS_SCHEMA
 
@@ -43,21 +44,13 @@ def _chunk_batch(batch: pa.RecordBatch, cfg: HRVConfig) -> pa.RecordBatch | None
     ListArray.from_arrays(offsets, flat_values) — no per-row Python
     objects, no pandas object columns.
     """
-    fs = cfg.sampling_rate
-    spw = cfg.window_samples()
-    step = cfg.step_samples()
     wpc = max(1, cfg.max_windows_per_chunk)
 
     doc_ids = batch.column(0).to_pylist()
     tok_list = batch.column(1)
     offsets = tok_list.offsets.to_numpy(zero_copy_only=False)
     flat_tok = tok_list.values.to_numpy(zero_copy_only=False).astype(np.int64)
-    neg = offsets[0] + np.flatnonzero(flat_tok[offsets[0] : offsets[-1]] < 0)
-    if neg.size:
-        # a negative RR interval makes the beat-time cumsum non-monotone,
-        # and searchsorted would then return wrong windows silently
-        d = int(np.searchsorted(offsets, neg[0], side="right") - 1)
-        raise ValueError(f"doc_id {doc_ids[d]!r}: negative RR token {flat_tok[neg[0]]}")
+    grid.check_tokens(flat_tok, doc_ids, offsets)
     ship_rr_t = cfg.use_welch_fallback  # only the Welch path consumes times
 
     out_doc: list[str] = []
@@ -70,22 +63,12 @@ def _chunk_batch(batch: pa.RecordBatch, cfg: HRVConfig) -> pa.RecordBatch | None
 
     for i, doc_id in enumerate(doc_ids):
         a, b = int(offsets[i]), int(offsets[i + 1])
-        tok = flat_tok[a:b]
-        total_ms = int(tok.sum())
-        n_samples = total_ms * fs // 1000
-        n_windows = (n_samples - spw) // step + 1
-        if n_windows <= 0:
+        t_ms = np.cumsum(flat_tok[a:b])
+        _, lo_idx, hi_idx = grid.window_bounds(t_ms, 0, cfg)
+        n_windows = len(lo_idx)
+        if not n_windows:
             continue
-        # EXACT membership: beat times are integer milliseconds and window
-        # bounds are integer samples, so compare in the common integer
-        # grid (ms * fs vs samples * 1000) — a float cumsum puts beats
-        # landing exactly on a boundary (common with integer tokens) on a
-        # rounding-noise-dependent side, which no two summation orders
-        # agree on (engine vs any SQL oracle)
-        t_scaled = np.cumsum(tok) * fs
-        ids = np.arange(n_windows, dtype=np.int64)
-        lo_idx = np.searchsorted(t_scaled, ids * step * 1000, side="left")
-        hi_idx = np.searchsorted(t_scaled, (ids * step + spw) * 1000, side="right")
+        n_samples = grid.n_samples(int(t_ms[-1]), cfg)
         n_chunks = (n_windows + wpc - 1) // wpc
         for c in range(n_chunks):
             win_lo = c * wpc
@@ -159,17 +142,19 @@ def _chunk_batch(batch: pa.RecordBatch, cfg: HRVConfig) -> pa.RecordBatch | None
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
+def chunk_batches(batches: Iterator[pa.RecordBatch], cfg: HRVConfig) -> Iterator[pa.RecordBatch]:
+    """The chunk stage over a task's Arrow batches (CHUNKS_SCHEMA rows)."""
+    for batch in batches:
+        out = _chunk_batch(batch, cfg) if batch.num_rows else None
+        if out is not None:
+            yield out
+
+
 def explode_chunks(sequences: DataFrame, cfg: HRVConfig) -> DataFrame:
     """sequences (doc_id, tokens, ...) -> chunk rows (CHUNKS_SCHEMA)."""
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows:
-                out = _chunk_batch(batch, cfg)
-                if out is not None:
-                    yield out
-
-    chunks = sequences.select("doc_id", "tokens").mapInArrow(gen, schema=CHUNKS_SCHEMA)
+    chunks = sequences.select("doc_id", "tokens").mapInArrow(
+        lambda batches: chunk_batches(batches, cfg), schema=CHUNKS_SCHEMA
+    )
     if cfg.repartition_chunks:
         chunks = chunks.repartition(sequences.sparkSession.sparkContext.defaultParallelism)
     return chunks

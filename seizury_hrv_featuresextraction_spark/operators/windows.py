@@ -20,33 +20,19 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import grid
+from ..config import HRVConfig
 
-def sliding_window_grid(
-    doc_dims: DataFrame,
-    window_samples: int,
-    step_samples: int,
-    sampling_rate: int,
-) -> DataFrame:
+
+def sliding_window_grid(doc_dims: DataFrame, cfg: HRVConfig) -> DataFrame:
     """(doc_id, n_samples) -> one row per (doc_id, window) with the
-    reference's integer-sample grid. Native sequence()+explode (a UDTF
-    shape, no Python)."""
-    n_win = (F.col("n_samples") - window_samples) / step_samples  # floor via cast below
-    n_win = F.floor(n_win).cast("long") + 1
-    fs = float(sampling_rate)
+    reference's integer-sample grid (``grid.window_columns``). Native
+    sequence()+explode (a UDTF shape, no Python)."""
     return (
-        doc_dims.withColumn("n_windows", F.greatest(F.lit(0), n_win))
+        doc_dims.withColumn("n_windows", grid.n_windows_col(F.col("n_samples"), cfg))
         .filter(F.col("n_windows") > 0)
         .withColumn("window_id", F.explode(F.sequence(F.lit(0), F.col("n_windows") - 1)))
-        .select(
-            "doc_id",
-            "window_id",
-            (F.col("window_id") * step_samples).alias("start_sample"),
-            (F.col("window_id") * step_samples + window_samples // 2).alias("center_sample"),
-            (F.col("window_id") * step_samples + window_samples).alias("end_sample"),
-            (F.col("window_id") * step_samples / fs).alias("window_start_time"),
-            ((F.col("window_id") * step_samples + window_samples // 2) / fs).alias("window_center_time"),
-            ((F.col("window_id") * step_samples + window_samples) / fs).alias("window_end_time"),
-        )
+        .select("doc_id", "window_id", *grid.window_columns(cfg).values())
     )
 
 

@@ -302,7 +302,7 @@ def oracle_pipeline(
     for _, srow in sequences.iterrows():
         doc = srow["doc_id"]
         rr_sec, rr_t, total_ms = decode_tokens(srow["tokens"])
-        # EXACT membership (mirrors skew.py/hrv.py): integer-ms beat times
+        # EXACT membership (mirrors grid.py, not shared): integer-ms beat times
         # vs integer-sample bounds in the common ms*fs grid — float cumsum
         # noise must not decide boundary-exact beats
         t_scaled = np.cumsum(np.asarray(srow["tokens"], dtype=np.int64)) * fs

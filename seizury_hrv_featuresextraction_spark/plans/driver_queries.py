@@ -1410,7 +1410,7 @@ def sliding_grid(spark, sf_dir):
 
     seq = sequences_from_events(spark, sf_dir)
     dims = doc_dimensions(seq, cfg)
-    grid = sliding_window_grid(dims, cfg.window_samples(), cfg.step_samples(), cfg.sampling_rate)
+    grid = sliding_window_grid(dims, cfg)
     return grid.select("doc_id", "window_id", "start_sample", "center_sample", "end_sample")
 
 
@@ -1459,7 +1459,7 @@ def window_label_asof(spark, sf_dir):
     )
     seq = sequences_from_events(spark, sf_dir)
     dims = doc_dimensions(seq, cfg)
-    grid = sliding_window_grid(dims, cfg.window_samples(), cfg.step_samples(), cfg.sampling_rate)
+    grid = sliding_window_grid(dims, cfg)
     centers = grid.select("doc_id", "window_id", F.col("window_center_time").alias("rel"))
     j = asof_join(centers, base, on="rel", by="doc_id", value_cols=["event_type"], direction="backward")
     return j.select(

@@ -30,10 +30,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import grid
 from ..config import DEFAULT_CONFIG, HRVConfig
 from ..functions.hrv import ALL_FEATURES, WindowKernel
 from ..operators.labeling import build_label_intervals, label_windows
-from ..operators.skew import explode_chunks
+from ..operators.skew import chunk_batches, explode_chunks
 from ..schemas import FEATURES_ARROW_SCHEMA
 
 _KERNEL_CACHE: dict[str, WindowKernel] = {}
@@ -147,23 +148,8 @@ def _fused_batches(cfg: HRVConfig, features: list[str] | None = None):
     chunk rows, no shuffle, one JVM<->Python crossing). The right plan
     when doc lengths are bounded / pre-bucketed so no rebalancing is
     needed; ``extract_features(..., fused=True)`` selects it."""
-    import pyarrow as pa
-
-    from ..operators.skew import _chunk_batch
-
     kernel_gen = _kernel_batches(cfg, features)
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def chunk_stream():
-            for batch in batches:
-                if batch.num_rows:
-                    out = _chunk_batch(batch, cfg)
-                    if out is not None:
-                        yield out
-
-        yield from kernel_gen(chunk_stream())
-
-    return gen
+    return lambda batches: kernel_gen(chunk_batches(batches, cfg))
 
 
 def doc_dimensions(sequences: DataFrame, cfg: HRVConfig) -> DataFrame:
@@ -229,8 +215,7 @@ def plan_stats(
         mx, total = row["mx"], row["total"]
     if mx is not None:
         max_ms = int(mx) * int(cfg.rr_max_seconds * 1000)
-        n_samp = max_ms * cfg.sampling_rate // 1000
-        max_win = max(0, (n_samp - cfg.window_samples()) // cfg.step_samples() + 1)
+        max_win = grid.n_windows(grid.n_samples(max_ms, cfg), cfg)
     return {
         "n_splits": n_splits,
         "parallelism": sc.defaultParallelism,
@@ -292,8 +277,9 @@ def extract_features(
     """sequences + annotations -> labeled windowed feature table.
 
     fused=None (default): AUTO — pick the plan from table stats
-    (``plan_stats``/``choose_fused``): split count vs parallelism and
-    the max-windows-per-doc upper bound. fused=False: chunk-split ->
+    (``plan_stats``/``choose_fused``): split count vs parallelism, the
+    max-windows-per-doc upper bound, and total tokens vs
+    ``_FUSED_MAX_TOKENS_PER_CORE`` x parallelism. fused=False: chunk-split ->
     repartition (skew rebalancing) -> kernel. fused=True: a single
     narrow Arrow stage (zero shuffle) — right when the input is already
     balanced (bucketed table, bounded doc length). ``stats`` overrides
@@ -326,21 +312,15 @@ def extract_features(
     # the four window-time/center columns are pure functions of window_id:
     # computed as native expressions AFTER the Arrow stage so the Python
     # boundary carries 32 fewer bytes per window (guide §4.1 — pass only
-    # what the kernel must produce). Same integer-exact arithmetic as the
-    # previous in-kernel emission: (id*step [+off]) is exact in int64 and
-    # the single double division matches NumPy's bit-for-bit.
-    fs = F.lit(float(cfg.sampling_rate))
-    spw = cfg.window_samples()
-    step = cfg.step_samples()
-    half = spw // 2
-    starts = F.col("window_id") * F.lit(step)
+    # what the kernel must produce)
+    wc = grid.window_columns(cfg)
     feats = feats.select(
         "doc_id",
         "window_id",
-        (starts / fs).alias("window_start_time"),
-        ((starts + F.lit(half)) / fs).alias("window_center_time"),
-        ((starts + F.lit(spw)) / fs).alias("window_end_time"),
-        (starts + F.lit(half)).alias("center_sample"),
+        wc["window_start_time"],
+        wc["window_center_time"],
+        wc["window_end_time"],
+        wc["center_sample"],
         "n_beats",
         *sel,
     )

@@ -12,8 +12,8 @@ end boundary is passed.
 Key properties:
 
 - **Identical output to batch.** A window is emitted exactly when the
-  cumulative stream duration reaches its end boundary (same exact-int
-  arithmetic as the batch grid: t_ms*fs vs samples*1000 in int64), and
+  cumulative stream duration reaches its end boundary (the batch chunk
+  stage's grid: both cut windows with ``grid.window_bounds``), and
   the feature vector comes from the SAME ``WindowKernel`` — after the
   stream drains, the emitted set equals ``extract_features`` on the
   concatenated document, feature-for-feature (allclose; tested).
@@ -49,18 +49,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import grid
 from ..config import DEFAULT_CONFIG, HRVConfig
 from ..functions.hrv import ALL_FEATURES
 from ..plans.hrv_pipeline import _get_kernel
+from ..schemas import FEATURES_ARROW_SCHEMA
 
-STREAM_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("window_id", T.LongType(), False),
-        T.StructField("n_beats", T.IntegerType(), False),
-    ]
-    + [T.StructField(name, T.DoubleType(), True) for name in ALL_FEATURES]
-)
+# the batch kernel stage's rows: the stream emits exactly what it does
+STREAM_FEATURES_SCHEMA = FEATURES_ARROW_SCHEMA
 
 STREAM_STATE_SCHEMA = T.StructType(
     [
@@ -83,11 +79,6 @@ def make_hrv_stream_fn(
     max_lateness_batches: int | None = None,
     late_counter=None,
 ):
-    fs = cfg.sampling_rate
-    spw = cfg.window_samples()
-    step = cfg.step_samples()
-    cols = ["doc_id", "window_id", "n_beats"] + list(ALL_FEATURES)
-
     def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         (doc_id,) = key
         if state.exists:
@@ -137,7 +128,6 @@ def make_hrv_stream_fn(
 
         if not chunks:
             save(buf, int(off_ms))
-            yield pd.DataFrame(columns=cols)
             return
         # reorder buffer: register every incoming chunk by its dense
         # per-doc sequence number, then consume the longest contiguous
@@ -168,10 +158,9 @@ def make_hrv_stream_fn(
                     )
                 continue
             pending[ci] = [int(x) for x in toks]
-            if min(pending[ci], default=0) < 0:
-                # same contract as the batch chunk stage: a negative RR
-                # interval breaks the monotone beat-time grid
-                raise ValueError(f"doc_id {doc_id!r}: negative RR token in chunk_idx={ci}")
+            grid.check_tokens(
+                np.asarray(pending[ci]), [doc_id], [0, len(pending[ci])], f"in chunk_idx={ci}"
+            )
         ready: list[np.ndarray] = []
         while next_chunk in pending:
             ready.append(np.asarray(pending.pop(next_chunk), dtype=np.int64))
@@ -190,22 +179,15 @@ def make_hrv_stream_fn(
             gap_age = 0
         if not ready:
             save(buf, int(off_ms))
-            yield pd.DataFrame(columns=cols)
             return
         tok = np.concatenate([np.asarray(buf, dtype=np.int64)] + ready)
-
-        # exact integer grid arithmetic, identical to the batch plan
-        # (operators/skew.py _chunk_batch)
         t_ms = int(off_ms) + np.cumsum(tok)
-        t_total = int(t_ms[-1]) if tok.size else int(off_ms)
-        n_samples = (t_total * fs) // 1000
-        n_win_avail = (n_samples - spw) // step + 1  # windows fully past their end
-        out = pd.DataFrame(columns=cols)
-        if n_win_avail > next_win:
-            ids = np.arange(next_win, n_win_avail, dtype=np.int64)
-            t_scaled = t_ms * fs
-            lo_idx = np.searchsorted(t_scaled, ids * step * 1000, side="left")
-            hi_idx = np.searchsorted(t_scaled, (ids * step + spw) * 1000, side="right")
+        # every window that ends by the last beat so far; no frame when
+        # none does (an empty frame would only widen a consumer's concat
+        # to object dtype)
+        ids, lo_idx, hi_idx = grid.window_bounds(t_ms, next_win, cfg)
+        out = None
+        if ids.size:
             kernel = _get_kernel(cfg)
             feats = kernel.windows_from_bounds(tok.astype(np.float64) / 1000.0, lo_idx, hi_idx)
             out = pd.DataFrame(
@@ -217,16 +199,14 @@ def make_hrv_stream_fn(
             )
             for j, name in enumerate(ALL_FEATURES):
                 out[name] = feats[:, j]
-            next_win = int(n_win_avail)
+            next_win = int(ids[-1]) + 1
 
         # retain only beats that can still belong to an unfinished window
-        # (t >= next window's start boundary, inclusive — membership is
-        # start <= t <= end)
-        t_scaled = t_ms * fs
-        drop = int(np.searchsorted(t_scaled, next_win * step * 1000, side="left"))
+        drop = grid.first_needed_beat(t_ms, next_win, cfg)
         new_off = int(t_ms[drop - 1]) if drop > 0 else int(off_ms)
         save([int(x) for x in tok[drop:]], new_off)
-        yield out
+        if out is not None:
+            yield out
 
     return fn
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from seizury_hrv_featuresextraction_spark.operators.asof import asof_join
@@ -86,6 +86,53 @@ def test_kernel_matches_oracle_on_random_series(seed, n):
     got = kern.feature_vector(rr, t)
     exp = np.array([oracle_feature_row(rr, t, DEFAULT_CONFIG)[f] for f in ALL_FEATURES])
     assert np.allclose(got, exp, rtol=1e-9, atol=1e-12, equal_nan=True)
+
+
+# --- the integer window grid vs the oracle's per-window mask ------------
+
+# whole-second beats put many beats exactly on window starts and ends
+# (every 5 s at both rates); 0 ms beats stack several on one boundary
+grid_tokens = st.one_of(
+    st.lists(st.sampled_from([0, 1000, 2500, 5000]), max_size=60),
+    st.lists(st.integers(min_value=0, max_value=2000), max_size=120),
+)
+
+
+@given(toks=grid_tokens, fs=st.sampled_from([256, 100]), cut=st.floats(min_value=0.0, max_value=1.0))
+@example(toks=[5000] * 12, fs=256, cut=0.5)
+@example(toks=[800] * 30, fs=256, cut=1.0)
+@settings(max_examples=300, deadline=None)
+def test_grid_bounds_match_oracle_mask(toks, fs, cut):
+    """``grid.window_bounds`` gives the oracle's window count and, per
+    window, exactly the beats of its ``start <= t <= end`` mask; cutting
+    the slice at ``first_needed_beat`` with its carried ms offset (the
+    stream's tail rule) gives the same bounds for every later window."""
+    from seizury_hrv_featuresextraction_spark import grid
+    from seizury_hrv_featuresextraction_spark.config import HRVConfig
+    from seizury_hrv_featuresextraction_spark.oracle import n_samples_for, window_grid
+
+    cfg = HRVConfig(sampling_rate=fs)
+    tok = np.asarray(toks, dtype=np.int64)
+    t_ms = np.cumsum(tok)
+    ids, lo, hi = grid.window_bounds(t_ms, 0, cfg)
+    exp = window_grid(n_samples_for(int(tok.sum()), cfg), cfg)
+    assert ids.tolist() == [w[0] for w in exp]
+    t_scaled = t_ms * fs
+    for (_, start, _, end), a, b in zip(exp, lo, hi):
+        mask = (t_scaled >= start * 1000) & (t_scaled <= end * 1000)
+        assert np.flatnonzero(mask).tolist() == list(range(a, b))
+        assert a == np.count_nonzero(t_scaled < start * 1000)
+
+    # stream tail: the beats seen so far finish next_win windows; keep
+    # from the first beat a later window can need, carry the offset
+    k = int(cut * len(tok))
+    next_win = len(grid.window_bounds(t_ms[:k], 0, cfg)[0])
+    drop = grid.first_needed_beat(t_ms[:k], next_win, cfg)
+    off_ms = int(t_ms[drop - 1]) if drop else 0
+    ids2, lo2, hi2 = grid.window_bounds(off_ms + np.cumsum(tok[drop:]), next_win, cfg)
+    assert ids2.tolist() == ids[next_win:].tolist()
+    assert (lo2 + drop).tolist() == lo[next_win:].tolist()
+    assert (hi2 + drop).tolist() == hi[next_win:].tolist()
 
 
 # --- streaming flagship chunk-boundary invariance (E18) ----------------
@@ -165,6 +212,7 @@ def test_streaming_hrv_reorder_invariant(toks, cuts, perm_seed, n_batches):
     shape/alignment — the engine contract is allclose, never bitwise)."""
     from seizury_hrv_featuresextraction_spark.config import HRVConfig
     from seizury_hrv_featuresextraction_spark.streaming.hrv_stream import (
+        STREAM_FEATURES_SCHEMA,
         make_hrv_stream_fn,
     )
 
@@ -193,7 +241,10 @@ def test_streaming_hrv_reorder_invariant(toks, cuts, perm_seed, n_batches):
         for batch in deliveries:
             pdf = pd.DataFrame(batch, columns=["doc_id", "chunk_idx", "tokens"])
             outs.extend(fn(("d0",), iter([pdf]), state))
-        out = pd.concat(outs, ignore_index=True)
+        # a doc shorter than one window yields no frame at all
+        out = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
+            columns=[f.name for f in STREAM_FEATURES_SCHEMA.fields]
+        )
         return out.sort_values("window_id").reset_index(drop=True), state
 
     expected, _ = drive([chunks])  # everything in order, one batch

@@ -83,7 +83,7 @@ def test_sliding_window_grid_matches_oracle(spark):
     from seizury_hrv_featuresextraction_spark.config import DEFAULT_CONFIG as cfg
 
     dims = spark.createDataFrame(pd.DataFrame({"doc_id": ["d1", "d2"], "n_samples": [100000, 7679]}))
-    got = sliding_window_grid(dims, cfg.window_samples(), cfg.step_samples(), cfg.sampling_rate).toPandas()
+    got = sliding_window_grid(dims, cfg).toPandas()
     for doc, n in [("d1", 100000), ("d2", 7679)]:
         exp = window_grid(n, cfg)
         sub = got[got["doc_id"] == doc].sort_values("window_id")
